@@ -129,21 +129,26 @@ def asof_join_salted(
     chunk the ordinary carry then sees the true predecessor of its
     first anchor, so results are identical to the unsalted join —
     asserted in tests — while the hot conversation runs as k tasks.
+    The census is the eager :func:`engine.skew.collect_hot_ids` action;
+    with no hot conversation the result is the plain :func:`asof_join`.
     """
-    from astrospectro_spark.engine.skew import chunk_of, compute_ts_bounds
-
-    value_cols = value_cols or DEFAULT_VALUE_COLS
-    census = turns.groupBy(entity_col).agg(F.count(F.lit(1)).alias("_n"))
-    hot_ids = census.filter(F.col("_n") > hot_threshold).select(entity_col)
-
-    cold_out = asof_join(
-        turns.join(F.broadcast(hot_ids), entity_col, "left_anti"),
-        anchors.join(F.broadcast(hot_ids), entity_col, "left_anti"),
-        entity_col, turn_ts, anchor_ts, value_cols, tolerance_col, tiebreak_col,
+    from astrospectro_spark.engine.skew import (
+        chunk_of,
+        collect_hot_ids,
+        compute_ts_bounds,
+        is_hot,
     )
 
-    t_hot = turns.join(F.broadcast(hot_ids), entity_col, "left_semi")
-    a_hot = anchors.join(F.broadcast(hot_ids), entity_col, "left_semi")
+    value_cols = value_cols or DEFAULT_VALUE_COLS
+    join_args = (entity_col, turn_ts, anchor_ts, value_cols, tolerance_col, tiebreak_col)
+    hot_ids = collect_hot_ids(turns, hot_threshold, entity_col)
+    if not hot_ids:
+        return asof_join(turns, anchors, *join_args)
+    hot = is_hot(hot_ids, entity_col)
+    cold_out = asof_join(turns.filter(~hot), anchors.filter(~hot), *join_args)
+
+    t_hot = turns.filter(hot)
+    a_hot = anchors.filter(hot)
     bounds = compute_ts_bounds(
         t_hot, chunk_target_rows, ts_col=turn_ts, entity_col=entity_col
     )

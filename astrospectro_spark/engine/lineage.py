@@ -43,6 +43,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from astrospectro_spark.engine.windows import featurize_expr
 
@@ -116,18 +117,12 @@ class FeatureRun:
         }
 
     def _append_lineage(self, **kw) -> None:
-        row = (
-            kw["run_id"],
-            kw["bucket"],
-            kw["status"],
-            kw["n_rows"],
-            kw["checksum"],
-            kw["input_rows"],
-            kw["input_checksum"],
-        )
-        self.spark.createDataFrame([row], LINEAGE_SCHEMA).write.mode("append").parquet(
-            self.lineage_dir
-        )
+        # literals over a one-row range: one task, one parquet file per
+        # record, and no Python rows to ship to a worker
+        fields = StructType.fromDDL(LINEAGE_SCHEMA).fields
+        self.spark.range(1, numPartitions=1).select(
+            *[F.lit(kw[f.name]).cast(f.dataType).alias(f.name) for f in fields]
+        ).write.mode("append").parquet(self.lineage_dir)
 
     # -- staging --------------------------------------------------------
     def _stage(self, turns: DataFrame) -> DataFrame:

@@ -5,9 +5,13 @@ task; a conversation holding 30% of a 10^12-turn table would serialise
 the job. AQE's skew-join splitting cannot split a window/groupBy key
 (SURVEY.md §4 custom-work 1), so this module does it explicitly:
 
-1. **Census** — row counts per conv_id (one cheap agg). Conversations
-   above ``hot_threshold`` rows are "hot"; the rest take the normal
-   single-window path.
+1. **Census** — row counts per conv_id, run once as an eager action
+   (:func:`collect_hot_ids`) that brings the hot ids (non-null, more
+   than ``hot_threshold`` rows; at most rows ÷ threshold of them) to the
+   driver. Input with no hot conversation gets the plain
+   :func:`engine.windows.featurize_expr` plan, with no salted branch;
+   otherwise a null-safe ``conv_id IN (hot ids)`` filter splits hot rows
+   from the cold ones, which take the normal single-window path.
 2. **Range salting** — per hot conversation, ``approx_percentile`` of
    the ts axis yields k-1 boundaries → ``chunk_id`` per row (array
    fold, no window). This is the graft analogue of the reference's
@@ -81,6 +85,14 @@ def featurize_salted(
     """featurize_expr semantics with hot conversations split into
     ts-range chunks that run as parallel tasks.
 
+    The census runs HERE, eagerly: one action collects the hot
+    conversation ids (:func:`collect_hot_ids`) before any plan is
+    built. When nothing is hot, the result IS the
+    :func:`featurize_expr` plan (no union, no broadcast joins, no
+    persist, an empty cached-handle list); otherwise the hot rows are
+    split off with a null-safe ``conv_id IN (hot ids)`` filter. Rows
+    with a null ``conv_id`` are never hot, whatever their count.
+
     ``enum_shuffle=True`` (narrow ``include_text=False`` contract only,
     see :func:`featurize_expr`) carries ``role``/``tool`` as 64-bit
     codes through every exchange of BOTH the cold and hot branches.
@@ -99,12 +111,9 @@ def featurize_salted(
     :func:`release_cached` (FeatureRun does) after materialising the
     result so long multi-bucket runs don't accumulate cached blocks.
     """
-    census = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("_n"))
-    hot_census = census.filter(F.col("_n") > hot_threshold)
-
-    cold = df.join(F.broadcast(hot_census.select("conv_id")), "conv_id", "left_anti")
+    hot_ids = collect_hot_ids(df, hot_threshold)
     cold_out = featurize_expr(
-        cold,
+        df.filter(~is_hot(hot_ids)) if hot_ids else df,
         gap_s=gap_s,
         rate_window_s=rate_window_s,
         roll_rows=roll_rows,
@@ -112,21 +121,20 @@ def featurize_salted(
         wide=wide,
         enum_shuffle=enum_shuffle,
     )
-
-    hot = df.join(F.broadcast(hot_census), "conv_id", "left_semi")
-    hot_out, handles = _featurize_hot(
-        hot,
-        hot_census,
-        gap_s=gap_s,
-        rate_window_s=rate_window_s,
-        roll_rows=roll_rows,
-        chunk_target_rows=chunk_target_rows,
-        persist_hot=persist_hot,
-        include_text=include_text,
-        wide=wide,
-        enum_shuffle=enum_shuffle,
-    )
-    out = cold_out.unionByName(hot_out.select(cold_out.columns))
+    out, handles = cold_out, []
+    if hot_ids:
+        hot_out, handles = _featurize_hot(
+            df.filter(is_hot(hot_ids)),
+            gap_s=gap_s,
+            rate_window_s=rate_window_s,
+            roll_rows=roll_rows,
+            chunk_target_rows=chunk_target_rows,
+            persist_hot=persist_hot,
+            include_text=include_text,
+            wide=wide,
+            enum_shuffle=enum_shuffle,
+        )
+        out = cold_out.unionByName(hot_out.select(cold_out.columns))
     if enum_shuffle and decode_enums:
         from astrospectro_spark.engine.windows import enum_decode, enum_decode_map
 
@@ -160,12 +168,14 @@ def release_cached(df: DataFrame | None = None) -> None:
     fallback is therefore only safe when a single salted result is in
     flight (the FeatureRun loop's case: one bucket at a time); callers
     running several salted featurizations concurrently must keep the
-    returned DataFrame and pass it here untransformed. Call after the
-    output is materialised (write/collect); idempotent either way.
+    returned DataFrame and pass it here untransformed. A result with no
+    hot branch carries an EMPTY handle list: releasing it releases
+    nothing. Call after the output is materialised (write/collect);
+    idempotent either way.
     """
-    handles = list(getattr(df, "_astrospectro_cached", [])) if df is not None else []
+    handles = getattr(df, "_astrospectro_cached", None) if df is not None else None
     with _REGISTRY_LOCK:
-        if not handles:
+        if handles is None:
             handles, _CACHE_REGISTRY[:] = list(_CACHE_REGISTRY), []
         else:
             drop = {id(g) for g in handles}
@@ -175,6 +185,27 @@ def release_cached(df: DataFrame | None = None) -> None:
             h.unpersist()
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
+
+
+def collect_hot_ids(df: DataFrame, hot_threshold: int, entity_col: str = "conv_id") -> list:
+    """The census, as an eager action: the non-null ``entity_col``
+    values with more than ``hot_threshold`` rows, collected to the
+    driver. There are at most ``rows // hot_threshold`` of them."""
+    return [
+        r[0]
+        for r in df.filter(F.col(entity_col).isNotNull())
+        .groupBy(entity_col)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > hot_threshold)
+        .select(entity_col)
+        .collect()
+    ]
+
+
+def is_hot(hot_ids: list, entity_col: str = "conv_id") -> "F.Column":
+    """Null-safe membership in the census's hot set: a null entity is
+    never hot, so ``~is_hot`` keeps it on the cold path."""
+    return F.coalesce(F.col(entity_col).isin(hot_ids), F.lit(False))
 
 
 GRID = 128
@@ -238,7 +269,6 @@ def chunk_of(ts_col: str = "ts") -> "F.Column":
 
 def _featurize_hot(
     hot: DataFrame,
-    hot_census: DataFrame,
     gap_s: float,
     rate_window_s: int,
     roll_rows: int,

@@ -128,9 +128,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.anchors:
         anchors = spark.read.parquet(args.anchors)
         tol = "tolerance_s" if "tolerance_s" in anchors.columns else None
-        out = asof_join(turns, anchors, tolerance_col=tol)
-        out.write.mode("overwrite").parquet(f"{args.output}/asof")
-        print(f"asof: {out.count()} rows")
+        asof_path = f"{args.output}/asof"
+        asof_join(turns, anchors, tolerance_col=tol).write.mode("overwrite").parquet(asof_path)
+        # count the written files (parquet footers), not the join again
+        print(f"asof: {spark.read.parquet(asof_path).count()} rows")
     return 0
 
 

@@ -173,3 +173,15 @@ def test_featurizer_is_pluggable(spark, transcripts_sdf):
         r.run(transcripts_sdf)
         plain = featurize_expr(transcripts_sdf).toPandas()
         assert_frames_match(r.result().toPandas(), plain, SORT, rtol=0, atol=0)
+
+
+def test_lineage_holds_one_file_per_bucket(spark, transcripts_sdf):
+    """Each bucket commit appends its lineage record as one parquet
+    file, not one file per default-parallelism slice."""
+    import os
+
+    with tempfile.TemporaryDirectory() as base:
+        r = FeatureRun(spark, f"{base}/x", n_buckets=3)
+        r.run(transcripts_sdf)
+        files = [f for f in os.listdir(r.lineage_dir) if f.endswith(".parquet")]
+        assert len(files) == len(r.committed_buckets()) == 3

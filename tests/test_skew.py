@@ -140,3 +140,57 @@ def test_session_stitch_adversarial_boundaries(spark):
     # the fixture really exercised multi-chunk open sessions
     one = plain[plain.conv_id == "conv-a"]
     assert one["session_id"].nunique() == 4
+
+
+def test_salted_nothing_hot_gets_plain_plan(spark, transcripts_sdf):
+    """With no conversation above the threshold the census leaves
+    nothing to split: the result is featurize_expr's plan, with no
+    union, broadcast join or cached hot slice behind it."""
+    from astrospectro_spark.engine import skew
+
+    from .test_plan_shape import _formatted, _op_counts
+
+    registered = [id(h) for h in skew._CACHE_REGISTRY]
+    salted = featurize_salted(transcripts_sdf, hot_threshold=10**9)
+    plan = _formatted(spark, salted)
+    got = _op_counts(plan)
+    want = _op_counts(_formatted(spark, featurize_expr(transcripts_sdf)))
+    for op in ("Window", "Sort", "Exchange"):
+        assert got.get(op, 0) == want.get(op, 0), (op, got, want)
+    for op in ("Union", "InMemoryRelation", "InMemoryTableScan", "BroadcastHashJoin"):
+        assert op not in plan, op
+    assert salted._astrospectro_cached == []
+    assert [id(h) for h in skew._CACHE_REGISTRY] == registered
+
+
+def test_null_conv_id_stays_cold(spark, transcripts_sdf, transcripts_pdf):
+    """Null conv_ids are never hot, even as a group larger than the
+    threshold: they take the cold path, whose window groups them like
+    featurize_expr does."""
+    nulls = transcripts_pdf.head(30).assign(conv_id=None, turn_idx=range(30))
+    sdf = transcripts_sdf.unionByName(
+        spark.createDataFrame(nulls, schema=transcripts_sdf.schema)
+    )
+    salted = featurize_salted(sdf, hot_threshold=10, chunk_target_rows=37).toPandas()
+    plain = featurize_expr(sdf).toPandas()
+    assert salted.conv_id.isna().sum() == 30
+    assert_frames_match(salted, plain, SORT, rtol=0.0, atol=0.0)
+
+
+def test_release_of_hot_free_result_keeps_other_caches(spark, transcripts_sdf):
+    """Releasing a result with no hot branch (an empty handle list)
+    releases nothing; another in-flight result's hot slice stays
+    cached until that result is released itself."""
+    from astrospectro_spark.engine import skew
+
+    hot = featurize_salted(transcripts_sdf, hot_threshold=10, chunk_target_rows=37)
+    cold = featurize_salted(transcripts_sdf, hot_threshold=10**9)
+    (handle,) = hot._astrospectro_cached
+    try:
+        skew.release_cached(cold)
+        assert handle.is_cached
+        assert id(handle) in {id(h) for h in skew._CACHE_REGISTRY}
+    finally:
+        skew.release_cached(hot)
+    assert not handle.is_cached
+    assert id(handle) not in {id(h) for h in skew._CACHE_REGISTRY}

@@ -6,14 +6,20 @@ whole-stage-codegen'd, ONE shuffle for the whole feature set (all
 windows share the same partitioning, so Catalyst reuses the exchange).
 No Python crosses the hot path.
 
-Sort-pass discipline: windows are CLUSTERED by ordering family — all
-(ts, turn_idx) row/cumulative frames first, then the
-(conv_id, session_id) session family, then every rangeBetween frame
+Sort-pass discipline: windows are CLUSTERED by ordering family — the
+(ts, turn_idx) row/cumulative frames, and every rangeBetween frame
 ordered by ONE staged epoch-µs column (``_usq``; a fresh
 ``unix_micros(ts)`` projection per window would give each frame its own
 sort key). Catalyst inserts one Sort per family switch, so the 175-
 column wide plan runs 3 sorts instead of 16 — at 10^12 rows each
 avoided Sort is a full pass over every partition.
+
+One definition, two plans: :func:`window_layers` stages every windowed
+column with a stitch :class:`Kind`, and :func:`derive` computes the rest
+with no windows. :func:`featurize_expr` runs them over ``conv_id``; the
+salted plan (``engine/skew.py``) runs the same layers over ts-range
+chunks of hot conversations and :func:`stitch_chunks` merges the
+chunks with one rule per kind before the same :func:`derive`.
 
 Leakage contract: every frame ends at the CURRENT ROW
 (``rowsBetween(..., 0)`` / ``rangeBetween(..., 0)``) — no feature may
@@ -30,6 +36,8 @@ backfill ≙ post-merge NaN fill (src/pipeline/feature_engineering.py:1586-1615)
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -249,9 +257,9 @@ def wide_local_exprs(enum_shuffle: bool = False) -> dict[str, Column]:
     post-merge composite battery, src/pipeline/feature_engineering.py:
     1403-1712): pure per-row expressions over already-present columns
     (``text_len``, ``lag1_ts_gap_s``, ``prev_role``, ``tool``, ``ts``).
-    Shared verbatim by the plain and the salted featurizers — row-local
-    expressions commute with chunking, so parity holds by construction.
-    ``prev_role`` and ``lag1_ts_gap_s`` must exist before applying.
+    Part of :func:`derive`, which the plain and the salted plans both
+    apply last. ``prev_role`` and ``lag1_ts_gap_s`` must exist before
+    applying.
 
     ``enum_shuffle``: role/prev_role hold 64-bit codes, ``tool_len`` is
     already staged below the exchange (length can't be read off a
@@ -382,9 +390,7 @@ def _enum_code(c: str) -> Column:
     ``xxhash64(NULL)`` would return the seed, aliasing NULL with a real
     value). The code is globally consistent with no dictionary pass:
     any executor computes the same code for the same string."""
-    return F.when(
-        F.col(c).isNull(), F.lit(None).cast("long")
-    ).otherwise(F.xxhash64(F.col(c)))
+    return F.expr(f"case when {c} is null then cast(null as bigint) else xxhash64({c}) end")
 
 
 def enum_code_lit(value: str) -> Column:
@@ -432,491 +438,593 @@ def _ts_us(col: str = "ts") -> Column:
     return F.unix_micros(F.col(col).cast("timestamp"))
 
 
-def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFrame:
-    """The wide feature tier, computed in DEPENDENCY LAYERS: each layer
-    is one projection of mutually independent window expressions, so
-    Catalyst extracts the whole layer into a single WindowExec pass
-    (one row-copy per layer instead of one per column). Layers:
+def _ts_us_sql(col: str = "ts") -> str:
+    """:func:`_ts_us` as SQL text, for expressions built as text."""
+    return f"unix_micros(cast({col} as timestamp))"
 
-    - **W0** — every window over raw/base-staged columns (lags, all
-      roll frames, cumulative sums/extremes, boundary carries that only
-      read base columns). One node, ~45 expressions.
-    - locals — row-wise derivations of W0 outputs (no window).
-    - **W1** — windows over W0-derived columns (session text-len carry,
-      role-change sums, the wing trapezoid integral). One node.
-    - **SESS** — the (conv_id, session_id) family: partitioning by a
-      superset of the exchange key reuses the conv_id hash exchange
-      (subset rule) and costs one in-partition sort, never a shuffle.
-    - **RANGE** — every rangeBetween frame, ordered by the ONE staged
-      ``_usq`` column so the whole family shares a single us-Sort (a
-      fresh unix_micros projection per window would give each frame its
-      own sort key). The caller appends ``rate_60s`` to this node.
-    - final locals — :func:`wide_local_exprs` + calendar/derived cols.
 
-    Same single exchange as the base tier; running mean/std (zscore)
-    come from exact int64 cumulative sums so the expr, salted and
-    grouped paths produce bit-identical doubles. Requires ``_sb``,
-    ``_rn``, ``_gap_us`` staged by :func:`featurize_expr`.
+class Kind(NamedTuple):
+    """Stitch kind of a staged column: how its value over one chunk of a
+    conversation (the chunk's rows preceded by context rows, a contiguous
+    suffix of its history) becomes its value over the whole
+    conversation. :func:`stitch_chunks` applies one rule per kind.
+
+    - ``rule="local"``: row-local (``rows == secs == 0``) or bounded,
+      reading at most ``rows`` earlier rows or ``secs`` seconds back;
+      exact as computed once the chunk carries that much history;
+    - ``"sum"``: cumulative sum or count (never NULL);
+    - ``"max"``/``"min"``: cumulative extreme;
+    - ``"first"``: the conversation's first value (never NULL);
+    - ``"last"``: the last non-null value so far;
+    - ``session=True``: ``"sum"``/``"max"``/``"min"`` over the current
+      session only.
     """
-    def _rl(r: str) -> Column:
-        # registry literal in whatever shape `role` currently has:
-        # plain string, or its constant-folded 64-bit code
-        return enum_code_lit(r) if enum_shuffle else F.lit(r)
 
+    rule: str = "local"
+    rows: int = 0
+    secs: int = 0
+    session: bool = False
+
+
+LOCAL = Kind()
+SUM, MAX, MIN, FIRST, LAST = (Kind(r) for r in ("sum", "max", "min", "first", "last"))
+SESS_SUM, SESS_MAX, SESS_MIN = (Kind(r, session=True) for r in ("sum", "max", "min"))
+# the staged count of session boundaries: session-scoped stitches find a
+# chunk's open-session rows by it
+SESSION_COUNTER = "session_id"
+
+# one projection of staged columns, each tagged with its stitch kind
+Layer = dict[str, tuple[Kind, Column]]
+
+
+def _rows(k: int) -> Kind:
+    return Kind(rows=k)
+
+
+def _secs(s: int) -> Kind:
+    return Kind(secs=s)
+
+
+def layer_kinds(layers: list[Layer]) -> dict[str, Kind]:
+    return {c: k for layer in layers for c, (k, _) in layer.items()}
+
+
+def apply_layers(df: DataFrame, layers: list[Layer]) -> DataFrame:
+    for layer in layers:
+        df = df.withColumns({c: e for c, (_, e) in layer.items()})
+    return df
+
+
+def project_inputs(
+    df: DataFrame, include_text: bool, enum_shuffle: bool, wide: bool
+) -> tuple[DataFrame, list[str]]:
+    """The row projection below the exchange, shared by the plain and
+    salted paths: ``text`` becomes ``text_len`` (and is dropped unless
+    ``include_text``); under ``enum_shuffle`` ``role``/``tool`` become
+    64-bit codes and the wide tier's ``tool_len`` (a length of the
+    STRING, which a code does not carry) is staged here. Returns the
+    projected rows and the output key columns."""
+    if enum_shuffle and include_text:
+        raise ValueError(
+            "enum_shuffle supports the include_text=False feature-table "
+            "contract only (the text-carrying variant keeps strings)"
+        )
+    text_len = F.length(F.coalesce(F.col("text"), F.lit(""))).cast("int")
+    if include_text:
+        return df.withColumn("text_len", text_len), KEY_COLS
+    key_cols = [c for c in KEY_COLS if c != "text"]
+    if not enum_shuffle:
+        return df.select(*key_cols, text_len.alias("text_len")), key_cols
+    extra = (
+        [F.coalesce(F.length("tool"), F.lit(0)).cast("int").alias("tool_len")]
+        if wide
+        else []
+    )
+    coded = df.select(
+        "conv_id",
+        "turn_idx",
+        _enum_code("role").alias("role"),
+        _enum_code("tool").alias("tool"),
+        "ts",
+        text_len.alias("text_len"),
+        *extra,
+    )
+    return coded, key_cols
+
+
+def window_layers(
+    key: list[str],
+    gap_s: float = SESSION_GAP_S,
+    rate_window_s: int = RATE_WINDOW_S,
+    roll_rows: int = ROLL_ROWS,
+    wide: bool = False,
+    enum_shuffle: bool = False,
+) -> list[Layer]:
+    """Every windowed column of the feature plan, in DEPENDENCY LAYERS
+    partitioned by ``key``: ``["conv_id"]`` for the plain plan,
+    ``["conv_id", "_tgt"]`` for the salted plan's chunks. Each layer is
+    one projection of mutually independent window expressions, so
+    Catalyst extracts it into a single WindowExec pass (one row-copy
+    per layer instead of one per column). Base layers:
+
+    - ``_usq``: ONE staged epoch-µs column that every rangeBetween frame
+      orders by, so the whole range family shares a single us-Sort (a
+      fresh unix_micros projection per window would give each frame its
+      own sort key);
+    - layer 0: every window over raw columns (lags, running counts,
+      the tool fill-forward, the 5-row mean);
+    - ``_sb`` and layer 1: session boundaries, then ``session_id`` and
+      ``turn_in_session`` in ONE pass. turn_in_session avoids a second
+      exchange: instead of a (conv, session) partition it counts rows
+      since the most recent boundary inside the SAME window;
+    - the range family: ``rate_60s`` (plus the wide tier's rates and
+      sums), run EARLY while the row is still narrow — its us-Sort
+      materializes ~20 fields per row here, vs ~100 after the wide tier.
+
+    The wide tier adds W0 and W1 (:func:`_wide_layers`). Everything
+    without a window is left to :func:`derive`.
+    """
+    # SQL text: one parse per column instead of a Py4J round trip per
+    # operator. The layers are built for every bucket of a job (twice
+    # for a salted one), and the Column API form takes ~20x as long to
+    # build, a measurable share of each bucket's driver time.
+    part = ", ".join(key)
+    w = f"over (partition by {part} order by ts, turn_idx)"
+    wcum = (
+        f"over (partition by {part} order by ts, turn_idx "
+        "rows between unbounded preceding and current row)"
+    )
+    us = _ts_us_sql("ts")
+    gap_us = f"({us} - lag({us}) {w})"
+
+    def rlit(r: str) -> str:
+        return f"xxhash64('{r}')" if enum_shuffle else f"'{r}'"
+
+    # growing-frame difference instead of a sliding [-X, 0] range frame
+    # (round-6): a sliding range frame is re-aggregated from scratch for
+    # every row by Spark's SlidingWindowFunctionFrame — O(rows-in-frame)
+    # updates PER ROW, which on a dense mega-conversation (3600 s frame ≈
+    # 110 rows at ~33 s/turn) dominated the hot task. A frame with an
+    # UNBOUNDED PRECEDING lower bound runs incrementally (O(1)/row):
+    #   rows in [t-X, t]  =  rows in (-inf, t]  -  rows in (-inf, t-X)
+    # Bounds are integer microseconds, so (-inf, t-X) == (-inf, t-X-1µs]
+    # exactly; counts are ints and sums int64 over int text_len, so the
+    # differences are bit-identical to the sliding originals (empty
+    # "before" frame: count 0, sum NULL → coalesce 0). Rows sharing the
+    # current ts count regardless of turn_idx (time-based semantics;
+    # equal-ts is not leakage).
+    def wgrow(sec: int | None) -> str:
+        upper = "current row" if sec is None else f"{sec * 1_000_000 + 1}L preceding"
+        return (
+            f"over (partition by {part} order by _usq "
+            f"range between unbounded preceding and {upper})"
+        )
+
+    def rate(sec: int) -> tuple[Kind, Column]:
+        return _secs(sec), F.expr(
+            f"cast(count(1) {wgrow(None)} - count(1) {wgrow(sec)} as double)"
+        )
+
+    def tsum(sec: int) -> tuple[Kind, Column]:
+        return _secs(sec), F.expr(
+            f"cast(sum(text_len) {wgrow(None)} "
+            f"- coalesce(sum(text_len) {wgrow(sec)}, 0) as bigint)"
+        )
+
+    range_family = {"rate_60s": rate(rate_window_s)}
+    if wide:
+        range_family.update(
+            {
+                "rate_300s": rate(WIDE_RATE_S),
+                "text_sum_300s": tsum(WIDE_RATE_S),
+                "rate_3600s": rate(WIDE_RATE_MAX_S),
+                "text_sum_3600s": tsum(WIDE_RATE_MAX_S),
+                "rate_900s": rate(900),
+                "text_sum_900s": tsum(900),
+                "text_sum_60s": tsum(RATE_WINDOW_S),
+            }
+        )
+
+    def sql(kind: Kind, text: str) -> tuple[Kind, Column]:
+        return kind, F.expr(text)
+
+    layers: list[Layer] = [
+        {"_usq": sql(LOCAL, us)},
+        {
+            "lag1_ts_gap_s": sql(_rows(1), f"cast({gap_us} as double) / 1000000D"),
+            "_gap_us": sql(_rows(1), gap_us),
+            "lag1_text_len_delta": sql(
+                _rows(1), f"cast(text_len - lag(text_len) {w} as double)"
+            ),
+            "_rn": sql(SUM, f"row_number() {w}"),
+            # fill-forward graft (≙ add_photometric_composites, reference:
+            # src/pipeline/feature_engineering.py:1586-1615)
+            "tool_backfill": sql(LAST, f"last(tool, true) {wcum}"),
+            **{
+                f"cum_count_{r}": sql(
+                    SUM,
+                    f"cast(sum(case when role = {rlit(r)} then 1 else 0 end) {wcum} as int)",
+                )
+                for r in ROLES
+            },
+            "roll_mean_text_len_5": sql(
+                _rows(roll_rows - 1),
+                f"avg(text_len) over (partition by {part} order by ts, turn_idx "
+                f"rows between {roll_rows - 1} preceding and current row)",
+            ),
+        },
+        {
+            "_sb": sql(
+                _rows(1), f"case when lag1_ts_gap_s > {float(gap_s)!r}D then 1 else 0 end"
+            )
+        },
+        {
+            SESSION_COUNTER: sql(SUM, f"cast(sum(_sb) {wcum} as int)"),
+            "turn_in_session": sql(
+                SESS_SUM,
+                f"cast(_rn - coalesce(last(case when _sb = 1 then _rn - 1 end, true) "
+                f"{wcum}, 0) as int)",
+            ),
+        },
+        range_family,
+    ]
+    if wide:
+        spec = Window.partitionBy(*key).orderBy("ts", "turn_idx")
+        cum = spec.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        layers += _wide_layers(spec, cum, _ts_us("ts"), roll_rows, gap_s)
+    return layers
+
+
+def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
+    """The wide tier's window layers, after the base layers:
+
+    - **W0** — every window over raw/base-staged columns (lags, the
+      base-width min/max frames, cumulative sums/extremes, boundary
+      carries that only read base columns). One node.
+    - three bounded row-locals W1 reads (role change, trapezoids).
+    - **W1** — windows over W0 outputs: rolling sums/means/stds as lag
+      differences of W0's running sums, 10/20-row min/max as block
+      compositions, and the session family. One node.
+
+    Running mean/std, ratios and the composite battery are
+    :func:`derive`'s. Requires ``_sb``, ``_rn``, ``_gap_us`` from the
+    base layers."""
     w5 = w.rowsBetween(-(roll_rows - 1), Window.currentRow)
     w10 = w.rowsBetween(-(WIDE_ROLL10 - 1), Window.currentRow)
     w20 = w.rowsBetween(-(WIDE_ROLL20 - 1), Window.currentRow)
-    w4a = w.rowsBetween(-1, 0)
-    w4b = w.rowsBetween(-4, -3)
-    wtrap = w.rowsBetween(-3, 0)
-    usq = F.col("_usq")
     tl = F.col("text_len")
     tll = tl.cast("long")
     gap = F.col("lag1_ts_gap_s")
     rn = F.col("_rn")
+    sb = F.col("_sb")
     # 10/20-row min/max block decomposition applies only when the
     # frames tile exactly into >=2 base-width (roll_rows) blocks
-    _tiles = (
+    tiles = (
         WIDE_ROLL10 % roll_rows == 0
         and WIDE_ROLL10 // roll_rows >= 2
         and WIDE_ROLL20 % roll_rows == 0
     )
-    # identical window expressions within one projection are
-    # deduplicated by Catalyst, so compound formulas (zscore from cum
-    # sums, session_elapsed from the boundary carry) stay in-layer.
-    cum_tl = F.sum(tl).over(wcum).cast("long")
-    ctl2 = F.sum(tll * tll).over(wcum).cast("long")
-    m_run = cum_tl / rn
-    var_run = ctl2 / rn - m_run * m_run
-    sb_us = F.when(gap > gap_s, us)
-    # us is non-decreasing within a conversation, so first == min and
-    # the unordered partition-only window (its own WindowExec) is not
-    # needed
-    first_us = F.first(us).over(wcum)
-    start = F.coalesce(F.last(sb_us, ignorenulls=True).over(wcum), first_us)
-    run_max = F.max(tl).over(wcum).cast("int")
-    run_min = F.min(tl).over(wcum).cast("int")
-    act_us = F.coalesce(F.sum("_gap_us").over(wcum), F.lit(0)).cast("long")
+    r10, r20 = _rows(WIDE_ROLL10 - 1), _rows(WIDE_ROLL20 - 1)
+    # a gap reads its predecessor: gap frames reach one row further
+    g5, g10 = _rows(roll_rows), _rows(WIDE_ROLL10)
 
-    # ---- RANGE first: every rangeBetween frame while the row is
-    # narrow (merges with the caller's rate_60s node — same spec,
-    # adjacent, independent).
-    #
-    # GROWING-FRAME form (round-6 optimization): a sliding range frame
-    # [-X, 0] is re-aggregated from scratch for every row by Spark's
-    # SlidingWindowFunctionFrame — O(rows-in-frame) updates PER ROW,
-    # which on a dense mega-conversation (3600 s frame ≈ 110 rows at
-    # ~33 s/turn) dominated the hot task. count/sum over [-X, 0] are
-    # instead computed as the DIFFERENCE of two frames with an
-    # UNBOUNDED PRECEDING lower bound, which Spark executes with the
-    # incremental UnboundedPrecedingWindowFunctionFrame (rows are only
-    # ever ADDED as the upper bound advances — O(1)/row amortized):
-    #   rows in [t-X, t]  =  rows in (-inf, t]  -  rows in (-inf, t-X)
-    # Bounds are integer microseconds, so (-inf, t-X) == (-inf, t-X-1µs]
-    # exactly. Counts are ints and the sums are int64 over int text_len
-    # — both differences are bit-identical to the sliding originals
-    # (empty "before" frame: count 0, sum NULL → coalesce 0).
-    def _wgrow(upper_us: int):
-        return (
-            Window.partitionBy("conv_id")
-            .orderBy(usq)
-            .rangeBetween(Window.unboundedPreceding, upper_us)
-        )
+    def lag_delta(k: int) -> tuple[Kind, Column]:
+        return _rows(k), (tl - F.lag(tl, k).over(w)).cast("double")
 
-    cnt_le = F.count(F.lit(1)).over(_wgrow(0))
-    sum_le = F.sum(tl).over(_wgrow(0))
+    def lag_gap(k: int) -> tuple[Kind, Column]:
+        return _rows(k), (us - F.lag(us, k).over(w)).cast("double") / F.lit(1e6)
 
-    def _rate(sec: int) -> Column:
-        before = F.count(F.lit(1)).over(_wgrow(-sec * 1_000_000 - 1))
-        return (cnt_le - before).cast("double")
+    # ---- W0: one WindowExec over (conv)(ts, turn_idx) frames. Only the
+    # base-width min/max frames slide; when the 10/20-row frames tile
+    # into base-width blocks (the default roll_rows=5 does), W1 composes
+    # them EXACTLY: max over [t-19, t] = greatest of the 5-row block
+    # maxima at lags 0/5/10/15 (at partition heads the early blocks
+    # already cover [1, t] and missing lags are NULL, which
+    # greatest/least skip — identical to the frame max). Non-tiling
+    # roll_rows falls back to sliding frames here.
+    w0: Layer = {
+        "_lag_tll": (_rows(1), F.lag(tll).over(w)),
+        "_lag2_tll": (_rows(2), F.lag(tll, 2).over(w)),
+        "prev_role": (_rows(1), F.lag("role").over(w)),
+        "_prev_tool": (_rows(1), F.lag("tool").over(w)),
+        "cum_text_len": (SUM, F.sum(tl).over(wcum).cast("long")),
+        "_ctl2": (SUM, F.sum(tll * tll).over(wcum).cast("long")),
+        **{f"lag{k}_text_len_delta": lag_delta(k) for k in range(2, 8)},
+        "lag2_ts_gap_s": lag_gap(2),
+        "lag3_ts_gap_s": lag_gap(3),
+        "roll_max_text_len_5": (_rows(roll_rows - 1), F.max(tl).over(w5).cast("double")),
+        "roll_min_text_len_5": (_rows(roll_rows - 1), F.min(tl).over(w5).cast("double")),
+        "gap_roll_max_5": (g5, F.max(gap).over(w5)),
+        "gap_roll_min_5": (g5, F.min(gap).over(w5)),
+        **(
+            {}
+            if tiles
+            else {
+                "roll_min_text_len_10": (r10, F.min(tl).over(w10).cast("double")),
+                "roll_max_text_len_10": (r10, F.max(tl).over(w10).cast("double")),
+                "roll_min_text_len_20": (r20, F.min(tl).over(w20).cast("double")),
+                "roll_max_text_len_20": (r20, F.max(tl).over(w20).cast("double")),
+                "gap_roll_max_10": (g10, F.max(gap).over(w10)),
+                "gap_roll_min_10": (g10, F.min(gap).over(w10)),
+            }
+        ),
+        "wing_asym_5": (
+            _rows(4),
+            (
+                F.sum(tll).over(w.rowsBetween(-1, 0)) - F.sum(tll).over(w.rowsBetween(-4, -3))
+            ).cast("double"),
+        ),
+        "run_max_text_len": (MAX, F.max(tl).over(wcum).cast("int")),
+        "run_min_text_len": (MIN, F.min(tl).over(wcum).cast("int")),
+        "conv_first_text_len": (FIRST, F.first(tl).over(wcum).cast("int")),
+        "cum_tool_set": (
+            SUM,
+            F.sum(F.col("tool").isNotNull().cast("int")).over(wcum).cast("long"),
+        ),
+        "cum_empty_text": (SUM, F.sum((tl == 0).cast("int")).over(wcum).cast("long")),
+        "cum_long_text": (SUM, F.sum((tl > 500).cast("int")).over(wcum).cast("long")),
+        "gap_max_run": (MAX, F.max(gap).over(wcum)),
+        "high_gap_count_run": (
+            SUM,
+            F.sum(F.when(gap > 3600, 1).otherwise(0)).over(wcum).cast("long"),
+        ),
+        "_active_us": (
+            SUM,
+            F.coalesce(F.sum("_gap_us").over(wcum), F.lit(0)).cast("long"),
+        ),
+        # us is non-decreasing within a conversation, so first == min and
+        # the unordered partition-only window (its own WindowExec) is not
+        # needed; the session start is the last boundary's us, else it
+        "_first_us": (FIRST, F.first(us).over(wcum)),
+        "_last_sb_us": (LAST, F.last(F.when(gap > gap_s, us), ignorenulls=True).over(wcum)),
+    }
 
-    def _tsum(sec: int) -> Column:
-        before = F.sum(tl).over(_wgrow(-sec * 1_000_000 - 1))
-        return (sum_le - F.coalesce(before, F.lit(0))).cast("long")
-
-    df = df.withColumns(
-        {
-            "rate_300s": _rate(WIDE_RATE_S),
-            "text_sum_300s": _tsum(WIDE_RATE_S),
-            "rate_3600s": _rate(WIDE_RATE_MAX_S),
-            "text_sum_3600s": _tsum(WIDE_RATE_MAX_S),
-            "rate_900s": _rate(900),
-            "text_sum_900s": _tsum(900),
-            "text_sum_60s": _tsum(RATE_WINDOW_S),
-        }
-    )
-
-    # ---- W0: one WindowExec over (conv)(ts, turn_idx) frames ----
-    df = df.withColumns(
-        {
-            "_lag_tll": F.lag(tll).over(w),
-            "_lag2_tll": F.lag(tll, 2).over(w),
-            "prev_role": F.lag("role").over(w),
-            "_prev_tool": F.lag("tool").over(w),
-            "cum_text_len": cum_tl,
-            "lag2_text_len_delta": (tl - F.lag(tl, 2).over(w)).cast("double"),
-            "lag3_text_len_delta": (tl - F.lag(tl, 3).over(w)).cast("double"),
-            "lag4_text_len_delta": (tl - F.lag(tl, 4).over(w)).cast("double"),
-            "lag5_text_len_delta": (tl - F.lag(tl, 5).over(w)).cast("double"),
-            "lag6_text_len_delta": (tl - F.lag(tl, 6).over(w)).cast("double"),
-            "lag7_text_len_delta": (tl - F.lag(tl, 7).over(w)).cast("double"),
-            "lag2_ts_gap_s": (us - F.lag(us, 2).over(w)).cast("double") / F.lit(1e6),
-            "lag3_ts_gap_s": (us - F.lag(us, 3).over(w)).cast("double") / F.lit(1e6),
-            # only the base-width min/max frames are evaluated as
-            # sliding frames; when the 10/20-row frames tile exactly
-            # into base-width blocks (the default roll_rows=5 does),
-            # they are EXACT block compositions computed in W1: max
-            # over [t-19, t] = greatest of the 5-row block maxima at
-            # lags 0/5/10/15 (at partition heads the early blocks
-            # already cover [1, t] and missing lags are NULL, which
-            # greatest/least skip — identical to the frame max).
-            # Comparisons, not sums, so this is exact for any type.
-            # Non-tiling roll_rows falls back to sliding frames below.
-            "roll_max_text_len_5": F.max(tl).over(w5).cast("double"),
-            "roll_min_text_len_5": F.min(tl).over(w5).cast("double"),
-            "gap_roll_max_5": F.max(gap).over(w5),
-            "gap_roll_min_5": F.min(gap).over(w5),
-            **(
-                {}
-                if _tiles
-                else {
-                    "roll_min_text_len_10": F.min(tl).over(w10).cast("double"),
-                    "roll_max_text_len_10": F.max(tl).over(w10).cast("double"),
-                    "roll_min_text_len_20": F.min(tl).over(w20).cast("double"),
-                    "roll_max_text_len_20": F.max(tl).over(w20).cast("double"),
-                    "gap_roll_max_10": F.max(gap).over(w10),
-                    "gap_roll_min_10": F.min(gap).over(w10),
-                }
-            ),
-            "wing_asym_5": (F.sum(tll).over(w4a) - F.sum(tll).over(w4b)).cast(
-                "double"
-            ),
-            "run_max_text_len": run_max,
-            "run_min_text_len": run_min,
-            "conv_first_text_len": F.first(tl).over(wcum).cast("int"),
-            "cum_tool_set": F.sum(F.col("tool").isNotNull().cast("int"))
-            .over(wcum)
-            .cast("long"),
-            "cum_empty_text": F.sum((tl == 0).cast("int")).over(wcum).cast("long"),
-            "cum_long_text": F.sum((tl > 500).cast("int")).over(wcum).cast("long"),
-            "gap_max_run": F.max(gap).over(wcum),
-            "high_gap_count_run": F.sum(F.when(gap > 3600, 1).otherwise(0))
-            .over(wcum)
-            .cast("long"),
-            "_active_us": act_us,
-            "text_len_zscore_run": F.when(
-                var_run > 0, (tll - m_run) / F.sqrt(var_run)
-            ).otherwise(F.lit(0.0)),
-            "run_std_text_len": F.sqrt(F.greatest(F.lit(0.0), var_run)),
-            "_ctl2": ctl2,
-            "session_elapsed_s": (us - start).cast("double") / F.lit(1e6),
-            "sess_start_hour": F.hour(F.timestamp_micros(start.cast("long"))).cast(
-                "int"
-            ),
-            "time_since_start_s": (us - first_us).cast("double") / F.lit(1e6),
-            "days_since_start": F.floor((us - first_us) / F.lit(86_400_000_000)).cast(
-                "long"
-            ),
-        }
-    )
-
-    # ---- locals over W0 outputs (no window) ----
-    gl = F.least(F.col("_gap_us"), F.lit(3_600_000_000))
+    # ---- the row-locals W1 reads. Trapezoid areas in exact integers:
+    # (len_i + len_{i-1}) × the gap floored to whole ms (floor via % is
+    # exact long arithmetic in both engines). The wing trap caps the gap
+    # at 3600 s so int64 holds for ~10^9-row frames; the session trap's
+    # gap is <= gap_s by definition of a non-boundary row.
+    gap_us = F.col("_gap_us")
+    gl = F.least(gap_us, F.lit(3_600_000_000))
     gms_cap = ((gl - gl % 1000) / 1000).cast("long")
-    gms_sess = ((F.col("_gap_us") - F.col("_gap_us") % 1000) / 1000).cast("long")
+    gms_sess = ((gap_us - gap_us % 1000) / 1000).cast("long")
     lag_tll = F.col("_lag_tll")
-    df = df.withColumns(
-        {
-            "role_changed": (~F.col("role").eqNullSafe(F.col("prev_role"))).cast(
-                "int"
-            ),
-            "tool_changed": (~F.col("tool").eqNullSafe(F.col("_prev_tool"))).cast(
-                "int"
-            ),
-            "accel_text_len": (tll - 2 * lag_tll + F.col("_lag2_tll")).cast("double"),
-            "pct_change_text_len": F.when(lag_tll > 0, (tl - lag_tll) / lag_tll),
-            # trapezoid areas in exact integers: (len_i + len_{i-1}) ×
-            # the gap floored to whole ms (floor via % is exact long
-            # arithmetic both engines). The wing trap caps the gap at
-            # 3600 s so int64 holds for ~10^9-row frames; the session
-            # trap's gap is <= gap_s by definition of a non-boundary row.
-            "_trap_w": F.when(
-                F.col("_gap_us").isNotNull(), (tll + lag_tll) * gms_cap
-            ),
-            "_trap_s": F.when(
-                (F.col("_sb") == 0) & F.col("_gap_us").isNotNull(),
-                (tll + lag_tll) * gms_sess,
-            ),
-            "gap_roll_range_5": F.col("gap_roll_max_5") - F.col("gap_roll_min_5"),
-            "turn_idx_conv": rn.cast("int"),
-            "text_len_vs_first": (tl - F.col("conv_first_text_len")).cast("int"),
-            "run_depth_text_len": (
-                F.col("run_max_text_len") - F.col("run_min_text_len")
-            ).cast("int"),
-            "text_len_range_norm": F.when(
-                F.col("run_max_text_len") - F.col("run_min_text_len") > 0,
-                (tl - F.col("run_min_text_len")).cast("double")
-                / (F.col("run_max_text_len") - F.col("run_min_text_len")),
-            ),
-            "active_time_run_s": F.col("_active_us").cast("double") / F.lit(1e6),
-            "is_session_start": (F.col("turn_in_session") == 1).cast("int"),
-        }
-    )
-    df = df.withColumns(
-        {
-            "pct_assistant_so_far": F.col("cum_count_assistant").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_tool_so_far": F.col("cum_count_tool").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_user_so_far": F.col("cum_count_user").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_system_so_far": F.col("cum_count_system").cast("double")
-            / F.col("turn_idx_conv"),
-            "pct_tool_set_so_far": F.col("cum_tool_set").cast("double")
-            / F.col("turn_idx_conv"),
-            "cum_mean_text_len": F.col("cum_text_len") / F.col("turn_idx_conv"),
-            "mean_gap_run": F.when(
-                F.col("turn_idx_conv") > 1,
-                (F.col("_active_us") / (F.col("turn_idx_conv") - 1)) / F.lit(1e6),
-            ),
-            "turn_rate_session": F.col("turn_in_session").cast("double")
-            / (F.col("session_elapsed_s") + F.lit(1.0)),
-            "turn_rate_conv": F.col("turn_idx_conv").cast("double")
-            / (F.col("time_since_start_s") + F.lit(1.0)),
-            "sess_frac_of_turns": F.col("turn_in_session").cast("double")
-            / F.col("turn_idx_conv"),
-        }
-    )
+    locals_: Layer = {
+        "role_changed": (
+            _rows(1),
+            (~F.col("role").eqNullSafe(F.col("prev_role"))).cast("int"),
+        ),
+        "_trap_w": (_rows(1), F.when(gap_us.isNotNull(), (tll + lag_tll) * gms_cap)),
+        "_trap_s": (
+            _rows(1),
+            F.when((sb == 0) & gap_us.isNotNull(), (tll + lag_tll) * gms_sess),
+        ),
+    }
 
     # ---- W1: windows over W0-derived columns, one node.
     #
     # The rolling sum/mean/std family lives HERE as cumulative
-    # differences of the W0 running sums (round-6 optimization):
-    # Spark re-aggregates a sliding rows frame from scratch per row
-    # (O(k) updates/row/function), so the 10/20-row frames cost ~30
-    # update calls per row per statistic; the same values fall out of
-    # O(1) lag differences of cum_text_len/_ctl2/_active_us/cum-role
-    # counters. All sums are exact int64 (and Average's double
-    # accumulation over small ints is exact), so sum, sum/count and the
-    # moment formulas are bit-identical to the sliding originals.
-    # min/max cannot be expressed as differences and stay sliding in W0.
-    def _lagz(c: Column, k: int) -> Column:
+    # differences of the W0 running sums (round-6 optimization): Spark
+    # re-aggregates a sliding rows frame from scratch per row (O(k)
+    # updates/row/function), so the 10/20-row frames cost ~30 update
+    # calls per row per statistic; the same values fall out of O(1) lag
+    # differences of cum_text_len/_ctl2/_active_us/cum-role counters.
+    # All sums are exact int64 (and Average's double accumulation over
+    # small ints is exact), so sum, sum/count and the moment formulas
+    # are bit-identical to the sliding originals. A difference against
+    # lag k reads k-1 rows back: at a partition head the missing lag
+    # counts as 0, so the running sum itself is the frame sum.
+    def lagz(c: Column, k: int) -> Column:
         return F.coalesce(F.lag(c, k).over(w), F.lit(0))
 
-    cum_tl_c = F.col("cum_text_len")
-    ctl2_c = F.col("_ctl2")
-    act_c = F.col("_active_us")
+    def blocks(c: str, combine, width: int) -> Column:
+        return combine(
+            F.col(c),
+            *[F.lag(c, j * roll_rows).over(w) for j in range(1, width // roll_rows)],
+        )
+
+    cum_tl = F.col("cum_text_len")
+    ctl2 = F.col("_ctl2")
+    act = F.col("_active_us")
     n5 = F.least(rn, F.lit(roll_rows))
     n10 = F.least(rn, F.lit(WIDE_ROLL10))
     n20 = F.least(rn, F.lit(WIDE_ROLL20))
-    s5 = cum_tl_c - _lagz(cum_tl_c, roll_rows)
-    s10 = cum_tl_c - _lagz(cum_tl_c, WIDE_ROLL10)
-    s20 = cum_tl_c - _lagz(cum_tl_c, WIDE_ROLL20)
-    m5 = s5 / n5
-    m10 = s10 / n10
-    m20 = s20 / n20
-    m5_2 = (ctl2_c - _lagz(ctl2_c, roll_rows)) / n5
-    m10_2 = (ctl2_c - _lagz(ctl2_c, WIDE_ROLL10)) / n10
-    m20_2 = (ctl2_c - _lagz(ctl2_c, WIDE_ROLL20)) / n20
-    sess_carry = F.last(
-        F.when(F.col("_sb") == 1, F.col("cum_text_len") - tll), ignorenulls=True
-    ).over(wcum)
-    # the (conv, session) family's window inputs (see the SESS comment
-    # below): struct-max/carry forms over the SAME wcum frame, batched
-    # into this node so the family costs no extra pass
-    sid = F.col("session_id")
-    _sgap_in = F.when(
-        (F.col("_sb") == 0) & gap.isNotNull(), gap
-    ).otherwise(F.lit(-1.0))
-    ctrap = F.sum("_trap_s").over(wcum)
+    s5 = cum_tl - lagz(cum_tl, roll_rows)
+    s10 = cum_tl - lagz(cum_tl, WIDE_ROLL10)
+    s20 = cum_tl - lagz(cum_tl, WIDE_ROLL20)
+    m5, m10, m20 = s5 / n5, s10 / n10, s20 / n20
+    v5 = (ctl2 - lagz(ctl2, roll_rows)) / n5 - m5 * m5
+    v10 = (ctl2 - lagz(ctl2, WIDE_ROLL10)) / n10 - m10 * m10
+    v20 = (ctl2 - lagz(ctl2, WIDE_ROLL20)) / n20 - m20 * m20
+
+    # ---- the session family WITHOUT a (conv_id, session_id) WindowExec
+    # (round-6): such a window costs a dedicated Sort + buffer pass even
+    # though it reuses the exchange, so every member is expressed over
+    # the existing wcum frame:
+    # - max/min: lexicographic struct-max — session_id is nondecreasing
+    #   in (ts, turn_idx) order, so max(struct(session_id, x)) over the
+    #   conv prefix lands in the CURRENT session → within-session running
+    #   max of x (min via negation). Sentinel −1 stands in for "no real
+    #   gap yet" (gaps are >= 0; boundary rows and the rn=1 NULL-gap row
+    #   map to −1, translated back to NULL by derive).
+    # - sums: cumulative minus its value carried at the last boundary,
+    #   exact int64.
+    sid = F.col(SESSION_COUNTER)
+
+    def sess_max(x: Column) -> Column:
+        return F.max(F.struct(sid.alias("s"), x.alias("x"))).over(wcum).getField("x")
+
+    def sess_sum(cum: Column, at_boundary: Column) -> Column:
+        carry = F.last(F.when(sb == 1, at_boundary), ignorenulls=True).over(wcum)
+        return cum - F.coalesce(carry, F.lit(0))
+
+    ctrap = F.coalesce(F.sum("_trap_s").over(wcum), F.lit(0))
     ctrapn = F.count("_trap_s").over(wcum)
-    df = df.withColumns(
-        {
-            "sess_max_text_len": F.max(F.struct(sid.alias("s"), tl.alias("x")))
-            .over(wcum)
-            .getField("x")
-            .cast("int"),
-            "sess_min_text_len": (
-                -F.max(F.struct(sid.alias("s"), (-tl).alias("x")))
-                .over(wcum)
-                .getField("x")
-            ).cast("int"),
-            "_sgap": F.max(F.struct(sid.alias("s"), _sgap_in.alias("x")))
-            .over(wcum)
-            .getField("x"),
-            "_s2carry": F.last(
-                F.when(F.col("_sb") == 1, F.col("_ctl2") - tll * tll),
-                ignorenulls=True,
-            ).over(wcum),
-            "_ctrap": F.coalesce(ctrap, F.lit(0)),
-            "_trapcarry": F.last(
-                F.when(F.col("_sb") == 1, F.coalesce(ctrap, F.lit(0))),
-                ignorenulls=True,
-            ).over(wcum),
-            "_trapn_sess": ctrapn
-            - F.coalesce(
-                F.last(
-                    F.when(F.col("_sb") == 1, ctrapn), ignorenulls=True
-                ).over(wcum),
-                F.lit(0),
-            ),
-            "sess_cum_text_len": (
-                F.col("cum_text_len") - F.coalesce(sess_carry, F.lit(0))
-            ).cast("long"),
-            "cum_role_changes": F.sum("role_changed").over(wcum).cast("long"),
-            "roll_role_changes_10": F.sum("role_changed").over(w10).cast("long"),
-            "wing_auc_4": F.sum("_trap_w").over(wtrap) / F.lit(2000.0),
-            "roll_sum_text_len_5": s5.cast("long"),
-            "roll_sum_text_len_10": s10.cast("long"),
-            "roll_sum_text_len_20": s20.cast("long"),
-            "roll_mean_text_len_10": m10,
-            "roll_mean_text_len_20": m20,
-            "roll_std_text_len_5": F.sqrt(F.greatest(F.lit(0.0), m5_2 - m5 * m5)),
-            "roll_std_text_len_10": F.sqrt(
-                F.greatest(F.lit(0.0), m10_2 - m10 * m10)
-            ),
-            "roll_std_text_len_20": F.sqrt(
-                F.greatest(F.lit(0.0), m20_2 - m20 * m20)
-            ),
-            "zscore_roll_text_len_5": F.when(
-                m5_2 - m5 * m5 > 0, (tll - m5) / F.sqrt(m5_2 - m5 * m5)
-            ).otherwise(F.lit(0.0)),
-            "zscore_roll_text_len_10": F.when(
-                m10_2 - m10 * m10 > 0, (tll - m10) / F.sqrt(m10_2 - m10 * m10)
-            ).otherwise(F.lit(0.0)),
-            "roll_assistant_rate_10": (
-                F.col("cum_count_assistant") - _lagz(F.col("cum_count_assistant"), WIDE_ROLL10)
-            )
+    w1: Layer = {
+        "sess_max_text_len": (SESS_MAX, sess_max(tl).cast("int")),
+        "sess_min_text_len": (SESS_MIN, (-sess_max(-tl)).cast("int")),
+        "_sgap": (
+            SESS_MAX,
+            sess_max(F.when((sb == 0) & gap.isNotNull(), gap).otherwise(F.lit(-1.0))),
+        ),
+        "sess_cum_text_len": (SESS_SUM, sess_sum(cum_tl, cum_tl - tll).cast("long")),
+        "_sess_tlen2": (SESS_SUM, sess_sum(ctl2, ctl2 - tll * tll)),
+        "_sess_trap": (SESS_SUM, sess_sum(ctrap, ctrap)),
+        "_trapn_sess": (SESS_SUM, sess_sum(ctrapn, ctrapn)),
+        "cum_role_changes": (SUM, F.sum("role_changed").over(wcum).cast("long")),
+        "roll_role_changes_10": (
+            _rows(WIDE_ROLL10),
+            F.sum("role_changed").over(w10).cast("long"),
+        ),
+        "wing_auc_4": (
+            _rows(4),
+            F.sum("_trap_w").over(w.rowsBetween(-3, 0)) / F.lit(2000.0),
+        ),
+        "roll_sum_text_len_5": (_rows(roll_rows - 1), s5.cast("long")),
+        "roll_sum_text_len_10": (r10, s10.cast("long")),
+        "roll_sum_text_len_20": (r20, s20.cast("long")),
+        "roll_mean_text_len_10": (r10, m10),
+        "roll_mean_text_len_20": (r20, m20),
+        "roll_std_text_len_5": (_rows(roll_rows - 1), F.sqrt(F.greatest(F.lit(0.0), v5))),
+        "roll_std_text_len_10": (r10, F.sqrt(F.greatest(F.lit(0.0), v10))),
+        "roll_std_text_len_20": (r20, F.sqrt(F.greatest(F.lit(0.0), v20))),
+        "zscore_roll_text_len_5": (
+            _rows(roll_rows - 1),
+            F.when(v5 > 0, (tll - m5) / F.sqrt(v5)).otherwise(F.lit(0.0)),
+        ),
+        "zscore_roll_text_len_10": (
+            r10,
+            F.when(v10 > 0, (tll - m10) / F.sqrt(v10)).otherwise(F.lit(0.0)),
+        ),
+        "roll_assistant_rate_10": (
+            r10,
+            (F.col("cum_count_assistant") - lagz(F.col("cum_count_assistant"), WIDE_ROLL10))
             / n10,
-            "roll_tool_rate_10": (
-                F.col("cum_tool_set") - _lagz(F.col("cum_tool_set"), WIDE_ROLL10)
-            )
-            / n10,
-            # rn=1 guard: the sliding original divided a NULL sum by a
-            # zero count (NULL under ANSI); the diff form's dividend is
-            # 0, which ANSI-errors on /0 — so the head row is NULLed
-            # explicitly, which is the identical value.
-            "gap_roll_mean_5": F.when(
-                rn > 1,
-                (act_c - _lagz(act_c, roll_rows))
-                / F.least(rn - 1, F.lit(roll_rows)),
+        ),
+        "roll_tool_rate_10": (
+            r10,
+            (F.col("cum_tool_set") - lagz(F.col("cum_tool_set"), WIDE_ROLL10)) / n10,
+        ),
+        # rn=1 guard: the sliding original divided a NULL sum by a zero
+        # count (NULL under ANSI); the diff form's dividend is 0, which
+        # ANSI-errors on /0 — so the head row is NULLed explicitly, which
+        # is the identical value.
+        "gap_roll_mean_5": (
+            g5,
+            F.when(rn > 1, (act - lagz(act, roll_rows)) / F.least(rn - 1, F.lit(roll_rows)))
+            / F.lit(1e6),
+        ),
+        "gap_roll_mean_10": (
+            g10,
+            F.when(
+                rn > 1, (act - lagz(act, WIDE_ROLL10)) / F.least(rn - 1, F.lit(WIDE_ROLL10))
             )
             / F.lit(1e6),
-            "gap_roll_mean_10": F.when(
-                rn > 1,
-                (act_c - _lagz(act_c, WIDE_ROLL10))
-                / F.least(rn - 1, F.lit(WIDE_ROLL10)),
-            )
-            / F.lit(1e6),
-            # exact base-block compositions of the sliding minima/
-            # maxima staged in W0 (see the W0 comment): one lag per
-            # block instead of O(frame) updates per row
-            **(
-                {
-                    "roll_max_text_len_10": F.greatest(
-                        F.col("roll_max_text_len_5"),
-                        *[
-                            F.lag("roll_max_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                    "roll_min_text_len_10": F.least(
-                        F.col("roll_min_text_len_5"),
-                        *[
-                            F.lag("roll_min_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                    "roll_max_text_len_20": F.greatest(
-                        F.col("roll_max_text_len_5"),
-                        *[
-                            F.lag("roll_max_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL20 // roll_rows)
-                        ],
-                    ),
-                    "roll_min_text_len_20": F.least(
-                        F.col("roll_min_text_len_5"),
-                        *[
-                            F.lag("roll_min_text_len_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL20 // roll_rows)
-                        ],
-                    ),
-                    "gap_roll_max_10": F.greatest(
-                        F.col("gap_roll_max_5"),
-                        *[
-                            F.lag("gap_roll_max_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                    "gap_roll_min_10": F.least(
-                        F.col("gap_roll_min_5"),
-                        *[
-                            F.lag("gap_roll_min_5", j * roll_rows).over(w)
-                            for j in range(1, WIDE_ROLL10 // roll_rows)
-                        ],
-                    ),
-                }
-                if _tiles
-                else {}
-            ),
-        }
-    )
+        ),
+        **(
+            {
+                "roll_max_text_len_10": (r10, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL10)),
+                "roll_min_text_len_10": (r10, blocks("roll_min_text_len_5", F.least, WIDE_ROLL10)),
+                "roll_max_text_len_20": (r20, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL20)),
+                "roll_min_text_len_20": (r20, blocks("roll_min_text_len_5", F.least, WIDE_ROLL20)),
+                "gap_roll_max_10": (g10, blocks("gap_roll_max_5", F.greatest, WIDE_ROLL10)),
+                "gap_roll_min_10": (g10, blocks("gap_roll_min_5", F.least, WIDE_ROLL10)),
+            }
+            if tiles
+            else {}
+        ),
+    }
+    return [w0, locals_, w1]
+
+
+def derive(df: DataFrame, wide: bool, enum_shuffle: bool = False) -> DataFrame:
+    """The layer with no windows: every feature that is a row-wise
+    function of staged columns. The narrow tier has none; the wide tier
+    derives running mean/std, ratios, session statistics, the calendar
+    and :func:`wide_local_exprs`. Both plans apply it last — the salted
+    plan after :func:`stitch_chunks` has made every staged column
+    global."""
+    if not wide:
+        return df
+    tl = F.col("text_len")
+    tll = tl.cast("long")
+    us = F.col("_usq")
+    rn = F.col("_rn")
+    tis = F.col("turn_in_session")
+    first_us = F.col("_first_us")
+    start = F.coalesce(F.col("_last_sb_us"), first_us)
+    elapsed = (us - start).cast("double") / F.lit(1e6)
+    since_start = (us - first_us).cast("double") / F.lit(1e6)
+    lag_tll = F.col("_lag_tll")
+    run_max, run_min = F.col("run_max_text_len"), F.col("run_min_text_len")
+    m_run = F.col("cum_text_len") / rn
+    var_run = F.col("_ctl2") / rn - m_run * m_run
+    sess_mean = F.col("sess_cum_text_len").cast("double") / tis
+
+    def rlit(r: str) -> Column:
+        return enum_code_lit(r) if enum_shuffle else F.lit(r)
+
+    def so_far(c: str) -> Column:
+        return F.col(c).cast("double") / rn
+
     df = df.withColumns(
         {
-            "sess_mean_text_len": F.col("sess_cum_text_len").cast("double")
-            / F.col("turn_in_session"),
+            "turn_idx_conv": rn.cast("int"),
+            "text_len_zscore_run": F.when(
+                var_run > 0, (tll - m_run) / F.sqrt(var_run)
+            ).otherwise(F.lit(0.0)),
+            "run_std_text_len": F.sqrt(F.greatest(F.lit(0.0), var_run)),
+            "session_elapsed_s": elapsed,
+            "sess_start_hour": F.hour(F.timestamp_micros(start.cast("long"))).cast("int"),
+            "time_since_start_s": since_start,
+            "days_since_start": F.floor((us - first_us) / F.lit(86_400_000_000)).cast(
+                "long"
+            ),
+            "tool_changed": (~F.col("tool").eqNullSafe(F.col("_prev_tool"))).cast("int"),
+            "accel_text_len": (tll - 2 * lag_tll + F.col("_lag2_tll")).cast("double"),
+            "pct_change_text_len": F.when(lag_tll > 0, (tl - lag_tll) / lag_tll),
+            "gap_roll_range_5": F.col("gap_roll_max_5") - F.col("gap_roll_min_5"),
+            "text_len_vs_first": (tl - F.col("conv_first_text_len")).cast("int"),
+            "run_depth_text_len": (run_max - run_min).cast("int"),
+            "text_len_range_norm": F.when(
+                run_max - run_min > 0,
+                (tl - run_min).cast("double") / (run_max - run_min),
+            ),
+            "active_time_run_s": F.col("_active_us").cast("double") / F.lit(1e6),
+            "is_session_start": (tis == 1).cast("int"),
+            "pct_assistant_so_far": so_far("cum_count_assistant"),
+            "pct_tool_so_far": so_far("cum_count_tool"),
+            "pct_user_so_far": so_far("cum_count_user"),
+            "pct_system_so_far": so_far("cum_count_system"),
+            "pct_tool_set_so_far": so_far("cum_tool_set"),
+            "cum_mean_text_len": F.col("cum_text_len") / rn,
+            "mean_gap_run": F.when(
+                rn > 1, (F.col("_active_us") / (rn - 1)) / F.lit(1e6)
+            ),
+            "turn_rate_session": tis.cast("double") / (elapsed + F.lit(1.0)),
+            "turn_rate_conv": rn.cast("double") / (since_start + F.lit(1.0)),
+            "sess_frac_of_turns": tis.cast("double") / rn,
+            "sess_mean_text_len": sess_mean,
             "roll_range_text_len_10": F.col("roll_max_text_len_10")
             - F.col("roll_min_text_len_10"),
             "roll_range_text_len_20": F.col("roll_max_text_len_20")
             - F.col("roll_min_text_len_20"),
-        }
-    )
-
-    # ---- SESS: the (conv_id, session_id) family WITHOUT its own
-    # WindowExec (round-6). A (conv, session) window costs a dedicated
-    # Sort + full buffer pass even though it reuses the exchange; every
-    # member of the family is instead expressed over the existing wcum
-    # frame (same technique q_feature_vector_wide uses natively):
-    # - max/min: lexicographic struct-max — session_id is nondecreasing
-    #   in (ts, turn_idx) order, so max(struct(session_id, x)) over the
-    #   conv prefix lands in the CURRENT session → within-session
-    #   running max of x (min via negation). Sentinel −1 stands in for
-    #   "no real gap yet" (gaps are >= 0; boundary rows and the rn=1
-    #   NULL-gap row map to −1, translated back to NULL at the end).
-    # - sums: cumulative minus its value carried at the last boundary
-    #   (the sess_cum_text_len trick), exact int64.
-    # Values are bit-identical to the (conv, session)-window originals
-    # (oracle/salted/enum parity suites).
-    tis = F.col("turn_in_session")
-    sm = F.col("sess_mean_text_len")
-    sess_tlen2 = F.col("_ctl2") - F.coalesce(F.col("_s2carry"), F.lit(0))
-    df = df.withColumns(
-        {
             "sess_depth_text_len": (
                 F.col("sess_max_text_len") - F.col("sess_min_text_len")
             ).cast("int"),
             "sess_gap_max_s": F.when(F.col("_sgap") >= 0, F.col("_sgap")),
             "sess_std_text_len": F.sqrt(
-                F.greatest(F.lit(0.0), sess_tlen2 / tis - sm * sm)
+                F.greatest(F.lit(0.0), F.col("_sess_tlen2") / tis - sess_mean * sess_mean)
             ),
-            "sess_auc_trapezoid": F.when(
-                F.col("_trapn_sess") > 0,
-                F.col("_ctrap") - F.coalesce(F.col("_trapcarry"), F.lit(0)),
-            )
+            "sess_auc_trapezoid": F.when(F.col("_trapn_sess") > 0, F.col("_sess_trap"))
             / F.lit(2000.0),
-        }
-    )
-
-    # ---- final locals: calendar + composite battery (no windows) ----
-    df = df.withColumns(
-        {
             "day_of_week": F.dayofweek("ts").cast("int"),
             "hour_of_day": F.hour("ts").cast("int"),
             "minute_of_hour": F.minute("ts").cast("int"),
-            "is_assistant": (F.col("role") == _rl("assistant")).cast("int"),
-            "is_system": (F.col("role") == _rl("system")).cast("int"),
-            "is_tool": (F.col("role") == _rl("tool")).cast("int"),
-            "is_user": (F.col("role") == _rl("user")).cast("int"),
+            "is_assistant": (F.col("role") == rlit("assistant")).cast("int"),
+            "is_system": (F.col("role") == rlit("system")).cast("int"),
+            "is_tool": (F.col("role") == rlit("tool")).cast("int"),
+            "is_user": (F.col("role") == rlit("user")).cast("int"),
             "is_weekend": F.dayofweek("ts").isin(1, 7).cast("int"),
             "log1p_text_len": F.log1p(tl),
             "sigmoid_text_len": F.lit(1.0)
@@ -925,8 +1033,93 @@ def _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle=False) -> DataFr
             / F.lit(86_400_000_000.0),
         }
     )
-    df = df.withColumns(wide_local_exprs(enum_shuffle))
-    return df
+    return df.withColumns(wide_local_exprs(enum_shuffle))
+
+
+def stitch_chunks(u: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
+    """Make the staged columns of a chunked window pass global, one rule
+    per :class:`Kind` — the merge of DS2-style partial states.
+
+    ``u`` holds :func:`window_layers` partitioned by ``(conv_id, _tgt)``:
+    each chunk's real rows (``_ctx == 0``) preceded by context rows
+    (``_ctx == 1``) that form a contiguous suffix of the history before
+    the chunk. Bounded columns are exact as computed. For the rest, a
+    per-chunk summary takes each column's local value at the last
+    context row (``x``, absent in the first chunk) and at the last real
+    row (``e``); exclusive prefix windows over the chunks turn those
+    into the global value carried into the chunk (``c``):
+
+    - sum: ``local − x + c``, with ``c`` the running total of ``e − x``;
+    - max/min: ``combine(c, local)`` (context rows are history, so
+      counting them twice is harmless);
+    - first: ``c``, or the local value in the first chunk;
+    - last: the local value, or ``c`` where it is NULL.
+
+    Session-scoped columns take the same rule on the rows before the
+    chunk's first real session boundary ("open" rows) and keep their
+    local value elsewhere; their carry is the value at the previous
+    chunk's end: the end value of the last chunk holding a boundary,
+    combined with the real parts of the chunks after it. Returns the
+    real rows only."""
+    carried = {c: k for c, k in kinds.items() if k.rule != "local"}
+    # the summary and the stitch are SQL text: one parse per expression
+    # instead of a Py4J call per operator keeps the build cheap
+    fields = ", ".join(["ts", "turn_idx", *(f"`{c}`" for c in carried)])
+    frame = "over (partition by conv_id order by _tgt rows between unbounded preceding and {})"
+    prev, upto = frame.format("1 preceding"), frame.format("current row")
+
+    def x0(c: str) -> str:
+        return f"coalesce(_x.`{c}`, 0)"
+
+    def e(c: str) -> str:
+        return f"_e.`{c}`"
+
+    has_b = f"({e(SESSION_COUNTER)} - {x0(SESSION_COUNTER)} > 0)"
+    # chunks holding a session boundary, up to and including this one
+    n_b = f"sum(cast({has_b} as int)) {upto}"
+
+    def carry(c: str, k: Kind) -> str:
+        if k.rule == "sum":
+            run = f"coalesce(sum({e(c)} - {x0(c)}) {prev}, 0)"
+            if not k.session:
+                return run
+            # the value at the end of the last boundary chunk B plus the
+            # real parts of the chunks after it: x(B) - run(B) + run
+            return f"{run} + coalesce(last(if({has_b}, {x0(c)} - {run}, null), true) {prev}, 0)"
+        if k.session:
+            # struct-extreme over the earlier chunks with the highest
+            # n_b: the last boundary chunk and the chunks after it
+            b = n_b if k.rule == "max" else f"-{n_b}"
+            return f"({k.rule}(named_struct('b', {b}, 'v', {e(c)})) {prev}).v"
+        return f"{k.rule}({e(c)}{', true' if k.rule == 'last' else ''}) {prev}"
+
+    summ = (
+        u.groupBy("conv_id", "_tgt")
+        .agg(
+            F.expr(f"max(if(_ctx = 1, struct({fields}), null))").alias("_x"),
+            F.expr(f"max(if(_ctx = 0, struct({fields}), null))").alias("_e"),
+        )
+        .selectExpr(
+            "conv_id", "_tgt", "_x", *(f"{carry(c, k)} as `_c_{c}`" for c, k in carried.items())
+        )
+    )
+    types = dict(u.dtypes)
+    is_open = f"{SESSION_COUNTER} = {x0(SESSION_COUNTER)}"
+
+    def rule(c: str, k: Kind) -> str:
+        v, cv = f"`{c}`", f"`_c_{c}`"
+        g = {
+            "sum": f"{v} - {x0(c)} + {cv}",
+            "max": f"greatest({v}, {cv})",
+            "min": f"least({v}, {cv})",
+            "first": f"coalesce({cv}, {v})",
+            "last": f"coalesce({v}, {cv})",
+        }[k.rule]
+        return f"cast({f'if({is_open}, {g}, {v})' if k.session else g} as {types[c]})"
+
+    out = u.filter("_ctx = 0").join(F.broadcast(summ), ["conv_id", "_tgt"])
+    out = out.withColumns({c: F.expr(rule(c, k)) for c, k in carried.items()})
+    return out.drop("_x", "_ctx", *(f"_c_{c}" for c in carried))
 
 
 def sessionize(
@@ -959,7 +1152,9 @@ def featurize_expr(
     enum_shuffle: bool = False,
     decode_enums: bool = False,
 ) -> DataFrame:
-    """The full per-turn feature vector as ONE window-expression plan.
+    """The full per-turn feature vector as ONE window-expression plan:
+    :func:`project_inputs`, then :func:`window_layers` over
+    ``partitionBy(conv_id)``, then :func:`derive`.
 
     ``enum_shuffle=True`` (narrow ``include_text=False`` contract only)
     replaces the ``role``/``tool`` strings with 64-bit hash codes BELOW
@@ -980,12 +1175,12 @@ def featurize_expr(
     the three decode dims were the measured local regression of the
     enum trade).
 
-    Scale notes (100 TB): all windows below share
-    ``partitionBy(conv_id)`` — Catalyst plans a single hash exchange on
-    conv_id followed by one sort; every feature is computed in that one
-    pipelined stage. A mega-conversation lands in a single task: for
-    that case use :func:`astrospectro_spark.engine.skew.featurize_salted`,
-    which chunk-splits hot conversations with lookback overlap.
+    Scale notes (100 TB): all windows share ``partitionBy(conv_id)`` —
+    Catalyst plans a single hash exchange on conv_id followed by one
+    sort; every feature is computed in that one pipelined stage. A
+    mega-conversation lands in a single task: for that case use
+    :func:`astrospectro_spark.engine.skew.featurize_salted`, which runs
+    these same layers over ts-range chunks of hot conversations.
 
     ``include_text=False`` projects ``text`` down to ``text_len``
     BEFORE the exchange: the feature table is keyed by
@@ -995,147 +1190,31 @@ def featurize_expr(
     the production featurize-job default; the text-carrying variant
     exists for pipelines that materialise a denormalised table.
     """
-    if enum_shuffle and include_text:
-        raise ValueError(
-            "enum_shuffle supports the include_text=False feature-table "
-            "contract only (the text-carrying variant keeps strings)"
-        )
     src = df
-    w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    us = _ts_us("ts")
-
-    text_len = F.length(F.coalesce(F.col("text"), F.lit(""))).cast("int")
-    if include_text:
-        key_cols = KEY_COLS
-        df = df.withColumn("text_len", text_len)
-    elif enum_shuffle:
-        key_cols = [c for c in KEY_COLS if c != "text"]
-        # tool_len is a row-local wide feature of the STRING; staged
-        # below the exchange because a code carries no length
-        extra = (
-            [F.coalesce(F.length("tool"), F.lit(0)).cast("int").alias("tool_len")]
-            if wide
-            else []
-        )
-        df = df.select(
-            "conv_id",
-            "turn_idx",
-            _enum_code("role").alias("role"),
-            _enum_code("tool").alias("tool"),
-            "ts",
-            text_len.alias("text_len"),
-            *extra,
-        )
-    else:
-        key_cols = [c for c in KEY_COLS if c != "text"]
-        df = df.select(*key_cols, text_len.alias("text_len"))
-    # ONE staged epoch-µs column for every rangeBetween frame: ordering
-    # by the same physical column (not a fresh unix_micros projection
-    # per window) lets Catalyst share a single us-Sort across the whole
-    # range family instead of one sort per frame.
-    df = df.withColumn("_usq", us)
-    gap_us = us - F.lag(us).over(w)
-    # ---- layer 0: every window expression over RAW columns in ONE
-    # projection — Catalyst extracts them into a single WindowExec
-    # (frames may differ within one node), so this is ONE pass over
-    # each partition instead of one per withColumn. tool_backfill is
-    # the fill-forward graft (≙ add_photometric_composites,
-    # reference: src/pipeline/feature_engineering.py:1586-1615).
-    df = df.withColumns(
-        {
-            "lag1_ts_gap_s": gap_us.cast("double") / F.lit(1e6),
-            "_gap_us": gap_us,
-            "lag1_text_len_delta": (
-                F.col("text_len") - F.lag("text_len").over(w)
-            ).cast("double"),
-            "_rn": F.row_number().over(w),
-            "tool_backfill": F.last("tool", ignorenulls=True).over(wcum),
-            **{
-                f"cum_count_{r}": F.sum(
-                    F.when(
-                        F.col("role")
-                        == (enum_code_lit(r) if enum_shuffle else F.lit(r)),
-                        1,
-                    ).otherwise(0)
-                )
-                .over(wcum)
-                .cast("int")
-                for r in ROLES
-            },
-            "roll_mean_text_len_5": F.avg("text_len").over(
-                w.rowsBetween(-(roll_rows - 1), Window.currentRow)
-            ),
-        }
-    )
-    # ---- layer 1: session ids + turn_in_session, ONE window pass.
-    # Both are wcum aggregates of W0 outputs and independent of each
-    # other, so they batch into a single WindowExec (round-6: they were
-    # two adjacent single-function Window nodes, i.e. two full buffer
-    # passes over every partition). turn_in_session avoids a second
-    # exchange: a (conv, session) partition would re-shuffle the whole
-    # table; instead count rows since the most recent session boundary
-    # inside the SAME window (rn - rn just before the last boundary).
-    df = df.withColumn(
-        "_sb", F.when(F.col("lag1_ts_gap_s") > gap_s, 1).otherwise(0)
-    )
-    df = df.withColumns(
-        {
-            "session_id": F.sum("_sb").over(wcum).cast("int"),
-            "turn_in_session": (
-                F.col("_rn")
-                - F.coalesce(
-                    F.last(
-                        F.when(F.col("_sb") == 1, F.col("_rn") - 1), ignorenulls=True
-                    ).over(wcum),
-                    F.lit(0),
-                )
-            ).cast("int"),
-        }
-    )  # _sb/_rn/_gap_us stay staged: _wide_exprs consumes them
-    # rolling turn-rate on the REAL time axis: count of turns with
-    # ts in [t-60s, t] — a rangeBetween frame on integer microseconds.
-    # Note: rows sharing this exact ts are included regardless of
-    # turn_idx (time-based semantics; equal-ts is not leakage).
-    # The range family runs EARLY, while the row is still narrow: its
-    # us-Sort materializes ~20 fields per row here, vs ~100 if it ran
-    # after the wide tier (the wide tier's own range batch merges into
-    # this node — same partition/order spec, adjacent, independent).
-    # growing-frame difference instead of a sliding [-60s, 0] frame —
-    # same O(1)/row trick as the wide range family (see _wide_exprs):
-    # count in [t-60s, t] = count in (-inf, t] - count in (-inf, t-60s)
-    wrange_le = (
-        Window.partitionBy("conv_id")
-        .orderBy(F.col("_usq"))
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    wrange_bef = (
-        Window.partitionBy("conv_id")
-        .orderBy(F.col("_usq"))
-        .rangeBetween(Window.unboundedPreceding, -rate_window_s * 1_000_000 - 1)
-    )
-    df = df.withColumn(
-        "rate_60s",
-        (
-            F.count(F.lit(1)).over(wrange_le) - F.count(F.lit(1)).over(wrange_bef)
-        ).cast("double"),
-    )
-    cols = key_cols + FEATURE_COLS
-    if wide:
-        df = _wide_exprs(df, w, wcum, us, roll_rows, gap_s, enum_shuffle)
-        cols = cols + WIDE_FEATURE_COLS
+    df, key_cols = project_inputs(df, include_text, enum_shuffle, wide)
+    layers = window_layers(["conv_id"], gap_s, rate_window_s, roll_rows, wide, enum_shuffle)
+    df = derive(apply_layers(df, layers), wide, enum_shuffle)
+    cols = output_cols(key_cols, wide)
     if include_labels:
-        df = df.withColumn(
-            "label_lead1_text_len", F.lead("text_len").over(w).cast("double")
-        ).withColumn(
-            "label_lead1_ts_gap_s",
-            (F.lead(us).over(w) - us).cast("double") / F.lit(1e6),
+        w = Window.partitionBy("conv_id").orderBy("ts", "turn_idx")
+        us = F.col("_usq")
+        df = df.withColumns(
+            {
+                "label_lead1_text_len": F.lead("text_len").over(w).cast("double"),
+                "label_lead1_ts_gap_s": (F.lead(us).over(w) - us).cast("double")
+                / F.lit(1e6),
+            }
         )
         cols = cols + LABEL_COLS
     out = df.select(*cols)
     if enum_shuffle and decode_enums:
         out = enum_decode(out, src, enum_decode_map(wide)).select(*cols)
     return out
+
+
+def output_cols(key_cols: list[str], wide: bool) -> list[str]:
+    """The locked output columns: keys, then the tier's features."""
+    return key_cols + FEATURE_COLS + (WIDE_FEATURE_COLS if wide else [])
 
 
 def enum_decode_map(wide: bool) -> dict[str, str]:

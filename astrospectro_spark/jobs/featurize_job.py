@@ -67,6 +67,31 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def write_enum_dim(turns, col: str, path: str) -> None:
+    """Write the code->string dim of one enum-coded column, one row per
+    code. The write fails loudly when two values share a code: the
+    features compared codes for equality, so such values were merged.
+    The check is an expression over the dim's rows as they are written,
+    so it costs no extra pass."""
+    from pyspark.sql import functions as F
+
+    value, other = F.col("value"), F.col("_max")
+    collision = F.raise_error(
+        F.concat(
+            F.lit(f"enum code collision in {col!r}: "), value, F.lit(" and "), other,
+            F.lit(" share a code; rerun without --enum-shuffle"),
+        )
+    )
+    (
+        turns.where(F.col(col).isNotNull())
+        .groupBy(F.xxhash64(col).alias("code"))
+        .agg(F.min(col).alias("value"), F.max(col).alias("_max"))
+        .select("code", F.when(value == other, value).otherwise(collision).alias("value"))
+        .write.mode("overwrite")
+        .parquet(path)
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
@@ -110,20 +135,8 @@ def main(argv: list[str] | None = None) -> int:
         # enum-coded source column, written next to the feature table.
         # A reader joins these (broadcast) to recover strings; the hot
         # path above never pays the decode.
-        from pyspark.sql import functions as F
-
         for col in ("role", "tool"):
-            (
-                turns.select(col)
-                .where(F.col(col).isNotNull())
-                .distinct()
-                .select(
-                    F.xxhash64(col).alias("code"),
-                    F.col(col).alias("value"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{args.output}/enum_dims/{col}")
-            )
+            write_enum_dim(turns, col, f"{args.output}/enum_dims/{col}")
 
     if args.anchors:
         anchors = spark.read.parquet(args.anchors)

@@ -78,13 +78,13 @@ def get_spark(
         # ~200-byte rows ⇒ 1 MB of shuffled input is ~0.5 s of CPU), so
         # AQE's default 1 MB coalesce floor serializes them whenever the
         # table is small in BYTES but heavy in compute — e.g. a 4 MB
-        # post-shuffle stage collapses to 4 tasks on 32 cores. 64 KB
-        # keeps parallelismFirst's target (input/defaultParallelism)
-        # binding instead of the floor. At production scale partitions
-        # sit at the advisory size (64 MB+) and the floor is never the
-        # binding constraint, so this is a no-op there. 256 KB (not
-        # lower) keeps tiny shuffles from fragmenting into tasks whose
-        # scheduling overhead exceeds their work.
+        # post-shuffle stage collapses to 4 tasks on 32 cores. A 256 KB
+        # floor keeps parallelismFirst's target (input/defaultParallelism)
+        # binding instead; it is not set lower so that tiny shuffles do
+        # not fragment into tasks whose scheduling overhead exceeds
+        # their work. At production scale partitions sit at the advisory
+        # size (64 MB+) and the floor is never the binding constraint,
+        # so this is a no-op there.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
             os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),

@@ -20,6 +20,12 @@ Two implementations, same semantics:
    reference semantics cross-check and for per-group kernels that
    genuinely need pandas.
 
+There is no salted variant: no job routes anchors through one, and the
+reference keeps a single cross-match path too (Gaia best match,
+src/tools/gaia_crossmatcher.py:712-744). A hot conversation's as-of
+therefore sorts in one task; the skew split lives in featurize
+(:mod:`engine.skew`).
+
 Semantics: for each anchor, the LATEST turn with ``ts <= anchor_ts``
 (boundary inclusive), ties broken by largest ``turn_idx``; optional
 per-row tolerance nulls out matches older than ``anchor_ts -
@@ -105,136 +111,6 @@ def _null_when_too_old(out, anchor_ts, tolerance_col, value_cols):
             F.when(F.col("_too_old"), F.lit(None)).otherwise(F.col(f"asof_{c}")),
         )
     return out.drop("_too_old")
-
-
-def asof_join_salted(
-    turns: DataFrame,
-    anchors: DataFrame,
-    entity_col: str = "conv_id",
-    turn_ts: str = "ts",
-    anchor_ts: str = "anchor_ts",
-    value_cols: list[str] | None = None,
-    tolerance_col: str | None = None,
-    tiebreak_col: str = "turn_idx",
-    hot_threshold: int = 2_000_000,
-    chunk_target_rows: int = 500_000,
-) -> DataFrame:
-    """:func:`asof_join` semantics with mega-conversation salting.
-
-    A hot conversation otherwise sorts in ONE window task. Here hot
-    conversations are ts-range chunked (same boundaries for turns and
-    anchors), and each chunk is SEEDED with one synthetic context row:
-    the latest turn from all earlier chunks (a per-chunk summary +
-    exclusive running-last over the tiny summary table). Within a
-    chunk the ordinary carry then sees the true predecessor of its
-    first anchor, so results are identical to the unsalted join —
-    asserted in tests — while the hot conversation runs as k tasks.
-    The census is the eager :func:`engine.skew.collect_hot_ids` action;
-    with no hot conversation the result is the plain :func:`asof_join`.
-    """
-    from astrospectro_spark.engine.skew import (
-        chunk_of,
-        collect_hot_ids,
-        compute_ts_bounds,
-        is_hot,
-    )
-
-    value_cols = value_cols or DEFAULT_VALUE_COLS
-    join_args = (entity_col, turn_ts, anchor_ts, value_cols, tolerance_col, tiebreak_col)
-    hot_ids = collect_hot_ids(turns, hot_threshold, entity_col)
-    if not hot_ids:
-        return asof_join(turns, anchors, *join_args)
-    hot = is_hot(hot_ids, entity_col)
-    cold_out = asof_join(turns.filter(~hot), anchors.filter(~hot), *join_args)
-
-    t_hot = turns.filter(hot)
-    a_hot = anchors.filter(hot)
-    bounds = compute_ts_bounds(
-        t_hot, chunk_target_rows, ts_col=turn_ts, entity_col=entity_col
-    )
-    t = t_hot.join(F.broadcast(bounds), entity_col).withColumn(
-        "_tgt", chunk_of(turn_ts)
-    )
-    a = (
-        a_hot.withColumn(turn_ts, F.col(anchor_ts))
-        .join(F.broadcast(bounds), entity_col)
-        .withColumn("_tgt", chunk_of(turn_ts))
-        .drop(turn_ts)
-    )
-
-    # per-chunk latest turn → exclusive running-last → one seed row per
-    # later chunk (the "state handoff" between chunks)
-    turn_struct = F.struct(
-        F.col(turn_ts).alias("_sts"),
-        F.col(tiebreak_col).cast("long").alias("_stie"),
-        *[F.col(c).alias(f"v_{c}") for c in value_cols],
-    )
-    summ = t.groupBy(entity_col, "_tgt").agg(
-        F.max_by(turn_struct, F.struct(F.col(turn_ts), F.col(tiebreak_col))).alias("_last")
-    )
-    # every chunk id that holds anchors or turns, each joined with the
-    # latest turn of any EARLIER chunk (anchor-only chunks contribute a
-    # null _last and inherit the running carry)
-    all_chunks = (
-        a.select(entity_col, "_tgt")
-        .unionByName(summ.select(entity_col, "_tgt"))
-        .distinct()
-        .join(summ, [entity_col, "_tgt"], "left")
-    )
-    wprev = (
-        Window.partitionBy(entity_col)
-        .orderBy("_tgt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = all_chunks.withColumn("_seed", F.last("_last", ignorenulls=True).over(wprev))
-    seeds = carry.filter(F.col("_seed").isNotNull()).select(
-        F.col(entity_col),
-        F.col("_tgt"),
-        F.col("_seed").getField("_sts").alias(turn_ts),
-        F.col("_seed").getField("_stie").cast("int").alias(tiebreak_col),
-        *[
-            F.col("_seed").getField(f"v_{c}").alias(c)
-            for c in value_cols
-            if c not in (turn_ts, tiebreak_col)
-        ],
-    )
-    t_all = t.drop("_bounds").unionByName(seeds, allowMissingColumns=True)
-
-    # within-chunk sorted-merge carry (same construction as asof_join,
-    # but partitioned by (entity, _tgt))
-    anchor_payload = [c for c in a.columns if c not in (entity_col, "_tgt", "_bounds")]
-    tt = t_all.select(
-        F.col(entity_col),
-        F.col("_tgt"),
-        F.col(turn_ts).alias("_ts"),
-        F.lit(0).alias("_is_anchor"),
-        F.col(tiebreak_col).cast("long").alias("_tie"),
-        F.struct(*[F.col(c).alias(f"asof_{c}") for c in value_cols]).alias("_carry"),
-    )
-    aa = a.select(
-        F.col(entity_col),
-        F.col("_tgt"),
-        F.col(anchor_ts).alias("_ts"),
-        F.lit(1).alias("_is_anchor"),
-        F.lit(None).cast("long").alias("_tie"),
-        F.lit(None).cast(tt.schema["_carry"].dataType).alias("_carry"),
-        *[F.col(c) for c in anchor_payload],
-    )
-    u = tt.unionByName(aa, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(entity_col, "_tgt")
-        .orderBy(F.col("_ts").asc(), F.col("_is_anchor").asc(), F.col("_tie").asc_nulls_last())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    u = u.withColumn("_asof", F.last("_carry", ignorenulls=True).over(w))
-    hot_out = u.filter(F.col("_is_anchor") == 1).select(
-        F.col(entity_col),
-        *[F.col(c) for c in anchor_payload],
-        *[F.col("_asof").getField(f"asof_{c}").alias(f"asof_{c}") for c in value_cols],
-    )
-    if tolerance_col:
-        hot_out = _null_when_too_old(hot_out, anchor_ts, tolerance_col, value_cols)
-    return cold_out.unionByName(hot_out.select(cold_out.columns))
 
 
 def asof_join_grouped(

@@ -112,35 +112,6 @@ def gaussian_profile_features(t: np.ndarray, y: np.ndarray) -> dict[str, float]:
     }
 
 
-SMOOTH_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, text_len int, "
-    "text_len_smooth double, text_len_resid double"
-)
-
-
-def smooth_kernel(pdf: pd.DataFrame, window: int = 5, polyorder: int = 2) -> pd.DataFrame:
-    g = pdf.sort_values(["ts", "turn_idx"], kind="mergesort").reset_index(drop=True)
-    y = g["text"].fillna("").str.len().to_numpy(np.float64)
-    sm = savgol_smooth(y, window, polyorder)
-    return pd.DataFrame(
-        {
-            "conv_id": g["conv_id"],
-            "turn_idx": g["turn_idx"].astype("int32"),
-            "ts": g["ts"],
-            "text_len": y.astype("int32"),
-            "text_len_smooth": sm,
-            "text_len_resid": y - sm,
-        }
-    )
-
-
-def smooth_text_len(df: DataFrame, window: int = 5, polyorder: int = 2) -> DataFrame:
-    """Per-conversation smoothed text-length trajectory (W3 analog)."""
-    return df.groupBy("conv_id").applyInPandas(
-        lambda pdf: smooth_kernel(pdf, window, polyorder), schema=SMOOTH_SCHEMA
-    )
-
-
 PROFILE_SCHEMA = (
     "conv_id string, session_id int, n_turns long, amp double, mu_s double, "
     "sigma_s double, fwhm_s double"

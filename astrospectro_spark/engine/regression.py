@@ -133,60 +133,6 @@ def sigma_clip_slope(
     )
 
 
-def sigma_clip_slope_grouped(
-    df: DataFrame,
-    x: str,
-    y: str,
-    group_col: str,
-    sigma: float = 2.5,
-    n_iter: int = 3,
-) -> DataFrame:
-    """Single-shuffle sigma-clipped slope: ONE ``groupBy(group_col)``
-    Arrow exchange, the clip loop runs inside a NumPy kernel per
-    entity.
-
-    The expression form (:func:`sigma_clip_slope`) materialises ~2
-    aggregates + 2 joins per clip iteration (~6 full-table shuffles at
-    n_iter=3) — correct and bounded, but this variant is the hot-path
-    shape at 100 TB: the table shuffles ONCE and each entity's bounded
-    iteration happens in memory. Arithmetic mirrors the expression
-    path (population covariance/variance, centered x, stddev_pop
-    bound, ``_s == 0`` keep-all rule), so the two agree to float
-    round-off (pytest allclose)."""
-    import numpy as np
-    import pandas as pd
-
-    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        xv = pdf[x].to_numpy("float64")
-        yv = pdf[y].to_numpy("float64")
-        xmin = xv.min() if len(xv) else 0.0
-        xc = xv - xmin
-        keep = np.ones(len(xv), dtype=bool)
-        slope = icept = np.nan
-        for _ in range(n_iter):
-            xk, yk = xc[keep], yv[keep]
-            vx = ((xk - xk.mean()) ** 2).mean() if len(xk) else 0.0
-            cov = ((xk - xk.mean()) * (yk - yk.mean())).mean() if len(xk) else 0.0
-            slope = cov / vx if vx != 0 else np.nan
-            icept = yk.mean() - slope * xk.mean()
-            r = yv - (slope * xc + icept)
-            s = r[keep].std()
-            if s != 0:
-                keep = keep & (np.abs(r) <= sigma * s)
-        return pd.DataFrame(
-            {
-                group_col: [pdf[group_col].iloc[0]],
-                "slope": [slope],
-                "intercept": [icept - slope * xmin],
-            }
-        )
-
-    gtype = dict(df.dtypes)[group_col]
-    return df.select(group_col, x, y).groupBy(group_col).applyInPandas(
-        kernel, schema=f"{group_col} {gtype}, slope double, intercept double"
-    )
-
-
 def poly2_residuals_per_entity(
     df: DataFrame,
     x: str,

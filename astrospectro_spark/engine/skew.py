@@ -51,15 +51,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from astrospectro_spark.engine.windows import (
-    RATE_WINDOW_S,
     Layer,
-    ROLL_ROWS,
     SESSION_GAP_S,
     _ts_us_sql,
     apply_layers,
     derive,
-    enum_decode,
-    enum_decode_map,
     featurize_expr,
     layer_kinds,
     output_cols,
@@ -75,14 +71,11 @@ DEFAULT_CHUNK_TARGET = 500_000
 def featurize_salted(
     df: DataFrame,
     gap_s: float = SESSION_GAP_S,
-    rate_window_s: int = RATE_WINDOW_S,
-    roll_rows: int = ROLL_ROWS,
     hot_threshold: int = DEFAULT_HOT_THRESHOLD,
     chunk_target_rows: int = DEFAULT_CHUNK_TARGET,
     include_text: bool = True,
     wide: bool = False,
     enum_shuffle: bool = False,
-    decode_enums: bool = False,
 ) -> DataFrame:
     """featurize_expr semantics with hot conversations split into
     ts-range chunks that run as parallel tasks.
@@ -101,10 +94,8 @@ def featurize_salted(
     ``enum_shuffle=True`` (narrow ``include_text=False`` contract only,
     see :func:`featurize_expr`) carries ``role``/``tool`` as 64-bit
     codes through every exchange of BOTH the cold and hot branches.
-    The default output KEEPS the codes (BIGINT columns; decode lazily
-    at read via ``windows.enum_decode``); ``decode_enums=True`` decodes
-    once after the union via broadcast dims — bit-identical to the
-    string path.
+    The output KEEPS the codes (BIGINT columns; decode at read via
+    ``windows.enum_decode`` with ``windows.enum_decode_map``).
 
     The hot slice is cached after chunk assignment: the salted plan
     consumes it three times (the rows with their time-margin copies,
@@ -120,30 +111,20 @@ def featurize_salted(
     hot_ids = collect_hot_ids(df, hot_threshold)
     if not hot_ids:
         out, handles = featurize_expr(
-            df,
-            gap_s=gap_s,
-            rate_window_s=rate_window_s,
-            roll_rows=roll_rows,
-            include_text=include_text,
-            wide=wide,
-            enum_shuffle=enum_shuffle,
-            decode_enums=decode_enums,
+            df, gap_s=gap_s, include_text=include_text, wide=wide, enum_shuffle=enum_shuffle
         ), []
     else:
         rows, key_cols = project_inputs(df, include_text, enum_shuffle, wide)
 
         def layers(key: list[str]):
-            return window_layers(key, gap_s, rate_window_s, roll_rows, wide, enum_shuffle)
+            return window_layers(key, gap_s, wide, enum_shuffle)
 
         cold = apply_layers(rows.filter(~is_hot(hot_ids)), layers(["conv_id"]))
         hot, handles = _featurize_hot(
             rows.filter(is_hot(hot_ids)), layers(["conv_id", "_tgt"]), chunk_target_rows
         )
         staged = cold.unionByName(hot.select(cold.columns))
-        cols = output_cols(key_cols, wide)
-        out = derive(staged, wide, enum_shuffle).select(*cols)
-        if enum_shuffle and decode_enums:
-            out = enum_decode(out, df, enum_decode_map(wide)).select(*cols)
+        out = derive(staged, wide, enum_shuffle).select(*output_cols(key_cols, wide))
     out._astrospectro_cached = handles  # fast path for the exact object
     with _REGISTRY_LOCK:
         _CACHE_REGISTRY.extend(handles)  # survives downstream transformations
@@ -192,45 +173,44 @@ def release_cached(df: DataFrame | None = None) -> None:
             pass
 
 
-def collect_hot_ids(df: DataFrame, hot_threshold: int, entity_col: str = "conv_id") -> list:
-    """The census, as an eager action: the non-null ``entity_col``
-    values with more than ``hot_threshold`` rows, collected to the
-    driver. There are at most ``rows // hot_threshold`` of them."""
+def collect_hot_ids(df: DataFrame, hot_threshold: int) -> list:
+    """The census, as an eager action: the non-null ``conv_id`` values
+    with more than ``hot_threshold`` rows, collected to the driver.
+    There are at most ``rows // hot_threshold`` of them."""
     return [
         r[0]
-        for r in df.filter(F.col(entity_col).isNotNull())
-        .groupBy(entity_col)
+        for r in df.filter(F.col("conv_id").isNotNull())
+        .groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > hot_threshold)
-        .select(entity_col)
+        .select("conv_id")
         .collect()
     ]
 
 
-def is_hot(hot_ids: list, entity_col: str = "conv_id") -> "F.Column":
-    """Null-safe membership in the census's hot set: a null entity is
+def is_hot(hot_ids: list) -> "F.Column":
+    """Null-safe membership in the census's hot set: a null conv_id is
     never hot, so ``~is_hot`` keeps it on the cold path."""
-    return F.coalesce(F.col(entity_col).isin(hot_ids), F.lit(False))
+    return F.coalesce(F.col("conv_id").isin(hot_ids), F.lit(False))
 
 
 GRID = 128
 
 
-def compute_ts_bounds(
-    df: DataFrame, chunk_target_rows: int, ts_col: str = "ts", entity_col: str = "conv_id"
-) -> DataFrame:
-    """Per-entity ts-range chunk boundaries: a fixed GRID-point
+def compute_ts_bounds(df: DataFrame, chunk_target_rows: int) -> DataFrame:
+    """Per-conversation ts-range chunk boundaries: a fixed GRID-point
     approx-quantile grid, subsampled to ceil(n/target) chunks.
     Boundaries are actual data values, so after array_distinct every
-    interior chunk holds >= 1 row; parallelism per entity caps at GRID.
-    Returns (entity, _bounds array<bigint> of epoch-us cut points)."""
+    interior chunk holds >= 1 row; parallelism per conversation caps at
+    GRID. Returns (conv_id, _bounds array<bigint> of epoch-us cut
+    points)."""
     fracs = ", ".join(str((i + 1) / GRID) for i in range(GRID - 1))
     return (
-        df.groupBy(entity_col)
+        df.groupBy("conv_id")
         .agg(
             F.count(F.lit(1)).alias("_n"),
             F.expr(
-                f"percentile_approx({_ts_us_sql(ts_col)}, "
+                f"percentile_approx({_ts_us_sql('ts')}, "
                 f"array({fracs}), 10000)"
             ).alias("_raw"),
         )
@@ -246,13 +226,13 @@ def compute_ts_bounds(
                 f"{GRID - 1})))) end"
             ),
         )
-        .select(entity_col, "_bounds")
+        .select("conv_id", "_bounds")
     )
 
 
-def chunk_of(ts_col: str = "ts") -> "F.Column":
+def chunk_of() -> "F.Column":
     """chunk id = number of boundaries <= ts (requires joined _bounds)."""
-    us = _ts_us_sql(ts_col)
+    us = _ts_us_sql("ts")
     return F.expr(
         f"aggregate(_bounds, 0, (acc, b) -> acc + case when {us} >= b then 1 else 0 end)"
     )
@@ -276,7 +256,7 @@ def _featurize_hot(
     # spares each a re-scan of the source.
     bounds = compute_ts_bounds(hot, chunk_target_rows)
     hot = hot.join(F.broadcast(bounds), "conv_id")
-    hot = hot.withColumn("_chunk", chunk_of("ts")).persist()
+    hot = hot.withColumn("_chunk", chunk_of()).persist()
     us = _ts_us_sql("ts")
 
     # ---- 3. overlap margin: copy context rows into later chunks. The

@@ -239,14 +239,6 @@ WIDE_RATE_S = 300
 WIDE_RATE_MAX_S = 3600
 WIDE_ROLL10 = 10
 WIDE_ROLL20 = 20
-FEATURE_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, "
-    "ts timestamp, "
-    "cum_count_assistant int, cum_count_system int, cum_count_tool int, "
-    "cum_count_user int, lag1_text_len_delta double, lag1_ts_gap_s double, "
-    "rate_60s double, roll_mean_text_len_5 double, session_id int, "
-    "text_len int, tool_backfill string, turn_in_session int"
-)
 
 
 _TAU = 6.283185307179586  # 2π, identical literal in the pandas oracle
@@ -535,8 +527,6 @@ def project_inputs(
 def window_layers(
     key: list[str],
     gap_s: float = SESSION_GAP_S,
-    rate_window_s: int = RATE_WINDOW_S,
-    roll_rows: int = ROLL_ROWS,
     wide: bool = False,
     enum_shuffle: bool = False,
 ) -> list[Layer]:
@@ -611,7 +601,7 @@ def window_layers(
             f"- coalesce(sum(text_len) {wgrow(sec)}, 0) as bigint)"
         )
 
-    range_family = {"rate_60s": rate(rate_window_s)}
+    range_family = {"rate_60s": rate(RATE_WINDOW_S)}
     if wide:
         range_family.update(
             {
@@ -648,9 +638,9 @@ def window_layers(
                 for r in ROLES
             },
             "roll_mean_text_len_5": sql(
-                _rows(roll_rows - 1),
+                _rows(ROLL_ROWS - 1),
                 f"avg(text_len) over (partition by {part} order by ts, turn_idx "
-                f"rows between {roll_rows - 1} preceding and current row)",
+                f"rows between {ROLL_ROWS - 1} preceding and current row)",
             ),
         },
         {
@@ -671,11 +661,11 @@ def window_layers(
     if wide:
         spec = Window.partitionBy(*key).orderBy("ts", "turn_idx")
         cum = spec.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        layers += _wide_layers(spec, cum, _ts_us("ts"), roll_rows, gap_s)
+        layers += _wide_layers(spec, cum, _ts_us("ts"), gap_s)
     return layers
 
 
-def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
+def _wide_layers(w, wcum, us, gap_s) -> list[Layer]:
     """The wide tier's window layers, after the base layers:
 
     - **W0** — every window over raw/base-staged columns (lags, the
@@ -689,24 +679,16 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
     Running mean/std, ratios and the composite battery are
     :func:`derive`'s. Requires ``_sb``, ``_rn``, ``_gap_us`` from the
     base layers."""
-    w5 = w.rowsBetween(-(roll_rows - 1), Window.currentRow)
+    w5 = w.rowsBetween(-(ROLL_ROWS - 1), Window.currentRow)
     w10 = w.rowsBetween(-(WIDE_ROLL10 - 1), Window.currentRow)
-    w20 = w.rowsBetween(-(WIDE_ROLL20 - 1), Window.currentRow)
     tl = F.col("text_len")
     tll = tl.cast("long")
     gap = F.col("lag1_ts_gap_s")
     rn = F.col("_rn")
     sb = F.col("_sb")
-    # 10/20-row min/max block decomposition applies only when the
-    # frames tile exactly into >=2 base-width (roll_rows) blocks
-    tiles = (
-        WIDE_ROLL10 % roll_rows == 0
-        and WIDE_ROLL10 // roll_rows >= 2
-        and WIDE_ROLL20 % roll_rows == 0
-    )
-    r10, r20 = _rows(WIDE_ROLL10 - 1), _rows(WIDE_ROLL20 - 1)
+    r5, r10, r20 = _rows(ROLL_ROWS - 1), _rows(WIDE_ROLL10 - 1), _rows(WIDE_ROLL20 - 1)
     # a gap reads its predecessor: gap frames reach one row further
-    g5, g10 = _rows(roll_rows), _rows(WIDE_ROLL10)
+    g5, g10 = _rows(ROLL_ROWS), _rows(WIDE_ROLL10)
 
     def lag_delta(k: int) -> tuple[Kind, Column]:
         return _rows(k), (tl - F.lag(tl, k).over(w)).cast("double")
@@ -715,13 +697,12 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
         return _rows(k), (us - F.lag(us, k).over(w)).cast("double") / F.lit(1e6)
 
     # ---- W0: one WindowExec over (conv)(ts, turn_idx) frames. Only the
-    # base-width min/max frames slide; when the 10/20-row frames tile
-    # into base-width blocks (the default roll_rows=5 does), W1 composes
-    # them EXACTLY: max over [t-19, t] = greatest of the 5-row block
-    # maxima at lags 0/5/10/15 (at partition heads the early blocks
-    # already cover [1, t] and missing lags are NULL, which
-    # greatest/least skip — identical to the frame max). Non-tiling
-    # roll_rows falls back to sliding frames here.
+    # base-width min/max frames slide; the 10/20-row frames tile into
+    # base-width blocks, so W1 composes them EXACTLY: max over [t-19, t]
+    # = greatest of the 5-row block maxima at lags 0/5/10/15 (at
+    # partition heads the early blocks already cover [1, t] and missing
+    # lags are NULL, which greatest/least skip — identical to the frame
+    # max).
     w0: Layer = {
         "_lag_tll": (_rows(1), F.lag(tll).over(w)),
         "_lag2_tll": (_rows(2), F.lag(tll, 2).over(w)),
@@ -732,22 +713,10 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
         **{f"lag{k}_text_len_delta": lag_delta(k) for k in range(2, 8)},
         "lag2_ts_gap_s": lag_gap(2),
         "lag3_ts_gap_s": lag_gap(3),
-        "roll_max_text_len_5": (_rows(roll_rows - 1), F.max(tl).over(w5).cast("double")),
-        "roll_min_text_len_5": (_rows(roll_rows - 1), F.min(tl).over(w5).cast("double")),
+        "roll_max_text_len_5": (r5, F.max(tl).over(w5).cast("double")),
+        "roll_min_text_len_5": (r5, F.min(tl).over(w5).cast("double")),
         "gap_roll_max_5": (g5, F.max(gap).over(w5)),
         "gap_roll_min_5": (g5, F.min(gap).over(w5)),
-        **(
-            {}
-            if tiles
-            else {
-                "roll_min_text_len_10": (r10, F.min(tl).over(w10).cast("double")),
-                "roll_max_text_len_10": (r10, F.max(tl).over(w10).cast("double")),
-                "roll_min_text_len_20": (r20, F.min(tl).over(w20).cast("double")),
-                "roll_max_text_len_20": (r20, F.max(tl).over(w20).cast("double")),
-                "gap_roll_max_10": (g10, F.max(gap).over(w10)),
-                "gap_roll_min_10": (g10, F.min(gap).over(w10)),
-            }
-        ),
         "wing_asym_5": (
             _rows(4),
             (
@@ -820,20 +789,20 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
     def blocks(c: str, combine, width: int) -> Column:
         return combine(
             F.col(c),
-            *[F.lag(c, j * roll_rows).over(w) for j in range(1, width // roll_rows)],
+            *[F.lag(c, j * ROLL_ROWS).over(w) for j in range(1, width // ROLL_ROWS)],
         )
 
     cum_tl = F.col("cum_text_len")
     ctl2 = F.col("_ctl2")
     act = F.col("_active_us")
-    n5 = F.least(rn, F.lit(roll_rows))
+    n5 = F.least(rn, F.lit(ROLL_ROWS))
     n10 = F.least(rn, F.lit(WIDE_ROLL10))
     n20 = F.least(rn, F.lit(WIDE_ROLL20))
-    s5 = cum_tl - lagz(cum_tl, roll_rows)
+    s5 = cum_tl - lagz(cum_tl, ROLL_ROWS)
     s10 = cum_tl - lagz(cum_tl, WIDE_ROLL10)
     s20 = cum_tl - lagz(cum_tl, WIDE_ROLL20)
     m5, m10, m20 = s5 / n5, s10 / n10, s20 / n20
-    v5 = (ctl2 - lagz(ctl2, roll_rows)) / n5 - m5 * m5
+    v5 = (ctl2 - lagz(ctl2, ROLL_ROWS)) / n5 - m5 * m5
     v10 = (ctl2 - lagz(ctl2, WIDE_ROLL10)) / n10 - m10 * m10
     v20 = (ctl2 - lagz(ctl2, WIDE_ROLL20)) / n20 - m20 * m20
 
@@ -880,16 +849,16 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
             _rows(4),
             F.sum("_trap_w").over(w.rowsBetween(-3, 0)) / F.lit(2000.0),
         ),
-        "roll_sum_text_len_5": (_rows(roll_rows - 1), s5.cast("long")),
+        "roll_sum_text_len_5": (r5, s5.cast("long")),
         "roll_sum_text_len_10": (r10, s10.cast("long")),
         "roll_sum_text_len_20": (r20, s20.cast("long")),
         "roll_mean_text_len_10": (r10, m10),
         "roll_mean_text_len_20": (r20, m20),
-        "roll_std_text_len_5": (_rows(roll_rows - 1), F.sqrt(F.greatest(F.lit(0.0), v5))),
+        "roll_std_text_len_5": (r5, F.sqrt(F.greatest(F.lit(0.0), v5))),
         "roll_std_text_len_10": (r10, F.sqrt(F.greatest(F.lit(0.0), v10))),
         "roll_std_text_len_20": (r20, F.sqrt(F.greatest(F.lit(0.0), v20))),
         "zscore_roll_text_len_5": (
-            _rows(roll_rows - 1),
+            r5,
             F.when(v5 > 0, (tll - m5) / F.sqrt(v5)).otherwise(F.lit(0.0)),
         ),
         "zscore_roll_text_len_10": (
@@ -911,7 +880,7 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
         # is the identical value.
         "gap_roll_mean_5": (
             g5,
-            F.when(rn > 1, (act - lagz(act, roll_rows)) / F.least(rn - 1, F.lit(roll_rows)))
+            F.when(rn > 1, (act - lagz(act, ROLL_ROWS)) / F.least(rn - 1, F.lit(ROLL_ROWS)))
             / F.lit(1e6),
         ),
         "gap_roll_mean_10": (
@@ -921,18 +890,12 @@ def _wide_layers(w, wcum, us, roll_rows, gap_s) -> list[Layer]:
             )
             / F.lit(1e6),
         ),
-        **(
-            {
-                "roll_max_text_len_10": (r10, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL10)),
-                "roll_min_text_len_10": (r10, blocks("roll_min_text_len_5", F.least, WIDE_ROLL10)),
-                "roll_max_text_len_20": (r20, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL20)),
-                "roll_min_text_len_20": (r20, blocks("roll_min_text_len_5", F.least, WIDE_ROLL20)),
-                "gap_roll_max_10": (g10, blocks("gap_roll_max_5", F.greatest, WIDE_ROLL10)),
-                "gap_roll_min_10": (g10, blocks("gap_roll_min_5", F.least, WIDE_ROLL10)),
-            }
-            if tiles
-            else {}
-        ),
+        "roll_max_text_len_10": (r10, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL10)),
+        "roll_min_text_len_10": (r10, blocks("roll_min_text_len_5", F.least, WIDE_ROLL10)),
+        "roll_max_text_len_20": (r20, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL20)),
+        "roll_min_text_len_20": (r20, blocks("roll_min_text_len_5", F.least, WIDE_ROLL20)),
+        "gap_roll_max_10": (g10, blocks("gap_roll_max_5", F.greatest, WIDE_ROLL10)),
+        "gap_roll_min_10": (g10, blocks("gap_roll_min_5", F.least, WIDE_ROLL10)),
     }
     return [w0, locals_, w1]
 
@@ -1144,13 +1107,10 @@ def sessionize(
 def featurize_expr(
     df: DataFrame,
     gap_s: float = SESSION_GAP_S,
-    rate_window_s: int = RATE_WINDOW_S,
-    roll_rows: int = ROLL_ROWS,
     include_labels: bool = False,
     include_text: bool = True,
     wide: bool = False,
     enum_shuffle: bool = False,
-    decode_enums: bool = False,
 ) -> DataFrame:
     """The full per-turn feature vector as ONE window-expression plan:
     :func:`project_inputs`, then :func:`window_layers` over
@@ -1167,13 +1127,11 @@ def featurize_expr(
     wide tier — come back as BIGINT): strings are recovered lazily at
     read time via :func:`enum_decode` with :func:`enum_decode_map`
     against the source table (or the dims ``featurize_job`` writes
-    next to the feature table). Decoding inside this plan —
-    ``decode_enums=True``, bit-identical to the string path,
-    pytest-locked — costs one column-pruned distinct scan plus a
-    broadcast join per dim, which is pure overhead for consumers that
-    only ever compare these columns for equality (round-5 judge item:
-    the three decode dims were the measured local regression of the
-    enum trade).
+    next to the feature table); the decoded table is bit-identical to
+    the string path (pytest-locked). Decoding inside this plan would
+    cost one column-pruned distinct scan plus a broadcast join per dim,
+    pure overhead for consumers that only ever compare these columns
+    for equality.
 
     Scale notes (100 TB): all windows share ``partitionBy(conv_id)`` —
     Catalyst plans a single hash exchange on conv_id followed by one
@@ -1190,9 +1148,8 @@ def featurize_expr(
     the production featurize-job default; the text-carrying variant
     exists for pipelines that materialise a denormalised table.
     """
-    src = df
     df, key_cols = project_inputs(df, include_text, enum_shuffle, wide)
-    layers = window_layers(["conv_id"], gap_s, rate_window_s, roll_rows, wide, enum_shuffle)
+    layers = window_layers(["conv_id"], gap_s, wide, enum_shuffle)
     df = derive(apply_layers(df, layers), wide, enum_shuffle)
     cols = output_cols(key_cols, wide)
     if include_labels:
@@ -1206,10 +1163,7 @@ def featurize_expr(
             }
         )
         cols = cols + LABEL_COLS
-    out = df.select(*cols)
-    if enum_shuffle and decode_enums:
-        out = enum_decode(out, src, enum_decode_map(wide)).select(*cols)
-    return out
+    return df.select(*cols)
 
 
 def output_cols(key_cols: list[str], wide: bool) -> list[str]:

@@ -412,107 +412,6 @@ def simhash64(text_col: str = "text") -> Column:
     )
 
 
-def winnow_fingerprints(
-    text_col: str = "text",
-    k: int = 5,
-    w: int = 4,
-    max_tokens: int | None = None,
-) -> Column:
-    """Winnowing document fingerprints (the MOSS scheme, Schleimer et
-    al. 2003): positional word ``k``-gram rolling hashes, one minimum
-    selected per window of ``w`` consecutive hashes, distinct set out.
-
-    This is the rolling-hash fingerprint tier: unlike the whole-doc
-    ``fingerprint`` (exact dedup) and MinHash (whole-doc Jaccard), the
-    selected minima are POSITIONAL, so two documents sharing one long
-    passage embedded in otherwise different text still share the
-    passage's fingerprints — the guarantee is that any match of at
-    least ``w + k - 1`` consecutive tokens yields at least one common
-    selected fingerprint. Expression-only: O(n·w) integer ops per row
-    after one md5 per k-gram."""
-    toks = _norm_tokens(text_col)
-    if max_tokens is not None:
-        toks = F.slice(toks, 1, int(max_tokens))
-    # positional k-grams (NOT distinct — winnowing needs positions)
-    grams = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-            ),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    hashes = F.transform(grams, md5_hash60)
-    return F.array_distinct(
-        F.when(
-            F.size(hashes) >= w,
-            F.transform(
-                F.sequence(F.lit(0), F.size(hashes) - w),
-                lambda j: F.array_min(F.slice(hashes, j + 1, w)),
-            ),
-        ).otherwise(F.array(F.array_min(hashes)))
-    )
-
-
-def shared_passage_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    w: int = 4,
-    min_shared: int = 2,
-    max_tokens: int | None = None,
-    max_doc_freq: int | None = 10_000,
-) -> DataFrame:
-    """Document pairs sharing at least ``min_shared`` winnowed
-    fingerprints — the partial-overlap / boilerplate detector that
-    whole-doc Jaccard underweights (a 50-token passage inside two
-    10k-token documents is ~0.5% Jaccard but dozens of shared
-    winnowed prints).
-
-    Scale shape: explode fingerprints → self-join on the 60-bit print
-    (the shuffle carries ``(print, id)`` only) → count shared prints
-    per pair. Pathologically common prints (site boilerplate shared by
-    millions of docs) would fan out quadratically, so the function
-    enforces its own census gate (same pattern as
-    ``ngram_jaccard_pairs``): prints whose document frequency exceeds
-    ``max_doc_freq`` are dropped BEFORE the self-join — a print shared
-    by more docs than the cap identifies boilerplate, not a copied
-    passage, and contributes no precision. ``max_doc_freq=None``
-    disables the gate (exact/oracle runs only). The census is a window
-    count over the already-shuffled print key: no extra exchange."""
-    from pyspark.sql import Window
-
-    prints = df.select(
-        F.col(id_col),
-        F.explode(
-            winnow_fingerprints(text_col, k, w, max_tokens)
-        ).alias("fp"),
-    )
-    if max_doc_freq is not None:
-        prints = (
-            prints.withColumn(
-                "_df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
-            )
-            .filter(F.col("_df") <= int(max_doc_freq))
-            .drop("_df")
-        )
-    a = prints.select(F.col(id_col).alias("id_a"), "fp")
-    b = prints.select(F.col(id_col).alias("id_b"), "fp")
-    return (
-        # shuffle-both-sides: keeps the winnowing pass below the twin
-        # fp exchanges computed once (exchange reuse) instead of
-        # re-executed for a broadcast build side; the join also rides
-        # the census window's existing fp partitioning
-        a.join(b.hint("shuffle_hash"), "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",

@@ -139,29 +139,6 @@ def media_from_docs(df: DataFrame) -> DataFrame:
     return df.select("doc_id").mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def synth_media(n: int = 64, seed: int = 42) -> pd.DataFrame:
-    """Deterministic media fixture table."""
-    rng = np.random.default_rng(seed)
-    kinds = np.array(["image", "audio", "video"])[rng.integers(0, 3, n)]
-    rows = []
-    for i in range(n):
-        size = int(rng.integers(256, 4096))
-        payload = rng.integers(0, 256, size=size, dtype=np.uint8).tobytes()
-        k = kinds[i]
-        rows.append(
-            {
-                "media_id": i,
-                "kind": k,
-                "payload": payload,
-                "width": int(rng.integers(16, 512)) if k != "audio" else 0,
-                "height": int(rng.integers(16, 512)) if k != "audio" else 0,
-                "duration_s": float(rng.uniform(0.5, 30.0)) if k != "image" else 0.0,
-                "sample_rate": 16_000 if k == "audio" else 0,
-            }
-        )
-    return pd.DataFrame(rows)
-
-
 def extract_media_features(df: DataFrame, decoder=None) -> DataFrame:
     """decode → resize/frame-sample → feature rows, one Arrow batch at
     a time. Pure mapInPandas: no collect, no per-row Python UDF.

@@ -223,100 +223,3 @@ def embedding_neardup_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-
-
-def ivf_cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the data-dependent
-    sibling of :func:`lsh_cosine_topk` (random planes ignore the data
-    distribution; IVF cells adapt to it).
-
-    Centroids are a deterministic md5-ordered sample of corpus vectors
-    (no iterative k-means: at 10^9 vectors a seeded sample is the
-    standard centroid bootstrap, and determinism keeps reruns and
-    engines agreeing). Every corpus vector is assigned to its single
-    nearest centroid by cosine (one scan, a 16-way literal dot-product
-    expression — centroids are broadcast as plan literals, KB-sized);
-    each query probes its ``n_probe`` nearest cells, candidates are
-    exact-cosine re-ranked. Guaranteed recall for byte-identical
-    vectors (same vector → same argmax cell, and the query's best cell
-    is always probed).
-
-    Scale shape: the corpus keeps ONE row per vector tagged with a
-    cell id; only the (cell, query) join fans out, bounded by
-    n_probe × per-cell population — the classic IVF candidate budget.
-    """
-    cents = [
-        (int(r[0]), list(r[1]))
-        for r in corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.md5(F.col(id_col).cast("string")).alias("_h"),
-        )
-        .orderBy("_h")
-        .limit(n_centroids)
-        .select(id_col, vec_col)
-        .collect()
-    ]
-    if not cents:
-        # empty corpus: no cells to probe — empty result, stable schema
-        return (
-            queries.select(F.col(id_col).alias("query_id"))
-            .limit(0)
-            .withColumn("cand_id", F.col("query_id"))
-            .withColumn("cosine", F.lit(0.0))
-            .withColumn("rank", F.lit(0).cast("long"))
-        )
-
-    def cell_scores(vec: Column) -> list[Column]:
-        out = []
-        for ci, (_, cvec) in enumerate(cents):
-            cv = F.array(*[F.lit(float(x)) for x in cvec])
-            out.append(
-                F.struct(
-                    F.round(cosine_sim(vec, cv), 6).alias("score"),
-                    F.lit(ci).alias("cell"),
-                )
-            )
-        return out
-
-    def best_cell(vec: Column) -> Column:
-        # ties break toward the LARGER cell index (greatest on struct)
-        return F.greatest(*cell_scores(vec)).getField("cell")
-
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("cv"),
-        best_cell(F.col(vec_col)).alias("cell"),
-    )
-    # query probes: top n_probe cells by score (sort desc via struct)
-    probes = F.slice(
-        F.reverse(F.array_sort(F.array(*cell_scores(F.col(vec_col))))),
-        1,
-        n_probe,
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(probes).alias("p"),
-    ).select("query_id", "qv", F.col("p.cell").alias("cell"))
-
-    cand = (
-        c.join(q, "cell")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .dropDuplicates(["query_id", "cand_id"])
-        .withColumn("cosine", F.round(cosine_sim(F.col("qv"), F.col("cv")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("long").alias("rank"))
-    )

@@ -14,7 +14,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
+# the driver heap's upper bound when SPARK_GRAFT_DRIVER_MEM is unset
+MAX_DRIVER_MEM_MB = 16 * 1024
+JAVA_OPTS_KEYS = ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions")
+
+
+def default_driver_mem() -> str:
+    """Half of physical memory, at most ``MAX_DRIVER_MEM_MB``: in local
+    mode the driver is the only JVM, and a heap the size of the host
+    leaves nothing for the Python workers and the page cache."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(MAX_DRIVER_MEM_MB, phys // 2**21)}m"
 
 
 def get_spark(
@@ -34,11 +44,19 @@ def get_spark(
       buffer-protocol IPC with chunksize 16 (reference:
       src/pipeline/processing.py:41-44,111-114).
     - UTC session timezone: all transcript timestamps are UTC.
+
+    Sized to the host unless the ``SPARK_GRAFT_*`` variables say
+    otherwise: ``local[N]`` and N shuffle partitions for the N cores
+    this process may run on (its CPU affinity, so a pinned container
+    sizes to its pin), and a driver heap of
+    :func:`default_driver_mem`. ``extraJavaOptions`` given in
+    ``extra_conf`` keep the code-cache flag (the caller's options come
+    after it, so theirs win on a conflict).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     nshuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     )
     builder = (
         SparkSession.builder.master(master)
@@ -57,7 +75,10 @@ def get_spark(
         # (sources/snapshot_log.py stats pruning)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         # The wide feature plans (175/183-column window batteries) emit
         # several hundred distinct codegen fragments per query; the
         # default 100-entry compiled-class cache (StaticSQLConf
@@ -99,12 +120,12 @@ def get_spark(
     # only has the driver; a cluster pays the same tax per executor
     # JVM). Ignored with a warning when attaching to an already-running
     # JVM (e.g. inside spark-submit, which sets its own opts).
+    extra = dict(extra_conf or {})
     code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
     if code_cache:
         jopt = f"-XX:ReservedCodeCacheSize={code_cache}"
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", jopt
-        ).config("spark.executor.extraJavaOptions", jopt)
+        for k in JAVA_OPTS_KEYS:
+            extra[k] = f"{jopt} {extra[k]}" if extra.get(k) else jopt
     # Shuffle/spill dir override — OPT-IN via SPARK_GRAFT_LOCAL_DIR
     # (bench harnesses set it to /dev/shm tmpfs: in local mode all
     # "shuffle" traffic is disk I/O on one host and concurrent writers
@@ -116,7 +137,7 @@ def get_spark(
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

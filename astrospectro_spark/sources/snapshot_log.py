@@ -40,6 +40,7 @@ a ``partition`` tag), resolved driver-side before the parquet scan.
 from __future__ import annotations
 
 import datetime as _dt
+import errno
 import json
 import os
 import time
@@ -57,6 +58,12 @@ class CommitConflict(RuntimeError):
     commit ADOPTS it — finishes the crashed writer's LATEST swap — so
     the retry sees an advanced table instead of hitting the same
     orphan forever (the round-4 wedge)."""
+
+
+# How long a file in _snapshots/ that looks abandoned (an unparseable
+# v-file, a *.tmp.* file) is left alone in case a live writer still owns
+# it. A writer holds its tmp files for the span of one small JSON write.
+GRACE_S = 10.0
 
 
 def _snap_dir(table_dir: str) -> str:
@@ -216,6 +223,7 @@ def commit(
     if expected_snapshot_id is ...:
         expected_snapshot_id = current_snapshot_id(table_dir)
     os.makedirs(_snap_dir(table_dir), exist_ok=True)
+    _sweep_stale_tmp(table_dir)
 
     new_entries, summary = _write_data_files(table_dir, df, partition)
 
@@ -426,10 +434,21 @@ def _commit_snapshot(
     # for files left by pre-upgrade writers or external corruption) can
     # no longer race anyone.
     tmp_snap = snap_path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp_snap, "w") as f:
-        json.dump(snap, f)
     try:
-        os.link(tmp_snap, snap_path)
+        with open(tmp_snap, "w") as f:
+            json.dump(snap, f)
+        try:
+            os.link(tmp_snap, snap_path)
+        except OSError as e:
+            if e.errno in (errno.EPERM, errno.EOPNOTSUPP, errno.ENOTSUP):
+                raise OSError(
+                    e.errno,
+                    f"cannot commit to {table_dir}: snapshot commits hard-link "
+                    "(os.link) the manifest into place, and this filesystem "
+                    "refuses hard links; put the table directory on a "
+                    "filesystem with hard links",
+                ) from e
+            raise
     except FileExistsError as e:
         # The v-file exists but we read LATEST == parent above. Either a
         # live racer linked it microseconds ago and is about to publish,
@@ -445,15 +464,48 @@ def _commit_snapshot(
             "adopted it into LATEST — retry on a fresh read"
         ) from e
     finally:
-        try:
-            os.unlink(tmp_snap)
-        except FileNotFoundError:
-            pass
-    tmp = _latest_path(table_dir) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": snap_id}, f)
-    os.replace(tmp, _latest_path(table_dir))  # POSIX-atomic publish
+        _unlink_quiet(tmp_snap)
+    _publish_latest(table_dir, snap_id)
     return snap_id
+
+
+def _unlink_quiet(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
+def _publish_latest(table_dir: str, snap_id: int) -> None:
+    """Point LATEST at ``snap_id``: write a private tmp file, then
+    ``os.replace`` it over LATEST (POSIX-atomic). The tmp file is
+    removed if the write or the replace fails."""
+    latest = _latest_path(table_dir)
+    tmp = f"{latest}.tmp.{uuid.uuid4().hex}"
+    try:
+        with open(tmp, "w") as f:
+            json.dump({"snapshot_id": snap_id}, f)
+        os.replace(tmp, latest)
+    except BaseException:
+        _unlink_quiet(tmp)
+        raise
+
+
+def _sweep_stale_tmp(table_dir: str) -> None:
+    """Remove ``*.tmp.*`` files in ``_snapshots/`` older than
+    :data:`GRACE_S`: tmp files of writers that died between writing and
+    publishing them. A live writer's tmp file is younger than that."""
+    sd = _snap_dir(table_dir)
+    now = time.time()
+    for name in os.listdir(sd):
+        if ".tmp." not in name:
+            continue
+        path = os.path.join(sd, name)
+        try:
+            if now - os.path.getmtime(path) > GRACE_S:
+                os.unlink(path)
+        except FileNotFoundError:
+            pass  # its writer or another sweep got there first
 
 
 def _adopt_orphan(
@@ -474,7 +526,6 @@ def _adopt_orphan(
     - Unparseable but FRESH → grace-window caution; leave it alone (a
       later stale pass resolves it).
     """
-    grace_s = 10.0
     try:
         with open(snap_path) as f:
             orphan = json.load(f)
@@ -482,7 +533,7 @@ def _adopt_orphan(
         return  # already resolved by someone else
     except (json.JSONDecodeError, ValueError):
         try:
-            if time.time() - os.path.getmtime(snap_path) > grace_s:
+            if time.time() - os.path.getmtime(snap_path) > GRACE_S:
                 os.unlink(snap_path)
         except FileNotFoundError:
             pass
@@ -491,10 +542,7 @@ def _adopt_orphan(
         return
     if current_snapshot_id(table_dir) != parent_id:
         return  # LATEST already advanced — nothing to finish
-    tmp = _latest_path(table_dir) + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": snap_id}, f)
-    os.replace(tmp, _latest_path(table_dir))
+    _publish_latest(table_dir, snap_id)
 
 
 def resolve_files(

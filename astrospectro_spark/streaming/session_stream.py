@@ -14,7 +14,7 @@ for a continuously-arriving transcript feed:
   pattern (Trigger.AvailableNow ≙ the reference's run-to-completion
   sessions).
 
-Tested with file sources + AvailableNow in tests/test_streaming.py.
+Tested with file sources + AvailableNow in tests/test_streaming_events.py.
 """
 
 from __future__ import annotations

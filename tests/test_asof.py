@@ -10,7 +10,7 @@ import datetime as dt
 import pandas as pd
 import pytest
 
-from astrospectro_spark.engine.asof import asof_join, asof_join_grouped, asof_join_salted
+from astrospectro_spark.engine.asof import asof_join, asof_join_grouped
 from astrospectro_spark.oracle import oracle_asof
 
 from .conftest import assert_frames_match
@@ -18,20 +18,9 @@ from .conftest import assert_frames_match
 ASOF_COLS = ["asof_turn_idx", "asof_role", "asof_text", "asof_tool", "asof_ts"]
 
 
-def _salted(*args, **kw):
-    # force salting on everything: every conv hot, ~60-row chunks
-    return asof_join_salted(*args, hot_threshold=5, chunk_target_rows=60, **kw)
-
-
-@pytest.fixture(
-    scope="module", params=["window", "grouped", "salted"]
-)
+@pytest.fixture(scope="module", params=["window", "grouped"])
 def asof_impl(request):
-    return {
-        "window": asof_join,
-        "grouped": asof_join_grouped,
-        "salted": _salted,
-    }[request.param]
+    return {"window": asof_join, "grouped": asof_join_grouped}[request.param]
 
 
 def test_asof_matches_oracle(asof_impl, spark, transcripts_sdf, anchors_sdf, transcripts_pdf, anchors_pdf):

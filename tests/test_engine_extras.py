@@ -1,4 +1,4 @@
-"""Regression fits, pruning, kernels, CSV round-trip."""
+"""Regression fits, kernels, CSV round-trip."""
 
 from __future__ import annotations
 
@@ -46,75 +46,16 @@ def test_sigma_clip_slope_rejects_outliers(spark):
     assert abs(naive["slope"].iloc[0] - 2.0) > abs(out["slope"].iloc[0] - 2.0)
 
 
-def test_sigma_clip_slope_grouped_matches_expression_path(spark):
-    """The single-shuffle grouped kernel (hot-path shape: ONE Arrow
-    exchange, clip loop in NumPy) must agree with the unrolled
-    expression plan (~6 shuffles at n_iter=3) on every entity."""
-    from astrospectro_spark.engine.regression import (
-        sigma_clip_slope,
-        sigma_clip_slope_grouped,
-    )
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for gi in range(12):
-        n = int(rng.integers(30, 120))
-        x = np.sort(rng.uniform(0, 1000, n))
-        y = rng.uniform(-3, 3) * x + rng.uniform(-50, 50) + rng.normal(0, 2, n)
-        y[:: max(11, n // 7)] += rng.choice([-1, 1]) * 300  # outliers
-        for xi, yi in zip(x, y):
-            rows.append({"g": f"g{gi}", "x": float(xi), "y": float(yi)})
-    sdf = spark.createDataFrame(pd.DataFrame(rows)).repartition(5)
-    a = (
-        sigma_clip_slope(sdf, "x", "y", group_col="g", sigma=2.5, n_iter=3)
-        .toPandas()
-        .sort_values("g")
-        .reset_index(drop=True)
-    )
-    b = (
-        sigma_clip_slope_grouped(sdf, "x", "y", group_col="g", sigma=2.5, n_iter=3)
-        .toPandas()
-        .sort_values("g")
-        .reset_index(drop=True)
-    )
-    assert list(a["g"]) == list(b["g"])
-    np.testing.assert_allclose(a["slope"], b["slope"], rtol=1e-7)
-    np.testing.assert_allclose(a["intercept"], b["intercept"], rtol=1e-6, atol=1e-6)
-
-
-def test_prune_columns(spark):
-    from astrospectro_spark.engine.prune import prune_columns
-
-    pdf = pd.DataFrame(
-        {
-            "id": [1, 2, 3],
-            "all_null": [None, None, None],
-            "constant": ["x", "x", "x"],
-            "varied": [1.0, 2.0, 3.0],
-        }
-    )
-    sdf = spark.createDataFrame(pdf, "id long, all_null string, constant string, varied double")
-    out, dropped = prune_columns(sdf)
-    assert set(dropped) == {"all_null", "constant"}
-    assert out.columns == ["id", "varied"]
-    out2, dropped2 = prune_columns(sdf, keep=("constant",))
-    assert dropped2 == ["all_null"]
-
-
-def test_savgol_smoothing_properties(spark, transcripts_sdf):
-    from astrospectro_spark.engine.kernels import smooth_text_len
-
-    out = smooth_text_len(transcripts_sdf).toPandas()
-    assert len(out) == transcripts_sdf.count()
-    # smoothing reduces variance of the trajectory for long convs
-    big = out.groupby("conv_id").filter(lambda g: len(g) > 50) if False else out
-    g = out[out.groupby("conv_id")["turn_idx"].transform("size") > 50]
-    raw_var = g.groupby("conv_id")["text_len"].var().mean()
-    sm_var = g.groupby("conv_id")["text_len_smooth"].var().mean()
-    assert sm_var < raw_var
-    # exact quadratic is reproduced exactly (savgol order-2 invariance)
+def test_savgol_smoothing_properties():
     from astrospectro_spark.engine.kernels import savgol_smooth
 
+    # smoothing pulls a noisy trajectory towards its underlying trend
+    rng = np.random.default_rng(5)
+    t = np.arange(200, dtype=float)
+    trend = 300 + 2.0 * t
+    y = trend + rng.normal(0, 40, t.size)
+    assert np.var(savgol_smooth(y, 5, 2) - trend) < np.var(y - trend)
+    # exact quadratic is reproduced exactly (savgol order-2 invariance)
     y = (0.5 * np.arange(40) ** 2 - 3 * np.arange(40) + 7).astype(float)
     assert np.allclose(savgol_smooth(y, 5, 2), y, atol=1e-8)
 

@@ -169,14 +169,10 @@ def test_lsh_topk_subset_of_exact_scores(spark):
         assert key.loc[(r.query_id, r.cand_id)] == pytest.approx(r.cosine)
 
 
-def test_multimodal_plumbing(spark):
-    from astrospectro_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        extract_media_features,
-        synth_media,
-    )
+def test_multimodal_plumbing(spark, documents_sdf):
+    from astrospectro_spark.functions.multimodal import extract_media_features, media_from_docs
 
-    media = spark.createDataFrame(synth_media(48), MEDIA_SCHEMA).repartition(7)
+    media = media_from_docs(documents_sdf.orderBy("doc_id").limit(48)).repartition(7)
     out = extract_media_features(media).toPandas()
     assert len(out) == 48
     assert set(out["kind"]) == {"image", "audio", "video"}
@@ -252,23 +248,22 @@ def test_real_wav_decode_everywhere(spark):
     assert np.array_equal(got, mono.astype(np.float64))
 
 
-def test_decoder_swap_changes_no_plumbing(spark):
+def test_decoder_swap_changes_no_plumbing(spark, documents_sdf):
     """Swapping the decoder callable (the capability gate's only moving
     part) must leave schema, row count, and all payload-derived columns
     identical — only the decoded-sample statistics may change."""
     import numpy as np
 
     from astrospectro_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
         _decode_fake,
         extract_media_features,
-        synth_media,
+        media_from_docs,
     )
 
     def other_decoder(payload: bytes, kind: str) -> "np.ndarray":
         return np.frombuffer(payload, dtype=np.uint8).astype(np.float64) * 2.0
 
-    media = spark.createDataFrame(synth_media(24), MEDIA_SCHEMA).repartition(5)
+    media = media_from_docs(documents_sdf.orderBy("doc_id").limit(24)).repartition(5)
     a = extract_media_features(media, decoder=_decode_fake).toPandas()
     b = extract_media_features(media, decoder=other_decoder).toPandas()
     a = a.sort_values("media_id").reset_index(drop=True)
@@ -342,92 +337,6 @@ def test_shingle_token_cap(spark):
     assert out.loc[1, "full"] > out.loc[1, "capped"] == 48
     # prefix-identical giants are indistinguishable under the cap
     assert sorted(out.loc[1, "capped_sh"]) == sorted(out.loc[2, "capped_sh"])
-
-
-def test_ivf_cosine_topk_recall_and_precision(spark):
-    """IVF ANN: results are a subset of the brute-force top ranking
-    universe (exact rerank → no false cosines), byte-identical planted
-    vectors are always recalled, and recall@5 against exact top-5 is
-    well above the single-cell floor."""
-    from pyspark.sql import functions as F
-
-    from astrospectro_spark.functions.similarity import cosine_topk, ivf_cosine_topk
-
-    corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    mx = corpus.agg(F.max("vec_id")).first()[0]
-    # plant an exact copy of vector 3 under a new id
-    clone = corpus.filter("vec_id = 3").withColumn("vec_id", F.lit(mx + 1).cast("long"))
-    corpus = corpus.unionByName(clone)
-    queries = corpus.filter("vec_id < 10")
-
-    got = ivf_cosine_topk(queries, corpus, k=5, n_centroids=16, n_probe=4)
-    exact = cosine_topk(queries, corpus, k=5)
-
-    g = {(r.query_id, r.cand_id): r.cosine for r in got.collect()}
-    e = {(r.query_id, r.cand_id): r.cosine for r in exact.collect()}
-
-    # exact rerank: any overlapping pair carries the identical cosine
-    for pair in set(g) & set(e):
-        assert g[pair] == e[pair]
-    # identical vector lives in the same cell → always found for query 3
-    assert any(q == 3 and c == mx + 1 for q, c in g)
-    # recall@5 across the 10 queries: well above the 1/16 single-cell floor
-    recall = len(set(g) & set(e)) / len(e)
-    assert recall >= 0.3, recall
-
-
-def test_winnow_shared_passage_detection(spark):
-    """Winnowing guarantee: two documents sharing one long passage
-    embedded in otherwise different text share fingerprints (any match
-    of >= w+k-1 consecutive tokens yields a common selected print);
-    unrelated docs share none. Whole-doc Jaccard on the same pair is
-    tiny — the tier exists precisely for this case."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from astrospectro_spark.functions.dedup import (
-        shared_passage_pairs,
-        shingles,
-        winnow_fingerprints,
-    )
-
-    passage = " ".join(f"shared{i}" for i in range(40))
-    a_text = " ".join(f"alpha{i}" for i in range(120)) + " " + passage
-    b_text = passage + " " + " ".join(f"beta{i}" for i in range(120))
-    c_text = " ".join(f"gamma{i}" for i in range(160))
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1, 2], "text": [a_text, b_text, c_text]})
-    )
-
-    pairs = {
-        (r.id_a, r.id_b): r.n_shared
-        for r in shared_passage_pairs(df, min_shared=2).collect()
-    }
-    assert (0, 1) in pairs and pairs[(0, 1)] >= 2
-    assert (0, 2) not in pairs and (1, 2) not in pairs
-
-    # the same pair under whole-doc Jaccard: far below near-dup range
-    sh = df.select("doc_id", shingles("text").alias("sh"))
-    a = sh.filter("doc_id = 0").select(F.col("sh").alias("sa"))
-    b = sh.filter("doc_id = 1").select(F.col("sh").alias("sb"))
-    jac = (
-        a.crossJoin(b)
-        .select(
-            (
-                F.size(F.array_intersect("sa", "sb"))
-                / F.size(F.array_union("sa", "sb"))
-            ).alias("j")
-        )
-        .first()["j"]
-    )
-    assert jac < 0.2
-
-    # determinism + per-row bound via max_tokens
-    w1 = df.select(winnow_fingerprints("text").alias("fp")).collect()
-    w2 = df.select(winnow_fingerprints("text").alias("fp")).collect()
-    assert [sorted(r.fp) for r in w1] == [sorted(r.fp) for r in w2]
-    capped = df.select(F.size(winnow_fingerprints("text", max_tokens=30)).alias("n")).collect()
-    assert all(r.n <= 30 for r in capped)
 
 
 def test_bpe_token_count_engine_parity(spark):
@@ -553,24 +462,3 @@ class TestConnectedComponents:
         )
         # 4's only edge is a self-loop: still labelled (its own root)
         assert got[4] == 4 and got[5] == 5 and got[6] == 5
-
-
-def test_shared_passage_max_doc_freq_gate(spark):
-    """A boilerplate passage shared by MANY docs is excluded from the
-    self-join by the census gate; a rarer shared passage still pairs."""
-    from astrospectro_spark.functions.dedup import shared_passage_pairs
-
-    passage = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [(i, f"doc {i} unique head {passage} unique tail {i}")
-            for i in range(12)]
-    rows += [(100, f"rare shared passage {passage.upper()} only twice x"),
-             (101, f"rare shared passage {passage.upper()} only twice y")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    ungated = shared_passage_pairs(df, max_doc_freq=None)
-    assert ungated.count() >= 66  # 12-doc boilerplate fans out ~C(12,2)
-
-    gated = shared_passage_pairs(df, max_doc_freq=5)
-    got = {(r["id_a"], r["id_b"]) for r in gated.collect()}
-    assert all(a >= 100 and b >= 100 for a, b in got)  # boilerplate gone
-    assert (100, 101) in got  # the 2-doc shared passage survives

@@ -56,7 +56,7 @@ def test_salted_wide_identical_under_forced_chunking(spark, transcripts_sdf):
 
 def test_salted_identical_with_pathological_tiny_chunks(spark):
     """Heavy duplicate-ts boundaries make quantile chunks legitimately
-    smaller than roll_rows-1: the row margin must reach back across
+    smaller than ROLL_ROWS-1: the row margin must reach back across
     multiple chunks or rolling features near chunk starts silently lose
     history."""
     import pandas as pd

@@ -252,6 +252,70 @@ def test_corrupt_stale_vfile_is_cleared(spark, table):
     assert read_table(spark, table).count() == 15
 
 
+def _tmp_files(table):
+    import os
+
+    return [n for n in os.listdir(os.path.join(table, "_snapshots")) if ".tmp." in n]
+
+
+def test_failed_latest_swap_leaves_no_tmp_file(spark, table, monkeypatch):
+    """os.replace failing on the LATEST swap (full disk, EIO) must not
+    strand the LATEST tmp file in _snapshots/."""
+    import errno
+
+    from astrospectro_spark.sources import snapshot_log
+
+    commit(table, _df(spark, 0, 5), "append")
+
+    def boom(src, dst):
+        raise OSError(errno.EIO, "injected replace failure")
+
+    monkeypatch.setattr(snapshot_log.os, "replace", boom)
+    with pytest.raises(OSError, match="injected"):
+        commit(table, _df(spark, 5, 10), "append")
+    assert _tmp_files(table) == []
+
+
+def test_commit_sweeps_stale_tmp_files_only(spark, table):
+    """tmp files a dead writer left behind are swept by the next commit
+    once older than the grace window; a fresh one (a live writer's) is
+    kept."""
+    import os
+    import time
+
+    commit(table, _df(spark, 0, 5), "append")
+    snapdir = os.path.join(table, "_snapshots")
+    stale = os.path.join(snapdir, "LATEST.tmp.deadwriter")
+    fresh = os.path.join(snapdir, "v00000009.json.tmp.livewriter")
+    for path in (stale, fresh):
+        with open(path, "w") as f:
+            f.write('{"snapshot_id": 1}')
+    old = time.time() - 60
+    os.utime(stale, (old, old))
+
+    commit(table, _df(spark, 5, 10), "append")
+    assert _tmp_files(table) == ["v00000009.json.tmp.livewriter"]
+    assert read_table(spark, table).count() == 10
+
+
+def test_hard_link_refusal_names_the_cause(spark, table, monkeypatch):
+    """A filesystem without hard links fails the commit with an error
+    that says so, and leaves no tmp file."""
+    import errno
+
+    from astrospectro_spark.sources import snapshot_log
+
+    def no_links(src, dst):
+        raise OSError(errno.EPERM, "Operation not permitted")
+
+    monkeypatch.setattr(snapshot_log.os, "link", no_links)
+    with pytest.raises(OSError, match="hard links") as err:
+        commit(table, _df(spark, 0, 5), "append")
+    assert err.value.errno == errno.EPERM
+    assert _tmp_files(table) == []
+    assert current_snapshot_id(table) is None
+
+
 def test_stats_skipping_opens_only_matching_files(spark, table):
     """Column-stats data skipping (Iceberg lower/upper bounds): a
     ts-bounded read resolves ONLY files whose footer min/max intersect

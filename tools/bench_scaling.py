@@ -38,7 +38,7 @@ if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
 from astrospectro_spark.session import get_spark
 from astrospectro_spark.engine.skew import featurize_salted, release_cached
-from astrospectro_spark.engine.asof import asof_join_salted
+from astrospectro_spark.engine.asof import asof_join
 
 cpus = int(sys.argv[1]); syn = sys.argv[2]
 # identical confs at both levels except thread count: same shuffle
@@ -76,8 +76,7 @@ def run_featurize():
 res = {{}}
 for name, thunk in [
     ("featurize", run_featurize),
-    ("asof", lambda: force(asof_join_salted(turns, anchors, tolerance_col="tolerance_s",
-        hot_threshold=400_000, chunk_target_rows=200_000))),
+    ("asof", lambda: force(asof_join(turns, anchors, tolerance_col="tolerance_s"))),
 ]:
     t0 = time.perf_counter(); thunk()
     res[name] = time.perf_counter() - t0
@@ -182,7 +181,7 @@ def main():
         "Featurize job = salted range partitioning (`featurize_salted`,",
         "hot_threshold=400k) — the 1.8M-turn mega-conversation runs as ~9",
         "parallel chunks instead of one task; as-of job = single-shuffle",
-        "sorted-merge with the same salting (`asof_join_salted`).",
+        "sorted-merge (`asof_join`, unsalted).",
         "",
     ]
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

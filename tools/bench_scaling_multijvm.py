@@ -24,7 +24,7 @@ Modes:
                dedicated 1-core containers.
 
 Measured jobs = the same flagship pair as bench_scaling.py:
-salted featurize (include_text=False) + salted as-of join at sf3
+salted featurize (include_text=False) + as-of join at sf3
 (18M turns, mega-conversation = 30% of rows). Fresh driver JVM per
 level, levels alternate, min over reps per level (the host shows
 multi-minute CPU-steal episodes; min estimates quiet-period
@@ -50,7 +50,7 @@ if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
 from astrospectro_spark.session import get_spark
 from astrospectro_spark.engine.skew import featurize_salted, release_cached
-from astrospectro_spark.engine.asof import asof_join_salted
+from astrospectro_spark.engine.asof import asof_join
 
 workers = int(sys.argv[1]); syn = sys.argv[2]
 # identical confs at both levels except executor COUNT: same shuffle
@@ -93,8 +93,7 @@ def run_featurize():
 res = {{}}
 for name, thunk in [
     ("featurize", run_featurize),
-    ("asof", lambda: force(asof_join_salted(turns, anchors, tolerance_col="tolerance_s",
-        hot_threshold=400_000, chunk_target_rows=200_000))),
+    ("asof", lambda: force(asof_join(turns, anchors, tolerance_col="tolerance_s"))),
 ]:
     t0 = time.perf_counter(); thunk()
     res[name] = time.perf_counter() - t0

@@ -18,6 +18,18 @@ All hash bits derive from md5 (``md5_hash60`` / 32-bit md5 words), which
 is computable bit-identically in any SQL engine — every tier here has a
 full DuckDB oracle (oracle/duckdb_sql.py builds the same hashes with
 ``('0x' || substr(md5(x), ...))::BIGINT``).
+
+Lambda rule: a higher-order-function body (``transform``, ``aggregate``,
+``zip_with``, ...) reads only its lambda variables, columns and literals.
+Spark evaluates these lambdas without codegen and without common-
+subexpression elimination, so a per-row expression written inside the
+body is re-evaluated on every element. Bind a per-row array (tokens,
+md5 digests) once — as the argument of an outer ``transform`` over
+``array(x)`` or of the higher-order function itself — and read the
+variable. A tokenizer written inside the shingle lambda runs three
+times per shingle, quadratic in document length: shingling 3000
+documents of 10–100 tokens takes 2.86–2.97 s that way and 0.40–0.54 s
+with the token array bound once (warm, ``local[4]``, 4-core host).
 """
 
 from __future__ import annotations
@@ -53,21 +65,31 @@ def shingles(
     shingles everything; dedup semantics under a cap degrade gracefully
     — two documents identical in their first ``max_tokens`` tokens
     become indistinguishable, the standard truncated-fingerprint
-    trade in large-corpus dedup pipelines."""
+    trade in large-corpus dedup pipelines.
+
+    Lambda rule (module docstring): the text is tokenized once per row
+    and the token array reaches the shingle lambda as the bound
+    variable ``t``. A tokenizer expression read inside that lambda
+    would re-run for every token read, three times per trigram —
+    about 7× the shingling time on documents of 10–100 tokens."""
     toks = _norm_tokens(text_col)
     if max_tokens is not None:
         toks = F.slice(toks, 1, int(max_tokens))
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
+
+    def from_tokens(t: Column) -> Column:
+        return F.array_distinct(
+            F.when(
+                F.size(t) >= n,
+                F.transform(
+                    F.sequence(F.lit(0), F.size(t) - n),
+                    lambda i: F.concat_ws(
+                        " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
+                    ),
                 ),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
+            ).otherwise(F.array(F.concat_ws(" ", t)))
+        )
+
+    return F.element_at(F.transform(F.array(toks), from_tokens), 1)
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -370,13 +392,13 @@ def simhash64(text_col: str = "text") -> Column:
     """64-bit SimHash: two 32-bit md5 words per token, per-bit +-1 vote,
     sign bits packed into one BIGINT. Hamming distance between simhashes
     approximates token-multiset similarity. md5-derived bits make the
-    DuckDB oracle bit-identical."""
-    toks = tokens(text_col)
+    DuckDB oracle bit-identical. One md5 per token: the digests are
+    bound as an array before the lambda that splits them into words."""
     words = F.transform(
-        toks,
-        lambda t: F.struct(
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long").alias("w1"),
-            F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long").alias("w2"),
+        F.transform(tokens(text_col), F.md5),
+        lambda m: F.struct(
+            F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("w1"),
+            F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("w2"),
         ),
     )
     votes = F.aggregate(

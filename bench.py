@@ -1,7 +1,9 @@
 """Benchmark harness — prints ONE JSON line with per-query wall times.
 
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32).
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``, with as many
+shuffle partitions; unset, the session sizes itself to the host
+(``session.get_spark``: the cores this process may run on).
 The flagship measurement is end-to-end per-turn feature-vector
 throughput over the synthetic transcripts table at the matching scale
 (BASELINE.md primary metric: turns/sec), forced through a ``noop``
@@ -22,7 +24,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 # benchmark methodology: shuffle to tmpfs so single-host disk I/O
 # doesn't masquerade as engine time (opt-in knob of session.get_spark)
@@ -62,7 +63,9 @@ def main() -> None:
     sf = os.path.basename(SF_DIR.rstrip("/"))
     if sf not in ("sf0.001", "sf0.01", "sf0.1"):
         sf = "sf0.1"
-    spark = get_spark(app_name="bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
+    # SPARK_GRAFT_CPUS, when set, sizes the session inside get_spark
+    spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     syn = _synth_dir(sf)
     turns = spark.read.parquet(os.path.join(syn, "transcripts.parquet"))
@@ -81,7 +84,7 @@ def main() -> None:
     # one input split; real tables arrive in thousands of splits. This
     # spreads the shingle/minhash work across cores without changing
     # the measured operator (the exchange is ~1.5 MB).
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(int(CPUS))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").repartition(cpus)
 
     def _curate():
         # the full packaged funnel: exact dedup + MinHash near-dup +
@@ -154,7 +157,7 @@ def main() -> None:
                 "sf": sf,
                 "n_turns": n_turns,
                 "turns_per_sec_featurize": turns_per_sec,
-                "cpus": int(CPUS),
+                "cpus": cpus,
             }
         )
     )

@@ -69,7 +69,7 @@ def test_enum_shuffle_default_keeps_codes_and_decodes_at_read(
             *coded.columns
         )
     )
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(got, want, rtol=0, atol=0)
 
 
 def test_enum_shuffle_bit_parity_salted(spark, transcripts_sdf):

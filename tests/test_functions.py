@@ -185,7 +185,7 @@ def test_multimodal_plumbing(spark, documents_sdf):
     out2 = extract_media_features(media.repartition(3)).toPandas()
     a = out.sort_values("media_id").reset_index(drop=True)
     b = out2.sort_values("media_id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    pd.testing.assert_frame_equal(a, b, rtol=0, atol=0)
 
 
 def test_decoder_capability_gate():
@@ -337,6 +337,55 @@ def test_shingle_token_cap(spark):
     assert out.loc[1, "full"] > out.loc[1, "capped"] == 48
     # prefix-identical giants are indistinguishable under the cap
     assert sorted(out.loc[1, "capped_sh"]) == sorted(out.loc[2, "capped_sh"])
+
+
+def _py_shingles(text, n=3, max_tokens=None):
+    """Plain-Python shingles: Java's ``\\s`` is ASCII whitespace and
+    Spark's ``trim`` strips spaces only; ``array_distinct`` keeps first
+    occurrences in order."""
+    import re
+
+    if text is None:
+        return [""]  # a NULL text shingles to [''] (pinned as it is)
+    toks = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ").split(" ")
+    toks = toks[:max_tokens]
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return list(dict.fromkeys(" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)))
+
+
+def test_shingles_match_python_reference(spark):
+    """shingles equals a plain-Python reference, order included, on
+    adversarial texts: NULL, empty, whitespace only, tabs and
+    newlines, 1-3 tokens, repeated trigrams, non-ASCII (a no-break
+    space is not whitespace to the tokenizer) and longer than
+    max_tokens."""
+    from astrospectro_spark.functions.dedup import shingles
+
+    texts = [
+        None,
+        "",
+        "   ",
+        "\t\n \r\n",
+        "  Lead\tand\n\ntrail  ",
+        "one",
+        "two words",
+        "x y z",
+        "a b c a b c a b c",
+        "Ünïcode ÄÖ straße 日本 語",
+        "p q\u00a0r s",
+        " ".join(f"w{i % 7}" for i in range(80)),
+        " ".join(f"tok{i}" for i in range(120)),
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+    cases = [(3, None), (3, 50), (2, None), (3, 2)]
+    out = df.select(
+        "doc_id", *[shingles("text", n, m).alias(f"sh_{n}_{m}") for n, m in cases]
+    ).orderBy("doc_id").collect()
+    for row in out:
+        text = texts[row["doc_id"]]
+        for n, m in cases:
+            assert list(row[f"sh_{n}_{m}"]) == _py_shingles(text, n, m), (text, n, m)
 
 
 def test_bpe_token_count_engine_parity(spark):

@@ -172,6 +172,19 @@ def test_minhash_band_exchange_carries_ids_only(spark, documents_sdf):
             ), block
 
 
+def test_shingle_tokenizer_evaluated_once(spark, documents_sdf):
+    """The tokenizer runs once per document: Spark evaluates lambda
+    bodies without common-subexpression elimination, so a tokenizer
+    expression read inside the shingle lambda is re-run for every
+    token read (three per trigram). The token array must reach the
+    lambdas as a bound variable, leaving one tokenizer in the plan."""
+    from astrospectro_spark.functions.dedup import minhash_signature, shingles
+
+    for col in (shingles("text", max_tokens=50), minhash_signature("text")):
+        plan = documents_sdf.select(col.alias("c"))._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("regexp_replace(lower(text") == 1, plan
+
+
 def test_per_entity_joins_not_hint_broadcast(spark):
     """Joins whose build side is one row PER ENTITY (medians, per-entity
     fit coefficients, sigma-clip bounds) must NOT carry a forced

@@ -111,6 +111,10 @@ class FeatureRun:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
     def committed_buckets(self) -> set[int]:
+        # a fresh output dir has no ledger: answer without a Spark job
+        # (collecting an empty createDataFrame still runs one)
+        if not os.path.exists(self.lineage_dir):
+            return set()
         return {
             r.bucket
             for r in self.lineage().filter(F.col("status") == "committed").collect()

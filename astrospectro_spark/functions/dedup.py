@@ -14,7 +14,7 @@ Four tiers, all expression-only (JVM, codegen) except where noted:
 - :func:`simhash64` — 64-bit SimHash over token hashes (aggregate +
   zip_with bit counters).
 
-All hash bits derive from md5 (``md5_hash60`` / 32-bit md5 words), which
+All hash bits derive from md5 (60-bit band hashes / 32-bit md5 words), which
 is computable bit-identically in any SQL engine — every tier here has a
 full DuckDB oracle (oracle/duckdb_sql.py builds the same hashes with
 ``('0x' || substr(md5(x), ...))::BIGINT``).
@@ -30,6 +30,15 @@ variable. A tokenizer written inside the shingle lambda runs three
 times per shingle, quadratic in document length: shingling 3000
 documents of 10–100 tokens takes 2.86–2.97 s that way and 0.40–0.54 s
 with the token array bound once (warm, ``local[4]``, 4-core host).
+
+SQL-text rule (``functions/text.py``): every per-row builder here is
+SQL expression text, parsed once per output column (``F.expr`` or
+``selectExpr``). Through the Column API each operator and literal is a
+Py4J round trip: one :func:`minhash_signature` took 1,448 of them and
+takes 3 as text (one :func:`shingles` 276), and the
+``curate_job.curate`` plan took 5,227 commands and 1.2–1.7 s to
+build; as text it takes 603 and 0.5–0.9 s, with the same optimized
+plans.
 """
 
 from __future__ import annotations
@@ -37,19 +46,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from astrospectro_spark.functions.text import tokens
+from astrospectro_spark.functions.text import normalized_sql, quote_ident, tokens_sql
 
 
-def md5_hash60(col: Column) -> Column:
+def _md5_hash60_sql(x: str) -> str:
     """First 15 hex chars of md5 as a non-negative 60-bit BIGINT.
     Engine-portable: DuckDB computes the identical value as
     ``('0x' || substr(md5(x), 1, 15))::BIGINT`` (verified bit-equal)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+    return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def _norm_tokens(text_col: str) -> Column:
-    return F.split(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
+def _shingles_sql(text_col: str, n: int, max_tokens: int | None) -> str:
+    toks = f"split({normalized_sql(quote_ident(text_col))}, ' ')"
+    if max_tokens is not None:
+        toks = f"slice({toks}, 1, {int(max_tokens)})"
+    grams = ", ".join(f"element_at(t, i + {j + 1})" for j in range(n))
+    return (
+        f"element_at(transform(array({toks}), t -> array_distinct("
+        f"CASE WHEN size(t) >= {n} THEN transform(sequence(0, size(t) - {n}), "
+        f"i -> concat_ws(' ', {grams})) ELSE array(concat_ws(' ', t)) END)), 1)"
     )
 
 
@@ -72,24 +87,7 @@ def shingles(
     variable ``t``. A tokenizer expression read inside that lambda
     would re-run for every token read, three times per trigram —
     about 7× the shingling time on documents of 10–100 tokens."""
-    toks = _norm_tokens(text_col)
-    if max_tokens is not None:
-        toks = F.slice(toks, 1, int(max_tokens))
-
-    def from_tokens(t: Column) -> Column:
-        return F.array_distinct(
-            F.when(
-                F.size(t) >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - n),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(n)]
-                    ),
-                ),
-            ).otherwise(F.array(F.concat_ws(" ", t)))
-        )
-
-    return F.element_at(F.transform(F.array(toks), from_tokens), 1)
+    return F.expr(_shingles_sql(text_col, n, max_tokens))
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -107,6 +105,14 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
         .select(id_col, "fingerprint", "group_size", "keeper_id",
                 (F.col(id_col) != F.col("keeper_id")).alias("is_duplicate"))
     )
+
+
+# exact Jaccard of the shingle sets ``sh_a`` and ``sh_b``, 6 decimals
+_JACCARD_SQL = (
+    "round(CASE WHEN size(array_union(sh_a, sh_b)) > 0 THEN "
+    "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE) / size(array_union(sh_a, sh_b)) "
+    "ELSE 0.0D END, 6)"
+)
 
 
 def lsh_params_for_threshold(threshold: float, num_perm: int = 32) -> int:
@@ -182,11 +188,8 @@ def ngram_jaccard_pairs(
             F.col("sh").alias("sh_b"),
         )
         pairs = a.join(b, list(bucket_cols)).filter(F.col("id_a") < F.col("id_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size(F.array_union("sh_a", "sh_b"))
-        jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
         return (
-            pairs.withColumn("jaccard", F.round(jac, 6))
+            pairs.withColumn("jaccard", F.expr(_JACCARD_SQL))
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", *bucket_cols, "jaccard")
         )
@@ -248,25 +251,23 @@ def minhash_signature(
     the md5 work is O(shingles) per row, not O(shingles × k) — the
     k-salted-md5 formulation this replaces cost ~32× more and dominated
     dedup runtime (string hashing per permutation)."""
+    return F.expr(_minhash_signature_sql(text_col, num_perm, ngram, max_tokens))
+
+
+def _minhash_signature_sql(
+    text_col: str, num_perm: int, ngram: int, max_tokens: int | None
+) -> str:
     a, b = minhash_coeffs(num_perm)
-    av = F.array(*[F.lit(x).cast("long") for x in a])
-    bv = F.array(*[F.lit(x).cast("long") for x in b])
-    hs = F.transform(
-        shingles(text_col, ngram, max_tokens),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long"),
+    av = "array(" + ", ".join(f"{x}L" for x in a) + ")"
+    bv = "array(" + ", ".join(f"{x}L" for x in b) + ")"
+    hs = (
+        f"transform({_shingles_sql(text_col, ngram, max_tokens)}, "
+        f"s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
     )
-    return F.aggregate(
-        hs,
-        F.array_repeat(F.lit(_MINHASH_P).cast("long"), num_perm),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.sequence(F.lit(1), F.lit(num_perm)),
-            lambda m, k: F.least(
-                m,
-                (F.element_at(av, k.cast("int")) * h
-                 + F.element_at(bv, k.cast("int"))) % F.lit(_MINHASH_P),
-            ),
-        ),
+    return (
+        f"aggregate({hs}, array_repeat({_MINHASH_P}L, {num_perm}), "
+        f"(acc, h) -> zip_with(acc, sequence(1, {num_perm}), (m, k) -> least(m, "
+        f"(element_at({av}, k) * h + element_at({bv}, k)) % {_MINHASH_P})))"
     )
 
 
@@ -314,31 +315,18 @@ def minhash_lsh_candidates(
         bands = lsh_params_for_threshold(verify_threshold, num_perm)
     rows_per_band = num_perm // bands
     blocks = list(block_cols)
-    d = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in blocks],
-        minhash_signature(text_col, num_perm, ngram, max_tokens).alias("sig"),
+    keys = [quote_ident(c) for c in [id_col, *blocks]]
+    band_key = (
+        f"concat_ws(',', transform(slice(sig, b * {rows_per_band} + 1, {rows_per_band}), "
+        f"x -> CAST(x AS STRING)))"
     )
-    banded = d.select(
-        id_col,
-        *blocks,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band_id"),
-                    md5_hash60(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                                lambda x: x.cast("string"),
-                            ),
-                        )
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("band"),
+    banded = df.selectExpr(
+        *keys,
+        f"{_minhash_signature_sql(text_col, num_perm, ngram, max_tokens)} AS sig",
+    ).selectExpr(
+        *keys,
+        f"explode(transform(sequence(0, {bands - 1}), b -> struct(b AS band_id, "
+        f"{_md5_hash60_sql(band_key)} AS band_hash))) AS band",
     ).select(id_col, *blocks, "band.band_id", "band.band_hash")
 
     a = banded.select(*blocks, "band_id", "band_hash", F.col(id_col).alias("id_a"))
@@ -366,23 +354,30 @@ def minhash_lsh_candidates(
     # (measured 3x the signature pass at sf0.1). The semi-join filters
     # the raw rows BEFORE the shingle projection, so the re-shingle
     # pass is O(candidate docs), which LSH keeps a tiny fraction of the
-    # corpus. Emitted pairs and jaccard values are unchanged.
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .union(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
+    # corpus.
+    # Each pair is split into its two ends, ONE join attaches their
+    # shingles and a group per pair brings the two arrays back
+    # together. A join per pair side would put the shingle projection
+    # in the plan twice, and AQE runs the two copies as two stages when
+    # it broadcasts one side and shuffles the other (no exchange twins).
+    # Jaccard is symmetric, so the order of the two arrays is free; a
+    # pair whose end has no verify row drops out, as an inner join
+    # would drop it. Emitted pairs and jaccard values are unchanged.
+    # SHUFFLE_HASH keeps the shingle side out of a broadcast: planned
+    # under a broadcast exchange, the semi-join inside it stayed a
+    # sort-merge join, where AQE otherwise broadcasts the small id set.
+    ends = cand.select("id_a", "id_b", *blocks, F.explode(F.array("id_a", "id_b")).alias(id_col))
     sh = (verify_source if verify_source is not None else df).join(
-        cand_ids, id_col, "left_semi"
-    ).select(F.col(id_col), shingles(text_col, ngram, max_tokens).alias("sh"))
-    cand = cand.join(
-        sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), "id_a"
-    ).join(sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+        ends.select(id_col).distinct(), id_col, "left_semi"
+    ).selectExpr(quote_ident(id_col), f"{_shingles_sql(text_col, ngram, max_tokens)} AS sh")
     return (
-        cand.withColumn("jaccard", F.round(jac, 6))
+        ends.join(sh.hint("shuffle_hash"), id_col)
+        .groupBy("id_a", "id_b", *blocks)
+        .agg(F.collect_list("sh").alias("_sh"))
+        .filter("size(_sh) = 2")
+        .selectExpr("id_a", "id_b", *[quote_ident(c) for c in blocks],
+                    "_sh[0] AS sh_a", "_sh[1] AS sh_b")
+        .withColumn("jaccard", F.expr(_JACCARD_SQL))
         .filter(F.col("jaccard") >= verify_threshold)
         .select("id_a", "id_b", *blocks, "jaccard")
     )
@@ -394,43 +389,23 @@ def simhash64(text_col: str = "text") -> Column:
     approximates token-multiset similarity. md5-derived bits make the
     DuckDB oracle bit-identical. One md5 per token: the digests are
     bound as an array before the lambda that splits them into words."""
-    words = F.transform(
-        F.transform(tokens(text_col), F.md5),
-        lambda m: F.struct(
-            F.conv(F.substring(m, 1, 8), 16, 10).cast("long").alias("w1"),
-            F.conv(F.substring(m, 9, 8), 16, 10).cast("long").alias("w2"),
-        ),
+    words = (
+        f"transform(transform({tokens_sql(quote_ident(text_col))}, x -> md5(x)), "
+        f"m -> struct(CAST(conv(substring(m, 1, 8), 16, 10) AS BIGINT) AS w1, "
+        f"CAST(conv(substring(m, 9, 8), 16, 10) AS BIGINT) AS w2))"
     )
-    votes = F.aggregate(
-        words,
-        F.expr("array_repeat(0L, 64)"),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda b: F.when(
-                    F.when(b < 32, F.getbit(h.getField("w1"), b)).otherwise(
-                        F.getbit(h.getField("w2"), b - 32)
-                    )
-                    == 1,
-                    F.lit(1),
-                ).otherwise(F.lit(-1)),
-            ),
-            lambda x, y: x + y.cast("long"),
-        ),
+    votes = (
+        f"aggregate({words}, array_repeat(0L, 64), (acc, h) -> zip_with(acc, "
+        f"transform(sequence(0, 63), b -> CASE WHEN CASE WHEN b < 32 THEN getbit(h.w1, b) "
+        f"ELSE getbit(h.w2, b - 32) END = 1 THEN 1 ELSE -1 END), (x, y) -> x + CAST(y AS BIGINT)))"
     )
     # two's-complement power-of-two literals (bit 63 is the sign bit)
-    powers = F.array(
-        *[F.lit((1 << b) if b < 63 else -(1 << 63)).cast("long") for b in range(64)]
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            powers,
-            lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
+    powers = "array(" + ", ".join(
+        f"{(1 << b) if b < 63 else -(1 << 63)}L" for b in range(64)
+    ) + ")"
+    return F.expr(
+        f"aggregate(zip_with({votes}, {powers}, (v, p) -> CASE WHEN v > 0 THEN p ELSE 0L END), "
+        f"0L, (acc, x) -> acc | x)"
     )
 
 

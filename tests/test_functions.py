@@ -388,6 +388,104 @@ def test_shingles_match_python_reference(spark):
             assert list(row[f"sh_{n}_{m}"]) == _py_shingles(text, n, m), (text, n, m)
 
 
+_JAVA_WS = "[ \t\n\x0b\f\r]+"  # Java regex \s: ASCII whitespace only
+
+
+def _round6(x):
+    """Spark's round(double, 6): HALF_UP on the double's shortest
+    decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+
+def _py_text_features(text):
+    """Plain-Python with_token_stats, with_quality, with_lang_id and
+    with_fingerprint of one non-NULL text: Spark's trim strips spaces
+    only and its split keeps leading empty tokens, as re.split does."""
+    import hashlib
+    import re
+
+    import regex
+
+    from astrospectro_spark.functions.text import (
+        BPE_TOKEN_RE,
+        EN_STOPWORDS,
+        LANG_MARKERS,
+    )
+
+    # Java's \s is ASCII whitespace; \p{L} and \p{N} are Unicode in both
+    java_bpe = BPE_TOKEN_RE.replace(r"[^\s", r"[^ \t\n\x0b\f\r").replace(
+        r"|\s+", r"|[ \t\n\x0b\f\r]+"
+    )
+    trimmed = text.strip(" ")
+    n_tok = len(re.split(_JAVA_WS, trimmed)) if trimmed else 0
+    padded = f" {text.lower()} "
+
+    def hits(words):
+        return sum(
+            (len(padded) - len(padded.replace(f" {w} ", ""))) / len(f" {w} ") for w in words
+        )
+
+    def ratio(cls):
+        return (len(text) - len(re.sub(cls, "", text))) / float(max(len(text), 1))
+
+    punct, digit = ratio(r"[.,;:!?]"), ratio("[0-9]")
+    sw = hits(EN_STOPWORDS) / n_tok if n_tok > 0 else 0.0
+    score = min(1.0 - min(punct * 4, 0.25) - min(digit * 4, 0.25) + min(sw, 0.25), 1.0)
+    best = max((float(hits(LANG_MARKERS[lang])), lang) for lang in sorted(LANG_MARKERS))
+    norm = re.sub(_JAVA_WS, " ", text.lower()).strip(" ")
+    return {
+        "n_tokens": n_tok,
+        "n_tokens_bpe": len(regex.findall(java_bpe, text)),
+        "n_chars_measured": len(text),
+        "avg_token_len": _round6(len(re.sub(_JAVA_WS, "", trimmed)) / n_tok) if n_tok else None,
+        "punct_ratio": _round6(punct),
+        "digit_ratio": _round6(digit),
+        "upper_ratio": _round6(ratio("[A-Z]")),
+        "stopword_ratio": _round6(sw),
+        "quality_score": _round6(score),
+        "pred_lang": best[1],
+        "lang_score": _round6(best[0]),
+        "fingerprint": hashlib.md5(norm.encode()).hexdigest(),
+    }
+
+
+@pytest.mark.parametrize("text_col", ["body text", "doc.`text`"])
+def test_text_builders_quote_and_escape(spark, text_col):
+    """The SQL-text builders quote the column name and escape their
+    literals: on a column whose name needs backticks, texts with
+    quotes, backslashes, a literal \\s, tabs, newlines, non-ASCII and
+    the zh markers give exactly the plain-Python values."""
+    from astrospectro_spark.functions.text import (
+        with_fingerprint,
+        with_lang_id,
+        with_quality,
+        with_token_stats,
+    )
+
+    texts = [
+        "It's a \"quoted\" text, isn't it? The end.",
+        "back\\slash \\s and \\\\s: a literal \\s+ of the regex",
+        "tab\tseparated\tthe\tand\tof columns",
+        "new\nline and\r\nthe CRLF ending\n",
+        "naïve Café résumé: the ÀÉÎ of 123, 4.5%!",
+        "的 是 了 在 中文 的 文本",
+        "le la et les; der die und das; el los que y",
+        "\ta\tb ",
+        "",
+        "   ",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", text_col])
+    out = with_fingerprint(
+        with_lang_id(with_quality(with_token_stats(df, text_col), text_col), text_col), text_col
+    )
+    for row in out.orderBy("doc_id").collect():
+        want = _py_text_features(texts[row["doc_id"]])
+        got = {k: row[k] for k in want}
+        assert got == want, (texts[row["doc_id"]], got, want)
+
+
 def test_bpe_token_count_engine_parity(spark):
     """The BPE-ish regex counts the identical segments in Spark (Java
     regex) and DuckDB (RE2) — the pattern deliberately avoids

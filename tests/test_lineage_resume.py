@@ -185,3 +185,12 @@ def test_lineage_holds_one_file_per_bucket(spark, transcripts_sdf):
         r.run(transcripts_sdf)
         files = [f for f in os.listdir(r.lineage_dir) if f.endswith(".parquet")]
         assert len(files) == len(r.committed_buckets()) == 3
+
+
+def test_fresh_dir_ledger_check_runs_no_spark_job(spark, tmp_path):
+    """On a new output dir there is no ledger to read: committed_buckets
+    answers from the filesystem without starting a Spark job."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    assert FeatureRun(spark, str(tmp_path / "fresh"), n_buckets=2).committed_buckets() == set()
+    assert set(tracker.getJobIdsForGroup()) == before

@@ -185,6 +185,55 @@ def test_shingle_tokenizer_evaluated_once(spark, documents_sdf):
         assert plan.count("regexp_replace(lower(text") == 1, plan
 
 
+def test_verify_shingles_projected_once(spark, documents_sdf):
+    """LSH verification shingles each candidate document once: one
+    join attaches the shingles to both ends of every pair. Joining
+    them to each side put a second copy of the shingle projection in
+    the plan, and AQE ran the two copies as two stages. Shingles not
+    folded into a signature are the verify projection; curate too has
+    exactly one."""
+    from astrospectro_spark.functions.dedup import minhash_lsh_candidates
+    from astrospectro_spark.jobs.curate_job import curate
+
+    verify_shingles = re.compile(
+        r"(?<!aggregate\(transform\()element_at\(transform\(array\((slice\()?split\(trim\("
+    )
+    for df in (minhash_lsh_candidates(documents_sdf), curate(documents_sdf)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(verify_shingles.findall(plan)) == 1, plan
+
+
+def test_curate_build_py4j_budget(spark, documents_sdf):
+    """Building the curate plan is SQL text, one parse per column: at
+    most 1,500 Py4J commands for the curate_dedup benchmark's arguments.
+    Column-API builders sent one command per operator and literal,
+    5,200 and more. Python GC is paused and object-release commands are
+    not counted, so the count does not depend on when earlier objects
+    die."""
+    import gc
+
+    from astrospectro_spark.jobs.curate_job import curate
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        curate(documents_sdf, near_dup_threshold=0.5, langs=["en", "fr", "de", "es"], min_tokens=20)
+    finally:
+        del client.send_command
+        gc.enable()
+    n = sum(1 for c in sent if not c.startswith("m\n"))
+    assert n <= 1500, n
+
+
 def test_per_entity_joins_not_hint_broadcast(spark):
     """Joins whose build side is one row PER ENTITY (medians, per-entity
     fit coefficients, sigma-clip bounds) must NOT carry a forced

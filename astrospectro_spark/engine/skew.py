@@ -55,6 +55,7 @@ from astrospectro_spark.engine.windows import (
     SESSION_GAP_S,
     _ts_us_sql,
     apply_layers,
+    context_margin,
     derive,
     featurize_expr,
     layer_kinds,
@@ -244,11 +245,7 @@ def _featurize_hot(
     """Steps 2-5 on the projected hot rows: the staged columns of
     ``layers`` (partitioned by conv_id and ``_tgt``), made global."""
     kinds = layer_kinds(layers)
-    # context reach: the longest bounded lookback of any staged column,
-    # in rows (at least one: a chunk's first gap reads its predecessor)
-    # and in time
-    k_rows = max(1, *(k.rows for k in kinds.values()))
-    margin_us = max(k.secs for k in kinds.values()) * 1_000_000
+    k_rows, margin_us = context_margin(kinds)
 
     # ---- 2. range salting: ts-quantile boundaries per hot conv. The
     # hot slice has three consumers (the rows with their time-margin

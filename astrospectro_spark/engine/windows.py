@@ -14,12 +14,12 @@ sort key). Catalyst inserts one Sort per family switch, so the 175-
 column wide plan runs 3 sorts instead of 16 — at 10^12 rows each
 avoided Sort is a full pass over every partition.
 
-One definition, two plans: :func:`window_layers` stages every windowed
+One definition, three plans: :func:`window_layers` stages every windowed
 column with a stitch :class:`Kind`, and :func:`derive` computes the rest
 with no windows. :func:`featurize_expr` runs them over ``conv_id``; the
 salted plan (``engine/skew.py``) runs the same layers over ts-range
-chunks of hot conversations and :func:`stitch_chunks` merges the
-chunks with one rule per kind before the same :func:`derive`.
+chunks of hot conversations, the stream over each micro-batch, and the
+stitch (:func:`chunk_carry`, :func:`stitch`) merges chunks per kind.
 
 Leakage contract: every frame ends at the CURRENT ROW
 (``rowsBetween(..., 0)`` / ``rangeBetween(..., 0)``) — no feature may
@@ -999,6 +999,29 @@ def derive(df: DataFrame, wide: bool, enum_shuffle: bool = False) -> DataFrame:
     return df.withColumns(wide_local_exprs(enum_shuffle))
 
 
+def context_margin(kinds: dict[str, Kind]) -> tuple[int, int]:
+    """The history a chunk needs for its bounded columns: the longest
+    lookback in rows (at least one: a chunk's first gap reads its
+    predecessor) and in microseconds."""
+    k_rows = max(1, *(k.rows for k in kinds.values()))
+    return k_rows, max(k.secs for k in kinds.values()) * 1_000_000
+
+
+def _carried(kinds: dict[str, Kind]) -> dict[str, Kind]:
+    return {c: k for c, k in kinds.items() if k.rule != "local"}
+
+
+def last_row(kinds: dict[str, Kind], cond: str) -> Column:
+    """Aggregate: the columns a stitch carries at the last row, in
+    (ts, turn_idx) order, of the rows where SQL ``cond`` holds."""
+    fields = ", ".join(["ts", "turn_idx", *(f"`{c}`" for c in _carried(kinds))])
+    return F.expr(f"max(if({cond}, struct({fields}), null))")
+
+
+def _x0(c: str) -> str:
+    return f"coalesce(_x.`{c}`, 0)"
+
+
 def stitch_chunks(u: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
     """Make the staged columns of a chunked window pass global, one rule
     per :class:`Kind` — the merge of DS2-style partial states.
@@ -1006,49 +1029,42 @@ def stitch_chunks(u: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
     ``u`` holds :func:`window_layers` partitioned by ``(conv_id, _tgt)``:
     each chunk's real rows (``_ctx == 0``) preceded by context rows
     (``_ctx == 1``) that form a contiguous suffix of the history before
-    the chunk. Bounded columns are exact as computed. For the rest, a
-    per-chunk summary takes each column's local value at the last
-    context row (``x``, absent in the first chunk) and at the last real
-    row (``e``); exclusive prefix windows over the chunks turn those
-    into the global value carried into the chunk (``c``):
+    the chunk, so bounded columns are exact as computed. The rest are
+    made global from their local values at the chunk's last context row
+    (``_x``) and last real row (``_e``) by :func:`chunk_carry`, then
+    :func:`stitch`. Returns the real rows only."""
+    summ = u.groupBy("conv_id", "_tgt").agg(
+        last_row(kinds, "_ctx = 1").alias("_x"), last_row(kinds, "_ctx = 0").alias("_e")
+    )
+    summ = chunk_carry(summ, kinds)
+    return stitch(u.filter("_ctx = 0").join(F.broadcast(summ), ["conv_id", "_tgt"]), kinds)
 
-    - sum: ``local − x + c``, with ``c`` the running total of ``e − x``;
-    - max/min: ``combine(c, local)`` (context rows are history, so
-      counting them twice is harmless);
-    - first: ``c``, or the local value in the first chunk;
-    - last: the local value, or ``c`` where it is NULL.
 
-    Session-scoped columns take the same rule on the rows before the
-    chunk's first real session boundary ("open" rows) and keep their
-    local value elsewhere; their carry is the value at the previous
-    chunk's end: the end value of the last chunk holding a boundary,
-    combined with the real parts of the chunks after it. Returns the
-    real rows only."""
-    carried = {c: k for c, k in kinds.items() if k.rule != "local"}
-    # the summary and the stitch are SQL text: one parse per expression
-    # instead of a Py4J call per operator keeps the build cheap
-    fields = ", ".join(["ts", "turn_idx", *(f"`{c}`" for c in carried)])
+def chunk_carry(summ: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
+    """The summary step of a stitch: exclusive prefix windows over the
+    chunks' ``(conv_id, _tgt, _x, _e)`` rows give the global value at
+    the previous chunk's end (``_c_<column>``). A chunk row with global
+    ``_e`` and no ``_x`` (a stream's committed state) serves as the
+    first chunk. SQL text: one parse per expression, not a Py4J call
+    per operator."""
     frame = "over (partition by conv_id order by _tgt rows between unbounded preceding and {})"
     prev, upto = frame.format("1 preceding"), frame.format("current row")
-
-    def x0(c: str) -> str:
-        return f"coalesce(_x.`{c}`, 0)"
 
     def e(c: str) -> str:
         return f"_e.`{c}`"
 
-    has_b = f"({e(SESSION_COUNTER)} - {x0(SESSION_COUNTER)} > 0)"
+    has_b = f"({e(SESSION_COUNTER)} - {_x0(SESSION_COUNTER)} > 0)"
     # chunks holding a session boundary, up to and including this one
     n_b = f"sum(cast({has_b} as int)) {upto}"
 
     def carry(c: str, k: Kind) -> str:
         if k.rule == "sum":
-            run = f"coalesce(sum({e(c)} - {x0(c)}) {prev}, 0)"
+            run = f"coalesce(sum({e(c)} - {_x0(c)}) {prev}, 0)"
             if not k.session:
                 return run
             # the value at the end of the last boundary chunk B plus the
             # real parts of the chunks after it: x(B) - run(B) + run
-            return f"{run} + coalesce(last(if({has_b}, {x0(c)} - {run}, null), true) {prev}, 0)"
+            return f"{run} + coalesce(last(if({has_b}, {_x0(c)} - {run}, null), true) {prev}, 0)"
         if k.session:
             # struct-extreme over the earlier chunks with the highest
             # n_b: the last boundary chunk and the chunks after it
@@ -1056,23 +1072,32 @@ def stitch_chunks(u: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
             return f"({k.rule}(named_struct('b', {b}, 'v', {e(c)})) {prev}).v"
         return f"{k.rule}({e(c)}{', true' if k.rule == 'last' else ''}) {prev}"
 
-    summ = (
-        u.groupBy("conv_id", "_tgt")
-        .agg(
-            F.expr(f"max(if(_ctx = 1, struct({fields}), null))").alias("_x"),
-            F.expr(f"max(if(_ctx = 0, struct({fields}), null))").alias("_e"),
-        )
-        .selectExpr(
-            "conv_id", "_tgt", "_x", *(f"{carry(c, k)} as `_c_{c}`" for c, k in carried.items())
-        )
-    )
-    types = dict(u.dtypes)
-    is_open = f"{SESSION_COUNTER} = {x0(SESSION_COUNTER)}"
+    carry_cols = [f"{carry(c, k)} as `_c_{c}`" for c, k in _carried(kinds).items()]
+    return summ.selectExpr("conv_id", "_tgt", "_x", *carry_cols)
+
+
+def stitch(rows: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
+    """The apply step of a stitch: real rows that carry their chunk's
+    ``_x`` and ``_c_<column>`` (:func:`chunk_carry`) get every carried
+    staged column made global, one rule per kind:
+
+    - sum: ``local − x + c``;
+    - max/min: ``combine(c, local)`` (context rows are history, so
+      counting them twice is harmless);
+    - first: ``c``, or the local value in the first chunk;
+    - last: the local value, or ``c`` where it is NULL.
+
+    Session-scoped columns take the same rule on the rows before the
+    chunk's first real session boundary ("open" rows) and keep their
+    local value elsewhere. The summary columns are dropped."""
+    carried = _carried(kinds)
+    types = dict(rows.dtypes)
+    is_open = f"{SESSION_COUNTER} = {_x0(SESSION_COUNTER)}"
 
     def rule(c: str, k: Kind) -> str:
         v, cv = f"`{c}`", f"`_c_{c}`"
         g = {
-            "sum": f"{v} - {x0(c)} + {cv}",
+            "sum": f"{v} - {_x0(c)} + {cv}",
             "max": f"greatest({v}, {cv})",
             "min": f"least({v}, {cv})",
             "first": f"coalesce({cv}, {v})",
@@ -1080,8 +1105,7 @@ def stitch_chunks(u: DataFrame, kinds: dict[str, Kind]) -> DataFrame:
         }[k.rule]
         return f"cast({f'if({is_open}, {g}, {v})' if k.session else g} as {types[c]})"
 
-    out = u.filter("_ctx = 0").join(F.broadcast(summ), ["conv_id", "_tgt"])
-    out = out.withColumns({c: F.expr(rule(c, k)) for c, k in carried.items()})
+    out = rows.withColumns({c: F.expr(rule(c, k)) for c, k in carried.items()})
     return out.drop("_x", "_ctx", *(f"_c_{c}" for c in carried))
 
 

@@ -170,37 +170,24 @@ def ngram_jaccard_pairs(
     t=0.2). Oracle/exact runs pin ``max_block_rows=None`` explicitly
     (all-pairs everywhere; the driver-contract configuration) —
     ``num_perm``/``bands`` are then unused."""
-    d = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in bucket_cols],
-        shingles(text_col, n).alias("sh"),
-    )
+    blocks = list(bucket_cols)
 
-    def exact_pairs(dd: DataFrame) -> DataFrame:
-        a = dd.select(
-            *[F.col(c) for c in bucket_cols],
-            F.col(id_col).alias("id_a"),
-            F.col("sh").alias("sh_a"),
-        )
-        b = dd.select(
-            *[F.col(c) for c in bucket_cols],
-            F.col(id_col).alias("id_b"),
-            F.col("sh").alias("sh_b"),
-        )
-        pairs = a.join(b, list(bucket_cols)).filter(F.col("id_a") < F.col("id_b"))
-        return (
-            pairs.withColumn("jaccard", F.expr(_JACCARD_SQL))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", *bucket_cols, "jaccard")
-        )
+    def exact_pairs(docs: DataFrame) -> DataFrame:
+        # pair the ids within each block, then shingle each document once
+        ids = docs.select(*blocks, id_col)
+        pairs = ids.withColumnRenamed(id_col, "id_a").join(
+            ids.withColumnRenamed(id_col, "id_b"), blocks
+        ).filter("id_a < id_b")
+        sh_sql = _shingles_sql(text_col, n, None)
+        return _verify_pairs(pairs, docs, id_col, blocks, sh_sql, threshold)
 
     if max_block_rows is None:
-        return exact_pairs(d)
+        return exact_pairs(df)
 
-    census = d.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_n"))
-    big_keys = census.filter(F.col("_n") > max_block_rows).select(*bucket_cols)
-    small = d.join(F.broadcast(big_keys), list(bucket_cols), "left_anti")
-    big = df.join(F.broadcast(big_keys), list(bucket_cols), "left_semi")
+    census = df.groupBy(*blocks).agg(F.count(F.lit(1)).alias("_n"))
+    big_keys = census.filter(F.col("_n") > max_block_rows).select(*blocks)
+    small = df.join(F.broadcast(big_keys), blocks, "left_anti")
+    big = df.join(F.broadcast(big_keys), blocks, "left_semi")
     approx = minhash_lsh_candidates(
         big,
         text_col=text_col,
@@ -211,7 +198,7 @@ def ngram_jaccard_pairs(
         verify_threshold=threshold,
         block_cols=bucket_cols,
     )
-    return exact_pairs(small).unionByName(approx.select("id_a", "id_b", *bucket_cols, "jaccard"))
+    return exact_pairs(small).unionByName(approx.select("id_a", "id_b", *blocks, "jaccard"))
 
 
 _MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
@@ -347,29 +334,35 @@ def minhash_lsh_candidates(
         .select("id_a", "id_b", *blocks)
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Verify-stage shingles are computed ONLY for docs that appear in a
-    # candidate pair: shingling is the dominant CPU of this operator
-    # (one md5 per shingle per doc), and attaching `d.sh` directly to
-    # both pair sides re-ran it over the WHOLE corpus twice more
-    # (measured 3x the signature pass at sf0.1). The semi-join filters
-    # the raw rows BEFORE the shingle projection, so the re-shingle
-    # pass is O(candidate docs), which LSH keeps a tiny fraction of the
-    # corpus.
-    # Each pair is split into its two ends, ONE join attaches their
-    # shingles and a group per pair brings the two arrays back
-    # together. A join per pair side would put the shingle projection
-    # in the plan twice, and AQE runs the two copies as two stages when
-    # it broadcasts one side and shuffles the other (no exchange twins).
-    # Jaccard is symmetric, so the order of the two arrays is free; a
-    # pair whose end has no verify row drops out, as an inner join
-    # would drop it. Emitted pairs and jaccard values are unchanged.
-    # SHUFFLE_HASH keeps the shingle side out of a broadcast: planned
-    # under a broadcast exchange, the semi-join inside it stayed a
-    # sort-merge join, where AQE otherwise broadcasts the small id set.
-    ends = cand.select("id_a", "id_b", *blocks, F.explode(F.array("id_a", "id_b")).alias(id_col))
-    sh = (verify_source if verify_source is not None else df).join(
-        ends.select(id_col).distinct(), id_col, "left_semi"
-    ).selectExpr(quote_ident(id_col), f"{_shingles_sql(text_col, ngram, max_tokens)} AS sh")
+    docs = verify_source if verify_source is not None else df
+    sh_sql = _shingles_sql(text_col, ngram, max_tokens)
+    return _verify_pairs(cand, docs, id_col, blocks, sh_sql, verify_threshold)
+
+
+def _verify_pairs(pairs, docs, id_col, blocks, sh_sql, threshold) -> DataFrame:
+    """The pairs ``(id_a, id_b, *blocks)`` whose shingle sets (SQL
+    ``sh_sql`` over ``docs``) have a Jaccard at or above ``threshold``,
+    with their ``jaccard``.
+
+    Shingles are computed ONLY for docs that appear in a pair:
+    shingling is the dominant CPU of verification (one md5 per shingle
+    per doc), and attaching them to the whole corpus re-ran it over
+    every document (measured 3x the LSH signature pass at sf0.1). The
+    semi-join filters the raw rows BEFORE the shingle projection.
+    Each pair is split into its two ends, ONE join attaches their
+    shingles and a group per pair brings the two arrays back together.
+    A join per pair side would put the shingle projection in the plan
+    twice, and AQE runs the two copies as two stages when it broadcasts
+    one side and shuffles the other (no exchange twins). Jaccard is
+    symmetric, so the order of the two arrays is free; a pair whose end
+    has no row in ``docs`` drops out, as an inner join would drop it.
+    SHUFFLE_HASH keeps the shingle side out of a broadcast: planned
+    under a broadcast exchange, the semi-join inside it stayed a
+    sort-merge join, where AQE otherwise broadcasts the small id set."""
+    ends = pairs.select("id_a", "id_b", *blocks, F.explode(F.array("id_a", "id_b")).alias(id_col))
+    sh = docs.join(ends.select(id_col).distinct(), id_col, "left_semi").selectExpr(
+        quote_ident(id_col), f"{sh_sql} AS sh"
+    )
     return (
         ends.join(sh.hint("shuffle_hash"), id_col)
         .groupBy("id_a", "id_b", *blocks)
@@ -378,7 +371,7 @@ def minhash_lsh_candidates(
         .selectExpr("id_a", "id_b", *[quote_ident(c) for c in blocks],
                     "_sh[0] AS sh_a", "_sh[1] AS sh_b")
         .withColumn("jaccard", F.expr(_JACCARD_SQL))
-        .filter(F.col("jaccard") >= verify_threshold)
+        .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", *blocks, "jaccard")
     )
 

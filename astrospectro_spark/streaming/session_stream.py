@@ -7,20 +7,36 @@ for a continuously-arriving transcript feed:
 - :func:`stream_session_stats` — per-(conv, session) aggregates with
   ``session_window`` (gap-based, the native analogue of our batch
   ts-gap sessionization) + watermark for late data;
-- :func:`stream_featurize` — per-turn features over micro-batches via
-  ``foreachBatch`` running the BATCH engine on each increment. Windows
-  that need full history (cumulative counts) are out of scope for pure
-  streaming; foreachBatch + the lineage table is the honest production
-  pattern (Trigger.AvailableNow ≙ the reference's run-to-completion
-  sessions).
+- :func:`stream_featurize` — the batch engine's per-turn features,
+  full history included, over micro-batches via ``foreachBatch``: the
+  salted plan's stitch makes each batch global from a per-conversation
+  ``_state/`` sidecar (Trigger.AvailableNow ≙ the reference's
+  run-to-completion sessions);
+- :func:`stateful_asof_enrich` — streaming as-of enrichment.
 
 Tested with file sources + AvailableNow in tests/test_streaming_events.py.
 """
 
 from __future__ import annotations
 
+import glob
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from astrospectro_spark.engine.windows import (
+    apply_layers,
+    chunk_carry,
+    context_margin,
+    derive,
+    last_row,
+    layer_kinds,
+    output_cols,
+    project_inputs,
+    stitch,
+    window_layers,
+)
 
 
 def stream_session_stats(
@@ -54,116 +70,6 @@ def stream_session_stats(
             "session_start",
             "session_end",
         )
-    )
-
-
-STATEFUL_OUT_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, session_id int, "
-    "turn_in_session int, cum_count_assistant int, cum_count_system int, "
-    "cum_count_tool int, cum_count_user int, tool_backfill string, "
-    "lag1_ts_gap_s double"
-)
-_STATE_SCHEMA = (
-    "last_us long, sid int, tis int, n_assistant int, n_system int, "
-    "n_tool int, n_user int, last_tool string"
-)
-
-
-def stateful_featurize(stream_df: DataFrame, gap_s: float = 1800.0):
-    """Custom stateful streaming operator via ``applyInPandasWithState``
-    (the north_star's named API): per-conversation running state
-    (last ts, session counter, per-role cumulative counts, tool
-    backfill) carried across micro-batches, emitting per-turn
-    incremental features.
-
-    Ordering: ``applyInPandasWithState`` delivers a group's micro-batch
-    rows as an ITERATOR of Arrow chunks in arbitrary order, so the
-    kernel materializes the whole per-group increment
-    (``pd.concat(list(pdf_iter))``) and sorts ONCE by (ts, turn_idx)
-    before applying state transitions — sorting each chunk separately
-    would corrupt session ids whenever one conversation's batch spans
-    multiple chunks. Memory is bounded by the per-conversation
-    INCREMENT (one micro-batch), never the history. Cross-batch order
-    is the source's contract (watermark + sort upstream); with it, the
-    emitted cumulative features equal the batch engine's — asserted
-    stream==batch in tests, including a forced multi-chunk group
-    (arrow maxRecordsPerBatch < group size). State is O(1) per
-    conversation (8 scalars), so 10^9 live conversations hold ~tens of
-    GB of state cluster-wide, partitioned by the same conv_id hash as
-    every other operator.
-
-    This is the stateful-kernel tier (per-row Python over state
-    transitions); the batch path stays expression-only — kernel cost is
-    bounded by the increment size, never the history.
-    """
-    import pandas as pd  # noqa: F401
-
-    def fn(key, pdf_iter, state):
-        import pandas as _pd
-
-        (conv_id,) = key
-        if state.exists:
-            last_us, sid, tis, na, ns, nt, nu, last_tool = state.get
-        else:
-            last_us, sid, tis, na, ns, nt, nu, last_tool = (-1, 0, 0, 0, 0, 0, 0, None)
-        out = []
-        # materialize the group's whole increment: chunks arrive in
-        # arbitrary order, so a per-chunk sort is NOT a total order
-        chunks = [p for p in pdf_iter if len(p)]
-        if chunks:
-            g = _pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "turn_idx"], kind="mergesort"
-            )
-            us_arr = g["ts"].to_numpy("datetime64[us]").astype("int64")
-            for i, r in enumerate(g.itertuples(index=False)):
-                us = int(us_arr[i])
-                gap = None if last_us < 0 else (us - last_us) / 1e6
-                if gap is not None and gap > gap_s:
-                    sid += 1
-                    tis = 1
-                else:
-                    tis += 1
-                role = r.role
-                na += role == "assistant"
-                ns += role == "system"
-                nt += role == "tool"
-                nu += role == "user"
-                if r.tool is not None and not _pd.isna(r.tool):
-                    last_tool = r.tool
-                out.append(
-                    {
-                        "conv_id": conv_id,
-                        "turn_idx": r.turn_idx,
-                        "ts": r.ts,
-                        "session_id": sid,
-                        "turn_in_session": tis,
-                        "cum_count_assistant": na,
-                        "cum_count_system": ns,
-                        "cum_count_tool": nt,
-                        "cum_count_user": nu,
-                        "tool_backfill": last_tool,
-                        "lag1_ts_gap_s": gap,
-                    }
-                )
-                last_us = us
-        state.update((last_us, sid, tis, na, ns, nt, nu, last_tool))
-        yield _pd.DataFrame(
-            out,
-            columns=[
-                "conv_id", "turn_idx", "ts", "session_id", "turn_in_session",
-                "cum_count_assistant", "cum_count_system", "cum_count_tool",
-                "cum_count_user", "tool_backfill", "lag1_ts_gap_s",
-            ],
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return stream_df.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=STATEFUL_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -213,9 +119,10 @@ def stateful_asof_enrich(stream_df: DataFrame, retention: str | None = None):
     Ordering: within a micro-batch the group's rows are materialized
     and sorted by (ts, turns-before-anchors, turn_idx), so a turn at
     exactly anchor_ts is visible to that anchor (boundary-inclusive
-    law). Cross-batch order is the source's contract, as in
-    :func:`stateful_featurize` — including that a same-ts turn/anchor
-    pair must not be split turn-last across micro-batches.
+    law). Cross-batch order is the source's contract and is not checked
+    here (:func:`stream_featurize` fails on an out-of-order turn) —
+    including that a same-ts turn/anchor pair must not be split
+    turn-last across micro-batches.
 
     Emits anchor rows only (append mode); turns only advance state.
     """
@@ -320,22 +227,100 @@ def stateful_asof_enrich(stream_df: DataFrame, retention: str | None = None):
 def stream_featurize(
     stream_df: DataFrame, out_path: str, checkpoint: str, wide: bool = False
 ):
-    """Micro-batch featurization: each increment runs the batch engine
-    and appends to the features table — exactly-once via checkpoint +
-    idempotent paths. ``wide=True`` emits the full 175-column locked
-    wide tier per micro-batch (same layered single-exchange plan as the
-    batch path)."""
-    from astrospectro_spark.engine.windows import featurize_expr
+    """Micro-batch featurization equal to the batch engine: every output
+    column of :func:`engine.windows.featurize_expr` (18 narrow, 181 with
+    ``wide=True``), valued as by one batch run over all rows so far.
+
+    A micro-batch is one more chunk of each of its conversations,
+    stitched as the salted plan stitches chunks, with its carry from the
+    ``_state/`` sidecar, a row per conversation: ``_last``, the global
+    staged values of its last committed row, is the chunk before the
+    batch for :func:`engine.windows.chunk_carry`; ``_tail``, the rows the
+    bounded windows still read (:func:`engine.windows.context_margin`
+    back from the last row), joins the batch as context rows. State is
+    bounded by that margin, not by the history.
+
+    Exactly-once: batch ``n`` overwrites ``<out_path>/batch_id=<n>/`` and
+    ``<out_path>/_state/batch_id=<n>/`` from the newest state below
+    ``n``, so a batch Spark replays after a crash rewrites the same
+    rows; older states are then deleted. ``out_path`` is a local
+    directory that belongs to one checkpoint. A turn at or before its
+    conversation's last committed ts fails the query, naming it: the
+    range frames count same-ts peers, so even an equal ts would change
+    a committed row."""
+    layers = window_layers(["conv_id"], wide=wide)
+    kinds = layer_kinds(layers)
+    k_rows, margin_us = context_margin(kinds)
+    # a tail keeps what the window layers read (the text-free
+    # projection), (ts, turn_idx) first so that sort_array orders it
+    read = project_inputs(stream_df, include_text=False, enum_shuffle=False, wide=wide)[0].columns
+    rest = [c for c in read if c not in ("conv_id", "ts", "turn_idx")]
+    tail = ", ".join(["ts", "turn_idx", *rest])
+    state_dir = f"{out_path}/_state"
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        featurize_expr(batch_df, wide=wide).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(out_path)
+        ids = [int(p.rsplit("=", 1)[1]) for p in glob.glob(f"{state_dir}/batch_id=*")]
+        prev = max((i for i in ids if i < batch_id), default=None)
+        rows, key_cols = project_inputs(batch_df, include_text=True, enum_shuffle=False, wide=wide)
+        u = rows.withColumn("_ctx", F.lit(0))
+        if prev is not None:
+            state = batch_df.sparkSession.read.parquet(f"{state_dir}/batch_id={prev}")
+            prior = _join_conv(state, u.select("conv_id"), "left_semi")
+            ctx = prior.selectExpr("conv_id", "inline(_tail)", "1 as _ctx")
+            u = u.unionByName(ctx, allowMissingColumns=True)
+        staged = apply_layers(u, layers).persist()
+        try:
+            summ = chunks = staged.groupBy("conv_id").agg(
+                last_row(kinds, "_ctx = 1").alias("_x"),
+                last_row(kinds, "_ctx = 0").alias("_e"),
+                F.expr("min(if(_ctx = 0, ts, null))").alias("_first_ts"),
+                F.lit(1).alias("_tgt"),
+            )
+            if prev is not None:
+                # _x is the last tail row: the last committed row
+                late = summ.filter("_first_ts <= _x.ts").limit(1).collect()
+                if late:
+                    raise ValueError(
+                        f"stream_featurize: a turn of conv_id {late[0].conv_id!r} in batch "
+                        f"{batch_id} is at or before its last committed ts"
+                    )
+                first = prior.selectExpr("conv_id", "_last as _e", "0 as _tgt")
+                chunks = summ.unionByName(first, allowMissingColumns=True)
+            carry = chunk_carry(chunks, kinds).filter("_tgt = 1").drop("_tgt")
+            real = stitch(_join_conv(staged.filter("_ctx = 0"), carry), kinds)
+            out = derive(real, wide).select(*output_cols(key_cols, wide))
+            out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+            # new state: the last stitched row, and the tail by the local
+            # row number and epoch-µs that window_layers stages
+            ends = summ.selectExpr("conv_id", "_e._rn as _n", "unix_micros(_e.ts) as _us")
+            new_tail = (
+                _join_conv(staged, ends)
+                .filter(f"_rn > _n - {k_rows} or _usq >= _us - {margin_us}")
+                .groupBy("conv_id")
+                .agg(F.expr(f"sort_array(collect_list(struct({tail})))").alias("_tail"))
+            )
+            last = real.groupBy("conv_id").agg(last_row(kinds, "true").alias("_last"))
+            new = _join_conv(new_tail, last)
+            if prev is not None:
+                new = new.unionByName(_join_conv(state, new.select("conv_id"), "left_anti"))
+            new.write.mode("overwrite").parquet(f"{state_dir}/batch_id={batch_id}")
+        finally:
+            staged.unpersist()
+        for i in ids:  # a replay of this batch reads `prev`
+            if prev is not None and i < prev:
+                shutil.rmtree(f"{state_dir}/batch_id={i}", ignore_errors=True)
 
     return (
         stream_df.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
     )
+
+
+def _join_conv(left: DataFrame, right: DataFrame, how: str = "inner") -> DataFrame:
+    """Join on conv_id, null-safe: the batch engine keeps rows with a
+    NULL conv_id as one conversation, and so does the stream."""
+    r = right.withColumnRenamed("conv_id", "_k")
+    return left.join(r, left["conv_id"].eqNullSafe(r["_k"]), how).drop("_k")

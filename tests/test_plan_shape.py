@@ -125,18 +125,28 @@ def test_salted_window_pass_budget(spark, transcripts_sdf, kw, windows, sorts):
 
 
 def test_skew_defines_no_feature():
-    """engine/skew.py stages rows only: every feature is defined once,
-    in engine/windows.py, so no feature name may appear in skew.py as a
-    string literal (that would be a second copy of its algebra)."""
+    """engine/skew.py and the stream featurizer stage rows and carry
+    state only: every feature is defined once, in engine/windows.py, so
+    no feature name may appear in skew.py, in stream_featurize or in its
+    state helpers as a string literal (that would be a second copy of
+    its algebra)."""
     import ast
+    import inspect
+    import textwrap
 
     import astrospectro_spark.engine.skew as skew
     from astrospectro_spark.engine.windows import FEATURE_COLS, WIDE_FEATURE_COLS
+    from astrospectro_spark.streaming import session_stream as st
 
-    with open(skew.__file__) as f:
-        tree = ast.parse(f.read())
+    sources = [inspect.getsource(skew)] + [
+        textwrap.dedent(inspect.getsource(f))
+        for f in (st.stream_featurize, st._join_conv)
+    ]
     literals = {
-        n.value for n in ast.walk(tree) if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        n.value
+        for src in sources
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
     }
     forked = sorted(literals & set(FEATURE_COLS + WIDE_FEATURE_COLS))
     assert not forked, forked
@@ -190,15 +200,20 @@ def test_verify_shingles_projected_once(spark, documents_sdf):
     join attaches the shingles to both ends of every pair. Joining
     them to each side put a second copy of the shingle projection in
     the plan, and AQE ran the two copies as two stages. Shingles not
-    folded into a signature are the verify projection; curate too has
-    exactly one."""
+    folded into a signature are the verify projection; curate and the
+    exact n-gram pairs of the ngram_jaccard query have exactly one."""
     from astrospectro_spark.functions.dedup import minhash_lsh_candidates
     from astrospectro_spark.jobs.curate_job import curate
+    from astrospectro_spark.queries import q_ngram_jaccard
 
     verify_shingles = re.compile(
         r"(?<!aggregate\(transform\()element_at\(transform\(array\((slice\()?split\(trim\("
     )
-    for df in (minhash_lsh_candidates(documents_sdf), curate(documents_sdf)):
+    for df in (
+        minhash_lsh_candidates(documents_sdf),
+        curate(documents_sdf),
+        q_ngram_jaccard(spark, "/root/testdata/sf0.001"),
+    ):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert len(verify_shingles.findall(plan)) == 1, plan
 

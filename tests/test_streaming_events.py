@@ -44,185 +44,126 @@ def test_stream_session_stats_matches_batch(spark, transcripts_pdf, tmp_path):
     assert got["n_turns"].sum() == len(transcripts_pdf)
 
 
-def test_stream_featurize_foreachbatch(spark, transcripts_pdf, tmp_path):
+_TURNS_SCHEMA = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+
+def _write_batches(spark, src, parts) -> str:
+    """One parquet file per part with increasing mtimes, so a file source
+    with maxFilesPerTrigger=1 delivers the parts as micro-batches in
+    order. Returns the glob of the files."""
+    import time
+
+    for i, part in enumerate(parts):
+        spark.createDataFrame(part).coalesce(1).write.parquet(str(src / f"part-{i:03d}.parquet"))
+        time.sleep(1.1)  # distinct mtimes → deterministic batch order
+    return str(src / "part-*.parquet")
+
+
+@pytest.fixture(scope="module")
+def stream_split(spark, transcripts_pdf, tmp_path_factory):
+    """The transcripts sorted by (ts, turn_idx) and cut into 3 files,
+    written once per module. Returns the files' glob and every row's
+    micro-batch."""
+    pdf = transcripts_pdf.sort_values(["ts", "turn_idx"], kind="mergesort").reset_index(drop=True)
+    cuts = [0, len(pdf) // 3, 2 * len(pdf) // 3, len(pdf)]
+    parts = [pdf.iloc[cuts[i] : cuts[i + 1]] for i in range(3)]
+    pattern = _write_batches(spark, tmp_path_factory.mktemp("stream_split"), parts)
+    batch = pd.concat([p[["conv_id", "turn_idx"]].assign(batch=i) for i, p in enumerate(parts)])
+    return pattern, batch
+
+
+def _run_stream(spark, pattern, tmp_path, wide=False) -> str:
     from astrospectro_spark.streaming import stream_featurize
 
-    src = str(tmp_path / "fsrc")
-    out = str(tmp_path / "fout")
-    ckpt = str(tmp_path / "fckpt")
-    spark.createDataFrame(transcripts_pdf).write.parquet(src)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_featurize(stream, out, ckpt).start()
-    q.awaitTermination(120)
-    feats = spark.read.parquet(out)
-    assert feats.count() == len(transcripts_pdf)
-    assert "session_id" in feats.columns and "batch_id" in feats.columns
-
-
-def test_stream_featurize_wide_matches_batch(spark, transcripts_pdf, tmp_path):
-    """wide=True micro-batch featurization: a single AvailableNow batch
-    must reproduce the batch engine's full 175-column wide tier
-    bit-for-bit (one increment == whole input, so every running/session
-    feature is comparable)."""
-    from astrospectro_spark.engine.windows import (
-        FEATURE_COLS,
-        KEY_COLS,
-        WIDE_FEATURE_COLS,
-        featurize_expr,
+    out = str(tmp_path / "out")
+    stream = (
+        spark.readStream.schema(_TURNS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(pattern)
     )
-    from astrospectro_spark.streaming import stream_featurize
+    q = stream_featurize(stream, out, str(tmp_path / "ckpt"), wide=wide).start()
+    assert q.awaitTermination(600)
+    return out
+
+
+def _assert_matches_batch(spark, out, pattern, wide) -> pd.DataFrame:
+    """The streamed table equals featurize_expr over the whole input,
+    exactly and NULL-safe, on every output column. Returns the batch
+    engine's rows."""
+    from astrospectro_spark.engine.windows import featurize_expr
 
     from .conftest import assert_frames_match
 
-    src = str(tmp_path / "wsrc")
-    out = str(tmp_path / "wout")
-    ckpt = str(tmp_path / "wckpt")
-    spark.createDataFrame(transcripts_pdf).write.parquet(src)
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = stream_featurize(stream, out, ckpt, wide=True).start()
-    q.awaitTermination(120)
     got = spark.read.parquet(out).drop("batch_id").toPandas()
-    assert sorted(got.columns) == sorted(KEY_COLS + FEATURE_COLS + WIDE_FEATURE_COLS)
-    want = featurize_expr(spark.read.parquet(src), wide=True).toPandas()
-    assert_frames_match(
-        got, want, ["conv_id", "ts", "turn_idx"], rtol=0.0, atol=0.0
+    want = featurize_expr(spark.read.parquet(pattern), wide=wide).toPandas()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(want.columns) == (181 if wide else 18)
+    assert_frames_match(got, want, ["conv_id", "ts", "turn_idx"], rtol=0.0, atol=0.0)
+    return want
+
+
+@pytest.mark.parametrize("wide", [False, True], ids=["narrow", "wide"])
+def test_stream_featurize_matches_batch(spark, stream_split, tmp_path, wide):
+    """Three micro-batches featurized through the stitch carry equal one
+    batch run over the whole input, on all 18 narrow or 181 wide
+    columns. Each micro-batch alone restarts every running feature."""
+    pattern, batch = stream_split
+    out = _run_stream(spark, pattern, tmp_path, wide)
+    assert sorted(r[0] for r in spark.read.parquet(out).select("batch_id").distinct().collect()) == [0, 1, 2]
+    want = _assert_matches_batch(spark, out, pattern, wide)
+
+    # the split exercises every carry: a conversation crosses a batch
+    # edge inside a session that is not its first, and starts new
+    # sessions after it; and some conversation starts with no state
+    w = want.merge(batch, on=["conv_id", "turn_idx"]).sort_values(
+        ["conv_id", "ts", "turn_idx"], kind="mergesort"
     )
+    prev = w.groupby("conv_id")[["batch", "session_id"]].shift()
+    crossing = w[prev["batch"].notna() & (prev["batch"] != w["batch"])]
+    open_cross = crossing[
+        (crossing["session_id"] == prev.loc[crossing.index, "session_id"])
+        & (crossing["session_id"] > 0)
+    ]
+    assert any(
+        (w[(w.conv_id == r.conv_id) & (w.batch == r.batch)].session_id > r.session_id).any()
+        for r in open_cross.itertuples()
+    )
+    assert (w.groupby("conv_id")["batch"].first() > 0).any()
 
 
-def test_stateful_featurize_matches_batch(spark, transcripts_pdf, tmp_path):
-    """applyInPandasWithState running featurizer: cumulative features
-    carried across micro-batches must equal the batch engine. Input is
-    split into 3 ts-ordered files (mtime-ordered so the file source
-    delivers them as sequential micro-batches with maxFilesPerTrigger=1)."""
-    import time
+def test_stream_featurize_replay_is_exactly_once(spark, stream_split, tmp_path):
+    """A batch Spark replays after a crash between its write and its
+    commit rewrites its own rows from the state before it: no duplicate
+    (conv_id, turn_idx), and the table still equals the batch engine."""
+    pattern, _ = stream_split
+    _run_stream(spark, pattern, tmp_path)
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(f.name) for f in commits.iterdir() if f.name.isdigit())
+    for f in (commits / str(last), commits / f".{last}.crc"):
+        f.unlink(missing_ok=True)
+    out = _run_stream(spark, pattern, tmp_path)
+    assert (commits / str(last)).exists()  # the batch ran again
+    feats = spark.read.parquet(out)
+    assert feats.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
+    _assert_matches_batch(spark, out, pattern, wide=False)
 
-    from astrospectro_spark.engine.windows import featurize_expr
-    from astrospectro_spark.streaming import stateful_featurize
 
-    src = tmp_path / "state_src"
+def test_stream_featurize_out_of_order_turn_fails(spark, transcripts_pdf, tmp_path):
+    """A turn at or before its conversation's last committed ts cannot
+    be featurized without rewriting committed rows: the query fails and
+    names the conversation, and the batch writes nothing."""
+    from pyspark.errors import StreamingQueryException
+
+    pdf = transcripts_pdf.sort_values(["ts", "turn_idx"], kind="mergesort").reset_index(drop=True)
+    first, second = pdf.iloc[:300], pdf.iloc[300:600]
+    conv = first["conv_id"].iloc[-1]
+    late = first[first["conv_id"] == conv].iloc[[0]].copy()
+    late["turn_idx"] = late["turn_idx"] + 1_000_000
+    src = tmp_path / "src"
     src.mkdir()
-    pdf = transcripts_pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-    cuts = [0, len(pdf) // 3, 2 * len(pdf) // 3, len(pdf)]
-    for i in range(3):
-        part = pdf.iloc[cuts[i] : cuts[i + 1]]
-        p = str(src / f"part-{i:03d}.parquet")
-        spark.createDataFrame(part).coalesce(1).write.mode("overwrite").parquet(p)
-        time.sleep(1.1)  # distinct mtimes → deterministic batch order
-
-    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "part-*.parquet"))
-    )
-    q = (
-        stateful_featurize(stream)
-        .writeStream.format("memory")
-        .queryName("stateful_feats")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = (
-        spark.sql("select * from stateful_feats")
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    want = (
-        featurize_expr(spark.createDataFrame(transcripts_pdf))
-        .select(
-            "conv_id", "turn_idx", "ts", "session_id", "turn_in_session",
-            "cum_count_assistant", "cum_count_system", "cum_count_tool",
-            "cum_count_user", "tool_backfill", "lag1_ts_gap_s",
-        )
-        .toPandas()
-        .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want)
-    for c in want.columns:
-        a, b = got[c], want[c]
-        if b.dtype.kind == "f":
-            import numpy as np
-
-            assert np.allclose(
-                a.to_numpy(float), b.to_numpy(float), rtol=0, atol=0, equal_nan=True
-            ), c
-        else:
-            av = a.astype(object).where(a.notna(), None).tolist()
-            bv = b.astype(object).where(b.notna(), None).tolist()
-            assert av == bv, c
-
-
-def test_stateful_featurize_multichunk_group(spark, transcripts_pdf, tmp_path):
-    """A conversation whose micro-batch increment spans multiple Arrow
-    chunks must still be processed in one global (ts, turn_idx) order:
-    the kernel concatenates the chunk iterator BEFORE sorting (a
-    per-chunk sort is not a total order). Forced by
-    arrow.maxRecordsPerBatch=7 (<< conversation size) over a shuffled
-    row order, single micro-batch."""
-    import numpy as np
-
-    from astrospectro_spark.engine.windows import featurize_expr
-    from astrospectro_spark.streaming import stateful_featurize
-
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    try:
-        src = str(tmp_path / "mc_src")
-        shuffled = transcripts_pdf.sample(frac=1.0, random_state=7)
-        spark.createDataFrame(shuffled).coalesce(1).write.parquet(src)
-        schema = (
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp"
-        )
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            stateful_featurize(stream)
-            .writeStream.format("memory")
-            .queryName("mc_feats")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        got = (
-            spark.sql("select * from mc_feats")
-            .toPandas()
-            .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        want = (
-            featurize_expr(spark.createDataFrame(transcripts_pdf))
-            .select(
-                "conv_id", "turn_idx", "ts", "session_id", "turn_in_session",
-                "cum_count_assistant", "cum_count_system", "cum_count_tool",
-                "cum_count_user", "tool_backfill", "lag1_ts_gap_s",
-            )
-            .toPandas()
-            .sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort")
-            .reset_index(drop=True)
-        )
-        assert len(got) == len(want) > 0
-        # the fixture must actually exercise multi-chunk groups
-        assert (transcripts_pdf.groupby("conv_id").size() > 7).any()
-        for c in want.columns:
-            a, b = got[c], want[c]
-            if b.dtype.kind == "f":
-                assert np.allclose(
-                    a.to_numpy(float), b.to_numpy(float), rtol=0, atol=0, equal_nan=True
-                ), c
-            else:
-                av = a.astype(object).where(a.notna(), None).tolist()
-                bv = b.astype(object).where(b.notna(), None).tolist()
-                assert av == bv, c
-    finally:
-        spark.conf.set(key, old)
+    pattern = _write_batches(spark, src, [first, pd.concat([second, late])])
+    with pytest.raises(StreamingQueryException, match=f"conv_id '{conv}'"):
+        _run_stream(spark, pattern, tmp_path)
+    assert (tmp_path / "out" / "batch_id=0").exists()
+    assert not (tmp_path / "out" / "batch_id=1").exists()
 
 
 def test_associate_ref_events(spark, transcripts_sdf):

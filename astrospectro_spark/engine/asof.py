@@ -97,20 +97,23 @@ def asof_join(
 
 def _null_when_too_old(out, anchor_ts, tolerance_col, value_cols):
     """Null every asof_* column when the match is older than the
-    tolerance. Evaluated into a temp column FIRST: nulling in a loop
-    while the predicate still reads asof_ts would corrupt later columns
-    whenever 'ts' is not last in value_cols."""
+    tolerance. The predicate is evaluated into a temp column FIRST,
+    from the unnulled asof_ts, and one projection then nulls every
+    asof_* column from it and drops it, whatever the position of 'ts'
+    in value_cols."""
     too_old = (
         F.unix_micros(F.col(anchor_ts).cast("timestamp"))
         - F.unix_micros(F.col("asof_ts").cast("timestamp"))
     ) > F.col(tolerance_col).cast("long") * 1_000_000
-    out = out.withColumn("_too_old", too_old)
-    for c in value_cols:
-        out = out.withColumn(
-            f"asof_{c}",
-            F.when(F.col("_too_old"), F.lit(None)).otherwise(F.col(f"asof_{c}")),
-        )
-    return out.drop("_too_old")
+    nulled = {f"asof_{c}" for c in value_cols}
+    return out.withColumn("_too_old", too_old).select(
+        *[
+            F.when(F.col("_too_old"), F.lit(None)).otherwise(F.col(c)).alias(c)
+            if c in nulled
+            else F.col(c)
+            for c in out.columns
+        ]
+    )
 
 
 def asof_join_grouped(

@@ -26,6 +26,15 @@ jar ships in this sandbox):
   status)`` to the lineage table *after* its output partition lands —
   crash between the two ⇒ the bucket is simply recomputed (output
   overwrite is idempotent);
+- a commit is one pass over its bucket: the output ``(n_rows,
+  checksum)`` is an ``Observation`` on the feature write itself, equal
+  bit for bit to a read-back of the written files, and nothing is read
+  back. The input ``(input_rows, input_checksum)`` of every bucket is
+  taken once, by one grouped aggregation over ``_bucket`` right after
+  staging, and kept in the stage's ``_fingerprint.json``, so a resume
+  reads it from that file. A pre-bucketed input (or a stage whose
+  fingerprint predates the per-bucket sums) gets the same grouped pass
+  over the pending buckets at the start of the run;
 - resume = anti-join the bucket list against committed lineage records
   (the reference's ``new = available − already_used``,
   src/tools/dataset_builder.py:197-205);
@@ -40,8 +49,9 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -70,17 +80,48 @@ def bucketize(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("_bucket", _bucket_col(n_buckets))
 
 
-def _checksum(df: DataFrame) -> tuple[int, int]:
-    row = df.select(
+def _checksum_aggs(cols: list[str]) -> list:
+    """Row count ``n`` and order-insensitive content hash ``h`` of a
+    frame with columns ``cols``; an empty frame sums to ``(0, 0)``."""
+    return [
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
-            F.expr(
-                "bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in df.columns) + "))"
-            ),
+            F.expr("bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in cols) + "))"),
             F.lit(0),
         ).alias("h"),
-    ).collect()[0]
+    ]
+
+
+def _checksum(df: DataFrame) -> tuple[int, int]:
+    row = df.select(*_checksum_aggs(df.columns)).collect()[0]
     return int(row.n), int(row.h)
+
+
+def _bucket_checksums(
+    staged: DataFrame, buckets: list[int] | None = None
+) -> dict[int, tuple[int, int]]:
+    """``_checksum`` of every bucket of a ``_bucket``-carrying frame in
+    one grouped pass (optionally only ``buckets``). A bucket with no
+    rows is absent; its checksum is ``(0, 0)``."""
+    if buckets is not None:
+        staged = staged.filter(F.col("_bucket").isin(buckets))
+    cols = [c for c in staged.columns if c != "_bucket"]
+    return {
+        r._bucket: (int(r.n), int(r.h))
+        for r in staged.groupBy("_bucket").agg(*_checksum_aggs(cols)).collect()
+    }
+
+
+def write_observed(df: DataFrame, path: str, *aggs, partition_by=None) -> dict:
+    """Overwrite ``path`` with ``df`` and return the aggregates ``aggs``
+    observed over the written rows by the write itself (no extra pass
+    and no read-back)."""
+    obs = Observation()
+    writer = df.observe(obs, *aggs).write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+    return obs.get
 
 
 class FeatureRun:
@@ -102,6 +143,8 @@ class FeatureRun:
         self.lineage_dir = os.path.join(out_dir, "_lineage")
         self.data_dir = os.path.join(out_dir, "features")
         self.stage_dir = os.path.join(out_dir, "_staged")
+        self.fingerprint_path = os.path.join(self.stage_dir, "_fingerprint.json")
+        self.records: list[dict] = []
 
     # -- lineage table ------------------------------------------------
     def lineage(self) -> DataFrame:
@@ -134,17 +177,18 @@ class FeatureRun:
         resume. Returns the staged frame, whose per-bucket filter is a
         partition-pruned directory read instead of a full-table scan.
 
-        The staged copy is keyed to this out_dir. A row-count
-        fingerprint is written next to the ``_SUCCESS`` marker at stage
-        time; resuming with an input whose row count differs FAILS
-        LOUDLY instead of silently mixing buckets from two different
-        inputs (parquet counts are footer-metadata reads, so the resume
-        check is ~free). A same-count different-content input evades
-        this cheap check — pass ``verify_input=True`` to
-        :meth:`run` for a full per-bucket checksum audit against the
-        lineage records."""
+        The staged copy is keyed to this out_dir. A fingerprint is
+        written next to the ``_SUCCESS`` marker at stage time: the row
+        count, and each bucket's input ``(rows, checksum)`` from one
+        grouped pass over the staged copy (the lineage's
+        ``input_rows``/``input_checksum``, so no bucket commit reads its
+        input twice). Resuming with an input whose row count differs
+        FAILS LOUDLY instead of silently mixing buckets from two
+        different inputs. A same-count different-content input evades
+        this cheap check — pass ``verify_input=True`` to :meth:`run`
+        for a full per-bucket checksum audit against the lineage
+        records."""
         marker = os.path.join(self.stage_dir, "_SUCCESS")
-        fp_path = os.path.join(self.stage_dir, "_fingerprint.json")
         # Explicit read schema: a 0-row input (drained resume queue,
         # partition-pruned read matching nothing) writes a staged dir
         # with no data files, and schema inference on it throws.
@@ -154,13 +198,19 @@ class FeatureRun:
                 "overwrite"
             ).partitionBy("_bucket").parquet(self.stage_dir)
             staged = self.spark.read.schema(staged_schema).parquet(self.stage_dir)
-            with open(fp_path, "w") as f:
-                json.dump({"input_rows": staged.count()}, f)
+            sums = _bucket_checksums(staged)
+            with open(self.fingerprint_path, "w") as f:
+                json.dump(
+                    {
+                        "input_rows": sum(n for n, _ in sums.values()),
+                        "buckets": {str(b): list(v) for b, v in sorted(sums.items())},
+                    },
+                    f,
+                )
             return staged
         staged = self.spark.read.schema(staged_schema).parquet(self.stage_dir)
-        if os.path.exists(fp_path):
-            with open(fp_path) as f:
-                want = json.load(f)["input_rows"]
+        want = self._fingerprint().get("input_rows")
+        if want is not None:
             got = turns.count()
             if got != want:
                 raise ValueError(
@@ -169,6 +219,23 @@ class FeatureRun:
                     f"for a new or updated input table"
                 )
         return staged
+
+    def _fingerprint(self) -> dict:
+        if not os.path.exists(self.fingerprint_path):
+            return {}
+        with open(self.fingerprint_path) as f:
+            return json.load(f)
+
+    def _input_checksums(
+        self, staged: DataFrame, todo: list[int], prestaged: bool
+    ) -> dict[int, tuple[int, int]]:
+        """Input ``(rows, checksum)`` of the pending buckets: read from
+        the stage's fingerprint, or (a pre-bucketed input, a fingerprint
+        without per-bucket sums) one grouped pass over ``todo``."""
+        buckets = None if prestaged else self._fingerprint().get("buckets")
+        if buckets is None:
+            return _bucket_checksums(staged, todo)
+        return {int(b): (v[0], v[1]) for b, v in buckets.items()}
 
     def _verify_committed(self, staged: DataFrame, done: set[int]) -> None:
         """Full-content audit (opt-in): recompute each committed
@@ -207,6 +274,11 @@ class FeatureRun:
         additionally re-checksums every already-committed bucket's
         input against its lineage record before resuming (full read of
         the committed partitions; off by default).
+
+        Returns the bucket counts. ``self.records`` then holds one
+        record per bucket committed by this call: ``rows_in``,
+        ``checksum_in``, ``rows_out``, ``checksum_out`` (the values of
+        its lineage record) and ``wall_s``.
         """
         done = self.committed_buckets()
         todo = [b for b in range(self.n_buckets) if b not in done]
@@ -214,36 +286,45 @@ class FeatureRun:
         staged = turns if prestaged else (self._stage(turns) if todo else None)
         if verify_input and done and staged is not None:
             self._verify_committed(staged, done)
-        n_done = 0
+        sums = self._input_checksums(staged, todo, prestaged) if todo else {}
+        from astrospectro_spark.engine.skew import release_cached
+
+        records = self.records = []
         for b in todo:
-            if fail_after is not None and n_done >= fail_after:
-                raise RuntimeError(f"injected failure after {n_done} buckets")
+            if fail_after is not None and len(records) >= fail_after:
+                raise RuntimeError(f"injected failure after {len(records)} buckets")
+            t0 = time.perf_counter()
             part = staged.filter(F.col("_bucket") == b).drop("_bucket")
-            in_rows, in_sum = _checksum(part)
+            in_rows, in_sum = sums.get(b, (0, 0))
             feats = self.featurizer(part)
             bucket_path = os.path.join(self.data_dir, f"bucket={b}")
-            feats.write.mode("overwrite").parquet(bucket_path)
+            out = write_observed(feats, bucket_path, *_checksum_aggs(feats.columns))
             # release any hot-slice cache the salted featurizer pinned —
             # a 64-bucket run must not accumulate 64 cached slices
-            from astrospectro_spark.engine.skew import release_cached
-
             release_cached(feats)
-            out = self.spark.read.parquet(bucket_path)
-            n_rows, checksum = _checksum(out)
             self._append_lineage(
                 run_id=self.run_id,
                 bucket=b,
                 status="committed",
-                n_rows=n_rows,
-                checksum=checksum,
+                n_rows=out["n"],
+                checksum=out["h"],
                 input_rows=in_rows,
                 input_checksum=in_sum,
             )
-            n_done += 1
+            records.append(
+                {
+                    "bucket": b,
+                    "rows_in": in_rows,
+                    "checksum_in": in_sum,
+                    "rows_out": out["n"],
+                    "checksum_out": out["h"],
+                    "wall_s": time.perf_counter() - t0,
+                }
+            )
         return {
             "buckets_total": self.n_buckets,
             "buckets_skipped": len(done),
-            "buckets_processed": n_done,
+            "buckets_processed": len(records),
         }
 
     def result(self) -> DataFrame:

@@ -12,6 +12,13 @@ Ships as ``spark-submit --py-files astrospectro_spark.zip -m`` style
 On a cluster nothing changes except ``--master``: the engine is pure
 DataFrame API, the lineage table gives kill-resume, the skew engine
 handles mega-conversations, and AQE does runtime re-planning.
+
+Every output is written in one pass, and what the run reports is
+observed on those writes: ``<output>/report.json`` holds each bucket
+committed by this invocation (``rows_in``/``checksum_in``/``rows_out``/
+``checksum_out``, as in its lineage record, and ``wall_s``), the bucket
+counts, the size of each enum dim and the as-of ``rows``, ``matched``
+and ``match_frac``.
 """
 
 from __future__ import annotations
@@ -59,44 +66,76 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--wide",
         action="store_true",
-        help="emit the full 175-column locked wide tier (rolling "
+        help="emit the 163-column locked wide tier (rolling "
         "std/range frames, gap rolls, running zscore/std, per-session "
         "max/min/std/AUC, wing integrals, proxy composites) in "
-        "addition to the 12 base features",
+        "addition to the 12 base features: 175 feature columns in all",
     )
     return p
 
 
-def write_enum_dim(turns, col: str, path: str) -> None:
-    """Write the code->string dim of one enum-coded column, one row per
-    code. The write fails loudly when two values share a code: the
-    features compared codes for equality, so such values were merged.
-    The check is an expression over the dim's rows as they are written,
-    so it costs no extra pass."""
+def write_enum_dims(turns, cols, out_dir: str) -> dict[str, int]:
+    """Write the code->string dim of each enum-coded column in ``cols``
+    to ``<out_dir>/<col>``, one row per code, and return each dim's
+    size. One scan and one aggregation of ``turns`` feed every dim: the
+    rows are written once, partitioned by column, under a hidden
+    ``_writing`` directory whose partitions are then moved into place.
+
+    The write fails loudly when two values share a code: the features
+    compared codes for equality, so such values were merged. The check
+    is an expression over the dims' rows as they are written, so it
+    costs no extra pass, and a failed write publishes no dim."""
+    import os
+    import shutil
+
     from pyspark.sql import functions as F
 
-    value, other = F.col("value"), F.col("_max")
+    from astrospectro_spark.engine.lineage import write_observed
+
+    dim, value, other = F.col("_dim"), F.col("value"), F.col("_max")
     collision = F.raise_error(
         F.concat(
-            F.lit(f"enum code collision in {col!r}: "), value, F.lit(" and "), other,
-            F.lit(" share a code; rerun without --enum-shuffle"),
+            F.lit("enum code collision in '"), dim, F.lit("': "), value, F.lit(" and "),
+            other, F.lit(" share a code; rerun without --enum-shuffle"),
         )
     )
-    (
-        turns.where(F.col(col).isNotNull())
-        .groupBy(F.xxhash64(col).alias("code"))
-        .agg(F.min(col).alias("value"), F.max(col).alias("_max"))
-        .select("code", F.when(value == other, value).otherwise(collision).alias("value"))
-        .write.mode("overwrite")
-        .parquet(path)
+    stacked = F.array(*[F.struct(F.lit(c).alias("_dim"), F.col(c).alias("value")) for c in cols])
+    dims = (
+        turns.select(F.inline(stacked))
+        .where(value.isNotNull())
+        .groupBy(dim, F.xxhash64("value").alias("code"))
+        .agg(F.min(value).alias("value"), F.max(value).alias("_max"))
+        .select(dim, "code", F.when(value == other, value).otherwise(collision).alias("value"))
     )
+    tmp = os.path.join(out_dir, "_writing")
+    try:
+        sizes = write_observed(
+            dims, tmp, *[F.count_if(dim == c).alias(c) for c in cols], partition_by="_dim"
+        )
+        for c in cols:
+            path = os.path.join(out_dir, c)
+            shutil.rmtree(path, ignore_errors=True)
+            if sizes[c]:
+                os.rename(os.path.join(tmp, f"_dim={c}"), path)
+                open(os.path.join(path, "_SUCCESS"), "w").close()
+            else:  # an all-NULL column has no partition: write an empty dim
+                empty = dims.sparkSession.createDataFrame([], dims.drop("_dim").schema)
+                empty.write.parquet(path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return {c: int(sizes[c]) for c in cols}
 
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
     from astrospectro_spark.engine.asof import asof_join
-    from astrospectro_spark.engine.lineage import FeatureRun
+    from astrospectro_spark.engine.lineage import FeatureRun, write_observed
     from astrospectro_spark.engine.skew import featurize_salted
     from astrospectro_spark.session import get_spark
 
@@ -129,22 +168,34 @@ def main(argv: list[str] | None = None) -> int:
     )
     stats = run.run(turns)
     print(f"featurize: {stats}")
+    report = {**stats, "buckets": run.records}
 
     if enum_shuffle:
         # read-time decode contract: one tiny code->string dim per
         # enum-coded source column, written next to the feature table.
         # A reader joins these (broadcast) to recover strings; the hot
         # path above never pays the decode.
-        for col in ("role", "tool"):
-            write_enum_dim(turns, col, f"{args.output}/enum_dims/{col}")
+        report["enum_dims"] = write_enum_dims(turns, ("role", "tool"), f"{args.output}/enum_dims")
 
     if args.anchors:
         anchors = spark.read.parquet(args.anchors)
         tol = "tolerance_s" if "tolerance_s" in anchors.columns else None
-        asof_path = f"{args.output}/asof"
-        asof_join(turns, anchors, tolerance_col=tol).write.mode("overwrite").parquet(asof_path)
-        # count the written files (parquet footers), not the join again
-        print(f"asof: {spark.read.parquet(asof_path).count()} rows")
+        # rows and matches are observed by the write, not read back
+        asof = write_observed(
+            asof_join(turns, anchors, tolerance_col=tol),
+            f"{args.output}/asof",
+            F.count(F.lit(1)).alias("rows"),
+            F.count("asof_turn_idx").alias("matched"),
+        )
+        rows, matched = int(asof["rows"]), int(asof["matched"])
+        report["asof"] = {
+            "rows": rows,
+            "matched": matched,
+            "match_frac": matched / rows if rows else None,
+        }
+        print(f"asof: {rows} rows")
+    with open(os.path.join(args.output, "report.json"), "w") as f:
+        json.dump(report, f, indent=2, sort_keys=True)
     return 0
 
 

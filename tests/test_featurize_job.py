@@ -36,12 +36,34 @@ def test_enum_dims_decode_job_output(spark, transcripts_pdf, tmp_path):
 
 def test_enum_dim_collision_fails_loudly(spark, tmp_path, monkeypatch):
     """No two real strings are known to share an xxhash64 code, so a
-    collision is simulated with a weaker code: the string's length."""
-    from astrospectro_spark.jobs.featurize_job import write_enum_dim
+    collision is simulated with a weaker code: the string's length. One
+    scan feeds both dims; a collision in either publishes neither."""
+    import os
 
-    turns = spark.createDataFrame([("ab",), ("cd",), ("e",), (None,)], "role string")
-    write_enum_dim(turns, "role", str(tmp_path / "ok"))
-    assert spark.read.parquet(str(tmp_path / "ok")).count() == 3
+    from astrospectro_spark.jobs.featurize_job import write_enum_dims
+
+    turns = spark.createDataFrame(
+        [("ab", "x"), ("cd", "y"), ("e", None), (None, "zz")], "role string, tool string"
+    )
+    ok = str(tmp_path / "ok")
+    assert write_enum_dims(turns, ("role", "tool"), ok) == {"role": 3, "tool": 3}
+    assert sorted(os.listdir(ok)) == ["role", "tool"]
+    for col in ("role", "tool"):
+        dim = spark.read.parquet(f"{ok}/{col}")
+        assert dim.dtypes == [("code", "bigint"), ("value", "string")]
+        assert dim.filter(F.col("code") != F.xxhash64("value")).count() == 0
+    # an all-NULL column still gets a readable, empty dim
+    no_tool = turns.select("role", F.lit(None).cast("string").alias("tool"))
+    assert write_enum_dims(no_tool, ("role", "tool"), ok) == {"role": 3, "tool": 0}
+    assert spark.read.parquet(f"{ok}/tool").dtypes == [("code", "bigint"), ("value", "string")]
+    assert spark.read.parquet(f"{ok}/tool").count() == 0
     monkeypatch.setattr(F, "xxhash64", lambda c: F.length(c).cast("long"))
-    with pytest.raises(Exception, match="enum code collision in 'role'"):
-        write_enum_dim(turns, "role", str(tmp_path / "bad"))
+    bad = str(tmp_path / "bad")
+    with pytest.raises(Exception, match="enum code collision in 'role': ab and cd share a code"):
+        write_enum_dims(turns, ("role", "tool"), bad)
+    assert not os.path.exists(bad) or os.listdir(bad) == []
+    # the collision is in the second dim only: the first is not published
+    only_tool = spark.createDataFrame([("ab", "x"), ("c", "y")], "role string, tool string")
+    with pytest.raises(Exception, match="enum code collision in 'tool': x and y share a code"):
+        write_enum_dims(only_tool, ("role", "tool"), bad)
+    assert not os.path.exists(bad) or os.listdir(bad) == []

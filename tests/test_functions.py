@@ -92,6 +92,67 @@ def test_ngram_jaccard_block_cap_routes_oversized_blocks(spark, docs):
     assert set(zip(dflt.id_a, dflt.id_b)) == set(zip(exact.id_a, exact.id_b))
 
 
+def _jaccard_reference(texts: dict[int, str], n: int, threshold: float) -> dict:
+    """Plain-Python word n-gram Jaccard of every pair of one block, for
+    lowercase single-spaced texts (normalization is then a no-op)."""
+
+    def shingles(text):
+        t = text.split(" ")
+        return {" ".join(t[i:i + n]) for i in range(len(t) - n + 1)} if len(t) >= n else {text}
+
+    sh = {i: shingles(t) for i, t in texts.items()}
+    ids = sorted(sh)
+    out = {}
+    for k, a in enumerate(ids):
+        for b in ids[k + 1:]:
+            j = round(len(sh[a] & sh[b]) / len(sh[a] | sh[b]), 6)
+            if j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def test_ngram_jaccard_many_planted_pairs_match_reference(spark):
+    """One block with 150 planted near-duplicate pairs (50 documents and
+    two one- or two-word edits of each) among unrelated documents: the
+    exact path returns exactly the plain-Python Jaccard pairs and
+    values, and the capped (MinHash+LSH) path a subset of them with the
+    same values."""
+    import random
+
+    from astrospectro_spark.functions.dedup import ngram_jaccard_pairs
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = {}
+    for k in range(50):
+        base = rng.sample(vocab, 16)
+        texts[3 * k] = " ".join(base)
+        for e in (1, 2):
+            edited = list(base)
+            for pos in rng.sample(range(16), e):
+                edited[pos] = rng.choice(vocab)
+            texts[3 * k + e] = " ".join(edited)
+    for k in range(20):
+        texts[1000 + k] = " ".join(rng.sample(vocab, rng.randint(2, 20)))
+    docs = spark.createDataFrame(
+        [(i, t, "en", "s") for i, t in texts.items()],
+        "doc_id long, text string, lang string, source string",
+    )
+    threshold = 0.3
+    want = _jaccard_reference(texts, 3, threshold)
+    planted = {(3 * k, 3 * k + e) for k in range(50) for e in (1, 2)} | {
+        (3 * k + 1, 3 * k + 2) for k in range(50)
+    }
+    assert len(planted & set(want)) >= 100 and len(want) == 136
+
+    exact = ngram_jaccard_pairs(docs, threshold=threshold, max_block_rows=None).collect()
+    assert {(r.id_a, r.id_b): r.jaccard for r in exact} == want
+    capped = ngram_jaccard_pairs(docs, threshold=threshold, max_block_rows=50).collect()
+    got = {(r.id_a, r.id_b): r.jaccard for r in capped}
+    assert all(want.get(p) == j for p, j in got.items())
+    assert len(got) >= 100  # the LSH bands find most of the 136 pairs
+
+
 def test_lsh_band_geometry_tracks_threshold():
     """Band count derives from the verify threshold so near-threshold
     recall does not collapse at low thresholds (ADVICE r03): the

@@ -194,3 +194,210 @@ def test_fresh_dir_ledger_check_runs_no_spark_job(spark, tmp_path):
     before = set(tracker.getJobIdsForGroup())
     assert FeatureRun(spark, str(tmp_path / "fresh"), n_buckets=2).committed_buckets() == set()
     assert set(tracker.getJobIdsForGroup()) == before
+
+
+def _salted_hot(df):
+    from astrospectro_spark.engine.skew import featurize_salted
+
+    return featurize_salted(df, hot_threshold=50, chunk_target_rows=64)
+
+
+@pytest.mark.parametrize(
+    "featurizer, n_convs, n_buckets",
+    [
+        pytest.param(_salted_hot, None, 2, id="salted-hot"),
+        pytest.param(featurize_expr, None, 2, id="plain"),
+        pytest.param(lambda df: featurize_expr(df, wide=True), None, 2, id="wide"),
+        # two conversations over four buckets leave at least two empty
+        pytest.param(featurize_expr, 2, 4, id="empty"),
+    ],
+)
+def test_observed_checksums_equal_read_back(
+    spark, transcripts_sdf, tmp_path, featurizer, n_convs, n_buckets
+):
+    """The lineage's (n_rows, checksum) is observed on the feature write
+    and (input_rows, input_checksum) comes from the stage fingerprint;
+    both equal a read-back checksum, in the crash half and the resume."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from astrospectro_spark.engine.lineage import _checksum
+
+    turns = transcripts_sdf
+    if n_convs:
+        turns = turns.where(F.col("conv_id").isin([f"conv-{i:08d}" for i in range(n_convs)]))
+    out = str(tmp_path / "x")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        FeatureRun(spark, out, n_buckets=n_buckets, featurizer=featurizer).run(
+            turns, fail_after=1
+        )
+    r = FeatureRun(spark, out, n_buckets=n_buckets, featurizer=featurizer, run_id="r2")
+    stats = r.run(turns)
+    assert stats["buckets_processed"] == n_buckets - 1
+
+    staged = spark.read.parquet(r.stage_dir)
+    with open(r.fingerprint_path) as f:
+        fingerprint = json.load(f)
+    lin = {row.bucket: row for row in r.lineage().collect()}
+    assert sorted(lin) == list(range(n_buckets))
+    sizes = []
+    for b, row in lin.items():
+        staged_in = _checksum(staged.filter(F.col("_bucket") == b).drop("_bucket"))
+        assert (row.input_rows, row.input_checksum) == staged_in
+        assert tuple(fingerprint["buckets"].get(str(b), (0, 0))) == staged_in
+        written = _checksum(spark.read.parquet(os.path.join(r.data_dir, f"bucket={b}")))
+        assert (row.n_rows, row.checksum) == written
+        sizes.append(row.n_rows)
+    assert fingerprint["input_rows"] == turns.count() == sum(sizes)
+    if n_convs:
+        assert sizes.count(0) >= n_buckets - n_convs
+    # the run's own records are those of its lineage rows
+    assert len(r.records) == stats["buckets_processed"]
+    for rec in r.records:
+        row = lin[rec["bucket"]]
+        assert (rec["rows_in"], rec["checksum_in"], rec["rows_out"], rec["checksum_out"]) == (
+            row.input_rows, row.input_checksum, row.n_rows, row.checksum
+        )
+
+
+def test_input_checksums_without_fingerprint_sums(spark, transcripts_sdf, tmp_path):
+    """A pre-bucketed input, and a stage fingerprint that predates the
+    per-bucket sums, get the input checksums from one grouped pass over
+    the pending buckets; they equal the per-bucket checksum."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from astrospectro_spark.engine.lineage import _checksum, bucketize
+
+    out = str(tmp_path / "old")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        FeatureRun(spark, out, n_buckets=3).run(transcripts_sdf, fail_after=1)
+    r = FeatureRun(spark, out, n_buckets=3, run_id="r2")
+    with open(r.fingerprint_path) as f:
+        n = json.load(f)["input_rows"]
+    with open(r.fingerprint_path, "w") as f:
+        json.dump({"input_rows": n}, f)
+    assert r.run(transcripts_sdf)["buckets_processed"] == 2
+
+    src = str(tmp_path / "pre")
+    bucketize(transcripts_sdf, 3).write.partitionBy("_bucket").parquet(src)
+    pre = spark.read.parquet(src)
+    p = FeatureRun(spark, str(tmp_path / "p"), n_buckets=3)
+    p.run(pre)
+
+    staged = spark.read.parquet(r.stage_dir)
+    for run, src_df in ((r, staged), (p, pre)):
+        for row in run.lineage().collect():
+            part = src_df.filter(F.col("_bucket") == row.bucket).drop("_bucket")
+            assert (row.input_rows, row.input_checksum) == _checksum(part)
+
+
+@pytest.fixture(scope="module")
+def job_resume(spark, transcripts_pdf, anchors_pdf, tmp_path_factory):
+    """featurize_job.main resuming a run killed after 1 of 2 buckets,
+    with the salted hot path, enum dims and the as-of join; records the
+    Spark jobs of the resume and of each observed write in it."""
+    from astrospectro_spark.engine import lineage
+    from astrospectro_spark.engine.skew import featurize_salted
+    from astrospectro_spark.jobs import featurize_job
+
+    base = tmp_path_factory.mktemp("job_resume")
+    src, anchors, out = str(base / "turns"), str(base / "anchors"), str(base / "out")
+    spark.createDataFrame(transcripts_pdf).write.parquet(src)
+    spark.createDataFrame(anchors_pdf).write.parquet(anchors)
+    hot, chunk = 500, 200
+
+    def featurizer(df):
+        return featurize_salted(
+            df, hot_threshold=hot, chunk_target_rows=chunk, include_text=False, enum_shuffle=True
+        )
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        FeatureRun(spark, out, n_buckets=2, featurizer=featurizer).run(
+            spark.read.parquet(src), fail_after=1
+        )
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return set(tracker.getJobIdsForGroup())
+
+    writes = []
+    real_write = lineage.write_observed
+
+    def write_observed(df, path, *aggs, **kw):
+        before = jobs()
+        got = real_write(df, path, *aggs, **kw)
+        writes.append({"path": path, "before": before, "after": jobs()})
+        return got
+
+    def no_pass(*a, **kw):
+        raise AssertionError("a resume bucket commit must not run a separate checksum pass")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(lineage, "write_observed", write_observed)
+        mp.setattr(lineage, "_checksum", no_pass)
+        mp.setattr(lineage, "_bucket_checksums", no_pass)
+        before = jobs()
+        featurize_job.main(
+            ["--input", src, "--output", out, "--buckets", "2", "--enum-shuffle",
+             "--hot-threshold", str(hot), "--chunk-rows", str(chunk), "--anchors", anchors]
+        )
+        after = jobs()
+    return {"out": out, "before": before, "after": after, "writes": writes}
+
+
+def test_featurize_job_resume_job_budget(job_resume):
+    """The resume commits its bucket in one pass: no input-checksum pass
+    (the fixture fails on one), no read-back after the feature write
+    (only the lineage append runs before the next write), and the report
+    adds no job after the last write."""
+    import os
+
+    writes = job_resume["writes"]
+    out = job_resume["out"]
+    assert [w["path"] for w in writes] == [
+        os.path.join(out, "features", "bucket=1"),
+        os.path.join(out, "enum_dims", "_writing"),
+        f"{out}/asof",
+    ]
+    assert len(writes[1]["before"] - writes[0]["after"]) == 1  # the lineage append
+    assert job_resume["after"] == writes[-1]["after"]  # report.json: no job
+    assert len(job_resume["after"] - job_resume["before"]) <= 16
+
+
+def test_featurize_job_report(spark, job_resume, transcripts_pdf, anchors_pdf):
+    """report.json holds the lineage records of the processed bucket,
+    the enum dim sizes and the as-of match counts of the pandas oracle."""
+    import json
+    import os
+
+    from astrospectro_spark.oracle.pandas_oracle import oracle_asof
+
+    out = job_resume["out"]
+    with open(os.path.join(out, "report.json")) as f:
+        report = json.load(f)
+    assert report["buckets_skipped"] == 1 and report["buckets_processed"] == 1
+    lin = {row.bucket: row for row in FeatureRun(spark, out, n_buckets=2).lineage().collect()}
+    assert [rec["bucket"] for rec in report["buckets"]] == [b for b in lin if b != 0] == [1]
+    for rec in report["buckets"]:
+        row = lin[rec["bucket"]]
+        assert (rec["rows_in"], rec["checksum_in"], rec["rows_out"], rec["checksum_out"]) == (
+            row.input_rows, row.input_checksum, row.n_rows, row.checksum
+        )
+        assert rec["wall_s"] > 0
+    for col in ("role", "tool"):
+        assert report["enum_dims"][col] == spark.read.parquet(f"{out}/enum_dims/{col}").count()
+        assert report["enum_dims"][col] == transcripts_pdf[col].nunique()
+    want = oracle_asof(
+        transcripts_pdf, anchors_pdf, value_cols=["turn_idx", "ts"], tolerance_col="tolerance_s"
+    )
+    matched = int(want["asof_turn_idx"].notna().sum())
+    assert report["asof"] == {
+        "rows": len(anchors_pdf),
+        "matched": matched,
+        "match_frac": matched / len(anchors_pdf),
+    }

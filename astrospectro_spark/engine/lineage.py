@@ -30,11 +30,18 @@ jar ships in this sandbox):
   checksum)`` is an ``Observation`` on the feature write itself, equal
   bit for bit to a read-back of the written files, and nothing is read
   back. The input ``(input_rows, input_checksum)`` of every bucket is
-  taken once, by one grouped aggregation over ``_bucket`` right after
-  staging, and kept in the stage's ``_fingerprint.json``, so a resume
-  reads it from that file. A pre-bucketed input (or a stage whose
-  fingerprint predates the per-bucket sums) gets the same grouped pass
-  over the pending buckets at the start of the run;
+  observed on the stage write (one ``xxhash64`` per row, projected and
+  dropped before the files are written; a ``count_if`` and a
+  ``bit_xor`` per bucket) and kept in the stage's ``_fingerprint.json``,
+  so neither staging nor a resume reads the staged copy back. A
+  pre-bucketed input (or a stage whose fingerprint predates the
+  per-bucket sums) gets one grouped pass over the pending buckets at
+  the start of the run;
+- the ledger check, staging and the input guard are one step,
+  :meth:`FeatureRun.stage`, that :meth:`FeatureRun.run` reuses when it
+  was called first: a caller that writes other outputs next to the
+  features (``jobs/featurize_job.py``) runs it before any of them, so a
+  resume with a different input fails before anything is rewritten;
 - resume = anti-join the bucket list against committed lineage records
   (the reference's ``new = available − already_used``,
   src/tools/dataset_builder.py:197-205);
@@ -50,6 +57,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -80,15 +88,17 @@ def bucketize(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("_bucket", _bucket_col(n_buckets))
 
 
+def _row_hash(cols: list[str]):
+    """``xxhash64`` of each row over the columns ``cols``."""
+    return F.expr("xxhash64(" + ", ".join(f"`{c}`" for c in cols) + ")")
+
+
 def _checksum_aggs(cols: list[str]) -> list:
     """Row count ``n`` and order-insensitive content hash ``h`` of a
     frame with columns ``cols``; an empty frame sums to ``(0, 0)``."""
     return [
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.expr("bit_xor(xxhash64(" + ", ".join(f"`{c}`" for c in cols) + "))"),
-            F.lit(0),
-        ).alias("h"),
+        F.coalesce(F.bit_xor(_row_hash(cols)), F.lit(0)).alias("h"),
     ]
 
 
@@ -124,6 +134,17 @@ def write_observed(df: DataFrame, path: str, *aggs, partition_by=None) -> dict:
     return obs.get
 
 
+class _Staged(NamedTuple):
+    """What :meth:`FeatureRun.stage` found, for the next ``run``."""
+
+    turns: DataFrame
+    verified: bool
+    done: set[int]
+    todo: list[int]
+    staged: DataFrame | None
+    sums: dict[int, tuple[int, int]]
+
+
 class FeatureRun:
     """A resumable featurization run over a transcripts table."""
 
@@ -145,6 +166,7 @@ class FeatureRun:
         self.stage_dir = os.path.join(out_dir, "_staged")
         self.fingerprint_path = os.path.join(self.stage_dir, "_fingerprint.json")
         self.records: list[dict] = []
+        self._staged: _Staged | None = None
 
     # -- lineage table ------------------------------------------------
     def lineage(self) -> DataFrame:
@@ -179,36 +201,51 @@ class FeatureRun:
 
         The staged copy is keyed to this out_dir. A fingerprint is
         written next to the ``_SUCCESS`` marker at stage time: the row
-        count, and each bucket's input ``(rows, checksum)`` from one
-        grouped pass over the staged copy (the lineage's
-        ``input_rows``/``input_checksum``, so no bucket commit reads its
-        input twice). Resuming with an input whose row count differs
-        FAILS LOUDLY instead of silently mixing buckets from two
+        count, and each non-empty bucket's input ``(rows, checksum)``
+        (the lineage's ``input_rows``/``input_checksum``), observed on
+        the stage write itself, so neither staging nor a bucket commit
+        reads the input twice. Resuming with an input whose row count
+        differs FAILS LOUDLY instead of silently mixing buckets from two
         different inputs. A same-count different-content input evades
         this cheap check — pass ``verify_input=True`` to :meth:`run`
         for a full per-bucket checksum audit against the lineage
         records."""
         marker = os.path.join(self.stage_dir, "_SUCCESS")
+        bucketed = turns.withColumn("_bucket", _bucket_col(self.n_buckets))
         # Explicit read schema: a 0-row input (drained resume queue,
         # partition-pruned read matching nothing) writes a staged dir
         # with no data files, and schema inference on it throws.
-        staged_schema = turns.withColumn("_bucket", _bucket_col(self.n_buckets)).schema
+        reader = self.spark.read.schema(bucketed.schema)
         if not os.path.exists(marker):
-            turns.withColumn("_bucket", _bucket_col(self.n_buckets)).write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(self.stage_dir)
-            staged = self.spark.read.schema(staged_schema).parquet(self.stage_dir)
-            sums = _bucket_checksums(staged)
+            # one hash per row, projected for the observation and dropped
+            # before the write: every bucket's (rows, checksum) equals
+            # _checksum of its staged partition, with no read-back
+            obs = Observation()
+            bucket, h = F.col("_bucket"), F.col("_h")
+            aggs = []
+            for b in range(self.n_buckets):
+                aggs += [
+                    F.count_if(bucket == b).alias(f"n{b}"),
+                    F.coalesce(F.bit_xor(F.when(bucket == b, h)), F.lit(0)).alias(f"h{b}"),
+                ]
+            bucketed.withColumn("_h", _row_hash(turns.columns)).observe(obs, *aggs).drop(
+                "_h"
+            ).write.mode("overwrite").partitionBy("_bucket").parquet(self.stage_dir)
+            seen = obs.get
+            per_bucket = {
+                b: (int(seen[f"n{b}"]), int(seen[f"h{b}"]))
+                for b in range(self.n_buckets)
+                if seen[f"n{b}"]
+            }
             with open(self.fingerprint_path, "w") as f:
                 json.dump(
                     {
-                        "input_rows": sum(n for n, _ in sums.values()),
-                        "buckets": {str(b): list(v) for b, v in sorted(sums.items())},
+                        "input_rows": sum(n for n, _ in per_bucket.values()),
+                        "buckets": {str(b): list(v) for b, v in per_bucket.items()},
                     },
                     f,
                 )
-            return staged
-        staged = self.spark.read.schema(staged_schema).parquet(self.stage_dir)
+            return reader.parquet(self.stage_dir)
         want = self._fingerprint().get("input_rows")
         if want is not None:
             got = turns.count()
@@ -218,7 +255,7 @@ class FeatureRun:
                     f"rows but the passed input has {got}; use a fresh out_dir "
                     f"for a new or updated input table"
                 )
-        return staged
+        return reader.parquet(self.stage_dir)
 
     def _fingerprint(self) -> dict:
         if not os.path.exists(self.fingerprint_path):
@@ -256,6 +293,26 @@ class FeatureRun:
                 )
 
     # -- run / resume ---------------------------------------------------
+    def stage(self, turns: DataFrame, verify_input: bool = False) -> list[int]:
+        """The steps of :meth:`run` that come before the bucket loop: the
+        ledger check, staging (or its reuse, with the input-row guard)
+        and the pending buckets' input checksums; with
+        ``verify_input=True`` also the content audit of the committed
+        buckets. Returns the pending buckets.
+
+        A later ``run(turns)`` with the same frame reuses this step, so a
+        caller that writes other outputs next to the features can make
+        the guard pass before it rewrites any of them."""
+        done = self.committed_buckets()
+        todo = [b for b in range(self.n_buckets) if b not in done]
+        prestaged = "_bucket" in turns.columns
+        staged = turns if prestaged else (self._stage(turns) if todo else None)
+        if verify_input and done and staged is not None:
+            self._verify_committed(staged, done)
+        sums = self._input_checksums(staged, todo, prestaged) if todo else {}
+        self._staged = _Staged(turns, verify_input, done, todo, staged, sums)
+        return todo
+
     def run(
         self,
         turns: DataFrame,
@@ -275,27 +332,29 @@ class FeatureRun:
         input against its lineage record before resuming (full read of
         the committed partitions; off by default).
 
+        The buckets are committed one after another. A :meth:`stage`
+        call on the same ``turns`` (with ``verify_input`` if this call
+        asks for it) is reused, once; otherwise ``run`` stages first.
+
         Returns the bucket counts. ``self.records`` then holds one
         record per bucket committed by this call: ``rows_in``,
         ``checksum_in``, ``rows_out``, ``checksum_out`` (the values of
         its lineage record) and ``wall_s``.
         """
-        done = self.committed_buckets()
-        todo = [b for b in range(self.n_buckets) if b not in done]
-        prestaged = "_bucket" in turns.columns
-        staged = turns if prestaged else (self._stage(turns) if todo else None)
-        if verify_input and done and staged is not None:
-            self._verify_committed(staged, done)
-        sums = self._input_checksums(staged, todo, prestaged) if todo else {}
+        st = self._staged
+        if st is None or st.turns is not turns or (verify_input and not st.verified):
+            self.stage(turns, verify_input)
+            st = self._staged
+        self._staged = None  # the ledger moves on: the next run stages again
         from astrospectro_spark.engine.skew import release_cached
 
         records = self.records = []
-        for b in todo:
+        for b in st.todo:
             if fail_after is not None and len(records) >= fail_after:
                 raise RuntimeError(f"injected failure after {len(records)} buckets")
             t0 = time.perf_counter()
-            part = staged.filter(F.col("_bucket") == b).drop("_bucket")
-            in_rows, in_sum = sums.get(b, (0, 0))
+            part = st.staged.filter(F.col("_bucket") == b).drop("_bucket")
+            in_rows, in_sum = st.sums.get(b, (0, 0))
             feats = self.featurizer(part)
             bucket_path = os.path.join(self.data_dir, f"bucket={b}")
             out = write_observed(feats, bucket_path, *_checksum_aggs(feats.columns))
@@ -323,7 +382,7 @@ class FeatureRun:
             )
         return {
             "buckets_total": self.n_buckets,
-            "buckets_skipped": len(done),
+            "buckets_skipped": len(st.done),
             "buckets_processed": len(records),
         }
 

@@ -19,6 +19,24 @@ committed by this invocation (``rows_in``/``checksum_in``/``rows_out``/
 ``checksum_out``, as in its lineage record, and ``wall_s``), the bucket
 counts, the size of each enum dim and the as-of ``rows``, ``matched``
 and ``match_frac``.
+
+The outputs are independent, so they are written at the same time:
+
+1. ``FeatureRun.stage`` runs first, alone: the ledger check, staging
+   (or, on a resume, the input-row guard) and the input checksums. A
+   resume with a different input fails here, before ``asof/`` or
+   ``enum_dims/`` is rewritten.
+2. The bucket loop (``FeatureRun.run``, one bucket after another) runs
+   in the calling thread while ``enum_dims/`` (``--enum-shuffle``) and
+   ``asof/`` (``--anchors``) are each written by a worker thread. Most
+   of the loop's jobs run one or two tasks, so the side outputs' jobs
+   use cores that would sit idle. The workers inherit the caller's
+   Spark job description and job group: their jobs are attributed and
+   cancelled with the job's own.
+3. Every branch is joined before ``report.json`` is written. If one
+   failed, its error is raised (the bucket loop's first) and no report
+   is written. The lineage keeps every bucket the loop committed, and a
+   rerun resumes from it and rewrites the side outputs.
 """
 
 from __future__ import annotations
@@ -126,16 +144,77 @@ def write_enum_dims(turns, cols, out_dir: str) -> dict[str, int]:
     return {c: int(sizes[c]) for c in cols}
 
 
+def write_asof(turns, anchors, path: str) -> dict:
+    """Write the as-of join of ``turns`` onto ``anchors`` to ``path``
+    and return its ``rows``, ``matched`` and ``match_frac``, observed by
+    the write, not read back."""
+    from pyspark.sql import functions as F
+
+    from astrospectro_spark.engine.asof import asof_join
+    from astrospectro_spark.engine.lineage import write_observed
+
+    tol = "tolerance_s" if "tolerance_s" in anchors.columns else None
+    got = write_observed(
+        asof_join(turns, anchors, tolerance_col=tol),
+        path,
+        F.count(F.lit(1)).alias("rows"),
+        F.count("asof_turn_idx").alias("matched"),
+    )
+    rows, matched = int(got["rows"]), int(got["matched"])
+    return {"rows": rows, "matched": matched, "match_frac": matched / rows if rows else None}
+
+
+def run_alongside(spark, main_branch, side_branches: dict):
+    """Run ``main_branch()`` in this thread while each of
+    ``side_branches`` (name -> callable) runs in a worker thread of its
+    own, and return ``(main result, {name: side result})``.
+
+    The workers inherit this thread's Spark local properties (job
+    description, job group), so their jobs are attributed and cancelled
+    with the caller's. Every branch is joined before this returns or
+    raises; then the first error is re-raised: the main branch's, else
+    the side branches' in order."""
+    import threading
+
+    from pyspark.util import inheritable_thread_target
+
+    results, errors = {}, {}
+
+    def worker(name, fn):
+        def target():
+            try:
+                results[name] = fn()
+            except BaseException as e:  # noqa: BLE001 — re-raised by the caller
+                errors[name] = e
+
+        # wrapped here, in the caller's thread: the properties are copied now
+        return threading.Thread(
+            target=inheritable_thread_target(spark)(target), name=f"featurize_job.{name}"
+        )
+
+    threads = [worker(name, fn) for name, fn in side_branches.items()]
+    started = []
+    try:
+        for t in threads:
+            t.start()
+            started.append(t)
+        out = main_branch()
+    finally:
+        for t in started:
+            t.join()
+    for name in side_branches:
+        if name in errors:
+            raise errors[name]
+    return out, results
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
 
     import json
     import os
 
-    from pyspark.sql import functions as F
-
-    from astrospectro_spark.engine.asof import asof_join
-    from astrospectro_spark.engine.lineage import FeatureRun, write_observed
+    from astrospectro_spark.engine.lineage import FeatureRun
     from astrospectro_spark.engine.skew import featurize_salted
     from astrospectro_spark.session import get_spark
 
@@ -166,34 +245,30 @@ def main(argv: list[str] | None = None) -> int:
         featurizer=featurizer,
         run_id=args.run_id,
     )
-    stats = run.run(turns)
-    print(f"featurize: {stats}")
-    report = {**stats, "buckets": run.records}
+    # the ledger check and the input guard come first: a resume with a
+    # different input fails here, before any output is rewritten
+    run.stage(turns)
 
+    side = {}
     if enum_shuffle:
         # read-time decode contract: one tiny code->string dim per
         # enum-coded source column, written next to the feature table.
         # A reader joins these (broadcast) to recover strings; the hot
-        # path above never pays the decode.
-        report["enum_dims"] = write_enum_dims(turns, ("role", "tool"), f"{args.output}/enum_dims")
-
-    if args.anchors:
-        anchors = spark.read.parquet(args.anchors)
-        tol = "tolerance_s" if "tolerance_s" in anchors.columns else None
-        # rows and matches are observed by the write, not read back
-        asof = write_observed(
-            asof_join(turns, anchors, tolerance_col=tol),
-            f"{args.output}/asof",
-            F.count(F.lit(1)).alias("rows"),
-            F.count("asof_turn_idx").alias("matched"),
+        # path never pays the decode.
+        side["enum_dims"] = lambda: write_enum_dims(
+            turns, ("role", "tool"), f"{args.output}/enum_dims"
         )
-        rows, matched = int(asof["rows"]), int(asof["matched"])
-        report["asof"] = {
-            "rows": rows,
-            "matched": matched,
-            "match_frac": matched / rows if rows else None,
-        }
-        print(f"asof: {rows} rows")
+    if args.anchors:
+        side["asof"] = lambda: write_asof(
+            turns, spark.read.parquet(args.anchors), f"{args.output}/asof"
+        )
+    # the side outputs read the input, not the features: they are
+    # written while the bucket loop runs
+    stats, outputs = run_alongside(spark, lambda: run.run(turns), side)
+    print(f"featurize: {stats}")
+    if "asof" in outputs:
+        print(f"asof: {outputs['asof']['rows']} rows")
+    report = {**stats, "buckets": run.records, **outputs}
     with open(os.path.join(args.output, "report.json"), "w") as f:
         json.dump(report, f, indent=2, sort_keys=True)
     return 0

@@ -47,7 +47,8 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from astrospectro_spark.engine.lineage import _checksum_aggs, write_observed
 
 
 class CommitConflict(RuntimeError):
@@ -191,18 +192,6 @@ def _entry_survives(entry: dict, stats_filter: dict) -> bool:
     return True
 
 
-def _lineage_summary(df: DataFrame) -> dict:
-    """Row count + order-insensitive checksum (same convention as the
-    lineage ledger: bit_xor of xxhash64 over all columns)."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])), F.lit(0)
-        ).alias("chk"),
-    ).first()
-    return {"n_rows": int(row["n"]), "checksum": int(row["chk"])}
-
-
 def commit(
     table_dir: str,
     df: DataFrame,
@@ -252,13 +241,20 @@ def _write_data_files(
     summary of what LANDED). Timestamps are forced to TIMESTAMP_MICROS
     for this write even under a foreign session: INT96 (the legacy
     default) has no footer min/max, which would silently disable ts
-    data skipping on every file this table ever commits."""
+    data skipping on every file this table ever commits.
+
+    The summary is the row count and order-insensitive checksum of the
+    lineage ledger (``bit_xor`` of ``xxhash64`` over all columns),
+    observed over the rows the write task wrote: no re-scan of the new
+    files, and no re-run of the input plan, which would double-execute
+    expensive lineage (joins, LSH) and could observe different data on
+    a live source."""
     files_dir = os.path.join(table_dir, "data", uuid.uuid4().hex)
     conf = df.sparkSession.conf
     prev_ts_type = conf.get("spark.sql.parquet.outputTimestampType")
     conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     try:
-        df.write.parquet(files_dir)
+        landed = write_observed(df, files_dir, *_checksum_aggs(df.columns))
     finally:
         conf.set("spark.sql.parquet.outputTimestampType", prev_ts_type)
     new_files = sorted(
@@ -270,11 +266,7 @@ def _write_data_files(
         {"path": p, "partition": partition, "stats": _file_column_stats(p)}
         for p in new_files
     ]
-    # summarize what LANDED (columnar re-scan of the new files), not the
-    # input plan — a plan re-run would double-execute expensive lineage
-    # (joins, LSH) and could observe different data on a live source
-    summary = _lineage_summary(df.sparkSession.read.parquet(files_dir))
-    return new_entries, summary
+    return new_entries, {"n_rows": int(landed["n"]), "checksum": int(landed["h"])}
 
 
 def compact(
@@ -288,7 +280,7 @@ def compact(
     into ``target_partitions`` output files, committed as one atomic
     ``compact`` snapshot whose manifest keeps every untouched entry.
 
-    Content-preserving by construction (the commit summary re-checksums
+    Content-preserving by construction (the commit summary checksums
     what landed; the test asserts checksum equality with the
     pre-compaction snapshot), CAS-protected against concurrent writers,
     and time travel to pre-compaction snapshots keeps working because

@@ -67,3 +67,123 @@ def test_enum_dim_collision_fails_loudly(spark, tmp_path, monkeypatch):
     with pytest.raises(Exception, match="enum code collision in 'tool': x and y share a code"):
         write_enum_dims(only_tool, ("role", "tool"), bad)
     assert not os.path.exists(bad) or os.listdir(bad) == []
+
+
+def _job_args(spark, transcripts_pdf, anchors_pdf, base):
+    src, anchors = str(base / "turns.parquet"), str(base / "anchors.parquet")
+    spark.createDataFrame(transcripts_pdf).write.parquet(src)
+    spark.createDataFrame(anchors_pdf).write.parquet(anchors)
+    out = str(base / "out")
+    return out, ["--input", src, "--output", out, "--buckets", "2", "--enum-shuffle",
+                 "--anchors", anchors]
+
+
+def _worker_threads():
+    import threading
+
+    return [t for t in threading.enumerate() if t.name.startswith("featurize_job.")]
+
+
+def _committed(spark, out):
+    from astrospectro_spark.engine.lineage import FeatureRun
+
+    return sorted(
+        (r.bucket, r.status) for r in FeatureRun(spark, out, n_buckets=2).lineage().collect()
+    )
+
+
+def test_failed_side_output_raises_after_every_branch(
+    spark, transcripts_pdf, anchors_pdf, tmp_path, monkeypatch
+):
+    """A failing as-of write fails the job, but only once every branch
+    has ended: the bucket loop committed both buckets, the enum dims
+    (held back until the loop is done) are published, no worker thread
+    is left and no report is written. A rerun completes."""
+    import json
+    import os
+    import threading
+
+    from astrospectro_spark.engine import asof
+    from astrospectro_spark.engine.lineage import FeatureRun
+    from astrospectro_spark.jobs import featurize_job
+
+    out, argv = _job_args(spark, transcripts_pdf, anchors_pdf, tmp_path)
+    loop_done = threading.Event()
+    real_run, real_dims = FeatureRun.run, featurize_job.write_enum_dims
+
+    def run(self, turns, **kw):
+        try:
+            return real_run(self, turns, **kw)
+        finally:
+            loop_done.set()
+
+    def late_dims(*a, **kw):
+        assert loop_done.wait(120)
+        return real_dims(*a, **kw)
+
+    def broken_asof(*a, **kw):
+        raise RuntimeError("as-of join failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(FeatureRun, "run", run)
+        mp.setattr(featurize_job, "write_enum_dims", late_dims)
+        mp.setattr(asof, "asof_join", broken_asof)
+        with pytest.raises(RuntimeError, match="as-of join failed"):
+            featurize_job.main(argv)
+    assert _worker_threads() == []
+    assert not os.path.exists(os.path.join(out, "report.json"))
+    assert not os.path.exists(os.path.join(out, "asof"))
+    assert _committed(spark, out) == [(0, "committed"), (1, "committed")]
+    for col in ("role", "tool"):
+        assert os.path.exists(os.path.join(out, "enum_dims", col, "_SUCCESS"))
+
+    assert featurize_job.main(argv) == 0
+    assert _worker_threads() == []
+    with open(os.path.join(out, "report.json")) as f:
+        report = json.load(f)
+    assert (report["buckets_skipped"], report["buckets_processed"]) == (2, 0)
+    assert report["asof"]["rows"] == len(anchors_pdf)
+    assert _committed(spark, out) == [(0, "committed"), (1, "committed")]
+
+
+def test_resume_with_different_input_rewrites_no_side_output(
+    spark, transcripts_pdf, anchors_pdf, tmp_path, monkeypatch
+):
+    """The input guard runs before the side outputs start: resuming with
+    an input of another row count raises and leaves ``asof/`` and
+    ``enum_dims/`` as they were (same files, same mtimes)."""
+    import os
+
+    from astrospectro_spark.engine.lineage import FeatureRun
+    from astrospectro_spark.jobs import featurize_job
+
+    out, argv = _job_args(spark, transcripts_pdf, anchors_pdf, tmp_path)
+    # the bucket loop dies after one bucket; the side outputs land
+    real_run = FeatureRun.run
+    with monkeypatch.context() as mp:
+        mp.setattr(FeatureRun, "run", lambda self, turns, **kw: real_run(self, turns, fail_after=1))
+        with pytest.raises(RuntimeError, match="injected failure"):
+            featurize_job.main(argv)
+    assert _worker_threads() == []
+    assert _committed(spark, out) == [(0, "committed")]
+
+    def listing():
+        got = {}
+        for d in ("asof", "enum_dims"):
+            for root, dirs, files in os.walk(os.path.join(out, d)):
+                for name in dirs + files:
+                    path = os.path.join(root, name)
+                    got[os.path.relpath(path, out)] = os.stat(path).st_mtime_ns
+        return got
+
+    side = listing()
+    assert any(p.startswith("asof") for p in side) and any(p.startswith("enum_dims") for p in side)
+    fewer = str(tmp_path / "fewer.parquet")
+    spark.createDataFrame(transcripts_pdf.iloc[:-7]).write.parquet(fewer)
+    with pytest.raises(ValueError, match="resume with a different input"):
+        featurize_job.main([fewer if a == argv[1] else a for a in argv])
+    assert listing() == side
+    assert _worker_threads() == []
+
+    assert featurize_job.main(argv) == 0
+    assert _committed(spark, out) == [(0, "committed"), (1, "committed")]

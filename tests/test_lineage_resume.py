@@ -213,26 +213,36 @@ def _salted_hot(df):
     ],
 )
 def test_observed_checksums_equal_read_back(
-    spark, transcripts_sdf, tmp_path, featurizer, n_convs, n_buckets
+    spark, transcripts_sdf, tmp_path, monkeypatch, featurizer, n_convs, n_buckets
 ):
     """The lineage's (n_rows, checksum) is observed on the feature write
-    and (input_rows, input_checksum) comes from the stage fingerprint;
-    both equal a read-back checksum, in the crash half and the resume."""
+    and (input_rows, input_checksum) on the stage write, through the
+    stage fingerprint; both equal a read-back checksum, in the crash
+    half and the resume. Staging reads nothing back, and the fingerprint
+    lists exactly the non-empty buckets."""
     import json
     import os
 
     from pyspark.sql import functions as F
 
+    from astrospectro_spark.engine import lineage
     from astrospectro_spark.engine.lineage import _checksum
 
     turns = transcripts_sdf
     if n_convs:
         turns = turns.where(F.col("conv_id").isin([f"conv-{i:08d}" for i in range(n_convs)]))
     out = str(tmp_path / "x")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        FeatureRun(spark, out, n_buckets=n_buckets, featurizer=featurizer).run(
-            turns, fail_after=1
-        )
+
+    def no_pass(*a, **kw):
+        raise AssertionError("staging must not read the staged copy back")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(lineage, "_checksum", no_pass)
+        mp.setattr(lineage, "_bucket_checksums", no_pass)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            FeatureRun(spark, out, n_buckets=n_buckets, featurizer=featurizer).run(
+                turns, fail_after=1
+            )
     r = FeatureRun(spark, out, n_buckets=n_buckets, featurizer=featurizer, run_id="r2")
     stats = r.run(turns)
     assert stats["buckets_processed"] == n_buckets - 1
@@ -251,6 +261,9 @@ def test_observed_checksums_equal_read_back(
         assert (row.n_rows, row.checksum) == written
         sizes.append(row.n_rows)
     assert fingerprint["input_rows"] == turns.count() == sum(sizes)
+    assert sorted(fingerprint["buckets"]) == sorted(
+        str(b) for b, row in lin.items() if row.input_rows
+    )
     if n_convs:
         assert sizes.count(0) >= n_buckets - n_convs
     # the run's own records are those of its lineage rows
@@ -298,8 +311,13 @@ def test_input_checksums_without_fingerprint_sums(spark, transcripts_sdf, tmp_pa
 @pytest.fixture(scope="module")
 def job_resume(spark, transcripts_pdf, anchors_pdf, tmp_path_factory):
     """featurize_job.main resuming a run killed after 1 of 2 buckets,
-    with the salted hot path, enum dims and the as-of join; records the
-    Spark jobs of the resume and of each observed write in it."""
+    with the salted hot path, enum dims and the as-of join.
+
+    The outputs are written concurrently, so jobs are told apart by job
+    group: each observed write moves its own thread's jobs, from then
+    on, into a group named after its path (local properties are per
+    thread). Records each group's jobs when its write returns and when
+    main returns, and every job of the resume."""
     from astrospectro_spark.engine import lineage
     from astrospectro_spark.engine.skew import featurize_salted
     from astrospectro_spark.jobs import featurize_job
@@ -320,18 +338,21 @@ def job_resume(spark, transcripts_pdf, anchors_pdf, tmp_path_factory):
             spark.read.parquet(src), fail_after=1
         )
 
-    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
 
-    def jobs():
-        return set(tracker.getJobIdsForGroup())
+    def jobs(group=None):
+        bus.waitUntilEmpty()  # the tracker is fed by the listener bus
+        return set(tracker.getJobIdsForGroup(group))
 
-    writes = []
+    at_write = {}
     real_write = lineage.write_observed
 
     def write_observed(df, path, *aggs, **kw):
-        before = jobs()
+        sc.setLocalProperty("spark.jobGroup.id", path)
         got = real_write(df, path, *aggs, **kw)
-        writes.append({"path": path, "before": before, "after": jobs()})
+        at_write[path] = jobs(path)
         return got
 
     def no_pass(*a, **kw):
@@ -342,31 +363,35 @@ def job_resume(spark, transcripts_pdf, anchors_pdf, tmp_path_factory):
         mp.setattr(lineage, "_checksum", no_pass)
         mp.setattr(lineage, "_bucket_checksums", no_pass)
         before = jobs()
-        featurize_job.main(
-            ["--input", src, "--output", out, "--buckets", "2", "--enum-shuffle",
-             "--hot-threshold", str(hot), "--chunk-rows", str(chunk), "--anchors", anchors]
-        )
-        after = jobs()
-    return {"out": out, "before": before, "after": after, "writes": writes}
+        try:
+            featurize_job.main(
+                ["--input", src, "--output", out, "--buckets", "2", "--enum-shuffle",
+                 "--hot-threshold", str(hot), "--chunk-rows", str(chunk), "--anchors", anchors]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    at_end = {path: jobs(path) for path in at_write}
+    every = (jobs() - before).union(*at_end.values())
+    return {"out": out, "at_write": at_write, "at_end": at_end, "jobs": every}
 
 
 def test_featurize_job_resume_job_budget(job_resume):
     """The resume commits its bucket in one pass: no input-checksum pass
-    (the fixture fails on one), no read-back after the feature write
-    (only the lineage append runs before the next write), and the report
-    adds no job after the last write."""
+    (the fixture fails on one), and after each write its branch runs no
+    job but the bucket's lineage append — no read-back. The report is
+    written on the bucket loop's thread, after its branches are joined,
+    so a job it ran would count in that branch too."""
     import os
 
-    writes = job_resume["writes"]
     out = job_resume["out"]
-    assert [w["path"] for w in writes] == [
-        os.path.join(out, "features", "bucket=1"),
-        os.path.join(out, "enum_dims", "_writing"),
-        f"{out}/asof",
-    ]
-    assert len(writes[1]["before"] - writes[0]["after"]) == 1  # the lineage append
-    assert job_resume["after"] == writes[-1]["after"]  # report.json: no job
-    assert len(job_resume["after"] - job_resume["before"]) <= 16
+    bucket = os.path.join(out, "features", "bucket=1")
+    at_write, at_end = job_resume["at_write"], job_resume["at_end"]
+    assert sorted(at_write) == sorted(
+        [bucket, os.path.join(out, "enum_dims", "_writing"), f"{out}/asof"]
+    )
+    after_write = {path: len(at_end[path] - at_write[path]) for path in at_write}
+    assert after_write == {path: int(path == bucket) for path in at_write}
+    assert len(job_resume["jobs"]) <= 16
 
 
 def test_featurize_job_report(spark, job_resume, transcripts_pdf, anchors_pdf):

@@ -453,3 +453,48 @@ def test_expire_snapshots_and_orphan_gc(spark, table):
     with pytest.raises(FileNotFoundError):
         read_table(spark, table, snapshot_id=1)
     assert any(not os.path.exists(p) for p in old_files)
+
+
+def _curated(spark):
+    from astrospectro_spark.jobs.curate_job import FUNNEL_STAGES, curate
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
+    return curate(docs, min_quality=0.3).filter("keep").drop(*FUNNEL_STAGES)
+
+
+def _ts_nulls(spark):
+    import datetime as dt
+
+    ts = dt.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    return spark.createDataFrame(
+        [(1, ts, None, 1.5, "a"), (2, None, ts, None, None), (None, ts, ts, float("nan"), "c")],
+        "id long, ts timestamp, ts_ntz timestamp_ntz, x double, s string",
+    )
+
+
+def _empty(spark):
+    return spark.createDataFrame([], "id long, ts timestamp, s string")
+
+
+@pytest.mark.parametrize("frame", [_curated, _ts_nulls, _empty], ids=["curate", "ts-nulls", "empty"])
+def test_commit_summary_observed_equals_read_back(spark, table, frame):
+    """The (n_rows, checksum) a commit records is observed on its write;
+    it equals the checksum of the files that landed, for a curate
+    output, timestamps and NULLs, and an empty frame, and so does the
+    summary of a compaction."""
+    from astrospectro_spark.engine.lineage import _checksum
+    from astrospectro_spark.sources.snapshot_log import compact
+
+    def summary():
+        s = history(table)[-1]["summary"]
+        return s["n_rows"], s["checksum"]
+
+    df = frame(spark)
+    commit(table, df, "overwrite", partition="p")
+    assert summary() == _checksum(read_table(spark, table))
+    assert summary()[0] == df.count()
+    # a second file set in the same partition, then compact the two
+    commit(table, df.limit(1), "append", partition="p")
+    before = _checksum(read_table(spark, table))
+    assert compact(spark, table, partition="p") is not None
+    assert summary() == _checksum(read_table(spark, table)) == before

@@ -176,12 +176,16 @@ class FeatureRun:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
     def committed_buckets(self) -> set[int]:
+        return set(self._committed())
+
+    def _committed(self) -> dict[int, tuple[int, int]]:
+        """Committed bucket → its recorded input ``(rows, checksum)``."""
         # a fresh output dir has no ledger: answer without a Spark job
         # (collecting an empty createDataFrame still runs one)
         if not os.path.exists(self.lineage_dir):
-            return set()
+            return {}
         return {
-            r.bucket
+            r.bucket: (r.input_rows, r.input_checksum)
             for r in self.lineage().filter(F.col("status") == "committed").collect()
         }
 
@@ -274,21 +278,21 @@ class FeatureRun:
             return _bucket_checksums(staged, todo)
         return {int(b): (v[0], v[1]) for b, v in buckets.items()}
 
-    def _verify_committed(self, staged: DataFrame, done: set[int]) -> None:
-        """Full-content audit (opt-in): recompute each committed
-        bucket's INPUT checksum from the current (staged or
-        pre-bucketed) frame and compare with the lineage record — a
-        changed input that kept its row count fails here."""
-        recorded = {
-            r.bucket: (r.input_rows, r.input_checksum)
-            for r in self.lineage().filter(F.col("status") == "committed").collect()
-        }
-        for b in sorted(done):
-            got = _checksum(staged.filter(F.col("_bucket") == b).drop("_bucket"))
-            if got != recorded.get(b):
+    def _verify_committed(
+        self, bucketed: DataFrame, recorded: dict[int, tuple[int, int]]
+    ) -> None:
+        """Full-content audit (opt-in): recompute every committed
+        bucket's INPUT checksum from the passed input (bucketed) in one
+        grouped pass and compare with its lineage record — a changed
+        input that kept its row count fails here. The staged copy would
+        not do: on a resume it is the input of the first run."""
+        sums = _bucket_checksums(bucketed, sorted(recorded))
+        for b in sorted(recorded):
+            got = sums.get(b, (0, 0))
+            if got != recorded[b]:
                 raise ValueError(
                     f"bucket {b}: input content changed since commit "
-                    f"(recorded {recorded.get(b)}, recomputed {got}); "
+                    f"(recorded {recorded[b]}, recomputed {got}); "
                     f"use a fresh out_dir for a new input table"
                 )
 
@@ -303,12 +307,14 @@ class FeatureRun:
         A later ``run(turns)`` with the same frame reuses this step, so a
         caller that writes other outputs next to the features can make
         the guard pass before it rewrites any of them."""
-        done = self.committed_buckets()
+        recorded = self._committed()
+        done = set(recorded)
         todo = [b for b in range(self.n_buckets) if b not in done]
         prestaged = "_bucket" in turns.columns
         staged = turns if prestaged else (self._stage(turns) if todo else None)
-        if verify_input and done and staged is not None:
-            self._verify_committed(staged, done)
+        if verify_input and done:
+            audited = turns if prestaged else bucketize(turns, self.n_buckets)
+            self._verify_committed(audited, recorded)
         sums = self._input_checksums(staged, todo, prestaged) if todo else {}
         self._staged = _Staged(turns, verify_input, done, todo, staged, sums)
         return todo
@@ -329,8 +335,8 @@ class FeatureRun:
         ``fail_after=k`` injects a crash after k bucket commits (test
         hook for the kill-and-resume audit). ``verify_input=True``
         additionally re-checksums every already-committed bucket's
-        input against its lineage record before resuming (full read of
-        the committed partitions; off by default).
+        input against its lineage record before resuming (one grouped
+        pass over the passed input; off by default).
 
         The buckets are committed one after another. A :meth:`stage`
         call on the same ``turns`` (with ``verify_input`` if this call

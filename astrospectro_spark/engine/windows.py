@@ -20,6 +20,11 @@ with no windows. :func:`featurize_expr` runs them over ``conv_id``; the
 salted plan (``engine/skew.py``) runs the same layers over ts-range
 chunks of hot conversations, the stream over each micro-batch, and the
 stitch (:func:`chunk_carry`, :func:`stitch`) merges chunks per kind.
+The window algebra itself — growing-frame counts and sums, lag-difference
+rolling sums, tiled-block min/max, struct-max session extremes and the
+boundary carry — is one set of builders (:func:`grow_count` …
+:func:`carry`) that these layers and the driver's 183-column flagship
+(``queries.q_feature_vector_wide``, over ``user_id``) both call.
 
 Leakage contract: every frame ends at the CURRENT ROW
 (``rowsBetween(..., 0)`` / ``rangeBetween(..., 0)``) — no feature may
@@ -39,7 +44,7 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 SESSION_GAP_S = 1800.0
@@ -524,6 +529,92 @@ def project_inputs(
     return coded, key_cols
 
 
+# ---- the window builders: each trick is stated once here, over the
+# window spec (or partition and order columns) it is given, and the
+# transcript layers below and queries.q_feature_vector_wide both build
+# from them. Every one is exact: integer sums and differences, and
+# comparisons.
+
+
+def _grow(part: str, order: str, span_us: int | None) -> str:
+    upper = "current row" if span_us is None else f"{span_us + 1}L preceding"
+    return (
+        f"over (partition by {part} order by {order} "
+        f"range between unbounded preceding and {upper})"
+    )
+
+
+# Growing-frame difference instead of a sliding [-X, 0] range frame
+# (round-6): a sliding range frame is re-aggregated from scratch for
+# every row by Spark's SlidingWindowFunctionFrame — O(rows-in-frame)
+# updates PER ROW, which on a dense mega-conversation (3600 s frame ≈ 110
+# rows at ~33 s/turn) dominated the hot task. A frame with an UNBOUNDED
+# PRECEDING lower bound runs incrementally (O(1)/row):
+#   rows in [t-X, t]  =  rows in (-inf, t]  -  rows in (-inf, t-X)
+# Bounds are integer microseconds, so (-inf, t-X) == (-inf, t-X-1µs]
+# exactly; counts are ints and sums int64 over int columns, so the
+# differences are bit-identical to the sliding originals (empty "before"
+# frame: count 0, sum NULL → coalesce 0). Rows sharing the current order
+# value count regardless of the tiebreak (time-based semantics; equal-ts
+# is not leakage). SQL text, so that a caller builds each column with
+# one parse (see window_layers).
+def grow_count(part: str, order: str, span_us: int) -> str:
+    """SQL: rows of partition ``part`` with ``order`` in ``[t - span_us, t]``."""
+    return f"count(1) {_grow(part, order, None)} - count(1) {_grow(part, order, span_us)}"
+
+
+def grow_sum(c: str, part: str, order: str, span_us: int) -> str:
+    """SQL: sum of integer column ``c`` over the frame of :func:`grow_count`."""
+    return (
+        f"sum({c}) {_grow(part, order, None)} "
+        f"- coalesce(sum({c}) {_grow(part, order, span_us)}, 0)"
+    )
+
+
+def lagz(c: Column, k: int, w: WindowSpec) -> Column:
+    """``lag(c, k)`` over ``w``, with a missing lag (partition head) as 0."""
+    return F.coalesce(F.lag(c, k).over(w), F.lit(0))
+
+
+def roll_sum(cum: Column, k: int, w: WindowSpec) -> Column:
+    """Sum over the last ``k`` rows as a lag difference of the running
+    sum ``cum`` (round-6): Spark re-aggregates a sliding rows frame from
+    scratch per row (O(k) updates/row/function), while the difference is
+    O(1) and, over int64 sums, bit-identical. At a partition head the
+    missing lag counts as 0, so the running sum itself is the frame sum."""
+    return cum - lagz(cum, k, w)
+
+
+def blocks(c: str, combine, width: int, w: WindowSpec) -> Column:
+    """Min/max over the last ``width`` rows composed EXACTLY from a
+    staged :data:`ROLL_ROWS`-row min/max ``c``: ``combine`` (greatest or
+    least) of ``c`` at lags 0, 5, 10, ... — the blocks tile the frame,
+    so only the base-width frame slides. At partition heads the early
+    blocks already cover [1, t] and missing lags are NULL, which
+    greatest/least skip — identical to the frame extreme."""
+    return combine(
+        F.col(c), *[F.lag(c, j * ROLL_ROWS).over(w) for j in range(1, width // ROLL_ROWS)]
+    )
+
+
+def sess_max(x: Column, sid: Column, wcum: WindowSpec) -> Column:
+    """Within-session running max of ``x`` with no (key, session)
+    window (round-6; such a window costs its own Sort and buffer pass):
+    the session counter ``sid`` is nondecreasing in order, so the
+    lexicographic ``max(struct(sid, x))`` over the cumulative frame
+    ``wcum`` lands in the CURRENT session. Min via negation."""
+    return F.max(F.struct(sid.alias("s"), x.alias("x"))).over(wcum).getField("x")
+
+
+def carry(cum: Column, flag: Column, at_flag: Column, wcum: WindowSpec) -> Column:
+    """Boundary carry: ``cum`` minus ``at_flag`` as of the last row where
+    ``flag`` held (0 before any). With ``cum`` a running sum and
+    ``at_flag`` its value just before a session boundary, the
+    within-session running sum, exact over int64; with ``cum`` the row
+    number, the rows since the flag."""
+    return cum - F.coalesce(F.last(F.when(flag, at_flag), ignorenulls=True).over(wcum), F.lit(0))
+
+
 def window_layers(
     key: list[str],
     gap_s: float = SESSION_GAP_S,
@@ -570,36 +661,14 @@ def window_layers(
     def rlit(r: str) -> str:
         return f"xxhash64('{r}')" if enum_shuffle else f"'{r}'"
 
-    # growing-frame difference instead of a sliding [-X, 0] range frame
-    # (round-6): a sliding range frame is re-aggregated from scratch for
-    # every row by Spark's SlidingWindowFunctionFrame — O(rows-in-frame)
-    # updates PER ROW, which on a dense mega-conversation (3600 s frame ≈
-    # 110 rows at ~33 s/turn) dominated the hot task. A frame with an
-    # UNBOUNDED PRECEDING lower bound runs incrementally (O(1)/row):
-    #   rows in [t-X, t]  =  rows in (-inf, t]  -  rows in (-inf, t-X)
-    # Bounds are integer microseconds, so (-inf, t-X) == (-inf, t-X-1µs]
-    # exactly; counts are ints and sums int64 over int text_len, so the
-    # differences are bit-identical to the sliding originals (empty
-    # "before" frame: count 0, sum NULL → coalesce 0). Rows sharing the
-    # current ts count regardless of turn_idx (time-based semantics;
-    # equal-ts is not leakage).
-    def wgrow(sec: int | None) -> str:
-        upper = "current row" if sec is None else f"{sec * 1_000_000 + 1}L preceding"
-        return (
-            f"over (partition by {part} order by _usq "
-            f"range between unbounded preceding and {upper})"
-        )
-
+    # the range family orders by the staged epoch-µs _usq
     def rate(sec: int) -> tuple[Kind, Column]:
         return _secs(sec), F.expr(
-            f"cast(count(1) {wgrow(None)} - count(1) {wgrow(sec)} as double)"
+            f"cast({grow_count(part, '_usq', sec * 1_000_000)} as double)"
         )
 
     def tsum(sec: int) -> tuple[Kind, Column]:
-        return _secs(sec), F.expr(
-            f"cast(sum(text_len) {wgrow(None)} "
-            f"- coalesce(sum(text_len) {wgrow(sec)}, 0) as bigint)"
-        )
+        return _secs(sec), F.expr(grow_sum("text_len", part, "_usq", sec * 1_000_000))
 
     range_family = {"rate_60s": rate(RATE_WINDOW_S)}
     if wide:
@@ -650,6 +719,7 @@ def window_layers(
         },
         {
             SESSION_COUNTER: sql(SUM, f"cast(sum(_sb) {wcum} as int)"),
+            # carry() as SQL text: the rows since the last boundary
             "turn_in_session": sql(
                 SESS_SUM,
                 f"cast(_rn - coalesce(last(case when _sb = 1 then _rn - 1 end, true) "
@@ -697,12 +767,8 @@ def _wide_layers(w, wcum, us, gap_s) -> list[Layer]:
         return _rows(k), (us - F.lag(us, k).over(w)).cast("double") / F.lit(1e6)
 
     # ---- W0: one WindowExec over (conv)(ts, turn_idx) frames. Only the
-    # base-width min/max frames slide; the 10/20-row frames tile into
-    # base-width blocks, so W1 composes them EXACTLY: max over [t-19, t]
-    # = greatest of the 5-row block maxima at lags 0/5/10/15 (at
-    # partition heads the early blocks already cover [1, t] and missing
-    # lags are NULL, which greatest/least skip — identical to the frame
-    # max).
+    # base-width min/max frames slide; W1 composes the 10/20-row ones
+    # from them (:func:`blocks`).
     w0: Layer = {
         "_lag_tll": (_rows(1), F.lag(tll).over(w)),
         "_lag2_tll": (_rows(2), F.lag(tll, 2).over(w)),
@@ -770,76 +836,45 @@ def _wide_layers(w, wcum, us, gap_s) -> list[Layer]:
         ),
     }
 
-    # ---- W1: windows over W0-derived columns, one node.
-    #
-    # The rolling sum/mean/std family lives HERE as cumulative
-    # differences of the W0 running sums (round-6 optimization): Spark
-    # re-aggregates a sliding rows frame from scratch per row (O(k)
-    # updates/row/function), so the 10/20-row frames cost ~30 update
-    # calls per row per statistic; the same values fall out of O(1) lag
-    # differences of cum_text_len/_ctl2/_active_us/cum-role counters.
-    # All sums are exact int64 (and Average's double accumulation over
-    # small ints is exact), so sum, sum/count and the moment formulas
-    # are bit-identical to the sliding originals. A difference against
-    # lag k reads k-1 rows back: at a partition head the missing lag
-    # counts as 0, so the running sum itself is the frame sum.
-    def lagz(c: Column, k: int) -> Column:
-        return F.coalesce(F.lag(c, k).over(w), F.lit(0))
-
-    def blocks(c: str, combine, width: int) -> Column:
-        return combine(
-            F.col(c),
-            *[F.lag(c, j * ROLL_ROWS).over(w) for j in range(1, width // ROLL_ROWS)],
-        )
-
+    # ---- W1: windows over W0-derived columns, one node. The rolling
+    # sum/mean/std family is lag differences of the W0 running sums
+    # (:func:`roll_sum`); all sums are exact int64 (and Average's double
+    # accumulation over small ints is exact), so sum, sum/count and the
+    # moment formulas are bit-identical to the sliding originals. The
+    # session family rides the wcum frame (:func:`sess_max`,
+    # :func:`carry`); sentinel −1 stands in for "no real gap yet" (gaps
+    # are >= 0; boundary rows and the rn=1 NULL-gap row map to −1,
+    # translated back to NULL by derive).
     cum_tl = F.col("cum_text_len")
     ctl2 = F.col("_ctl2")
     act = F.col("_active_us")
     n5 = F.least(rn, F.lit(ROLL_ROWS))
     n10 = F.least(rn, F.lit(WIDE_ROLL10))
     n20 = F.least(rn, F.lit(WIDE_ROLL20))
-    s5 = cum_tl - lagz(cum_tl, ROLL_ROWS)
-    s10 = cum_tl - lagz(cum_tl, WIDE_ROLL10)
-    s20 = cum_tl - lagz(cum_tl, WIDE_ROLL20)
+    s5 = roll_sum(cum_tl, ROLL_ROWS, w)
+    s10 = roll_sum(cum_tl, WIDE_ROLL10, w)
+    s20 = roll_sum(cum_tl, WIDE_ROLL20, w)
     m5, m10, m20 = s5 / n5, s10 / n10, s20 / n20
-    v5 = (ctl2 - lagz(ctl2, ROLL_ROWS)) / n5 - m5 * m5
-    v10 = (ctl2 - lagz(ctl2, WIDE_ROLL10)) / n10 - m10 * m10
-    v20 = (ctl2 - lagz(ctl2, WIDE_ROLL20)) / n20 - m20 * m20
-
-    # ---- the session family WITHOUT a (conv_id, session_id) WindowExec
-    # (round-6): such a window costs a dedicated Sort + buffer pass even
-    # though it reuses the exchange, so every member is expressed over
-    # the existing wcum frame:
-    # - max/min: lexicographic struct-max — session_id is nondecreasing
-    #   in (ts, turn_idx) order, so max(struct(session_id, x)) over the
-    #   conv prefix lands in the CURRENT session → within-session running
-    #   max of x (min via negation). Sentinel −1 stands in for "no real
-    #   gap yet" (gaps are >= 0; boundary rows and the rn=1 NULL-gap row
-    #   map to −1, translated back to NULL by derive).
-    # - sums: cumulative minus its value carried at the last boundary,
-    #   exact int64.
+    v5 = roll_sum(ctl2, ROLL_ROWS, w) / n5 - m5 * m5
+    v10 = roll_sum(ctl2, WIDE_ROLL10, w) / n10 - m10 * m10
+    v20 = roll_sum(ctl2, WIDE_ROLL20, w) / n20 - m20 * m20
     sid = F.col(SESSION_COUNTER)
-
-    def sess_max(x: Column) -> Column:
-        return F.max(F.struct(sid.alias("s"), x.alias("x"))).over(wcum).getField("x")
-
-    def sess_sum(cum: Column, at_boundary: Column) -> Column:
-        carry = F.last(F.when(sb == 1, at_boundary), ignorenulls=True).over(wcum)
-        return cum - F.coalesce(carry, F.lit(0))
-
+    b = sb == 1
     ctrap = F.coalesce(F.sum("_trap_s").over(wcum), F.lit(0))
     ctrapn = F.count("_trap_s").over(wcum)
     w1: Layer = {
-        "sess_max_text_len": (SESS_MAX, sess_max(tl).cast("int")),
-        "sess_min_text_len": (SESS_MIN, (-sess_max(-tl)).cast("int")),
+        "sess_max_text_len": (SESS_MAX, sess_max(tl, sid, wcum).cast("int")),
+        "sess_min_text_len": (SESS_MIN, (-sess_max(-tl, sid, wcum)).cast("int")),
         "_sgap": (
             SESS_MAX,
-            sess_max(F.when((sb == 0) & gap.isNotNull(), gap).otherwise(F.lit(-1.0))),
+            sess_max(
+                F.when((sb == 0) & gap.isNotNull(), gap).otherwise(F.lit(-1.0)), sid, wcum
+            ),
         ),
-        "sess_cum_text_len": (SESS_SUM, sess_sum(cum_tl, cum_tl - tll).cast("long")),
-        "_sess_tlen2": (SESS_SUM, sess_sum(ctl2, ctl2 - tll * tll)),
-        "_sess_trap": (SESS_SUM, sess_sum(ctrap, ctrap)),
-        "_trapn_sess": (SESS_SUM, sess_sum(ctrapn, ctrapn)),
+        "sess_cum_text_len": (SESS_SUM, carry(cum_tl, b, cum_tl - tll, wcum).cast("long")),
+        "_sess_tlen2": (SESS_SUM, carry(ctl2, b, ctl2 - tll * tll, wcum)),
+        "_sess_trap": (SESS_SUM, carry(ctrap, b, ctrap, wcum)),
+        "_trapn_sess": (SESS_SUM, carry(ctrapn, b, ctrapn, wcum)),
         "cum_role_changes": (SUM, F.sum("role_changed").over(wcum).cast("long")),
         "roll_role_changes_10": (
             _rows(WIDE_ROLL10),
@@ -867,35 +902,29 @@ def _wide_layers(w, wcum, us, gap_s) -> list[Layer]:
         ),
         "roll_assistant_rate_10": (
             r10,
-            (F.col("cum_count_assistant") - lagz(F.col("cum_count_assistant"), WIDE_ROLL10))
-            / n10,
+            roll_sum(F.col("cum_count_assistant"), WIDE_ROLL10, w) / n10,
         ),
-        "roll_tool_rate_10": (
-            r10,
-            (F.col("cum_tool_set") - lagz(F.col("cum_tool_set"), WIDE_ROLL10)) / n10,
-        ),
+        "roll_tool_rate_10": (r10, roll_sum(F.col("cum_tool_set"), WIDE_ROLL10, w) / n10),
         # rn=1 guard: the sliding original divided a NULL sum by a zero
         # count (NULL under ANSI); the diff form's dividend is 0, which
         # ANSI-errors on /0 — so the head row is NULLed explicitly, which
         # is the identical value.
         "gap_roll_mean_5": (
             g5,
-            F.when(rn > 1, (act - lagz(act, ROLL_ROWS)) / F.least(rn - 1, F.lit(ROLL_ROWS)))
+            F.when(rn > 1, roll_sum(act, ROLL_ROWS, w) / F.least(rn - 1, F.lit(ROLL_ROWS)))
             / F.lit(1e6),
         ),
         "gap_roll_mean_10": (
             g10,
-            F.when(
-                rn > 1, (act - lagz(act, WIDE_ROLL10)) / F.least(rn - 1, F.lit(WIDE_ROLL10))
-            )
+            F.when(rn > 1, roll_sum(act, WIDE_ROLL10, w) / F.least(rn - 1, F.lit(WIDE_ROLL10)))
             / F.lit(1e6),
         ),
-        "roll_max_text_len_10": (r10, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL10)),
-        "roll_min_text_len_10": (r10, blocks("roll_min_text_len_5", F.least, WIDE_ROLL10)),
-        "roll_max_text_len_20": (r20, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL20)),
-        "roll_min_text_len_20": (r20, blocks("roll_min_text_len_5", F.least, WIDE_ROLL20)),
-        "gap_roll_max_10": (g10, blocks("gap_roll_max_5", F.greatest, WIDE_ROLL10)),
-        "gap_roll_min_10": (g10, blocks("gap_roll_min_5", F.least, WIDE_ROLL10)),
+        "roll_max_text_len_10": (r10, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL10, w)),
+        "roll_min_text_len_10": (r10, blocks("roll_min_text_len_5", F.least, WIDE_ROLL10, w)),
+        "roll_max_text_len_20": (r20, blocks("roll_max_text_len_5", F.greatest, WIDE_ROLL20, w)),
+        "roll_min_text_len_20": (r20, blocks("roll_min_text_len_5", F.least, WIDE_ROLL20, w)),
+        "gap_roll_max_10": (g10, blocks("gap_roll_max_5", F.greatest, WIDE_ROLL10, w)),
+        "gap_roll_min_10": (g10, blocks("gap_roll_min_5", F.least, WIDE_ROLL10, w)),
     }
     return [w0, locals_, w1]
 

@@ -29,16 +29,34 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from astrospectro_spark.engine.asof import asof_join, asof_join_grouped
-
-SESSION_GAP_S = 1800
+from astrospectro_spark.engine.windows import (
+    _TAU,
+    SESSION_GAP_S,
+    _ts_us,
+    _ts_us_sql,
+    blocks,
+    carry,
+    grow_count,
+    grow_sum,
+    lagz,
+    roll_sum,
+    sess_max,
+)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _us(col="ts"):
-    return F.unix_micros(F.col(col).cast("timestamp"))
+def snap6(c):
+    """Tie-safe round(x, 6) for RATIONAL expressions: scale to the 1e-6
+    grid, round to an integer, divide back. Exact decimal ties
+    (x.xxxxxx5) round by shortest-decimal-string in Spark but by binary
+    value in DuckDB — at INTEGER scale the two agree for every double
+    (an exact .5 is dyadic), so the snapped value is engine-independent.
+    Irrational chains (sqrt/exp/log) cannot land on a decimal tie and
+    keep plain round(6)."""
+    return F.round(F.round(c * 1e6) / 1e6, 6)
 
 
 _W = lambda: Window.partitionBy("user_id").orderBy("ts", "event_id")  # noqa: E731
@@ -53,7 +71,7 @@ def q_sessionize(spark, sf_dir):
     """ts-gap sessionization (SURVEY §2.5 W1; reference peak detection
     src/pipeline/peak_detector.py:94-132)."""
     ev = _t(spark, sf_dir, "events")
-    gap_s = (_us() - F.lag(_us()).over(_W())).cast("double") / 1e6
+    gap_s = (_ts_us() - F.lag(_ts_us()).over(_W())).cast("double") / 1e6
     df = ev.withColumn(
         "session_id",
         F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(_wcum()).cast("long"),
@@ -62,7 +80,7 @@ def q_sessionize(spark, sf_dir):
     return df.select(
         "event_id",
         "user_id",
-        _us().alias("ts_us"),
+        _ts_us().alias("ts_us"),
         "session_id",
         F.row_number().over(ws).cast("long").alias("turn_in_session"),
     )
@@ -78,7 +96,9 @@ def q_lag_delta(spark, sf_dir):
         "event_id",
         "user_id",
         F.round((F.col("value") - F.lag("value").over(w)), 6).alias("lag1_value_delta"),
-        F.round(((_us() - F.lag(_us()).over(w)).cast("double") / 1e6), 6).alias("lag1_ts_gap_s"),
+        F.round(((_ts_us() - F.lag(_ts_us()).over(w)).cast("double") / 1e6), 6).alias(
+            "lag1_ts_gap_s"
+        ),
         F.round((F.lead("value").over(w) - F.col("value")), 6).alias("label_lead1_value_delta"),
     )
 
@@ -103,7 +123,7 @@ def q_rolling_rate(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     wr = (
         Window.partitionBy("user_id")
-        .orderBy(_us())
+        .orderBy(_ts_us())
         .rangeBetween(-86_400 * 1_000_000, 0)
     )
     return ev.select(
@@ -213,7 +233,7 @@ def q_session_stats(spark, sf_dir):
     (of the already-aggregated partials) instead of a second full-table
     exchange on event_id."""
     ev = _t(spark, sf_dir, "events")
-    gap_s = (_us() - F.lag(_us()).over(_W())).cast("double") / 1e6
+    gap_s = (_ts_us() - F.lag(_ts_us()).over(_W())).cast("double") / 1e6
     ev = ev.withColumn(
         "session_id",
         F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(_wcum()).cast("long"),
@@ -222,7 +242,9 @@ def q_session_stats(spark, sf_dir):
         ev.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round((F.max(_us()) - F.min(_us())).cast("double") / 1e6, 6).alias("duration_s"),
+            F.round((F.max(_ts_us()) - F.min(_ts_us())).cast("double") / 1e6, 6).alias(
+                "duration_s"
+            ),
             F.round(F.avg("value"), 6).alias("mean_value"),
             F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).cast("long").alias("n_errors"),
         )
@@ -386,7 +408,7 @@ def q_regression_slope(spark, sf_dir):
     conditioning discipline q_moments uses (slope is shift-invariant,
     so semantics are unchanged)."""
     ev = _t(spark, sf_dir, "events")
-    us = _us()
+    us = _ts_us()
     x = (us - F.min(us).over(Window.partitionBy("user_id"))).cast("double") / 1e6
     return (
         ev.withColumn("_x", x)
@@ -440,7 +462,7 @@ def q_trapezoid_auc(spark, sf_dir):
     (y_i + y_{i-1})/2 * dt)."""
     ev = _t(spark, sf_dir, "events")
     w = _W()
-    x = _us().cast("double") / 1e6
+    x = _ts_us().cast("double") / 1e6
     seg = (F.col("value") + F.lag("value").over(w)) / 2 * (x - F.lag(x).over(w))
     return (
         ev.withColumn("_seg", seg)
@@ -501,7 +523,7 @@ def q_profile_morphology(spark, sf_dir):
     unordered windows over user_id, the wing segments an ordered window
     on the same key, the final groupBy reuses the partitioning."""
     ev = _t(spark, sf_dir, "events")
-    us = _us()
+    us = _ts_us()
     wp = Window.partitionBy("user_id")
     wo = _W()
     v = F.col("value")
@@ -632,7 +654,7 @@ def q_feature_vector(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     w = _W()
     wcum = _wcum()
-    us = _us()
+    us = _ts_us()
     gap_s = (us - F.lag(us).over(w)).cast("double") / 1e6
     df = ev.withColumn("lag1_ts_gap_s", F.round(gap_s, 6))
     df = df.withColumn(
@@ -640,16 +662,7 @@ def q_feature_vector(spark, sf_dir):
         F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(wcum).cast("long"),
     )
     ws = Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
-    # growing-frame difference for the 1d rate (O(1)/row; exact int —
-    # see q_feature_vector_wide): count[t-1d, t] = count(-inf, t] minus
-    # count(-inf, t-1d)
-    _wle = Window.partitionBy("user_id").orderBy(us).rangeBetween(
-        Window.unboundedPreceding, 0
-    )
-    _wbef = Window.partitionBy("user_id").orderBy(us).rangeBetween(
-        Window.unboundedPreceding, -86_400 * 1_000_000 - 1
-    )
-    rate_1d = F.count(F.lit(1)).over(_wle) - F.count(F.lit(1)).over(_wbef)
+    rate_1d = F.expr(grow_count("user_id", _ts_us_sql(), 86_400 * 1_000_000))
     marker = F.when(F.col("event_type").isin("purchase", "signup"), F.col("event_type"))
     return df.select(
         "event_id",
@@ -676,71 +689,64 @@ def q_feature_vector(spark, sf_dir):
 
 def q_feature_vector_wide(spark, sf_dir):
     """FLAGSHIP-WIDE: the 183-column locked per-turn feature schema in
-    ONE window plan — the full graft of the reference's 174-feature
-    battery + post-merge columns
-    (src/pipeline/feature_engineering.py:1222-1358, dry-run name lock
-    :277-285). Every window shares partitionBy(user_id) (ordered, row-
-    frame, range-frame, and unordered variants of the SAME key), so
-    Catalyst plans a single hash exchange; turn_in_session,
-    session_elapsed_s, sess_cum_value and same_type_streak use the
-    boundary-carry trick instead of a second (user, session) exchange.
-    Composites (sigmoid/Gaussian/ramp/clip/binning/softsign) are
-    row-wise codegen expressions.
-
-    Cross-engine exactness for the windowed sums: ``value`` carries
-    exactly 2 decimals, so sums run over ``_vc = round(value*100)``
-    int64 cents — integer window arithmetic is bit-identical in any
-    engine (the same discipline the transcript tier uses with int
-    text_len), and a single final divide by 100 restores the scale.
-    Doubles derived from identical ints are themselves identical.
-    Higher moments (running/session skewness & kurtosis) use
-    ``_vi = least(_vc div 100, 1000)`` integer units so the 4th-power
-    cumulative sums stay inside int64 (overflow at ~9e6 rows/entity —
-    far above any conversation here; the engine tier caps the same
-    way).
-
-    Per-SESSION running aggregates without a (user, session) exchange:
-    subtractable aggregates (sums/counts) carry the cumulative value at
-    the last session boundary; max/min use the lexicographic
-    struct-max trick — ``max(struct(session_id, x))`` over the
-    cumulative frame lands on the current session because session_id
-    is nondecreasing, giving the within-session running max of x. The
-    DuckDB oracle computes the same values with plain
+    ONE window plan — the graft of the reference's 174-feature battery +
+    post-merge columns (src/pipeline/feature_engineering.py:1222-1358,
+    dry-run name lock :277-285). Every window is partitioned by user_id
+    alone, so Catalyst plans a single hash exchange, and its window
+    algebra is the engine's (:mod:`astrospectro_spark.engine.windows`):
+    growing-frame rates and sums, lag-difference rolling sums, 5-row
+    block min/max, boundary carries and struct-max session extremes. The
+    DuckDB oracle computes the same values with plain frames and
     (user_id, session_id) windows.
 
-    The main-sequence-delta residual (reference A7,
-    feature_engineering.py:1715-1752) is inlined as ms_poly_pred /
-    ms_delta_resid: per-entity deg-2 Cramer fit from unordered-window
-    moment sums over the SAME partition key (term-for-term identical
-    to the oracle; round(4) absorbs the engines' different
-    double-summation orders, same discipline as q_poly_residuals)."""
+    What is specific to this query:
+
+    - windowed sums run over ``_vc = round(value*100)`` int64 cents:
+      ``value`` carries exactly 2 decimals, so integer window arithmetic
+      is bit-identical in any engine and one final divide by 100
+      restores the scale;
+    - running and session skewness/kurtosis use ``_vi = least(_vc div
+      100, 1000)`` integer units, so the 4th-power sums stay inside
+      int64 (overflow at ~9e6 rows per entity);
+    - the main-sequence-delta residual (reference A7,
+      feature_engineering.py:1715-1752) is ms_poly_pred /
+      ms_delta_resid: a per-entity deg-2 Cramer fit from
+      whole-partition moment sums, term for term the oracle's; round(4)
+      absorbs the engines' different double-summation orders, as in
+      q_poly_residuals."""
     ev = _t(spark, sf_dir, "events")
     w = _W()
     wcum = _wcum()
-    wp = Window.partitionBy("user_id")
-    us = _us()
+    # whole-partition aggregates run on the ordered spec, so they share
+    # its Window passes instead of taking their own
+    wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    us = _ts_us()
     v = F.col("value")
-    gap_s = (us - F.lag(us).over(w)).cast("double") / 1e6
+    k = F.get_json_object("props", "$.k").cast("long")
     # staging layers as BATCHED projections: each withColumns dict of
     # independent expressions collapses into ONE WindowExec pass (the
-    # same layering discipline as engine/windows.window_layers)
-    df = ev.withColumns(
+    # same layering discipline as engine/windows.window_layers). The
+    # range family runs first, while the rows are narrow: its Sort by
+    # _us then carries the input columns, not the staged ones.
+    day = 86_400 * 1_000_000
+    spans = {"1d": day, "7d": 7 * day, "30d": 30 * day, "12h": day // 2}
+    df = ev.withColumns({"_us": us, "_vc": F.round(v * 100).cast("long")})
+    df = df.withColumns(
         {
-            "_us": us,
-            "_gap": gap_s,
+            **{f"_n{s}": F.expr(grow_count("user_id", "_us", n)) for s, n in spans.items()},
+            **{f"_s{s}": F.expr(grow_sum("_vc", "user_id", "_us", n)) for s, n in spans.items()},
+        }
+    )
+    rate = {s: F.col(f"_n{s}") for s in spans}
+    vsum = {s: F.col(f"_s{s}") for s in spans}
+    df = df.withColumns(
+        {
             "_gap_us": us - F.lag(us).over(w),
-            "_sb": F.when(gap_s > SESSION_GAP_S, 1).otherwise(0),
             "_rn": F.row_number().over(w),
-            "_vc": F.round(v * 100).cast("long"),
             "_tc": F.when(
                 ~F.col("event_type").eqNullSafe(F.lag("event_type").over(w)), 1
             ).otherwise(0),
-            # 5-row block min/max staged once: the 10/20/50-row rolling
-            # min/max are EXACT compositions (greatest/least of this
-            # block at lags 0/5/.../45 — blocks tile the frame; at
-            # partition heads the early blocks already cover [1, t] and
-            # missing lags are NULL, which greatest/least skip).
-            # Comparisons, not sums — exact for doubles too.
+            # the 5-row blocks of the 10/20/50-row min/max (blocks)
             "_vmax5": F.max(v).over(w.rowsBetween(-4, 0)),
             "_vmin5": F.min(v).over(w.rowsBetween(-4, 0)),
         }
@@ -755,18 +761,21 @@ def q_feature_vector_wide(spark, sf_dir):
             "_ef": F.when(F.col("event_type") == "error", 1).otherwise(0),
         }
     )
-    # second stage: cumulative int sums feed further windows (carry);
-    # _sid staged so the struct-max session trick can reference it
-    vi = F.col("_vi")
-    seg_sess = F.when(
-        (F.col("_sb") == 1) | (F.col("_rn") == 1), F.lit(0)
-    ).otherwise((F.col("_vc") + F.col("_lagvc")) * F.col("_gap_us"))
-    _kst = F.get_json_object("props", "$.k").cast("long")
+    gap_s = F.col("_gap_us").cast("double") / 1e6
+    df = df.withColumns({"_gap": gap_s, "_sb": F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)})
+    # second stage: the running sums that the rolling differences and
+    # the session carries read
+    rn, vc, vi = F.col("_rn"), F.col("_vc"), F.col("_vi")
+    sb = F.col("_sb") == 1
+    seg_sess = F.when(sb | (rn == 1), F.lit(0)).otherwise(
+        (vc + F.col("_lagvc")) * F.col("_gap_us")
+    )
     df = df.withColumns(
         {
             "_cvc": F.sum("_vc").over(wcum),
-            "_cvc2": F.sum(F.col("_vc") * F.col("_vc")).over(wcum),
+            "_cvc2": F.sum(vc * vc).over(wcum),
             "_sid": F.sum("_sb").over(wcum).cast("long"),
+            "_tis": carry(rn, sb, rn - 1, wcum),
             "_cvi": F.sum(vi).over(wcum),
             "_cvi2": F.sum(vi * vi).over(wcum),
             "_cvi3": F.sum(vi * vi * vi).over(wcum),
@@ -774,214 +783,116 @@ def q_feature_vector_wide(spark, sf_dir):
             "_chigh": F.sum("_hi").over(wcum),
             "_cerr": F.sum("_ef").over(wcum),
             "_cseg": F.sum(seg_sess).over(wcum),
-            # running sums staged for the rolling-frame diff forms
-            # (round-6: sliding integer sums/avgs/counts are computed as
-            # O(1) lag-differences of these cumulatives instead of the
-            # O(frame)/row sliding re-aggregation; exact int64, so every
-            # derived value is bit-identical — see engine/windows)
             "_cgap": F.sum("_gap_us").over(wcum),
-            "_ck": F.sum(_kst).over(wcum),
-            "_ckn": F.count(_kst).over(wcum),
-            # gap block max/min (see _vmax5): staged after _gap exists
+            "_ck": F.sum(k).over(wcum),
+            "_ckn": F.count(k).over(wcum),
             "_gmax5": F.max("_gap").over(w.rowsBetween(-4, 0)),
             "_gmin5": F.min("_gap").over(w.rowsBetween(-4, 0)),
+            "_u0": F.min("_us").over(wall),
+            "_u1": F.max("_us").over(wall),
         }
     )
     # per-entity deg-2 fit inputs: x normalized to [0,1] on the entity's
-    # time span (well conditioned), then unordered-window moment sums
-    wp0 = Window.partitionBy("user_id")
-    span = F.greatest(F.max("_us").over(wp0) - F.min("_us").over(wp0), F.lit(1))
+    # time span (well conditioned), then whole-partition moment sums
     df = df.withColumn(
-        "_x", (F.col("_us") - F.min("_us").over(wp0)).cast("double") / span.cast("double")
+        "_x",
+        (F.col("_us") - F.col("_u0")).cast("double")
+        / F.greatest(F.col("_u1") - F.col("_u0"), F.lit(1)).cast("double"),
     )
     xx = F.col("_x")
+    # the session family over those sums, each staged once: sums by
+    # boundary carry (a boundary row's trapezoid segment is zeroed, so
+    # the trapezoid's carry is the plain cumulative value), extremes by
+    # struct-max; -1 marks "no in-session gap yet"
+    sid = F.col("_sid")
+    cvc, cvc2, cseg = F.col("_cvc"), F.col("_cvc2"), F.col("_cseg")
     df = df.withColumns(
         {
-            "_pn": F.count(F.lit(1)).over(wp0).cast("double"),
-            "_ps1": F.sum(xx).over(wp0),
-            "_ps2": F.sum(xx * xx).over(wp0),
-            "_ps3": F.sum(xx * xx * xx).over(wp0),
-            "_ps4": F.sum(xx * xx * xx * xx).over(wp0),
-            "_pt0": F.sum(v).over(wp0),
-            "_pt1": F.sum(xx * v).over(wp0),
-            "_pt2": F.sum(xx * xx * v).over(wp0),
+            "_scv": carry(cvc, sb, cvc - vc, wcum),
+            "_scv2": carry(cvc2, sb, cvc2 - vc * vc, wcum),
+            "_shi": carry(F.col("_chigh"), sb, F.col("_chigh") - F.col("_hi"), wcum),
+            "_serr": carry(F.col("_cerr"), sb, F.col("_cerr") - F.col("_ef"), wcum),
+            "_si1": carry(F.col("_cvi"), sb, F.col("_cvi") - vi, wcum),
+            "_si2": carry(F.col("_cvi2"), sb, F.col("_cvi2") - vi * vi, wcum),
+            "_si3": carry(F.col("_cvi3"), sb, F.col("_cvi3") - vi * vi * vi, wcum),
+            "_si4": carry(F.col("_cvi4"), sb, F.col("_cvi4") - vi * vi * vi * vi, wcum),
+            "_sauc": carry(cseg, sb, cseg, wcum),
+            "_smax": sess_max(vc, sid, wcum),
+            "_smin": -sess_max(-vc, sid, wcum),
+            "_sgap": sess_max(
+                F.when((F.col("_sb") == 0) & (rn > 1), F.col("_gap_us")).otherwise(F.lit(-1)),
+                sid,
+                wcum,
+            ),
+            # the fit's moment sums
+            "_pn": F.count(F.lit(1)).over(wall).cast("double"),
+            "_ps1": F.sum(xx).over(wall),
+            "_ps2": F.sum(xx * xx).over(wall),
+            "_ps3": F.sum(xx * xx * xx).over(wall),
+            "_ps4": F.sum(xx * xx * xx * xx).over(wall),
+            "_pt0": F.sum(v).over(wall),
+            "_pt1": F.sum(xx * v).over(wall),
+            "_pt2": F.sum(xx * xx * v).over(wall),
+            "_vavg": F.avg(v).over(wall),
         }
     )
-    # time-range rate/sum family in GROWING-FRAME form: count/sum over
-    # [t-X, t] = the value over (-inf, t] minus the value over
-    # (-inf, t-X) — two unbounded-preceding frames Spark evaluates
-    # incrementally (O(1)/row), where the sliding [-X, 0] originals are
-    # re-aggregated per row (O(rows-in-frame)). Integer counts and
-    # int64 cent-sums make the differences bit-identical.
-    def _wgr(off_us: int):
-        return wp.orderBy("_us").rangeBetween(Window.unboundedPreceding, off_us)
-
-    _cnt_le = F.count(F.lit(1)).over(_wgr(0))
-    _svc_le = F.sum("_vc").over(_wgr(0))
-
-    def _r_cnt(off_us: int):
-        return _cnt_le - F.count(F.lit(1)).over(_wgr(-off_us - 1))
-
-    def _r_svc(off_us: int):
-        return _svc_le - F.coalesce(F.sum("_vc").over(_wgr(-off_us - 1)), F.lit(0))
-
-    _US_1D, _US_7D = 86_400 * 1_000_000, 7 * 86_400 * 1_000_000
-    _US_30D, _US_12H = 30 * 86_400 * 1_000_000, 12 * 3600 * 1_000_000
     w5 = w.rowsBetween(-4, 0)
     w10 = w.rowsBetween(-9, 0)
     w20 = w.rowsBetween(-19, 0)
-    # rolling-frame cumulative diffs (exact int64; NULL-head handling
-    # matches the sliding originals — see each use site)
-    rn_ = F.col("_rn")
-
-    def _lagz(c, n):
-        return F.coalesce(F.lag(c, n).over(w), F.lit(0))
-
-    def _vc_sum(n):
-        return F.col("_cvc") - _lagz(F.col("_cvc"), n)
-
-    def _vc2_sum(n):
-        return F.col("_cvc2") - _lagz(F.col("_cvc2"), n)
-
-    def _nrows(n):
-        return F.least(rn_, F.lit(n))
-
-    def _gap_sum(n):
-        return F.col("_cgap") - _lagz(F.col("_cgap"), n)
-
-    def _gap_cnt(n):
-        return F.least(rn_ - 1, F.lit(n))
-
-    def _gap_mean_us(n):
-        # head row: the sliding original divides a NULL sum by a zero
-        # count (NULL); the diff form NULLs it explicitly
-        return F.when(rn_ > 1, F.round(_gap_sum(n) / _gap_cnt(n)))
-
-    def _blkmax(base: str, n: int):
-        return F.greatest(
-            F.col(base), *[F.lag(base, j).over(w) for j in range(5, n, 5)]
-        )
-
-    def _blkmin(base: str, n: int):
-        return F.least(
-            F.col(base), *[F.lag(base, j).over(w) for j in range(5, n, 5)]
-        )
+    vc_m = {n: roll_sum(cvc, n, w) / F.least(rn, F.lit(n)) for n in (5, 10, 20, 50)}
+    vc_m2 = {n: roll_sum(cvc2, n, w) / F.least(rn, F.lit(n)) for n in vc_m}
+    roll_std = {
+        n: F.round(F.sqrt(F.greatest(F.lit(0.0), vc_m2[n] - vc_m[n] * vc_m[n])) / 100, 6)
+        for n in vc_m
+    }
+    # exact int64-µs sum/count, snapped to integer µs BEFORE the divide:
+    # sum/n can land exactly on a .5-µs tie, where Spark (decimal
+    # half-up) and DuckDB (scaled std::round) disagree — but integer-µs
+    # ties are dyadic doubles both engines round the same way, and
+    # k/1e6 then sits safely inside the round(6) grid. The head row's
+    # sliding original divides a NULL sum by a zero count (NULL); the
+    # difference form NULLs it explicitly.
+    gap_mean = {
+        n: F.when(rn > 1, F.round(roll_sum(F.col("_cgap"), n, w) / F.least(rn - 1, F.lit(n))))
+        for n in (5, 10, 20)
+    }
+    kn5 = roll_sum(F.col("_ckn"), 5, w)
     marker = F.when(F.col("event_type").isin("purchase", "signup"), F.col("event_type"))
     sess_start = F.coalesce(
-        F.last(F.when(F.col("_sb") == 1, F.col("_us")), ignorenulls=True).over(wcum),
-        F.min("_us").over(wp),
+        F.last(F.when(sb, F.col("_us")), ignorenulls=True).over(wcum), F.col("_u0")
     )
-    k = F.get_json_object("props", "$.k").cast("long")
     roll_mean = F.avg(v).over(w5)
     run_max = F.max(v).over(wcum)
     run_min = F.min(v).over(wcum)
-    cum_err = (
-        F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).over(wcum).cast("long")
-    )
-    # within-session cumulative cents: total cum minus the cum just
-    # before the most recent session boundary (exact int carry)
-    carry_c = F.last(
-        F.when(F.col("_sb") == 1, F.col("_cvc") - F.col("_vc")), ignorenulls=True
-    ).over(wcum)
-    sess_cents = F.col("_cvc") - F.coalesce(carry_c, F.lit(0))
-    tis = (
-        F.col("_rn")
-        - F.coalesce(
-            F.last(F.when(F.col("_sb") == 1, F.col("_rn") - 1), ignorenulls=True).over(wcum),
-            F.lit(0),
-        )
-    )
+    tis, scv = F.col("_tis"), F.col("_scv")
     elapsed_raw = (F.col("_us") - sess_start).cast("double") / 1e6
     # running zscore from exact int cent-sums
-    m_c = F.col("_cvc") / F.col("_rn")
-    var_c = F.col("_cvc2") / F.col("_rn") - m_c * m_c
-    streak = F.col("_rn") - F.coalesce(
-        F.last(F.when(F.col("_tc") == 1, F.col("_rn") - 1), ignorenulls=True).over(wcum),
-        F.lit(0),
-    )
-    cum_high = F.sum(F.when(v > 150, 1).otherwise(0)).over(wcum).cast("long")
-    vc5_m = _vc_sum(5) / _nrows(5)
-    vc5_m2 = _vc2_sum(5) / _nrows(5)
-    sum1d_c = _r_svc(_US_1D)
-    n1d = _r_cnt(_US_1D)
+    m_c = cvc / rn
+    var_c = cvc2 / rn - m_c * m_c
     lagv = F.lag(v).over(w)
-    n_conv = F.count(F.lit(1)).over(wp)
     ssx = (v - 100) / 50
-    vc10_m = _vc_sum(10) / _nrows(10)
-    vc10_m2 = _vc2_sum(10) / _nrows(10)
     first_v = F.first(v).over(wcum)
     # integer day index via exact integral division (u > 2^53, so a
     # double division would lose µs precision; div keeps it exact)
     day_idx = F.expr("_us div 86400000000")
     nsx = (v - 120) / 10
-
-    # ---- growth-tier-3 helpers ----
-    # session carries: within-session running value of a subtractable
-    # cumulative = cum minus its value just BEFORE the last boundary row
-    def _sess(cum_col, own):
-        return F.col(cum_col) - F.coalesce(
-            F.last(
-                F.when(F.col("_sb") == 1, F.col(cum_col) - own), ignorenulls=True
-            ).over(wcum),
-            F.lit(0),
-        )
-
-    vi = F.col("_vi")
-    sess_hi = _sess("_chigh", F.col("_hi"))
-    sess_err = _sess("_cerr", F.col("_ef"))
-    sess_i1 = _sess("_cvi", vi)
-    sess_i2 = _sess("_cvi2", vi * vi)
-    sess_i3 = _sess("_cvi3", vi * vi * vi)
-    sess_i4 = _sess("_cvi4", vi * vi * vi * vi)
-    sess_c2 = _sess("_cvc2", F.col("_vc") * F.col("_vc"))
-    # the boundary row's trapezoid segment is zeroed, so its carry is
-    # the plain cumulative value at the boundary
-    sess_auc_int = F.col("_cseg") - F.coalesce(
-        F.last(F.when(F.col("_sb") == 1, F.col("_cseg")), ignorenulls=True).over(wcum),
-        F.lit(0),
-    )
-    # lexicographic struct-max: session_id is nondecreasing, so the max
-    # struct lands in the CURRENT session → within-session running max
-    smax_vc = (
-        F.max(F.struct(F.col("_sid").alias("s"), F.col("_vc").alias("x")))
-        .over(wcum)
-        .getField("x")
-    )
-    smin_vc = -(
-        F.max(F.struct(F.col("_sid").alias("s"), (-F.col("_vc")).alias("x")))
-        .over(wcum)
-        .getField("x")
-    )
-    g_in_sess = F.when(
-        (F.col("_sb") == 0) & (F.col("_rn") > 1), F.col("_gap_us")
-    ).otherwise(F.lit(-1))
-    smax_gap = (
-        F.max(F.struct(F.col("_sid").alias("s"), g_in_sess.alias("x")))
-        .over(wcum)
-        .getField("x")
-    )
-    sess_first = F.coalesce(
-        F.last(F.when(F.col("_sb") == 1, v), ignorenulls=True).over(wcum), first_v
-    )
+    smax_gap = F.col("_sgap")
+    sess_first = F.coalesce(F.last(F.when(sb, v), ignorenulls=True).over(wcum), first_v)
     # running integer-unit moments (skew/kurtosis of floor(value))
-    rnd = F.col("_rn")
-    im1, im2 = F.col("_cvi") / rnd, F.col("_cvi2") / rnd
-    im3, im4 = F.col("_cvi3") / rnd, F.col("_cvi4") / rnd
+    im1, im2 = F.col("_cvi") / rn, F.col("_cvi2") / rn
+    im3, im4 = F.col("_cvi3") / rn, F.col("_cvi4") / rn
     ivar = im2 - im1 * im1
     imu3 = im3 - 3 * im1 * im2 + 2 * im1 * im1 * im1
     imu4 = im4 - 4 * im1 * im3 + 6 * im1 * im1 * im2 - 3 * im1 * im1 * im1 * im1
-    sm1, sm2, sm3 = sess_i1 / tis, sess_i2 / tis, sess_i3 / tis
+    sm1, sm2 = F.col("_si1") / tis, F.col("_si2") / tis
+    sm3, sm4 = F.col("_si3") / tis, F.col("_si4") / tis
     svar = sm2 - sm1 * sm1
     smu3 = sm3 - 3 * sm1 * sm2 + 2 * sm1 * sm1 * sm1
-    sm4 = sess_i4 / tis
-    smu4 = (
-        sm4
-        - 4 * sm1 * sm3
-        + 6 * sm1 * sm1 * sm2
-        - 3 * sm1 * sm1 * sm1 * sm1
-    )
+    smu4 = sm4 - 4 * sm1 * sm3 + 6 * sm1 * sm1 * sm2 - 3 * sm1 * sm1 * sm1 * sm1
+    var5c = vc_m2[5] - vc_m[5] * vc_m[5]
+    lag5v = F.lag(v, 5).over(w)
     # per-entity deg-2 Cramer fit (A7 main-sequence delta) from the
-    # staged unordered-window moment sums — term-for-term the oracle's
+    # staged whole-partition moment sums — term-for-term the oracle's
     pn = F.col("_pn")
     ps1, ps2, ps3, ps4 = F.col("_ps1"), F.col("_ps2"), F.col("_ps3"), F.col("_ps4")
     pt0, pt1, pt2 = F.col("_pt0"), F.col("_pt1"), F.col("_pt2")
@@ -1013,40 +924,18 @@ def q_feature_vector_wide(spark, sf_dir):
     gauss_raw = F.exp(F.lit(-0.5) * ((v - 120) / 30) * ((v - 120) / 30))
     ramp_raw = F.greatest(F.lit(0.0), F.least(F.lit(1.0), (v - 80) / 40))
     gauss_nar_raw = F.exp(F.lit(-0.5) * nsx * nsx)
-    # extra frames
-    w50 = w.rowsBetween(-49, 0)
-    vc20_m = _vc_sum(20) / _nrows(20)
-    vc20_m2 = _vc2_sum(20) / _nrows(20)
-    vc50_m = _vc_sum(50) / _nrows(50)
-    vc50_m2 = _vc2_sum(50) / _nrows(50)
-    _tau = 6.283185307179586
-    var5c = vc5_m2 - vc5_m * vc5_m
-    lag5v = F.lag(v, 5).over(w)
-
-    def snap6(c):
-        """Tie-safe round(x, 6) for RATIONAL expressions: scale to the
-        1e-6 grid, round to an integer, divide back. Exact decimal ties
-        (x.xxxxxx5) round by shortest-decimal-string in Spark but by
-        binary value in DuckDB — at INTEGER scale the two agree for
-        every double (an exact .5 is dyadic), so the snapped value is
-        engine-independent. Irrational chains (sqrt/exp/log) cannot
-        land on a decimal tie and keep plain round(6)."""
-        return F.round(F.round(c * 1e6) / 1e6, 6)
-
     return df.select(
         "event_id",
         "user_id",
         F.col("_us").alias("ts_us"),
-        F.sum("_sb").over(wcum).cast("long").alias("session_id"),
+        F.col("_sid").alias("session_id"),
         tis.cast("long").alias("turn_in_session"),
-        F.col("_rn").cast("long").alias("turn_idx_user"),
+        rn.cast("long").alias("turn_idx_user"),
         F.round(F.col("_gap"), 6).alias("lag1_ts_gap_s"),
-        F.round(v - F.lag(v, 1).over(w), 6).alias("lag1_value_delta"),
-        F.round(v - F.lag(v, 2).over(w), 6).alias("lag2_value_delta"),
-        F.round(v - F.lag(v, 3).over(w), 6).alias("lag3_value_delta"),
+        *[F.round(v - F.lag(v, i).over(w), 6).alias(f"lag{i}_value_delta") for i in (1, 2, 3)],
         F.last(marker, ignorenulls=True).over(wcum).alias("backfill_marker"),
-        _r_cnt(_US_1D).alias("rate_1d"),
-        _r_cnt(_US_7D).alias("rate_7d"),
+        rate["1d"].alias("rate_1d"),
+        rate["7d"].alias("rate_7d"),
         F.round(roll_mean, 6).alias("roll_mean_value_5"),
         F.round(F.col("_vmin5"), 6).alias("roll_min_value_5"),
         F.round(F.col("_vmax5"), 6).alias("roll_max_value_5"),
@@ -1058,12 +947,10 @@ def q_feature_vector_wide(spark, sf_dir):
             .alias(f"cum_{t}")
             for t in ("click", "view", "purchase", "signup")
         ],
-        cum_err.alias("cum_error"),
+        F.col("_cerr").alias("cum_error"),
         F.round(F.sum(v).over(wcum), 6).alias("cum_value_sum"),
         F.round((F.col("_us") - sess_start).cast("double") / 1e6, 6).alias("session_elapsed_s"),
-        F.round((F.col("_us") - F.min("_us").over(wp)).cast("double") / 1e6, 6).alias(
-            "time_since_start_s"
-        ),
+        F.round((F.col("_us") - F.col("_u0")).cast("double") / 1e6, 6).alias("time_since_start_s"),
         F.hour("ts").cast("int").alias("hour_of_day"),
         F.dayofweek("ts").cast("int").alias("day_of_week"),
         *[
@@ -1085,53 +972,45 @@ def q_feature_vector_wide(spark, sf_dir):
         # mean snapped to the 1e-6 grid first: a full-partition mean is
         # summation-order sensitive at ~1e-13, which would make the raw
         # deviation straddle round() boundaries between engines
-        F.round(v - F.round(F.avg(v).over(wp), 6), 6).alias("value_dev_user"),
+        F.round(v - F.round(F.col("_vavg"), 6), 6).alias("value_dev_user"),
         F.round(run_max, 6).alias("run_max_value"),
         F.round(run_min, 6).alias("run_min_value"),
         F.round(F.when(run_max > 0, v / run_max), 6).alias("value_norm_run"),
-        F.round(cum_err.cast("double") / F.col("_rn"), 6).alias("pct_error_so_far"),
+        F.round(F.col("_cerr").cast("double") / rn, 6).alias("pct_error_so_far"),
         # ---- growth tier (columns 51-100) ----
-        F.round(v - F.lag(v, 4).over(w), 6).alias("lag4_value_delta"),
-        F.round(v - F.lag(v, 5).over(w), 6).alias("lag5_value_delta"),
+        *[F.round(v - F.lag(v, i).over(w), 6).alias(f"lag{i}_value_delta") for i in (4, 5)],
         F.round((F.col("_us") - F.lag(F.col("_us"), 2).over(w)).cast("double") / 1e6, 6).alias(
             "lag2_ts_gap_s"
         ),
-        # exact int64-µs sum/count, snapped to integer µs BEFORE the
-        # divide: sum/n can land exactly on a .5-µs tie, where Spark
-        # (decimal half-up) and DuckDB (scaled std::round) disagree —
-        # but integer-µs ties are dyadic doubles both engines round the
-        # same way, and k/1e6 then sits safely inside the round(6) grid
-        F.round(_gap_mean_us(5) / 1e6, 6).alias("gap_roll_mean_5"),
+        F.round(gap_mean[5] / 1e6, 6).alias("gap_roll_mean_5"),
         F.round(F.col("_gmax5"), 6).alias("gap_roll_max_5"),
         F.round(F.avg(v).over(w10), 6).alias("roll_mean_value_10"),
-        F.round(_blkmin("_vmin5", 10), 6).alias("roll_min_value_10"),
-        F.round(_blkmax("_vmax5", 10), 6).alias("roll_max_value_10"),
+        F.round(blocks("_vmin5", F.least, 10, w), 6).alias("roll_min_value_10"),
+        F.round(blocks("_vmax5", F.greatest, 10, w), 6).alias("roll_max_value_10"),
         F.round(F.sum(v).over(w10), 6).alias("roll_sum_value_10"),
-        F.round(F.sqrt(F.greatest(F.lit(0.0), vc5_m2 - vc5_m * vc5_m)) / 100, 6).alias(
-            "roll_std_value_5"
-        ),
-        F.round(sum1d_c / 100.0, 6).alias("value_sum_1d"),
-        snap6(sum1d_c / 100.0 / n1d).alias("value_mean_1d"),
-        F.round(_r_svc(_US_7D) / 100.0, 6).alias("value_sum_7d"),
+        roll_std[5].alias("roll_std_value_5"),
+        F.round(vsum["1d"] / 100.0, 6).alias("value_sum_1d"),
+        snap6(vsum["1d"] / 100.0 / rate["1d"]).alias("value_mean_1d"),
+        F.round(vsum["7d"] / 100.0, 6).alias("value_sum_7d"),
         F.round(run_max - run_min, 6).alias("run_depth"),
         F.round(v - run_min, 6).alias("run_range_pos"),
         F.round(F.when(run_max - run_min > 0, (v - run_min) / (run_max - run_min)), 6).alias(
             "run_range_norm"
         ),
         F.round(
-            F.when(var_c > 0, (F.col("_vc") - m_c) / F.sqrt(var_c)).otherwise(0.0), 6
+            F.when(var_c > 0, (vc - m_c) / F.sqrt(var_c)).otherwise(0.0), 6
         ).alias("value_zscore_run"),
-        cum_high.alias("cum_high_value"),
-        snap6(cum_high.cast("double") / F.col("_rn")).alias("emission_idx_run"),
+        F.col("_chigh").alias("cum_high_value"),
+        snap6(F.col("_chigh").cast("double") / rn).alias("emission_idx_run"),
         F.lag("event_type").over(w).alias("prev_event_type"),
         F.col("_tc").cast("int").alias("event_type_changed"),
-        streak.cast("long").alias("same_type_streak"),
-        F.round(sess_cents / 100.0, 6).alias("sess_cum_value"),
-        snap6(sess_cents / 100.0 / tis).alias("sess_mean_value"),
-        F.round(v - snap6(sess_cents / 100.0 / tis), 6).alias("sess_value_dev"),
+        carry(rn, F.col("_tc") == 1, rn - 1, wcum).cast("long").alias("same_type_streak"),
+        F.round(scv / 100.0, 6).alias("sess_cum_value"),
+        snap6(scv / 100.0 / tis).alias("sess_mean_value"),
+        F.round(v - snap6(scv / 100.0 / tis), 6).alias("sess_value_dev"),
         snap6(tis / (elapsed_raw + 1.0)).alias("turn_rate_session"),
         (tis == 1).cast("int").alias("is_first_in_session"),
-        snap6(tis / F.col("_rn")).alias("sess_frac_of_turns"),
+        snap6(tis / rn).alias("sess_frac_of_turns"),
         F.minute("ts").cast("int").alias("minute_of_hour"),
         F.dayofmonth("ts").cast("int").alias("day_of_month"),
         F.month("ts").cast("int").alias("month"),
@@ -1152,43 +1031,33 @@ def q_feature_vector_wide(spark, sf_dir):
             F.last(F.when(F.col("event_type") == "purchase", v), ignorenulls=True).over(wcum),
             6,
         ).alias("last_purchase_value"),
-        (
-            F.col("_rn")
-            - F.coalesce(
-                F.last(
-                    F.when(F.col("event_type") == "purchase", F.col("_rn")), ignorenulls=True
-                ).over(wcum),
-                F.lit(0),
-            )
-        ).cast("long").alias("rows_since_purchase"),
+        carry(rn, F.col("event_type") == "purchase", rn, wcum)
+        .cast("long")
+        .alias("rows_since_purchase"),
         snap6(F.when(lagv > 0, v / lagv)).alias("value_vs_prev_ratio"),
         snap6(
-            F.when(n_conv > 1, (F.col("_rn") - 1) / (n_conv - 1)).otherwise(0.0)
+            F.when(pn > 1, (rn - 1) / (pn - 1)).otherwise(0.0)
         ).alias("pct_rank_in_conv"),
         F.sum(k).over(wcum).cast("long").alias("cum_k_sum"),
         snap6(
-            F.sum(F.when(k.isNull(), 1).otherwise(0)).over(wcum).cast("double") / F.col("_rn")
+            F.sum(F.when(k.isNull(), 1).otherwise(0)).over(wcum).cast("double") / rn
         ).alias("k_null_rate_so_far"),
         # ---- growth tier 2 (columns 101-130) ----
         F.round(F.avg(v).over(w20), 6).alias("roll_mean_value_20"),
-        F.round(_blkmin("_vmin5", 20), 6).alias("roll_min_value_20"),
-        F.round(_blkmax("_vmax5", 20), 6).alias("roll_max_value_20"),
+        F.round(blocks("_vmin5", F.least, 20, w), 6).alias("roll_min_value_20"),
+        F.round(blocks("_vmax5", F.greatest, 20, w), 6).alias("roll_max_value_20"),
         F.round(F.sum(v).over(w20), 6).alias("roll_sum_value_20"),
-        F.round(
-            F.sqrt(F.greatest(F.lit(0.0), vc10_m2 - vc10_m * vc10_m)) / 100, 6
-        ).alias("roll_std_value_10"),
-        F.round(_gap_mean_us(10) / 1e6, 6).alias("gap_roll_mean_10"),
-        F.round(_blkmax("_gmax5", 10), 6).alias("gap_roll_max_10"),
-        _r_cnt(_US_30D).alias("rate_30d"),
-        F.round(_r_svc(_US_30D) / 100.0, 6).alias("value_sum_30d"),
+        roll_std[10].alias("roll_std_value_10"),
+        F.round(gap_mean[10] / 1e6, 6).alias("gap_roll_mean_10"),
+        F.round(blocks("_gmax5", F.greatest, 10, w), 6).alias("gap_roll_max_10"),
+        rate["30d"].alias("rate_30d"),
+        F.round(vsum["30d"] / 100.0, 6).alias("value_sum_30d"),
         F.round(
             F.when((var_c > 0) & (m_c > 0), F.sqrt(var_c) / m_c).otherwise(0.0), 6
         ).alias("value_cv_run"),
         snap6(
             F.when(
-                F.col("_ckn") - _lagz(F.col("_ckn"), 5) > 0,
-                (F.coalesce(F.col("_ck"), F.lit(0)) - _lagz(F.col("_ck"), 5))
-                / (F.col("_ckn") - _lagz(F.col("_ckn"), 5)),
+                kn5 > 0, (F.coalesce(F.col("_ck"), F.lit(0)) - lagz(F.col("_ck"), 5, w)) / kn5
             )
         ).alias("k_roll_mean_5"),
         snap6(
@@ -1202,14 +1071,14 @@ def q_feature_vector_wide(spark, sf_dir):
         (F.dayofmonth("ts") == 1).cast("int").alias("is_month_start"),
         ((F.dayofweek("ts") - 1) * 24 + F.hour("ts")).cast("int").alias("hour_of_week"),
         F.floor(
-            (F.col("_us") - F.min("_us").over(wp)).cast("double") / 1e6 / 86400
+            (F.col("_us") - F.col("_u0")).cast("double") / 1e6 / 86400
         ).cast("long").alias("days_since_start"),
         F.round(first_v, 6).alias("conv_first_value"),
         F.round(v - first_v, 6).alias("value_vs_first"),
         F.round(F.max("_gap").over(wcum), 6).alias("gap_max_run"),
-        F.round(F.sum("_gap_us").over(wcum) / 1e6, 6).alias("active_time_run_s"),
+        F.round(F.col("_cgap") / 1e6, 6).alias("active_time_run_s"),
         F.round(
-            F.round(F.sum("_gap_us").over(wcum) / F.count("_gap_us").over(wcum)) / 1e6, 6
+            F.round(F.col("_cgap") / F.count("_gap_us").over(wcum)) / 1e6, 6
         ).alias("mean_gap_run"),
         (~day_idx.eqNullSafe(F.lag(day_idx).over(w))).cast("int").alias("is_new_day"),
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-(v - 100) / 10)), 6).alias(
@@ -1218,23 +1087,23 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(F.exp(F.lit(-0.5) * nsx * nsx), 6).alias("gauss_narrow_value"),
         snap6(v * v * v / 100000).alias("value_cube_scaled"),
         F.round(F.greatest(F.lit(0.0), v - 100), 6).alias("relu_value"),
-        snap6(v / n1d).alias("value_over_rate"),
+        snap6(v / rate["1d"]).alias("value_over_rate"),
         F.sum(F.when(F.col("_gap") > 3600, 1).otherwise(0)).over(wcum).cast("long").alias(
             "high_gap_count_run"
         ),
         # ---- growth tier 3 (columns 131-176): per-session morphology
         # battery, running moments, A7 poly residual, element-group
         # composites, extra lag/roll/rate frames ----
-        F.round(smax_vc / 100.0, 6).alias("sess_run_max_value"),
-        F.round(smin_vc / 100.0, 6).alias("sess_run_min_value"),
-        F.round((smax_vc - smin_vc) / 100.0, 6).alias("sess_depth_run"),
-        sess_hi.cast("long").alias("sess_high_count"),
-        snap6(sess_hi.cast("double") / tis).alias("sess_emission_idx"),
-        sess_err.cast("long").alias("sess_n_errors"),
+        F.round(F.col("_smax") / 100.0, 6).alias("sess_run_max_value"),
+        F.round(F.col("_smin") / 100.0, 6).alias("sess_run_min_value"),
+        F.round((F.col("_smax") - F.col("_smin")) / 100.0, 6).alias("sess_depth_run"),
+        F.col("_shi").cast("long").alias("sess_high_count"),
+        snap6(F.col("_shi").cast("double") / tis).alias("sess_emission_idx"),
+        F.col("_serr").cast("long").alias("sess_n_errors"),
         F.round(
             F.sqrt(
                 F.greatest(
-                    F.lit(0.0), sess_c2 / tis - (sess_cents / tis) * (sess_cents / tis)
+                    F.lit(0.0), F.col("_scv2") / tis - (scv / tis) * (scv / tis)
                 )
             )
             / 100,
@@ -1243,7 +1112,7 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(F.when(svar > 0, smu3 / (svar * F.sqrt(svar))), 6).alias(
             "sess_skew_value"
         ),
-        F.round(sess_auc_int / 2e8, 4).alias("sess_auc_trapezoid"),
+        F.round(F.col("_sauc") / 2e8, 4).alias("sess_auc_trapezoid"),
         F.round(F.when(smax_gap >= 0, smax_gap / 1e6), 6).alias("sess_gap_max_s"),
         F.round(sess_first, 6).alias("sess_first_value"),
         F.round(v - sess_first, 6).alias("value_vs_sess_first"),
@@ -1275,19 +1144,17 @@ def q_feature_vector_wide(spark, sf_dir):
         F.round(
             (F.col("_us") - F.lag(F.col("_us"), 3).over(w)).cast("double") / 1e6, 6
         ).alias("lag3_ts_gap_s"),
-        snap6(_vc_sum(50) / _nrows(50) / 100).alias("roll_mean_value_50"),
-        F.round(_vc_sum(50) / 100.0, 6).alias("roll_sum_value_50"),
-        F.round(_blkmin("_vmin5", 50), 6).alias("roll_min_value_50"),
-        F.round(_blkmax("_vmax5", 50), 6).alias("roll_max_value_50"),
+        snap6(vc_m[50] / 100).alias("roll_mean_value_50"),
+        F.round(roll_sum(cvc, 50, w) / 100.0, 6).alias("roll_sum_value_50"),
+        F.round(blocks("_vmin5", F.least, 50, w), 6).alias("roll_min_value_50"),
+        F.round(blocks("_vmax5", F.greatest, 50, w), 6).alias("roll_max_value_50"),
+        roll_std[20].alias("roll_std_value_20"),
+        F.round(blocks("_gmax5", F.greatest, 20, w), 6).alias("gap_roll_max_20"),
+        F.round(gap_mean[20] / 1e6, 6).alias("gap_roll_mean_20"),
+        rate["12h"].alias("rate_12h"),
+        F.round(vsum["12h"] / 100.0, 6).alias("value_sum_12h"),
         F.round(
-            F.sqrt(F.greatest(F.lit(0.0), vc20_m2 - vc20_m * vc20_m)) / 100, 6
-        ).alias("roll_std_value_20"),
-        F.round(_blkmax("_gmax5", 20), 6).alias("gap_roll_max_20"),
-        F.round(_gap_mean_us(20) / 1e6, 6).alias("gap_roll_mean_20"),
-        _r_cnt(_US_12H).alias("rate_12h"),
-        F.round(_r_svc(_US_12H) / 100.0, 6).alias("value_sum_12h"),
-        F.round(
-            F.when(var5c > 0, (F.col("_vc") - vc5_m) / F.sqrt(var5c)).otherwise(0.0), 6
+            F.when(var5c > 0, (vc - vc_m[5]) / F.sqrt(var5c)).otherwise(0.0), 6
         ).alias("value_zscore_roll_5"),
         snap6(F.when(lag5v > 0, (v - lag5v) / lag5v)).alias("pct_change_5"),
         F.round(
@@ -1317,13 +1184,11 @@ def q_feature_vector_wide(spark, sf_dir):
         # src/pipeline/feature_engineering.py:1755-1793), session
         # kurtosis (line-profile 4th moment,
         # src/pipeline/feature_engineering.py:900-966) ----
-        F.round(F.sin(F.lit(_tau) * F.hour("ts") / F.lit(24.0)), 6).alias("sin_hour"),
-        F.round(F.cos(F.lit(_tau) * F.hour("ts") / F.lit(24.0)), 6).alias("cos_hour"),
+        F.round(F.sin(F.lit(_TAU) * F.hour("ts") / F.lit(24.0)), 6).alias("sin_hour"),
+        F.round(F.cos(F.lit(_TAU) * F.hour("ts") / F.lit(24.0)), 6).alias("cos_hour"),
         F.round(v - F.lag(v, 8).over(w), 6).alias("lag8_value_delta"),
-        F.round(
-            F.sqrt(F.greatest(F.lit(0.0), vc50_m2 - vc50_m * vc50_m)) / 100, 6
-        ).alias("roll_std_value_50"),
-        F.round(_blkmin("_gmin5", 10), 6).alias("gap_roll_min_10"),
+        roll_std[50].alias("roll_std_value_50"),
+        F.round(blocks("_gmin5", F.least, 10, w), 6).alias("gap_roll_min_10"),
         F.round(F.signum(v - lagv) * F.log1p(F.abs(v - lagv)), 6).alias(
             "signed_log1p_delta_value"
         ),
@@ -1592,7 +1457,7 @@ def q_poly_residuals(spark, sf_dir):
     pytest-vs-np.polyfit oracle."""
     from astrospectro_spark.engine.regression import poly2_residuals_per_entity
 
-    us = _us()
+    us = _ts_us()
     wu = Window.partitionBy("user_id")
     span = F.greatest(F.max(us).over(wu) - F.min(us).over(wu), F.lit(1))
     ev = _t(spark, sf_dir, "events").withColumn(
@@ -1610,7 +1475,7 @@ def q_sigma_clip_slope(spark, sf_dir):
     the DuckDB oracle unrolls the two clip iterations as CTEs."""
     from astrospectro_spark.engine.regression import sigma_clip_slope
 
-    us = _us()
+    us = _ts_us()
     ev = _t(spark, sf_dir, "events").withColumn(
         "x", (us - F.min(us).over(Window.partitionBy("user_id"))).cast("double") / 1e6
     )

@@ -160,6 +160,57 @@ def test_resume_with_different_input_fails_loudly(spark, transcripts_sdf):
         assert stats["buckets_processed"] == 3
 
 
+def test_resume_with_changed_content_fails_audit(
+    spark, transcripts_pdf, transcripts_sdf, tmp_path, monkeypatch
+):
+    """A resume input with the same row count but one changed ``text``
+    in a committed bucket passes the row-count guard; the opt-in content
+    audit names that bucket, in one grouped pass for all committed
+    buckets: the jobs of one ``_bucket_checksums`` call (under adaptive
+    execution its shuffle-map stage is a job of its own), not a pass per
+    bucket."""
+    from astrospectro_spark.engine.lineage import _bucket_checksums, bucketize
+
+    out = str(tmp_path / "x")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        FeatureRun(spark, out, n_buckets=4, run_id="a").run(transcripts_sdf, fail_after=2)
+    resume = FeatureRun(spark, out, n_buckets=4, run_id="b")
+    done = resume.committed_buckets()
+    assert len(done) == 2
+
+    buckets = bucketize(transcripts_sdf, 4).select("_bucket").toPandas()["_bucket"]
+    row = int(buckets[buckets.isin(done)].index[0])
+    changed = transcripts_pdf.copy()
+    changed.loc[row, "text"] = f"{changed.loc[row, 'text']} (edited)"
+    b = int(buckets[row])
+
+    changed = spark.createDataFrame(changed)
+
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+
+    def jobs_of(fn, *args):
+        bus.waitUntilEmpty()  # the tracker is fed by the listener bus
+        before = set(tracker.getJobIdsForGroup())
+        try:
+            return fn(*args)
+        finally:
+            bus.waitUntilEmpty()
+            jobs.append(len(set(tracker.getJobIdsForGroup()) - before))
+
+    jobs = []
+    jobs_of(_bucket_checksums, bucketize(changed, 4), sorted(done))
+    real = FeatureRun._verify_committed
+    monkeypatch.setattr(
+        FeatureRun, "_verify_committed", lambda self, *a: jobs_of(real, self, *a)
+    )
+    with pytest.raises(ValueError, match=rf"bucket {b}: input content changed since commit"):
+        resume.run(changed, verify_input=True)
+    one_pass, audit = jobs
+    assert 1 <= audit == one_pass <= 2
+    assert resume.committed_buckets() == done
+
+
 def test_featurizer_is_pluggable(spark, transcripts_sdf):
     from astrospectro_spark.engine.skew import featurize_salted
 

@@ -7,10 +7,12 @@ Four tiers, all expression-only (JVM, codegen) except where noted:
   column stays in the scan stage and only the digest shuffles);
 - :func:`ngram_jaccard_pairs` — word n-gram shingle Jaccard between
   candidate pairs (pairs bucketed by a cheap key to avoid O(n²));
-- :func:`minhash_lsh_candidates` — MinHash signatures (one md5 per
-  shingle, k integer universal-hash permutations) + LSH banding:
-  near-dup candidate pairs from band-bucket joins, then exact-Jaccard
-  verification. Scales as O(n·k + candidate pairs), never O(n²);
+- :func:`minhash_lsh_candidates` — each document shingled and hashed
+  once (:func:`shingle_hashes_sql`, one md5 per shingle); MinHash
+  signatures (k integer universal-hash permutations over the hashes)
+  + LSH banding: near-dup candidate pairs from band-bucket joins, then
+  Jaccard verification over the same hash arrays. Scales as
+  O(n·k + candidate pairs), never O(n²);
 - :func:`simhash64` — 64-bit SimHash over token hashes (aggregate +
   zip_with bit counters).
 
@@ -18,6 +20,13 @@ All hash bits derive from md5 (60-bit band hashes / 32-bit md5 words), which
 is computable bit-identically in any SQL engine — every tier here has a
 full DuckDB oracle (oracle/duckdb_sql.py builds the same hashes with
 ``('0x' || substr(md5(x), ...))::BIGINT``).
+
+Hashed Jaccard: the n-gram and LSH verify steps compare sets of 60-bit
+md5 prefixes, not shingle strings. The two Jaccards are equal unless
+two distinct shingles share a prefix; the test suite checks that no
+two do on the sf0.001, sf0.01 and sf0.1 document fixtures, and the
+DuckDB oracle compares the strings, so a collision would show as an
+oracle mismatch.
 
 Lambda rule: a higher-order-function body (``transform``, ``aggregate``,
 ``zip_with``, ...) reads only its lambda variables, columns and literals.
@@ -36,9 +45,8 @@ SQL expression text, parsed once per output column (``F.expr`` or
 ``selectExpr``). Through the Column API each operator and literal is a
 Py4J round trip: one :func:`minhash_signature` took 1,448 of them and
 takes 3 as text (one :func:`shingles` 276), and the
-``curate_job.curate`` plan took 5,227 commands and 1.2–1.7 s to
-build; as text it takes 603 and 0.5–0.9 s, with the same optimized
-plans.
+``curate_job.curate`` plan took 5,227 commands to build; as text it
+takes 430, its per-document checkpoint job included.
 """
 
 from __future__ import annotations
@@ -66,6 +74,14 @@ def _shingles_sql(text_col: str, n: int, max_tokens: int | None) -> str:
         f"CASE WHEN size(t) >= {n} THEN transform(sequence(0, size(t) - {n}), "
         f"i -> concat_ws(' ', {grams})) ELSE array(concat_ws(' ', t)) END)), 1)"
     )
+
+
+def shingle_hashes_sql(text_col: str = "text", n: int = 3, max_tokens: int | None = None) -> str:
+    """SQL text: the 60-bit md5 prefixes (:func:`_md5_hash60_sql`) of a
+    document's distinct shingles, one md5 per shingle. The MinHash
+    signature reads the top 28 bits of each and the verify Jaccard the
+    whole array, so a document is shingled and hashed once for both."""
+    return f"transform({_shingles_sql(text_col, n, max_tokens)}, s -> {_md5_hash60_sql('s')})"
 
 
 def shingles(
@@ -107,10 +123,10 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-# exact Jaccard of the shingle sets ``sh_a`` and ``sh_b``, 6 decimals
+# Jaccard of the shingle-hash sets ``h_a`` and ``h_b``, 6 decimals
 _JACCARD_SQL = (
-    "round(CASE WHEN size(array_union(sh_a, sh_b)) > 0 THEN "
-    "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE) / size(array_union(sh_a, sh_b)) "
+    "round(CASE WHEN size(array_union(h_a, h_b)) > 0 THEN "
+    "CAST(size(array_intersect(h_a, h_b)) AS DOUBLE) / size(array_union(h_a, h_b)) "
     "ELSE 0.0D END, 6)"
 )
 
@@ -173,13 +189,14 @@ def ngram_jaccard_pairs(
     blocks = list(bucket_cols)
 
     def exact_pairs(docs: DataFrame) -> DataFrame:
-        # pair the ids within each block, then shingle each document once
+        # pair the ids within each block, then hash each document's
+        # shingles once
         ids = docs.select(*blocks, id_col)
         pairs = ids.withColumnRenamed(id_col, "id_a").join(
             ids.withColumnRenamed(id_col, "id_b"), blocks
         ).filter("id_a < id_b")
-        sh_sql = _shingles_sql(text_col, n, None)
-        return _verify_pairs(pairs, docs, id_col, blocks, sh_sql, threshold)
+        hashed = docs.selectExpr(quote_ident(id_col), f"{shingle_hashes_sql(text_col, n)} AS _h")
+        return _verify_pairs(pairs, hashed, id_col, blocks, threshold)
 
     if max_block_rows is None:
         return exact_pairs(df)
@@ -228,7 +245,8 @@ def minhash_signature(
     """MinHash signature: an array of k BIGINT minima, reproducible in
     any engine.
 
-    Each shingle is hashed ONCE (md5 → 28-bit int); the k independent
+    Each shingle is hashed ONCE (md5 → the 28-bit top of its 60-bit
+    :func:`shingle_hashes_sql` value); the k independent
     permutations are integer universal hashes over that value,
     ``(a_k*h + b_k) mod (2^31-1)`` with literal coefficients
     (:func:`minhash_coeffs`). ``a_k < 2^31`` and ``h < 2^28`` keep the
@@ -238,21 +256,20 @@ def minhash_signature(
     the md5 work is O(shingles) per row, not O(shingles × k) — the
     k-salted-md5 formulation this replaces cost ~32× more and dominated
     dedup runtime (string hashing per permutation)."""
-    return F.expr(_minhash_signature_sql(text_col, num_perm, ngram, max_tokens))
+    return F.expr(_signature_sql(shingle_hashes_sql(text_col, ngram, max_tokens), num_perm))
 
 
-def _minhash_signature_sql(
-    text_col: str, num_perm: int, ngram: int, max_tokens: int | None
-) -> str:
+def _signature_sql(hashes: str, num_perm: int) -> str:
+    """The MinHash signature of the shingle-hash array ``hashes``
+    (:func:`shingle_hashes_sql`). Its permutations read the top 28 bits
+    of each 60-bit hash, ``substring(md5(s), 1, 7)``, which keeps the
+    products under 2^59."""
     a, b = minhash_coeffs(num_perm)
     av = "array(" + ", ".join(f"{x}L" for x in a) + ")"
     bv = "array(" + ", ".join(f"{x}L" for x in b) + ")"
-    hs = (
-        f"transform({_shingles_sql(text_col, ngram, max_tokens)}, "
-        f"s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
-    )
     return (
-        f"aggregate({hs}, array_repeat({_MINHASH_P}L, {num_perm}), "
+        f"aggregate(transform({hashes}, x -> shiftright(x, 32)), "
+        f"array_repeat({_MINHASH_P}L, {num_perm}), "
         f"(acc, h) -> zip_with(acc, sequence(1, {num_perm}), (m, k) -> least(m, "
         f"(element_at({av}, k) * h + element_at({bv}, k)) % {_MINHASH_P})))"
     )
@@ -268,25 +285,30 @@ def minhash_lsh_candidates(
     verify_threshold: float = 0.5,
     block_cols: tuple[str, ...] = (),
     max_tokens: int | None = None,
-    verify_source: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup detection.
 
-    ``verify_source`` (optional) supplies the ``(id_col, text_col)``
-    rows used to re-shingle candidate pairs for exact verification;
-    it must agree with ``df`` on every id they share. Callers whose
-    ``df`` is itself an expensive subplan (e.g. curate's exact-survivor
-    aggregation) pass the cheap raw table here so the verify semi-join
-    does not re-execute that subplan.
+    One hash-array builder (:func:`shingle_hashes_sql`) feeds both
+    steps of :func:`lsh_pairs`: the signature reads the top 28 bits of
+    each shingle hash, and the verify Jaccard the full 60-bit hash
+    sets. Here the hash array is a projection over ``df``, so the
+    verify step hashes the candidate documents a second time (its
+    semi-join runs below the projection); ``curate_job.curate`` reads
+    both from its materialized per-document table instead.
 
     signature → ``bands`` bands of ``num_perm/bands`` rows → band-hash
-    bucket join → candidate id pairs → exact shingle-Jaccard
+    bucket join → candidate id pairs → shingle-hash Jaccard
     verification. The band-bucket join carries ONLY
-    (band_id, band_hash, id); the shingle arrays are re-attached to the
+    (band_id, band_hash, id); the hash arrays are re-attached to the
     deduplicated candidate pairs afterwards — the coarse-prejoin /
     exact-refilter pattern of the reference's cross-matcher
     (src/tools/gaia_crossmatcher.py:285-343,426-432). At 10^9 docs the
     wide text/shingle payload never rides the bucket shuffle.
+
+    The Jaccard over the hash sets equals the Jaccard over the shingle
+    strings when no two distinct shingles share a 60-bit md5 prefix;
+    the test suite checks that none do on the sf0.001–sf0.1 document
+    fixtures, and the DuckDB oracle compares the strings themselves.
 
     ``block_cols`` adds coarse keys to the band-bucket join (pairs must
     share the block too) and to the output — used by
@@ -298,6 +320,39 @@ def minhash_lsh_candidates(
     (the driver oracle pins ``bands=8``) for a reproducible fixed
     geometry.
     """
+    keys = [quote_ident(c) for c in [id_col, *block_cols]]
+    hashed = df.selectExpr(*keys, f"{shingle_hashes_sql(text_col, ngram, max_tokens)} AS _h")
+    cand = _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_cols)
+    # the verify step hashes the candidate documents only: the optimizer
+    # pushes this semi-join below the hash projection. Hashing the whole
+    # corpus again measured 3x the signature pass at sf0.1.
+    ids = cand.selectExpr(f"explode(array(id_a, id_b)) AS {keys[0]}").distinct()
+    return _verify_pairs(
+        cand, hashed.join(ids, id_col, "left_semi"), id_col, list(block_cols), verify_threshold
+    )
+
+
+def lsh_pairs(
+    hashed: DataFrame,
+    id_col: str = "doc_id",
+    num_perm: int = 32,
+    bands: int | None = None,
+    verify_threshold: float = 0.5,
+    block_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The MinHash+LSH pairs ``(id_a, id_b, *block_cols, jaccard)`` of
+    ``hashed``, whose ``_h`` column holds each document's shingle
+    hashes (:func:`shingle_hashes_sql`). The algebra behind
+    :func:`minhash_lsh_candidates`, for callers that already hold the
+    hash arrays (``curate_job.curate`` reads them from its
+    per-document table)."""
+    cand = _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_cols)
+    return _verify_pairs(cand, hashed, id_col, list(block_cols), verify_threshold)
+
+
+def _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_cols) -> DataFrame:
+    """The deduplicated band-collision pairs ``(id_a, id_b, *block_cols)``
+    of ``hashed``, ``id_a < id_b``."""
     if bands is None:
         bands = lsh_params_for_threshold(verify_threshold, num_perm)
     rows_per_band = num_perm // bands
@@ -307,9 +362,8 @@ def minhash_lsh_candidates(
         f"concat_ws(',', transform(slice(sig, b * {rows_per_band} + 1, {rows_per_band}), "
         f"x -> CAST(x AS STRING)))"
     )
-    banded = df.selectExpr(
-        *keys,
-        f"{_minhash_signature_sql(text_col, num_perm, ngram, max_tokens)} AS sig",
+    banded = hashed.selectExpr(
+        *keys, f"{_signature_sql('_h', num_perm)} AS sig",
     ).selectExpr(
         *keys,
         f"explode(transform(sequence(0, {bands - 1}), b -> struct(b AS band_id, "
@@ -318,7 +372,7 @@ def minhash_lsh_candidates(
 
     a = banded.select(*blocks, "band_id", "band_hash", F.col(id_col).alias("id_a"))
     b = banded.select(*blocks, "band_id", "band_hash", F.col(id_col).alias("id_b"))
-    cand = (
+    return (
         # SHUFFLE_HASH pins the self-join to shuffle-both-sides: when
         # AQE broadcasts one side (it will at small scale — banded is
         # tiny in bytes), the two sides stop being exchange-twins and
@@ -334,42 +388,32 @@ def minhash_lsh_candidates(
         .select("id_a", "id_b", *blocks)
         .dropDuplicates(["id_a", "id_b"])
     )
-    docs = verify_source if verify_source is not None else df
-    sh_sql = _shingles_sql(text_col, ngram, max_tokens)
-    return _verify_pairs(cand, docs, id_col, blocks, sh_sql, verify_threshold)
 
 
-def _verify_pairs(pairs, docs, id_col, blocks, sh_sql, threshold) -> DataFrame:
-    """The pairs ``(id_a, id_b, *blocks)`` whose shingle sets (SQL
-    ``sh_sql`` over ``docs``) have a Jaccard at or above ``threshold``,
-    with their ``jaccard``.
+def _verify_pairs(pairs, hashed, id_col, blocks, threshold) -> DataFrame:
+    """The pairs ``(id_a, id_b, *blocks)`` whose shingle-hash sets (the
+    ``_h`` column of ``hashed``) have a Jaccard at or above
+    ``threshold``, with their ``jaccard``.
 
-    Shingles are computed ONLY for docs that appear in a pair:
-    shingling is the dominant CPU of verification (one md5 per shingle
-    per doc), and attaching them to the whole corpus re-ran it over
-    every document (measured 3x the LSH signature pass at sf0.1). The
-    semi-join filters the raw rows BEFORE the shingle projection.
     Each pair is split into its two ends, ONE join attaches their
-    shingles and a group per pair brings the two arrays back together.
+    hashes and a group per pair brings the two arrays back together.
     A join per pair side would put the shingle projection in the plan
     twice, and AQE runs the two copies as two stages when it broadcasts
     one side and shuffles the other (no exchange twins). Jaccard is
     symmetric, so the order of the two arrays is free; a pair whose end
-    has no row in ``docs`` drops out, as an inner join would drop it.
-    SHUFFLE_HASH keeps the shingle side out of a broadcast: planned
-    under a broadcast exchange, the semi-join inside it stayed a
-    sort-merge join, where AQE otherwise broadcasts the small id set."""
+    has no row in ``hashed`` drops out, as an inner join would drop it.
+    SHUFFLE_HASH keeps the hash side out of a broadcast: planned
+    under a broadcast exchange, a semi-join inside it (the candidate
+    filter of :func:`minhash_lsh_candidates`) stayed a sort-merge join,
+    where AQE otherwise broadcasts the small id set."""
     ends = pairs.select("id_a", "id_b", *blocks, F.explode(F.array("id_a", "id_b")).alias(id_col))
-    sh = docs.join(ends.select(id_col).distinct(), id_col, "left_semi").selectExpr(
-        quote_ident(id_col), f"{sh_sql} AS sh"
-    )
     return (
-        ends.join(sh.hint("shuffle_hash"), id_col)
+        ends.join(hashed.select(id_col, "_h").hint("shuffle_hash"), id_col)
         .groupBy("id_a", "id_b", *blocks)
-        .agg(F.collect_list("sh").alias("_sh"))
-        .filter("size(_sh) = 2")
+        .agg(F.collect_list("_h").alias("_hs"))
+        .filter("size(_hs) = 2")
         .selectExpr("id_a", "id_b", *[quote_ident(c) for c in blocks],
-                    "_sh[0] AS sh_a", "_sh[1] AS sh_b")
+                    "_hs[0] AS h_a", "_hs[1] AS h_b")
         .withColumn("jaccard", F.expr(_JACCARD_SQL))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", *blocks, "jaccard")

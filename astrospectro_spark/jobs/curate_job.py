@@ -17,22 +17,27 @@ job (the documents sibling of ``featurize_job``):
         [--langs en,fr] [--min-quality 0.5] \\
         [--min-tokens 1] [--max-tokens 1000000]
 
-Scale shape: every stage is expression-only DataFrame code. The two
-dedup stages are the only shuffles — a fingerprint groupBy and the
-LSH band-bucket join that carries ``(band_id, band_hash, id)`` alone
-(see ``functions/dedup.py``); the three filters are free riders on
-the final scan. The per-stage funnel census costs ZERO extra passes:
-stage verdicts are boolean flag columns aggregated via
-``DataFrame.observe`` (CollectMetrics) during the single output
-write, so a 100 TB run reads its input for dedup and writes kept
-rows exactly once, report included.
+Scale shape: every per-row value is computed once, in one
+per-document table: the fingerprint, the shingle hashes (one md5 per
+shingle), the lang/quality/token columns and the exact-dedup verdict
+(a min-id window over the fingerprint exchange, the only shuffle of
+the text). With a pair stage on, the table is materialized once
+(``localCheckpoint``); the MinHash signature and the verify Jaccard
+read its hash arrays, and every verdict is one projection over it
+left-joined with the losers. The LSH band-bucket join carries
+``(band_id, band_hash, id)`` alone (see ``functions/dedup.py``). The
+per-stage funnel census costs ZERO extra passes: stage verdicts are
+boolean flag columns aggregated via ``DataFrame.observe``
+(CollectMetrics) during the single output write, so a 100 TB run
+reads its input for dedup and writes kept rows exactly once, report
+included.
 
 Building the plan has a cost of its own: the per-row builders of
 ``functions/text.py`` and ``functions/dedup.py`` are SQL text, parsed
-once per column, and each stage below adds its columns with one
-``withColumns`` or ``selectExpr``. A build costs 603 Py4J commands
-(0.5–0.9 s warm) where a Column-API build sent one per operator and
-literal (5,227, 1.2–1.7 s); the optimized plan is unchanged by it.
+once per column, and the table and the verdicts are one projection
+each. A ``curate()`` call sends 430 Py4J commands, the table's
+checkpoint job included, where one ``withColumns`` per stage sent 603
+and a Column-API build one per operator and literal (5,227).
 
 Near-dup removal contract — two modes (``--dedup-mode``):
 
@@ -122,40 +127,62 @@ def curate(
     """Return the input DataFrame with one cumulative boolean verdict
     column per stage (``keep_exact`` … ``keep``) plus derived feature
     columns (``pred_lang``, ``quality_score``, ``n_tokens`` …); callers
-    filter on the ``keep`` column. Plan construction only under
-    ``dedup_mode="pairwise"``; ``"cc"`` runs the bounded iterative
-    connected-components job on the verified pair set (actions)."""
-    from pyspark.sql import functions as F
-
-    from astrospectro_spark.functions.dedup import minhash_lsh_candidates
+    filter on the ``keep`` column. With a pair stage on, the
+    per-document table is computed here (one Spark job), and
+    ``dedup_mode="cc"`` also runs the bounded iterative
+    connected-components job on the verified pair set."""
+    from astrospectro_spark.functions.dedup import lsh_pairs, shingle_hashes_sql
     from astrospectro_spark.functions.text import (
         lang_id_sql,
+        normalized_sql,
         quality_sql,
         quote_ident,
         quote_str,
         token_stats_sql,
-        with_fingerprint,
-        with_sql,
     )
 
     if dedup_mode not in ("pairwise", "cc"):
         raise ValueError(f"unknown dedup_mode: {dedup_mode!r}")
     c_id, c_text = quote_ident(id_col), quote_ident(text_col)
+    near = near_dup_threshold is not None
 
-    # --- exact dedup: keeper = min id per normalized-text fingerprint.
-    # A window over the fingerprint, NOT groupBy+join-back: the verdict
-    # rides the same exchange that partitions by fingerprint — one
-    # shuffle of the doc rows instead of a groupBy plus two join
-    # shuffles (round-4 ADVICE / judge item 5).
+    # --- the per-document table: every per-row value, computed once.
+    # The fingerprint partitions the rows: a fixed-width hash
+    # repartition (never coalesced by AQE) gives the md5-heavy shingle
+    # hashing its task parallelism, and the exact-dedup window rides
+    # the same exchange (keeper = min id per fingerprint, no
+    # groupBy + join-back). The text is shuffled once, and the hash
+    # arrays never.
     # NULL-text contract (round-5 ADVICE, documented): md5(NULL) is
     # NULL, and both window partitioning AND groupBy treat NULL as one
     # key, so all NULL-text docs form a single exact-dup group with one
     # keeper (min id). This matches exact_dup_groups / the dedup_exact
     # oracle; callers who must keep every NULL-text doc should filter
     # them out before curate and union them back.
-    flagged = with_sql(with_fingerprint(docs, text_col), {
+    per_doc = {
         "keep_exact": f"{c_id} = min({c_id}) OVER (PARTITION BY fingerprint)",
-    }).drop("fingerprint")
+        **lang_id_sql(text_col),
+        **quality_sql(text_col),
+        **token_stats_sql(text_col),
+    }
+    if near:
+        per_doc["_h"] = shingle_hashes_sql(text_col, 3, max_shingle_tokens)
+    # a derived column or verdict recomputes an input column of the
+    # same name (a curated output curated again)
+    doc_cols = [
+        quote_ident(c) for c in docs.columns if c not in per_doc and c not in FUNNEL_STAGES
+    ]
+    table = docs.selectExpr(
+        *doc_cols, f"md5({normalized_sql(c_text)}) AS fingerprint"
+    ).repartition(docs.sparkSession.sparkContext.defaultParallelism, "fingerprint")
+    table = table.selectExpr(*doc_cols, *(f"{v} AS {k}" for k, v in per_doc.items()))
+    if near or embeddings is not None:
+        # read by the pair stages and by the verdicts: materialize once.
+        # Eager measured faster than lazy on curate_dedup. The blocks
+        # live in executor storage, so at cluster scale an executor
+        # loss fails the job (see connected_components on checkpoint).
+        table = table.localCheckpoint(eager=True)
+    survivors = table.filter("keep_exact")
 
     def _losers(pairs, pair_id_a="id_a", pair_id_b="id_b"):
         """ids to DROP from a verified duplicate pair set, per mode."""
@@ -166,54 +193,16 @@ def curate(
             return labels.filter("id != component").selectExpr(f"id AS {c_id}")
         return pairs.selectExpr(f"{quote_ident(pair_id_b)} AS {c_id}").distinct()
 
-    def _drop_losers(flagged, loser_ids, flag, prev, verdict):
-        """``verdict`` = ``prev`` and not among ``loser_ids``: one left
-        join, one projection (``flag`` names the join's marker column)."""
-        return flagged.join(
-            loser_ids.selectExpr(c_id, f"true AS {flag}"), id_col, "left"
-        ).selectExpr(
-            *map(quote_ident, flagged.columns),
-            f"{prev} AND NOT coalesce({flag}, false) AS {verdict}",
-        )
-
-    # Exact-survivor slice for the pair stages, computed INDEPENDENTLY
-    # of the flagged plan: one keeper row per fingerprint via
-    # groupBy+min_by over (id, text, fingerprint) only. Referencing
-    # flagged.filter("keep_exact") here instead would re-run the
-    # full-row verdict window inside every pair-branch subplan (the
-    # LSH self-join references it on both sides and again for the
-    # verify re-attach) — measured 4x on the curate bench.
-    survivors = (
-        with_fingerprint(docs, text_col)
-        .groupBy("fingerprint")
-        .agg(F.expr(f"min_by(struct({c_id} AS i, {c_text} AS t), {c_id})").alias("_s"))
-        .selectExpr(f"_s.i AS {c_id}", f"_s.t AS {c_text}")
-    )
-    # AQE coalesces the tiny keeper agg to ~1 partition, which would
-    # serialize the md5-heavy shingle/signature stage downstream; a
-    # fixed-width repartition (never coalesced) restores task
-    # parallelism for the LSH branch. Cost: one narrow exchange of the
-    # keeper slice.
-    survivors = survivors.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    )
-
     # --- near-dup: drop per the dedup_mode rule over verified pairs.
     # Run on exact-survivors only (duplicates would flood the buckets).
+    # The signature and the verify Jaccard both read the table's
+    # shingle hashes.
+    verdicts = table
     near_loser_ids = None
-    if near_dup_threshold is not None:
-        pairs = minhash_lsh_candidates(
-            survivors, text_col, id_col,
-            verify_threshold=near_dup_threshold,
-            max_tokens=max_shingle_tokens,
-            # verify re-shingles candidate ids from the RAW table: a
-            # keeper's (id, text) pair is identical in docs and in the
-            # survivor agg, and attaching from `survivors` would
-            # re-execute the min_by aggregation subplan a second time
-            # (the verify semi-join defeats its exchange reuse).
-            verify_source=docs.select(id_col, text_col),
+    if near:
+        near_loser_ids = _losers(
+            lsh_pairs(survivors, id_col, verify_threshold=near_dup_threshold)
         )
-        near_loser_ids = _losers(pairs)
         if embeddings is not None and dedup_mode == "pairwise":
             # the embedding stage reuses near_loser_ids in its alive
             # anti-join; without a checkpoint the whole LSH subplan
@@ -222,15 +211,12 @@ def curate(
             # checkpoints). Lazy: materialised at the first action,
             # loser ids only — tiny.
             near_loser_ids = near_loser_ids.localCheckpoint(eager=False)
-        flagged = _drop_losers(flagged, near_loser_ids, "_near_dup", "keep_exact", "keep_near")
-    else:
-        flagged = with_sql(flagged, {"keep_near": "keep_exact"})
+        verdicts = verdicts.join(near_loser_ids.selectExpr(c_id, "true AS _near_dup"), id_col, "left")
 
     # --- embedding near-dup: bucketed hyperplane-LSH self-join over
     # the embeddings of docs STILL ALIVE after the text stages (a doc
     # dropped upstream must not act as a pair keeper here — and the
     # semi-join shrinks the LSH self-join input); drop rule per mode.
-    # Alive set built from the survivor slice, not the flagged window.
     if embeddings is not None:
         from astrospectro_spark.functions.similarity import embedding_neardup_pairs
 
@@ -244,17 +230,12 @@ def curate(
             vec_col=embedding_vec_col,
             threshold=embedding_threshold,
         )
-        flagged = _drop_losers(flagged, _losers(epairs), "_embed_dup", "keep_near", "keep_embed")
-        free_riders = {}
-    else:
-        free_riders = {"keep_embed": "keep_near"}
+        verdicts = verdicts.join(_losers(epairs).selectExpr(c_id, "true AS _embed_dup"), id_col, "left")
 
-    # --- expression-only filters (free riders on the final scan)
-    free_riders.update(lang_id_sql(text_col))
-    free_riders.update(quality_sql(text_col))
-    free_riders.update(token_stats_sql(text_col))
-    flagged = with_sql(flagged, free_riders)
-
+    keep_near = "keep_exact AND NOT coalesce(_near_dup, false)" if near else "keep_exact"
+    keep_embed = (
+        "keep_near AND NOT coalesce(_embed_dup, false)" if embeddings is not None else "keep_near"
+    )
     keep_lang = f"pred_lang IN ({', '.join(map(quote_str, langs))})" if langs else "true"
     keep_quality = (
         f"quality_score >= {float(min_quality)!r}D" if min_quality is not None else "true"
@@ -266,16 +247,20 @@ def curate(
         token_bounds.append(f"n_tokens <= {int(max_tokens)}")
     keep_tokens = " AND ".join(token_bounds) or "true"
 
-    # cumulative verdicts: each stage count is a true funnel level
-    prev = "keep_embed"
-    for verdict, cond in (
-        ("keep_lang", keep_lang),
-        ("keep_quality", keep_quality),
-        ("keep_tokens", keep_tokens),
-    ):
-        flagged = with_sql(flagged, {verdict: f"{prev} AND ({cond})"})
-        prev = verdict
-    return with_sql(flagged, {"keep": "keep_tokens"})
+    # --- every verdict in one projection; each is cumulative, so each
+    # stage count is a true funnel level
+    free_riders = [k for k in per_doc if k not in ("keep_exact", "_h")]
+    return verdicts.selectExpr(
+        *doc_cols,
+        "keep_exact",
+        f"{keep_near} AS keep_near",
+        f"{keep_embed} AS keep_embed",
+        *free_riders,
+        f"keep_embed AND ({keep_lang}) AS keep_lang",
+        f"keep_lang AND ({keep_quality}) AS keep_quality",
+        f"keep_quality AND ({keep_tokens}) AS keep_tokens",
+        "keep_tokens AS keep",
+    )
 
 
 FUNNEL_STAGES = [

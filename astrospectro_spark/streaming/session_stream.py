@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from astrospectro_spark.engine.windows import (
+    _ts_us_sql,
     apply_layers,
     chunk_carry,
     context_margin,
@@ -294,7 +295,7 @@ def stream_featurize(
             out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
             # new state: the last stitched row, and the tail by the local
             # row number and epoch-µs that window_layers stages
-            ends = summ.selectExpr("conv_id", "_e._rn as _n", "unix_micros(_e.ts) as _us")
+            ends = summ.selectExpr("conv_id", "_e._rn as _n", f"{_ts_us_sql('_e.ts')} as _us")
             new_tail = (
                 _join_conv(staged, ends)
                 .filter(f"_rn > _n - {k_rows} or _usq >= _us - {margin_us}")

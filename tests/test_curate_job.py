@@ -350,3 +350,51 @@ def test_exact_stage_is_joinless_window(spark, planted_src):
     mx = docs.agg({"doc_id": "max"}).first()[0]
     dropped = {r.doc_id for r in flagged.filter("NOT keep_exact").collect()}
     assert mx - 1 in dropped or mx in dropped or len(dropped) >= 1
+
+
+@pytest.mark.parametrize("seed", [3, 4])
+def test_curate_matches_independent_oracle(spark, tmp_path, seed):
+    """curate's funnel and kept ids equal the benchmark's pandas oracle
+    (string shingles, no Spark) over 1000 generated documents with
+    planted exact and near duplicates, at the curate_dedup benchmark's
+    languages, token floor and near-dup threshold."""
+    from pyspark.sql import functions as F
+
+    from astrospectro_spark.jobs.curate_job import FUNNEL_STAGES, curate
+    from perfbench import inputs, oracles
+    from perfbench.workloads import CurateDedup as W
+
+    pdf = inputs.generate_documents(1000, seed)
+    src = str(tmp_path / "docs.parquet")
+    pdf.to_parquet(src, index=False)
+    flagged = curate(
+        spark.read.parquet(src),
+        near_dup_threshold=W.NEAR_THRESHOLD, langs=W.LANGS, min_tokens=W.MIN_TOKENS,
+    ).cache()
+    funnel = flagged.agg(
+        F.count(F.lit(1)).alias("n_input"), *[F.sum(F.col(c).cast("long")).alias(c) for c in FUNNEL_STAGES]
+    ).first().asDict()
+    funnel["n_kept"] = funnel.pop("keep")
+    kept = {r.doc_id for r in flagged.filter("keep").select("doc_id").collect()}
+    flagged.unpersist()
+
+    want_funnel, want_kept = oracles.curate(pdf, W.LANGS, W.MIN_TOKENS, W.NEAR_THRESHOLD)
+    assert funnel == want_funnel
+    assert kept == want_kept
+    assert funnel["keep_exact"] > funnel["keep_near"]  # the planted dups are found
+
+
+def test_curate_recomputes_derived_input_columns(spark, planted_src):
+    """A curated output curated again: input columns named like a
+    derived column or a verdict are recomputed, not read, and appear
+    once."""
+    from astrospectro_spark.jobs.curate_job import FUNNEL_STAGES, curate
+
+    src, _ = planted_src
+    docs = spark.read.parquet(src)
+    want = curate(docs, min_tokens=2)
+    stale = docs.selectExpr("*", "-1L AS n_tokens", "'xx' AS pred_lang", "false AS keep_near")
+    got = curate(stale, min_tokens=2)
+    assert sorted(got.columns) == sorted(want.columns)
+    cols = ["doc_id", "n_tokens", "pred_lang", *FUNNEL_STAGES]
+    assert sorted(got.select(*cols).collect()) == sorted(want.select(*cols).collect())

@@ -449,6 +449,29 @@ def test_shingles_match_python_reference(spark):
             assert list(row[f"sh_{n}_{m}"]) == _py_shingles(text, n, m), (text, n, m)
 
 
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_shingle_hashes_do_not_collide(spark, sf):
+    """The LSH verify Jaccard runs over the 60-bit md5 prefixes of the
+    shingles, which equals the Jaccard over the shingle strings only
+    if no two distinct shingles share a prefix. On each document
+    fixture the distinct shingles and the distinct hashes are as many,
+    and each hash's top 28 bits are the signature's
+    ``substring(md5(s), 1, 7)``."""
+    from astrospectro_spark.functions.dedup import shingle_hashes_sql, shingles
+
+    docs = spark.read.parquet(f"/root/testdata/{sf}/documents.parquet")
+    pairs = docs.select(
+        shingles("text").alias("s"), F.expr(shingle_hashes_sql("text")).alias("h")
+    ).selectExpr("inline(arrays_zip(s, h))")
+    got = pairs.selectExpr(
+        "count(DISTINCT s) AS n_s",
+        "count(DISTINCT h) AS n_h",
+        "count_if(shiftright(h, 32) != CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT)) AS bad",
+    ).first()
+    assert got.n_s == got.n_h > 0, got
+    assert got.bad == 0, got
+
+
 _JAVA_WS = "[ \t\n\x0b\f\r]+"  # Java regex \s: ASCII whitespace only
 
 

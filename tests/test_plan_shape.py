@@ -218,36 +218,55 @@ def test_shingle_tokenizer_evaluated_once(spark, documents_sdf):
         assert plan.count("regexp_replace(lower(text") == 1, plan
 
 
-def test_verify_shingles_projected_once(spark, documents_sdf):
-    """LSH verification shingles each candidate document once: one
-    join attaches the shingles to both ends of every pair. Joining
-    them to each side put a second copy of the shingle projection in
-    the plan, and AQE ran the two copies as two stages. Shingles not
-    folded into a signature are the verify projection; curate and the
-    exact n-gram pairs of the ngram_jaccard query have exactly one."""
+def test_verify_shingles_projected_once(spark, documents_sdf, monkeypatch):
+    """Each document is shingled once. curate computes one per-document
+    table that holds the shingle hashes and checkpoints it: the
+    table's plan holds curate's only shingle projection, and the plan
+    above it (the LSH signature, the verify Jaccard, the verdicts)
+    none, and the hash arrays do not ride the band shuffle. Standalone,
+    minhash_lsh_candidates shingles every document for the signature
+    and, in one projection under the verify semi-join, the candidate
+    documents again; the exact n-gram pairs of the ngram_jaccard query
+    shingle in one projection."""
     from astrospectro_spark.functions.dedup import minhash_lsh_candidates
     from astrospectro_spark.jobs.curate_job import curate
     from astrospectro_spark.queries import q_ngram_jaccard
 
-    verify_shingles = re.compile(
-        r"(?<!aggregate\(transform\()element_at\(transform\(array\((slice\()?split\(trim\("
-    )
-    for df in (
-        minhash_lsh_candidates(documents_sdf),
-        curate(documents_sdf),
-        q_ngram_jaccard(spark, "/root/testdata/sf0.001"),
-    ):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert len(verify_shingles.findall(plan)) == 1, plan
+    shingle = re.compile(r"element_at\(transform\(array\((slice\()?split\(trim\(")
+    signature = re.compile(r"aggregate\(transform\(transform\(element_at\(transform\(array\(")
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    checkpointed = []
+    local_checkpoint = type(documents_sdf).localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        checkpointed.append(optimized(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(documents_sdf), "localCheckpoint", recording)
+    flagged = curate(documents_sdf)
+    assert [len(shingle.findall(p)) for p in checkpointed] == [1]
+    assert not shingle.findall(optimized(flagged))
+    for m in re.finditer(r"^\(\d+\) Exchange\n(.*?)(?=^\(\d+\)|\Z)", _formatted(spark, flagged), re.M | re.S):
+        if "band_hash" in m.group(1):
+            assert not re.search(r"\b_h#\d", m.group(1)), m.group(1)
+
+    plan = optimized(minhash_lsh_candidates(documents_sdf))
+    assert len(shingle.findall(plan)) - len(signature.findall(plan)) == 1, plan
+    assert len(shingle.findall(optimized(q_ngram_jaccard(spark, "/root/testdata/sf0.001")))) == 1
 
 
 def test_curate_build_py4j_budget(spark, documents_sdf):
-    """Building the curate plan is SQL text, one parse per column: at
-    most 1,500 Py4J commands for the curate_dedup benchmark's arguments.
-    Column-API builders sent one command per operator and literal,
-    5,200 and more. Python GC is paused and object-release commands are
-    not counted, so the count does not depend on when earlier objects
-    die."""
+    """Building the curate plan is SQL text, one parse per column, and
+    the verdicts are one projection over the per-document table: at
+    most 520 Py4J commands for the curate_dedup benchmark's arguments,
+    the table's checkpoint job included (430 measured). Column-API
+    builders sent one command per operator and literal, 5,200 and
+    more; a build that added each verdict in its own step sent 603.
+    Python GC is paused and object-release commands are not counted,
+    so the count does not depend on when earlier objects die."""
     import gc
 
     from astrospectro_spark.jobs.curate_job import curate
@@ -269,7 +288,7 @@ def test_curate_build_py4j_budget(spark, documents_sdf):
         del client.send_command
         gc.enable()
     n = sum(1 for c in sent if not c.startswith("m\n"))
-    assert n <= 1500, n
+    assert n <= 520, n
 
 
 def test_per_entity_joins_not_hint_broadcast(spark):

@@ -146,6 +146,33 @@ def test_stream_featurize_replay_is_exactly_once(spark, stream_split, tmp_path):
     _assert_matches_batch(spark, out, pattern, wide=False)
 
 
+def test_stream_featurize_timestamp_ntz(spark, transcripts_pdf, tmp_path):
+    """Parquet written by pandas stores naive timestamps, which Spark
+    reads as TIMESTAMP_NTZ: a 2-batch stream over such files equals
+    featurize_expr on all 18 narrow columns."""
+    import time
+
+    from astrospectro_spark.streaming import stream_featurize
+
+    pdf = transcripts_pdf.sort_values(["ts", "turn_idx"], kind="mergesort").reset_index(drop=True)
+    src = tmp_path / "src"
+    src.mkdir()
+    half = len(pdf) // 2
+    for i, part in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
+        part.to_parquet(src / f"part-{i:03d}.parquet", index=False)
+        time.sleep(1.1)  # distinct mtimes → deterministic batch order
+    pattern = str(src / "part-*.parquet")
+    schema = spark.read.parquet(pattern).schema
+    assert schema["ts"].dataType.typeName() == "timestamp_ntz"
+
+    out = str(tmp_path / "out")
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(pattern)
+    q = stream_featurize(stream, out, str(tmp_path / "ckpt")).start()
+    assert q.awaitTermination(600)
+    assert q.exception() is None
+    _assert_matches_batch(spark, out, pattern, wide=False)
+
+
 def test_stream_featurize_out_of_order_turn_fails(spark, transcripts_pdf, tmp_path):
     """A turn at or before its conversation's last committed ts cannot
     be featurized without rewriting committed rows: the query fails and

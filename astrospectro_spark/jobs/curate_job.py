@@ -20,11 +20,10 @@ job (the documents sibling of ``featurize_job``):
 Scale shape: every per-row value is computed once, in one
 per-document table: the fingerprint, the shingle hashes (one md5 per
 shingle), the lang/quality/token columns and the exact-dedup verdict
-(a min-id window over the fingerprint exchange, the only shuffle of
-the text). With a pair stage on, the table is materialized once
-(``localCheckpoint``); the MinHash signature and the verify Jaccard
-read its hash arrays, and every verdict is one projection over it
-left-joined with the losers. The LSH band-bucket join carries
+(a min-id window over the fingerprint exchange). With a pair stage
+on, the table is materialized once (``localCheckpoint``); the MinHash
+signature and the verify Jaccard read its hash arrays, and every
+verdict is one projection over it left-joined with the losers. The LSH band-bucket join carries
 ``(band_id, band_hash, id)`` alone (see ``functions/dedup.py``). The
 per-stage funnel census costs ZERO extra passes: stage verdicts are
 boolean flag columns aggregated via ``DataFrame.observe``
@@ -151,8 +150,8 @@ def curate(
     # repartition (never coalesced by AQE) gives the md5-heavy shingle
     # hashing its task parallelism, and the exact-dedup window rides
     # the same exchange (keeper = min id per fingerprint, no
-    # groupBy + join-back). The text is shuffled once, and the hash
-    # arrays never.
+    # groupBy + join-back). The hash arrays never ride the band
+    # shuffle, only the verify join.
     # NULL-text contract (round-5 ADVICE, documented): md5(NULL) is
     # NULL, and both window partitioning AND groupBy treat NULL as one
     # key, so all NULL-text docs form a single exact-dup group with one

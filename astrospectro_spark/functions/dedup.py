@@ -46,7 +46,7 @@ SQL expression text, parsed once per output column (``F.expr`` or
 Py4J round trip: one :func:`minhash_signature` took 1,448 of them and
 takes 3 as text (one :func:`shingles` 276), and the
 ``curate_job.curate`` plan took 5,227 commands to build; as text it
-takes 430, its per-document checkpoint job included.
+takes 436, its per-document checkpoint job included.
 """
 
 from __future__ import annotations
@@ -196,7 +196,7 @@ def ngram_jaccard_pairs(
             ids.withColumnRenamed(id_col, "id_b"), blocks
         ).filter("id_a < id_b")
         hashed = docs.selectExpr(quote_ident(id_col), f"{shingle_hashes_sql(text_col, n)} AS _h")
-        return _verify_pairs(pairs, hashed, id_col, blocks, threshold)
+        return _verify_candidates(pairs, hashed, id_col, blocks, threshold)
 
     if max_block_rows is None:
         return exact_pairs(df)
@@ -289,12 +289,13 @@ def minhash_lsh_candidates(
     """MinHash + LSH near-dup detection.
 
     One hash-array builder (:func:`shingle_hashes_sql`) feeds both
-    steps of :func:`lsh_pairs`: the signature reads the top 28 bits of
-    each shingle hash, and the verify Jaccard the full 60-bit hash
-    sets. Here the hash array is a projection over ``df``, so the
-    verify step hashes the candidate documents a second time (its
-    semi-join runs below the projection); ``curate_job.curate`` reads
-    both from its materialized per-document table instead.
+    steps, :func:`_lsh_candidates` and :func:`_verify_pairs`: the
+    signature reads the top 28 bits of each shingle hash, and the
+    verify Jaccard the full 60-bit hash sets. Here the hash array is a
+    projection over ``df``, so the verify step hashes the candidate
+    documents a second time (its semi-join runs below the projection);
+    ``curate_job.curate`` reads both from its materialized
+    per-document table instead (:func:`lsh_pairs`).
 
     signature → ``bands`` bands of ``num_perm/bands`` rows → band-hash
     bucket join → candidate id pairs → shingle-hash Jaccard
@@ -323,31 +324,18 @@ def minhash_lsh_candidates(
     keys = [quote_ident(c) for c in [id_col, *block_cols]]
     hashed = df.selectExpr(*keys, f"{shingle_hashes_sql(text_col, ngram, max_tokens)} AS _h")
     cand = _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_cols)
-    # the verify step hashes the candidate documents only: the optimizer
-    # pushes this semi-join below the hash projection. Hashing the whole
-    # corpus again measured 3x the signature pass at sf0.1.
-    ids = cand.selectExpr(f"explode(array(id_a, id_b)) AS {keys[0]}").distinct()
-    return _verify_pairs(
-        cand, hashed.join(ids, id_col, "left_semi"), id_col, list(block_cols), verify_threshold
-    )
+    return _verify_candidates(cand, hashed, id_col, list(block_cols), verify_threshold)
 
 
-def lsh_pairs(
-    hashed: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = 32,
-    bands: int | None = None,
-    verify_threshold: float = 0.5,
-    block_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """The MinHash+LSH pairs ``(id_a, id_b, *block_cols, jaccard)`` of
-    ``hashed``, whose ``_h`` column holds each document's shingle
-    hashes (:func:`shingle_hashes_sql`). The algebra behind
-    :func:`minhash_lsh_candidates`, for callers that already hold the
+def lsh_pairs(hashed: DataFrame, id_col: str, verify_threshold: float) -> DataFrame:
+    """The MinHash+LSH pairs ``(id_a, id_b, jaccard)`` of ``hashed``,
+    whose ``_h`` column holds each document's shingle hashes
+    (:func:`shingle_hashes_sql`), at the default geometry of
+    :func:`minhash_lsh_candidates`. For callers that already hold the
     hash arrays (``curate_job.curate`` reads them from its
-    per-document table)."""
-    cand = _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_cols)
-    return _verify_pairs(cand, hashed, id_col, list(block_cols), verify_threshold)
+    per-document table), so the verify step reads them too."""
+    cand = _lsh_candidates(hashed, id_col, 32, None, verify_threshold, ())
+    return _verify_pairs(cand, hashed, id_col, [], verify_threshold)
 
 
 def _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_cols) -> DataFrame:
@@ -390,6 +378,15 @@ def _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_col
     )
 
 
+def _verify_candidates(pairs, hashed, id_col, blocks, threshold) -> DataFrame:
+    """:func:`_verify_pairs` over a hash projection ``hashed`` that is
+    not materialized: only the documents in a pair are hashed, since
+    the optimizer pushes this semi-join below the projection. Hashing
+    the whole corpus again measured 3x the signature pass at sf0.1."""
+    ids = pairs.selectExpr(f"explode(array(id_a, id_b)) AS {quote_ident(id_col)}").distinct()
+    return _verify_pairs(pairs, hashed.join(ids, id_col, "left_semi"), id_col, blocks, threshold)
+
+
 def _verify_pairs(pairs, hashed, id_col, blocks, threshold) -> DataFrame:
     """The pairs ``(id_a, id_b, *blocks)`` whose shingle-hash sets (the
     ``_h`` column of ``hashed``) have a Jaccard at or above
@@ -404,7 +401,7 @@ def _verify_pairs(pairs, hashed, id_col, blocks, threshold) -> DataFrame:
     has no row in ``hashed`` drops out, as an inner join would drop it.
     SHUFFLE_HASH keeps the hash side out of a broadcast: planned
     under a broadcast exchange, a semi-join inside it (the candidate
-    filter of :func:`minhash_lsh_candidates`) stayed a sort-merge join,
+    filter of :func:`_verify_candidates`) stayed a sort-merge join,
     where AQE otherwise broadcasts the small id set."""
     ends = pairs.select("id_a", "id_b", *blocks, F.explode(F.array("id_a", "id_b")).alias(id_col))
     return (

@@ -18,12 +18,13 @@ job (the documents sibling of ``featurize_job``):
         [--min-tokens 1] [--max-tokens 1000000]
 
 Scale shape: every per-row value is computed once, in one
-per-document table: the fingerprint, the shingle hashes (one md5 per
-shingle), the lang/quality/token columns and the exact-dedup verdict
-(a min-id window over the fingerprint exchange). With a pair stage
-on, the table is materialized once (``localCheckpoint``); the MinHash
-signature and the verify Jaccard read its hash arrays, and every
-verdict is one projection over it left-joined with the losers. The LSH band-bucket join carries
+per-document table: the fingerprint, the lang/quality/token columns,
+the exact-dedup verdict (a min-id window over the fingerprint
+exchange) and, for its keepers, the shingle hashes (one md5 per
+shingle). With a pair stage on, the table is materialized once
+(``localCheckpoint``); the MinHash signature and the verify Jaccard
+read its hash arrays, and every verdict is one projection over it
+left-joined with the losers. The LSH band-bucket join carries
 ``(band_id, band_hash, id)`` alone (see ``functions/dedup.py``). The
 per-stage funnel census costs ZERO extra passes: stage verdicts are
 boolean flag columns aggregated via ``DataFrame.observe``
@@ -34,7 +35,7 @@ included.
 Building the plan has a cost of its own: the per-row builders of
 ``functions/text.py`` and ``functions/dedup.py`` are SQL text, parsed
 once per column, and the table and the verdicts are one projection
-each. A ``curate()`` call sends 430 Py4J commands, the table's
+each. A ``curate()`` call sends 436 Py4J commands, the table's
 checkpoint job included, where one ``withColumns`` per stage sent 603
 and a Column-API build one per operator and literal (5,227).
 
@@ -164,17 +165,20 @@ def curate(
         **quality_sql(text_col),
         **token_stats_sql(text_col),
     }
-    if near:
-        per_doc["_h"] = shingle_hashes_sql(text_col, 3, max_shingle_tokens)
     # a derived column or verdict recomputes an input column of the
-    # same name (a curated output curated again)
-    doc_cols = [
-        quote_ident(c) for c in docs.columns if c not in per_doc and c not in FUNNEL_STAGES
-    ]
+    # same name (a curated output curated again); an input fingerprint
+    # (a stream_curate table) or _h is internal and dropped
+    derived = {*per_doc, "fingerprint", "_h", *FUNNEL_STAGES}
+    doc_cols = [quote_ident(c) for c in docs.columns if c not in derived]
     table = docs.selectExpr(
         *doc_cols, f"md5({normalized_sql(c_text)}) AS fingerprint"
     ).repartition(docs.sparkSession.sparkContext.defaultParallelism, "fingerprint")
     table = table.selectExpr(*doc_cols, *(f"{v} AS {k}" for k, v in per_doc.items()))
+    if near:
+        # the exact keepers only: the LSH reads no other row, and all
+        # copies of a repeated text share one task of the exchange
+        h = shingle_hashes_sql(text_col, 3, max_shingle_tokens)
+        table = table.selectExpr("*", f"CASE WHEN keep_exact THEN {h} END AS _h")
     if near or embeddings is not None:
         # read by the pair stages and by the verdicts: materialize once.
         # Eager measured faster than lazy on curate_dedup. The blocks
@@ -248,7 +252,7 @@ def curate(
 
     # --- every verdict in one projection; each is cumulative, so each
     # stage count is a true funnel level
-    free_riders = [k for k in per_doc if k not in ("keep_exact", "_h")]
+    free_riders = [k for k in per_doc if k != "keep_exact"]
     return verdicts.selectExpr(
         *doc_cols,
         "keep_exact",

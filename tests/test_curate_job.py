@@ -385,15 +385,18 @@ def test_curate_matches_independent_oracle(spark, tmp_path, seed):
 
 
 def test_curate_recomputes_derived_input_columns(spark, planted_src):
-    """A curated output curated again: input columns named like a
-    derived column or a verdict are recomputed, not read, and appear
-    once."""
+    """A curated output curated again, or a stream_curate table (which
+    carries a fingerprint): input columns named like a derived column
+    or a verdict are recomputed, not read, and appear once; an input
+    fingerprint is not read either."""
     from astrospectro_spark.jobs.curate_job import FUNNEL_STAGES, curate
 
     src, _ = planted_src
     docs = spark.read.parquet(src)
     want = curate(docs, min_tokens=2)
-    stale = docs.selectExpr("*", "-1L AS n_tokens", "'xx' AS pred_lang", "false AS keep_near")
+    stale = docs.selectExpr(
+        "*", "-1L AS n_tokens", "'xx' AS pred_lang", "false AS keep_near", "'x' AS fingerprint"
+    )
     got = curate(stale, min_tokens=2)
     assert sorted(got.columns) == sorted(want.columns)
     cols = ["doc_id", "n_tokens", "pred_lang", *FUNNEL_STAGES]

@@ -262,7 +262,7 @@ def test_curate_build_py4j_budget(spark, documents_sdf):
     """Building the curate plan is SQL text, one parse per column, and
     the verdicts are one projection over the per-document table: at
     most 520 Py4J commands for the curate_dedup benchmark's arguments,
-    the table's checkpoint job included (430 measured). Column-API
+    the table's checkpoint job included (436 measured). Column-API
     builders sent one command per operator and literal, 5,200 and
     more; a build that added each verdict in its own step sent 603.
     Python GC is paused and object-release commands are not counted,

@@ -352,7 +352,6 @@ class FeatureRun:
             self.stage(turns, verify_input)
             st = self._staged
         self._staged = None  # the ledger moves on: the next run stages again
-        from astrospectro_spark.engine.skew import release_cached
 
         records = self.records = []
         for b in st.todo:
@@ -364,9 +363,6 @@ class FeatureRun:
             feats = self.featurizer(part)
             bucket_path = os.path.join(self.data_dir, f"bucket={b}")
             out = write_observed(feats, bucket_path, *_checksum_aggs(feats.columns))
-            # release any hot-slice cache the salted featurizer pinned —
-            # a 64-bucket run must not accumulate 64 cached slices
-            release_cached(feats)
             self._append_lineage(
                 run_id=self.run_id,
                 bucket=b,

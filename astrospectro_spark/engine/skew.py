@@ -45,8 +45,6 @@ plan is correct here by construction once its columns carry a kind.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -84,13 +82,13 @@ def featurize_salted(
     The census runs HERE, eagerly: one action collects the hot
     conversation ids (:func:`collect_hot_ids`) before any plan is
     built. When nothing is hot, the result IS the
-    :func:`featurize_expr` plan (no union, no broadcast joins, no
-    persist, an empty cached-handle list); otherwise the hot rows are
-    split off with a null-safe ``conv_id IN (hot ids)`` filter. Rows
-    with a null ``conv_id`` are never hot, whatever their count. The
-    cold rows run the plain plan's window layers, the hot rows run the
-    same layers per chunk and the per-kind stitch, and the union of
-    both takes the plain derive layer (module docstring).
+    :func:`featurize_expr` plan (no union, no broadcast joins);
+    otherwise the hot rows are split off with a null-safe
+    ``conv_id IN (hot ids)`` filter. Rows with a null ``conv_id`` are
+    never hot, whatever their count. The cold rows run the plain plan's
+    window layers, the hot rows run the same layers per chunk and the
+    per-kind stitch, and the union of both takes the plain derive layer
+    (module docstring).
 
     ``enum_shuffle=True`` (narrow ``include_text=False`` contract only,
     see :func:`featurize_expr`) carries ``role``/``tool`` as 64-bit
@@ -98,80 +96,40 @@ def featurize_salted(
     The output KEEPS the codes (BIGINT columns; decode at read via
     ``windows.enum_decode`` with ``windows.enum_decode_map``).
 
-    The hot slice is cached after chunk assignment: the salted plan
-    consumes it three times (the rows with their time-margin copies,
-    the row-margin copies and the per-chunk row counts), and without a
-    persist each consumer re-scans and re-decompresses the source
-    (string decode dominates CPU). The hot slice is by
-    definition a bounded fraction of the table (the skewed
-    conversations), so MEMORY_AND_DISK is safe at scale. The cached
-    handle is registered on the returned DataFrame — call
-    :func:`release_cached` (FeatureRun does) after materialising the
-    result so long multi-bucket runs don't accumulate cached blocks.
+    The hot slice is repartitioned by ``(conv_id, _chunk)`` after chunk
+    assignment. Its three consumers (the rows with their time-margin
+    copies, the row-margin window partitioned by ``(conv_id, _chunk)``
+    and the per-chunk row counts grouped by ``(conv_id, _chunk)``) read
+    that one exchange, which AQE reuses: nothing is cached (the executed
+    plan holds a ``ReusedExchange`` and no ``InMemoryRelation``), and the
+    scan, hot filter and bounds join run once for the hot rows instead
+    of once per consumer. On a 4-core host the plan without the exchange
+    measured within run-to-run spread of it (``featurize_job_resume``
+    ``wall_s`` median 5.99 against 5.85 s over 5 pairs; the sf0.1 salted
+    leaf 5.99–6.55 against 6.09–6.46 s warm): the exchange is kept for
+    the two scans per hot branch it saves, not for a measured gain.
     """
     hot_ids = collect_hot_ids(df, hot_threshold)
     if not hot_ids:
-        out, handles = featurize_expr(
+        return featurize_expr(
             df, gap_s=gap_s, include_text=include_text, wide=wide, enum_shuffle=enum_shuffle
-        ), []
-    else:
-        rows, key_cols = project_inputs(df, include_text, enum_shuffle, wide)
-
-        def layers(key: list[str]):
-            return window_layers(key, gap_s, wide, enum_shuffle)
-
-        cold = apply_layers(rows.filter(~is_hot(hot_ids)), layers(["conv_id"]))
-        hot, handles = _featurize_hot(
-            rows.filter(is_hot(hot_ids)), layers(["conv_id", "_tgt"]), chunk_target_rows
         )
-        staged = cold.unionByName(hot.select(cold.columns))
-        out = derive(staged, wide, enum_shuffle).select(*output_cols(key_cols, wide))
-    out._astrospectro_cached = handles  # fast path for the exact object
-    with _REGISTRY_LOCK:
-        _CACHE_REGISTRY.extend(handles)  # survives downstream transformations
-    return out
+    rows, key_cols = project_inputs(df, include_text, enum_shuffle, wide)
 
+    def layers(key: list[str]):
+        return window_layers(key, gap_s, wide, enum_shuffle)
 
-# Handles of every hot-slice persist not yet released. The dynamic
-# attribute on the returned DataFrame is lost as soon as a caller
-# transforms it (.select/.filter return new objects), so the registry is
-# the source of truth; the attribute just lets release_cached target one
-# specific result when several are in flight. All mutations go through
-# _REGISTRY_LOCK so concurrent featurize_salted calls from multiple
-# driver threads cannot race extend() against the drain (a double
-# unpersist or a skipped handle).
-_CACHE_REGISTRY: list[DataFrame] = []
-_REGISTRY_LOCK = threading.Lock()
+    cold = apply_layers(rows.filter(~is_hot(hot_ids)), layers(["conv_id"]))
+    hot = _featurize_hot(
+        rows.filter(is_hot(hot_ids)), layers(["conv_id", "_tgt"]), chunk_target_rows
+    )
+    staged = cold.unionByName(hot.select(cold.columns))
+    return derive(staged, wide, enum_shuffle).select(*output_cols(key_cols, wide))
 
 
 def release_cached(df: DataFrame | None = None) -> None:
-    """Unpersist intermediates the salted featurizer cached.
-
-    Pass the DataFrame returned by :func:`featurize_salted` to release
-    exactly that result's handles. If the dynamic attribute was lost in
-    a transformation (``.select``/``.filter`` return new objects), or
-    no argument is given, the WHOLE registry is drained — including
-    handles belonging to any other in-flight salted result. The
-    fallback is therefore only safe when a single salted result is in
-    flight (the FeatureRun loop's case: one bucket at a time); callers
-    running several salted featurizations concurrently must keep the
-    returned DataFrame and pass it here untransformed. A result with no
-    hot branch carries an EMPTY handle list: releasing it releases
-    nothing. Call after the output is materialised (write/collect);
-    idempotent either way.
-    """
-    handles = getattr(df, "_astrospectro_cached", None) if df is not None else None
-    with _REGISTRY_LOCK:
-        if handles is None:
-            handles, _CACHE_REGISTRY[:] = list(_CACHE_REGISTRY), []
-        else:
-            drop = {id(g) for g in handles}
-            _CACHE_REGISTRY[:] = [h for h in _CACHE_REGISTRY if id(h) not in drop]
-    for h in handles:
-        try:
-            h.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be gone
-            pass
+    """No-op: the salted featurizer caches nothing. Its only caller is
+    the ``perfbench`` traced run (``perfbench/workloads.py``)."""
 
 
 def collect_hot_ids(df: DataFrame, hot_threshold: int) -> list:
@@ -239,9 +197,7 @@ def chunk_of() -> "F.Column":
     )
 
 
-def _featurize_hot(
-    hot: DataFrame, layers: list[Layer], chunk_target_rows: int
-) -> tuple[DataFrame, list[DataFrame]]:
+def _featurize_hot(hot: DataFrame, layers: list[Layer], chunk_target_rows: int) -> DataFrame:
     """Steps 2-5 on the projected hot rows: the staged columns of
     ``layers`` (partitioned by conv_id and ``_tgt``), made global."""
     kinds = layer_kinds(layers)
@@ -249,11 +205,13 @@ def _featurize_hot(
 
     # ---- 2. range salting: ts-quantile boundaries per hot conv. The
     # hot slice has three consumers (the rows with their time-margin
-    # copies, the row-margin copies and the chunk counts); the persist
-    # spares each a re-scan of the source.
+    # copies, the row-margin window and the chunk counts, the last two
+    # keyed by (conv_id, _chunk)). All three read this one exchange,
+    # which AQE reuses, so the source is scanned once for the hot rows
+    # and not once per consumer (featurize_salted docstring).
     bounds = compute_ts_bounds(hot, chunk_target_rows)
     hot = hot.join(F.broadcast(bounds), "conv_id")
-    hot = hot.withColumn("_chunk", chunk_of()).persist()
+    hot = hot.withColumn("_chunk", chunk_of()).repartition("conv_id", "_chunk")
     us = _ts_us_sql("ts")
 
     # ---- 3. overlap margin: copy context rows into later chunks. The
@@ -314,4 +272,4 @@ def _featurize_hot(
 
     # ---- 4. local pass: the plain feature plan's window layers over
     # (conv, target chunk); 5. stitch
-    return stitch_chunks(apply_layers(u, layers), kinds), [hot]
+    return stitch_chunks(apply_layers(u, layers), kinds)

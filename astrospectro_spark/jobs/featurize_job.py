@@ -221,7 +221,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="featurize_job", master=args.master)
     turns = spark.read.parquet(args.input)
 
-    enum_shuffle = bool(getattr(args, "enum_shuffle", False))
+    enum_shuffle = args.enum_shuffle
     if enum_shuffle and args.include_text:
         print("warning: --enum-shuffle applies to the feature-table "
               "contract (no --include-text); ignoring it", file=sys.stderr)

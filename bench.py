@@ -76,7 +76,7 @@ def main() -> None:
     spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     _force(featurize_expr(turns.limit(1000)))
 
-    from astrospectro_spark.engine.skew import featurize_salted, release_cached
+    from astrospectro_spark.engine.skew import featurize_salted
     from astrospectro_spark.jobs.curate_job import FUNNEL_STAGES, curate
     from astrospectro_spark.queries import q_feature_vector_wide
 
@@ -96,9 +96,7 @@ def main() -> None:
         )
 
     def _salted():
-        df = featurize_salted(turns, hot_threshold=100_000, chunk_target_rows=50_000)
-        _force(df)
-        release_cached(df)
+        _force(featurize_salted(turns, hot_threshold=100_000, chunk_target_rows=50_000))
 
     plan = [
         ("featurize_transcripts", lambda: _force(featurize_expr(turns))),

@@ -26,7 +26,7 @@ import pandas as pd
 import pytest
 
 from astrospectro_spark.engine.featurize import featurize_grouped
-from astrospectro_spark.engine.skew import featurize_salted, release_cached
+from astrospectro_spark.engine.skew import featurize_salted
 from astrospectro_spark.engine.windows import (
     FEATURE_COLS,
     KEY_COLS,
@@ -133,11 +133,9 @@ def test_grouped_wide_matches_expr_on_degenerates(spark, degenerate_sdf):
 def test_salted_matches_expr_on_degenerates(spark, degenerate_sdf):
     # hot_threshold=3 forces deg-tied/deg-boundary/deg-empty through the
     # chunked hot path with chunk_target_rows=2 → real stitching
-    salted = featurize_salted(
+    got = featurize_salted(
         degenerate_sdf, hot_threshold=3, chunk_target_rows=2, wide=True
-    )
-    got = salted.toPandas()
-    release_cached(salted)
+    ).toPandas()
     expr = featurize_expr(degenerate_sdf, wide=True).toPandas()
     assert_frames_match(got, expr, SORT)
 

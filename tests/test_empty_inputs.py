@@ -12,7 +12,7 @@ execute without error and preserve the documented row semantics:
 """
 
 from astrospectro_spark.engine.asof import asof_join
-from astrospectro_spark.engine.skew import featurize_salted, release_cached
+from astrospectro_spark.engine.skew import featurize_salted
 from astrospectro_spark.engine.windows import featurize_expr, sessionize
 
 
@@ -24,11 +24,7 @@ def test_featurize_empty_keeps_schema(spark, transcripts_sdf):
 
 
 def test_featurize_salted_empty(spark, transcripts_sdf):
-    out = featurize_salted(transcripts_sdf.limit(0))
-    try:
-        assert out.count() == 0
-    finally:
-        release_cached(out)
+    assert featurize_salted(transcripts_sdf.limit(0)).count() == 0
 
 
 def test_sessionize_empty(spark, transcripts_sdf):

@@ -75,20 +75,18 @@ def test_enum_shuffle_default_keeps_codes_and_decodes_at_read(
 def test_enum_shuffle_bit_parity_salted(spark, transcripts_sdf):
     """Salted path with chunking FORCED ON: cold + hot branches both
     carry codes; decoded at read, the output is bit-identical."""
-    from astrospectro_spark.engine.skew import featurize_salted, release_cached
+    from astrospectro_spark.engine.skew import featurize_salted
 
     want_df = featurize_salted(
         transcripts_sdf, hot_threshold=50, chunk_target_rows=40,
         include_text=False,
     )
     want = _sorted(want_df)
-    release_cached(want_df)
     got_df = featurize_salted(
         transcripts_sdf, hot_threshold=50, chunk_target_rows=40,
         include_text=False, enum_shuffle=True,
     )
     got = _sorted(_decoded(got_df, transcripts_sdf))
-    release_cached(got_df)
     _assert_bit_equal(got, want)
 
 
@@ -179,20 +177,18 @@ def test_enum_shuffle_bit_parity_wide_expr(spark, transcripts_sdf):
 def test_enum_shuffle_bit_parity_wide_salted(spark, transcripts_sdf):
     """Salted wide path with chunking forced on: coded cold+hot
     branches, decoded at read, 175-column bit parity."""
-    from astrospectro_spark.engine.skew import featurize_salted, release_cached
+    from astrospectro_spark.engine.skew import featurize_salted
 
     want_df = featurize_salted(
         transcripts_sdf, hot_threshold=50, chunk_target_rows=40,
         include_text=False, wide=True,
     )
     want = _sorted(want_df)
-    release_cached(want_df)
     got_df = featurize_salted(
         transcripts_sdf, hot_threshold=50, chunk_target_rows=40,
         include_text=False, wide=True, enum_shuffle=True,
     )
     got = _sorted(_decoded(got_df, transcripts_sdf, wide=True))
-    release_cached(got_df)
     _assert_bit_equal(got, want)
 
 

@@ -114,13 +114,10 @@ def test_salted_window_pass_budget(spark, transcripts_sdf, kw, windows, sorts):
     the plain window layers over (conv, chunk) — once for the rows, once
     for the per-chunk summary — the context-row window and the summary's
     prefix windows, which share one ordering and so one Sort."""
-    from astrospectro_spark.engine.skew import featurize_salted, release_cached
+    from astrospectro_spark.engine.skew import featurize_salted
 
     salted = featurize_salted(transcripts_sdf, hot_threshold=10, chunk_target_rows=37, **kw)
-    try:
-        c = _op_counts(_formatted(spark, salted))
-    finally:
-        release_cached(salted)
+    c = _op_counts(_formatted(spark, salted))
     assert c.get("Window", 99) <= windows and c.get("Sort", 99) <= sorts, c
 
 

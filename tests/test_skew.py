@@ -146,11 +146,8 @@ def test_salted_nothing_hot_gets_plain_plan(spark, transcripts_sdf):
     """With no conversation above the threshold the census leaves
     nothing to split: the result is featurize_expr's plan, with no
     union, broadcast join or cached hot slice behind it."""
-    from astrospectro_spark.engine import skew
-
     from .test_plan_shape import _formatted, _op_counts
 
-    registered = [id(h) for h in skew._CACHE_REGISTRY]
     salted = featurize_salted(transcripts_sdf, hot_threshold=10**9)
     plan = _formatted(spark, salted)
     got = _op_counts(plan)
@@ -159,8 +156,6 @@ def test_salted_nothing_hot_gets_plain_plan(spark, transcripts_sdf):
         assert got.get(op, 0) == want.get(op, 0), (op, got, want)
     for op in ("Union", "InMemoryRelation", "InMemoryTableScan", "BroadcastHashJoin"):
         assert op not in plan, op
-    assert salted._astrospectro_cached == []
-    assert [id(h) for h in skew._CACHE_REGISTRY] == registered
 
 
 def test_null_conv_id_stays_cold(spark, transcripts_sdf, transcripts_pdf):
@@ -177,20 +172,31 @@ def test_null_conv_id_stays_cold(spark, transcripts_sdf, transcripts_pdf):
     assert_frames_match(salted, plain, SORT, rtol=0.0, atol=0.0)
 
 
-def test_release_of_hot_free_result_keeps_other_caches(spark, transcripts_sdf):
-    """Releasing a result with no hot branch (an empty handle list)
-    releases nothing; another in-flight result's hot slice stays
-    cached until that result is released itself."""
-    from astrospectro_spark.engine import skew
+def test_salted_hot_slice_is_one_reused_exchange(spark, transcripts_sdf):
+    """The hot slice's three consumers (the time-margin rows, the
+    row-margin window and the per-chunk counts) read one exchange that
+    AQE reuses, not a cached copy and not three scans of the source."""
+    salted = featurize_salted(transcripts_sdf, hot_threshold=10, chunk_target_rows=37)
+    salted.collect()
+    plan = salted._jdf.queryExecution().executedPlan().toString()
+    assert "ReusedExchange" in plan
+    assert "InMemoryRelation" not in plan
 
-    hot = featurize_salted(transcripts_sdf, hot_threshold=10, chunk_target_rows=37)
-    cold = featurize_salted(transcripts_sdf, hot_threshold=10**9)
-    (handle,) = hot._astrospectro_cached
-    try:
-        skew.release_cached(cold)
-        assert handle.is_cached
-        assert id(handle) in {id(h) for h in skew._CACHE_REGISTRY}
-    finally:
-        skew.release_cached(hot)
-    assert not handle.is_cached
-    assert id(handle) not in {id(h) for h in skew._CACHE_REGISTRY}
+
+def test_salted_run_caches_nothing(spark, transcripts_sdf, tmp_path):
+    """Neither a written hot result nor a FeatureRun over hot buckets
+    pins storage, so there is nothing to release: a 64-bucket run
+    cannot accumulate 64 cached slices."""
+    from functools import partial
+
+    from astrospectro_spark.engine.lineage import FeatureRun
+
+    def cached():
+        return {r.id() for r in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    featurizer = partial(featurize_salted, hot_threshold=10, chunk_target_rows=37)
+    featurizer(transcripts_sdf).write.format("noop").mode("overwrite").save()
+    assert cached() - before == set()
+    FeatureRun(spark, str(tmp_path), n_buckets=2, featurizer=featurizer).run(transcripts_sdf)
+    assert cached() - before == set()

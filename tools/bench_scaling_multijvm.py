@@ -49,7 +49,7 @@ sys.path.insert(0, {repo!r})
 if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
     os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
 from astrospectro_spark.session import get_spark
-from astrospectro_spark.engine.skew import featurize_salted, release_cached
+from astrospectro_spark.engine.skew import featurize_salted
 from astrospectro_spark.engine.asof import asof_join
 
 workers = int(sys.argv[1]); syn = sys.argv[2]
@@ -81,7 +81,6 @@ n = turns.count()
 
 def force(df):
     df.write.format("noop").mode("overwrite").save()
-    release_cached(df)
 
 force(featurize_salted(turns.limit(2000)))  # warmup executors/codegen
 

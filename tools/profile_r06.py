@@ -30,7 +30,7 @@ def main() -> None:
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
 
     from astrospectro_spark.engine.asof import asof_join
-    from astrospectro_spark.engine.skew import featurize_salted, release_cached
+    from astrospectro_spark.engine.skew import featurize_salted
     from astrospectro_spark.engine.windows import featurize_expr
     from astrospectro_spark.jobs.curate_job import FUNNEL_STAGES, curate
     from astrospectro_spark.queries import (
@@ -58,9 +58,7 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
 
     def _salted():
-        df = featurize_salted(turns, hot_threshold=100_000, chunk_target_rows=50_000)
-        _force(df)
-        release_cached(df)
+        _force(featurize_salted(turns, hot_threshold=100_000, chunk_target_rows=50_000))
 
     plan = {
         "featurize_transcripts": lambda: _force(featurize_expr(turns)),

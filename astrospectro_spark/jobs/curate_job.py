@@ -297,7 +297,7 @@ def run(spark, args) -> dict:
         min_tokens=args.min_tokens,
         max_tokens=args.max_tokens,
         max_shingle_tokens=(args.max_shingle_tokens or None),
-        dedup_mode=getattr(args, "dedup_mode", "pairwise"),
+        dedup_mode=args.dedup_mode,
     )
     obs = Observation("curate_funnel")
     metrics = [F.count(F.lit(1)).alias("n_input")] + [
@@ -305,7 +305,7 @@ def run(spark, args) -> dict:
     ]
     out_path = os.path.join(args.output, "curated")
     kept = flagged.observe(obs, *metrics).filter("keep").drop(*FUNNEL_STAGES)
-    if getattr(args, "atomic", False):
+    if args.atomic:
         # snapshot-log publish: the parquet write happens inside
         # commit(); the observation is populated by that same action
         from astrospectro_spark.sources.snapshot_log import commit

@@ -6,7 +6,7 @@ Ships as ``spark-submit --py-files astrospectro_spark.zip -m`` style
     spark-submit --py-files astrospectro_spark.zip \\
         featurize_job.py --input /data/transcripts.parquet \\
         --output /data/features --buckets 64 \\
-        [--anchors /data/anchors.parquet] [--resume] \\
+        [--anchors /data/anchors.parquet] \\
         [--hot-threshold 2000000] [--chunk-rows 500000]
 
 On a cluster nothing changes except ``--master``: the engine is pure
@@ -56,12 +56,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--chunk-rows", type=int, default=500_000)
     p.add_argument("--master", default=None)
     p.add_argument("--gap-s", type=float, default=1800.0)
-    p.add_argument(
-        "--resume",
-        action="store_true",
-        help="resume from committed lineage (the default behaviour; "
-        "flag accepted for explicitness)",
-    )
     p.add_argument(
         "--include-text",
         action="store_true",

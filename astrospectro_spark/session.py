@@ -90,11 +90,8 @@ def get_spark(
         # engine's fragment set at a bounded metaspace cost and applies
         # per-JVM (each executor pays the same compile tax on a
         # cluster). Static conf: must be set before the JVM's first
-        # session; env knob for ops override.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2048"),
-        )
+        # session.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         # Window-feature stages are compute-bound (~50-100 µs/row on
         # ~200-byte rows ⇒ 1 MB of shuffled input is ~0.5 s of CPU), so
         # AQE's default 1 MB coalesce floor serializes them whenever the
@@ -106,10 +103,7 @@ def get_spark(
         # their work. At production scale partitions sit at the advisory
         # size (64 MB+) and the floor is never the binding constraint,
         # so this is a no-op there.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_PARTITION_SIZE", "256k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
     )
     # The wide plans JIT-compile thousands of generated-class methods;
     # the JVM's default 240 MB reserved code cache fills after a few

@@ -12,7 +12,13 @@ for a continuously-arriving transcript feed:
   salted plan's stitch makes each batch global from a per-conversation
   ``_state/`` sidecar (Trigger.AvailableNow ≙ the reference's
   run-to-completion sessions);
-- :func:`stateful_asof_enrich` — streaming as-of enrichment.
+- :func:`stateful_asof_enrich` — streaming as-of enrichment: the batch
+  ``asof_join`` per micro-batch over a ``_state/`` carry of each
+  conversation's last turn, with an optional TTL on that carry.
+
+Both stateful operators write through one ``foreachBatch`` helper,
+:func:`_state_batches`, that reads the newest state before a batch and
+overwrites the batch's output and state, so a replay is exactly-once.
 
 Tested with file sources + AvailableNow in tests/test_streaming_events.py.
 """
@@ -21,10 +27,13 @@ from __future__ import annotations
 
 import glob
 import shutil
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.errors import ParseException
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from astrospectro_spark.engine.asof import asof_join
 from astrospectro_spark.engine.windows import (
     _ts_us_sql,
     apply_layers,
@@ -74,155 +83,78 @@ def stream_session_stats(
     )
 
 
-ASOF_ENRICH_SCHEMA = (
-    "conv_id string, anchor_id long, anchor_ts timestamp, "
-    "asof_turn_idx int, asof_role string, tool_backfill string, "
-    "asof_gap_s double"
-)
-_ASOF_STATE_SCHEMA = (
-    "has_turn boolean, last_us long, last_idx int, "
-    "last_role string, last_tool string"
-)
-# STATE-SCHEMA VERSION NOTE (round-5 ADVICE): applyInPandasWithState
-# state is positional; the round-5 addition of ``has_turn`` (replacing
-# the pre-1970 ts-sign sentinel) is a BREAKING change for streaming
-# checkpoints written by earlier revisions — a restore would mis-bind
-# the 4-field legacy tuple into this 5-field layout. Upgrading a live
-# pipeline across that revision requires a fresh checkpoint directory.
-
-
-def stateful_asof_enrich(stream_df: DataFrame, retention: str | None = None):
-    """Streaming point-in-time enrichment: the online-feature-store form
-    of the batch as-of join (``engine/asof.py``).
-
-    ``retention`` (e.g. ``"7 days"``) bounds TOTAL state at scale: a
-    conversation idle longer than that past the watermark is evicted
-    (event-time timeout), and later anchors for it answer NULL — the
-    standard feature-store TTL contract. Requires the caller to set
-    ``stream_df.withWatermark("ts", ...)`` upstream. ``None`` keeps
-    state forever (exact parity with the batch as-of at any horizon;
-    fine when live conversations are bounded — state is 4 scalars per
-    conv, so even 10^9 live convs hold ~100 GB cluster-wide, but an
-    unbounded conv_id universe needs the TTL).
+def stateful_asof_enrich(
+    stream_df: DataFrame, out_path: str, checkpoint: str, retention: str | None = None
+):
+    """Streaming point-in-time enrichment: the batch as-of join
+    (:func:`engine.asof.asof_join`) run on each micro-batch over a
+    one-row-per-conversation carry.
 
     Input is ONE interleaved feed per conversation with a ``kind``
-    discriminator — ``'turn'`` rows carry (turn_idx, role, tool, ts),
-    ``'anchor'`` rows carry (anchor_id, ts). State per conv_id is the
-    latest turn seen plus the running tool backfill (4 scalars, O(1) —
-    the whole-history as-of collapses to "remember the frontier", which
-    is why the streaming form exists). Each anchor is answered from
-    state at arrival: the latest turn with ts <= anchor_ts, boundary
-    inclusive, ties broken by largest turn_idx — identical law to the
-    batch oracle (reference analog: best-match-per-objid,
-    src/tools/gaia_crossmatcher.py:735-744; unmatched anchors get
-    NULLs, :808-809).
+    discriminator: ``'turn'`` rows carry (turn_idx, role, tool, ts),
+    ``'anchor'`` rows carry (anchor_id, ts). The ``_state/`` carry holds
+    each conversation's last committed turn, ``(conv_id, ts, turn_idx,
+    role, tool)``, whose ``tool`` is the backfill at that turn. A batch
+    joins the carried turns of its conversations to its own turns,
+    forward-fills ``tool`` over ``(ts, turn_idx)``, and answers each
+    anchor with the latest turn at ``ts <= anchor_ts`` (boundary
+    inclusive, ties broken by the largest turn_idx, NULLs when none):
+    the law of the batch oracle (reference analog: best-match-per-objid,
+    src/tools/gaia_crossmatcher.py:735-744; unmatched anchors get NULLs,
+    :808-809). Its anchor rows (``conv_id, anchor_id, anchor_ts,
+    asof_turn_idx, asof_role, tool_backfill, asof_gap_s``) go to
+    ``<out_path>/batch_id=<n>/``, exactly once as in
+    :func:`_state_batches`; turns only advance the carry.
 
-    Ordering: within a micro-batch the group's rows are materialized
-    and sorted by (ts, turns-before-anchors, turn_idx), so a turn at
-    exactly anchor_ts is visible to that anchor (boundary-inclusive
-    law). Cross-batch order is the source's contract and is not checked
-    here (:func:`stream_featurize` fails on an out-of-order turn) —
-    including that a same-ts turn/anchor pair must not be split
-    turn-last across micro-batches.
+    ``retention`` (a Spark interval string, e.g. ``"7 days"``) bounds
+    the carry: a conversation whose last turn is older than the batch's
+    max ts minus ``retention`` leaves the state, and its later anchors
+    answer NULL (the feature-store TTL). That is the event-time timeout
+    of a 0 s watermark; no watermark on ``stream_df`` is read. An
+    unparseable value fails here, not in the first batch. ``None`` keeps
+    the carry forever: exact parity with the batch as-of at any
+    horizon, at one row per conversation.
 
-    Emits anchor rows only (append mode); turns only advance state.
-    """
-
-    retention_ms = None
+    Cross-batch order is the source's contract and is not checked: a
+    turn older than its conversation's carried turn still answers later
+    anchors of its own batch, but does not become the carry."""
+    keep = None
     if retention is not None:
-        import re as _re
-
-        m = _re.fullmatch(
-            r"\s*(\d+)\s*(second|minute|hour|day)s?\s*", retention
-        )
-        if not m:
-            raise ValueError(f"unparseable retention: {retention!r}")
-        retention_ms = int(m.group(1)) * {
-            "second": 1_000,
-            "minute": 60_000,
-            "hour": 3_600_000,
-            "day": 86_400_000,
-        }[m.group(2)]
-
-    def fn(key, pdf_iter, state):
-        import pandas as _pd
-
-        (conv_id,) = key
-        empty = _pd.DataFrame(
-            columns=[
-                "conv_id", "anchor_id", "anchor_ts", "asof_turn_idx",
-                "asof_role", "tool_backfill", "asof_gap_s",
-            ]
-        )
-        if state.hasTimedOut:
-            # idle past retention: evict — later anchors answer NULL
-            state.remove()
-            yield empty
-            return
-        if state.exists:
-            has_turn, last_us, last_idx, last_role, last_tool = state.get
-        else:
-            # explicit has_turn flag, NOT a sentinel timestamp: pre-1970
-            # event times are negative epoch micros and must remain
-            # distinguishable from "no turn seen yet"
-            has_turn, last_us, last_idx, last_role, last_tool = (
-                False, 0, -1, None, None)
-        out = []
-        chunks = [p for p in pdf_iter if len(p)]
-        if chunks:
-            g = _pd.concat(chunks, ignore_index=True)
-            # same-ts turns apply BEFORE anchors (boundary inclusive)
-            g["_k"] = (g["kind"] == "anchor").astype(int)
-            g = g.sort_values(["ts", "_k", "turn_idx"], kind="mergesort")
-            us_arr = g["ts"].to_numpy("datetime64[us]").astype("int64")
-            for i, r in enumerate(g.itertuples(index=False)):
-                us = int(us_arr[i])
-                if r.kind == "turn":
-                    has_turn, last_us, last_idx, last_role = (
-                        True, us, int(r.turn_idx), r.role)
-                    if r.tool is not None and not _pd.isna(r.tool):
-                        last_tool = r.tool
-                else:
-                    matched = has_turn and last_us <= us
-                    out.append(
-                        {
-                            "conv_id": conv_id,
-                            "anchor_id": int(r.anchor_id),
-                            "anchor_ts": r.ts,
-                            "asof_turn_idx": last_idx if matched else None,
-                            "asof_role": last_role if matched else None,
-                            "tool_backfill": last_tool if matched else None,
-                            "asof_gap_s": (us - last_us) / 1e6 if matched else None,
-                        }
-                    )
-        state.update((has_turn, last_us, last_idx, last_role, last_tool))
-        if retention_ms is not None:
-            # evict when the WATERMARK passes last-activity + retention;
-            # must be set strictly beyond the current watermark
-            wm = state.getCurrentWatermarkMs()
-            last_ms = last_us // 1000 if has_turn else wm
-            state.setTimeoutTimestamp(max(last_ms + retention_ms, wm + 1))
-        yield _pd.DataFrame(
-            out,
-            columns=[
-                "conv_id", "anchor_id", "anchor_ts", "asof_turn_idx",
-                "asof_role", "tool_backfill", "asof_gap_s",
-            ],
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return stream_df.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=ASOF_ENRICH_SCHEMA,
-        stateStructType=_ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if retention_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        quoted = retention.replace("\\", "\\\\").replace("'", "\\'")  # one SQL string literal
+        keep = F.col("ts") >= F.col("_hi") - F.expr(f"INTERVAL '{quoted}'")
+        try:  # a Column is parsed when a plan first uses it
+            stream_df.withColumn("_hi", F.col("ts")).filter(keep)
+        except ParseException as e:
+            raise ValueError(f"unparseable retention: {retention!r}") from e
+    w = (
+        Window.partitionBy("conv_id")
+        .orderBy("ts", "turn_idx")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+
+    @contextmanager
+    def step(batch_df: DataFrame, batch_id: int, state: DataFrame | None):
+        convs = batch_df.select("conv_id")
+        turns = batch_df.filter("kind = 'turn'").select("conv_id", "ts", "turn_idx", "role", "tool")
+        if state is not None:
+            turns = turns.unionByName(_join_conv(state, convs, "left_semi"))
+        turns = turns.withColumn("tool", F.last("tool", True).over(w))
+        anchors = batch_df.filter("kind = 'anchor'").selectExpr("conv_id", "anchor_id", "ts as anchor_ts")
+        out = asof_join(turns, anchors, value_cols=["turn_idx", "role", "tool", "ts"]).selectExpr(
+            "conv_id", "anchor_id", "anchor_ts", "asof_turn_idx", "asof_role",
+            "asof_tool as tool_backfill",
+            f"({_ts_us_sql('anchor_ts')} - {_ts_us_sql('asof_ts')}) / 1e6 as asof_gap_s",
+        )
+        new = turns.groupBy("conv_id").agg(
+            F.max(F.struct("ts", "turn_idx", "role", "tool")).alias("_t")
+        ).select("conv_id", "_t.*")
+        if state is not None:
+            new = new.unionByName(_join_conv(state, convs, "left_anti"))
+        if keep is not None:
+            new = new.crossJoin(batch_df.agg(F.max("ts").alias("_hi"))).filter(keep).drop("_hi")
+        yield out, new
+
+    return _state_batches(stream_df, out_path, checkpoint, step)
 
 
 def stream_featurize(
@@ -241,11 +173,7 @@ def stream_featurize(
     back from the last row), joins the batch as context rows. State is
     bounded by that margin, not by the history.
 
-    Exactly-once: batch ``n`` overwrites ``<out_path>/batch_id=<n>/`` and
-    ``<out_path>/_state/batch_id=<n>/`` from the newest state below
-    ``n``, so a batch Spark replays after a crash rewrites the same
-    rows; older states are then deleted. ``out_path`` is a local
-    directory that belongs to one checkpoint. A turn at or before its
+    Exactly-once as in :func:`_state_batches`. A turn at or before its
     conversation's last committed ts fails the query, naming it: the
     range frames count same-ts peers, so even an equal ts would change
     a committed row."""
@@ -257,17 +185,12 @@ def stream_featurize(
     read = project_inputs(stream_df, include_text=False, enum_shuffle=False, wide=wide)[0].columns
     rest = [c for c in read if c not in ("conv_id", "ts", "turn_idx")]
     tail = ", ".join(["ts", "turn_idx", *rest])
-    state_dir = f"{out_path}/_state"
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ids = [int(p.rsplit("=", 1)[1]) for p in glob.glob(f"{state_dir}/batch_id=*")]
-        prev = max((i for i in ids if i < batch_id), default=None)
+    @contextmanager
+    def step(batch_df: DataFrame, batch_id: int, state: DataFrame | None):
         rows, key_cols = project_inputs(batch_df, include_text=True, enum_shuffle=False, wide=wide)
         u = rows.withColumn("_ctx", F.lit(0))
-        if prev is not None:
-            state = batch_df.sparkSession.read.parquet(f"{state_dir}/batch_id={prev}")
+        if state is not None:
             prior = _join_conv(state, u.select("conv_id"), "left_semi")
             ctx = prior.selectExpr("conv_id", "inline(_tail)", "1 as _ctx")
             u = u.unionByName(ctx, allowMissingColumns=True)
@@ -279,7 +202,7 @@ def stream_featurize(
                 F.expr("min(if(_ctx = 0, ts, null))").alias("_first_ts"),
                 F.lit(1).alias("_tgt"),
             )
-            if prev is not None:
+            if state is not None:
                 # _x is the last tail row: the last committed row
                 late = summ.filter("_first_ts <= _x.ts").limit(1).collect()
                 if late:
@@ -292,7 +215,6 @@ def stream_featurize(
             carry = chunk_carry(chunks, kinds).filter("_tgt = 1").drop("_tgt")
             real = stitch(_join_conv(staged.filter("_ctx = 0"), carry), kinds)
             out = derive(real, wide).select(*output_cols(key_cols, wide))
-            out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
             # new state: the last stitched row, and the tail by the local
             # row number and epoch-µs that window_layers stages
             ends = summ.selectExpr("conv_id", "_e._rn as _n", f"{_ts_us_sql('_e.ts')} as _us")
@@ -304,11 +226,37 @@ def stream_featurize(
             )
             last = real.groupBy("conv_id").agg(last_row(kinds, "true").alias("_last"))
             new = _join_conv(new_tail, last)
-            if prev is not None:
+            if state is not None:
                 new = new.unionByName(_join_conv(state, new.select("conv_id"), "left_anti"))
-            new.write.mode("overwrite").parquet(f"{state_dir}/batch_id={batch_id}")
+            yield out, new
         finally:
             staged.unpersist()
+
+    return _state_batches(stream_df, out_path, checkpoint, step)
+
+
+def _state_batches(stream_df: DataFrame, out_path: str, checkpoint: str, step):
+    """The foreachBatch writer of both stateful stream operators.
+
+    ``step(batch_df, n, state)`` is a context manager that yields batch
+    ``n``'s output and its new state, from ``state``: the newest
+    ``<out_path>/_state/batch_id=<m>/`` with ``m < n``, or None. Both
+    are written while the step is open, overwriting
+    ``<out_path>/batch_id=<n>/`` and ``<out_path>/_state/batch_id=<n>/``,
+    so a batch Spark replays after a crash rewrites the same rows from
+    the same state; the states older than ``m`` are then deleted.
+    ``out_path`` is a local directory that belongs to one checkpoint."""
+    state_dir = f"{out_path}/_state"
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        ids = [int(p.rsplit("=", 1)[1]) for p in glob.glob(f"{state_dir}/batch_id=*")]
+        prev = max((i for i in ids if i < batch_id), default=None)
+        state = None if prev is None else batch_df.sparkSession.read.parquet(f"{state_dir}/batch_id={prev}")
+        with step(batch_df, batch_id, state) as (out, new):
+            out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+            new.write.mode("overwrite").parquet(f"{state_dir}/batch_id={batch_id}")
         for i in ids:  # a replay of this batch reads `prev`
             if prev is not None and i < prev:
                 shutil.rmtree(f"{state_dir}/batch_id={i}", ignore_errors=True)

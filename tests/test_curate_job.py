@@ -4,33 +4,21 @@ from __future__ import annotations
 
 import json
 import os
-from argparse import Namespace
 
 import pandas as pd
 import pytest
 
 
 def _args(tmp_path, src, **kw):
-    base = dict(
-        input=src,
-        output=str(tmp_path / "out"),
-        id_col="doc_id",
-        text_col="text",
-        near_dup_threshold=0.5,
-        no_near_dup=False,
-        max_shingle_tokens=10_000,
-        embeddings=None,
-        embedding_id_col="vec_id",
-        embedding_vec_col="embedding",
-        embedding_threshold=0.95,
-        langs=None,
-        min_quality=None,
-        min_tokens=None,
-        max_tokens=None,
-        master=None,
-    )
-    base.update(kw)
-    return Namespace(**base)
+    """The job's parsed command line: ``--input src --output <tmp>/out``
+    and one flag per keyword (``True`` gives a bare switch)."""
+    from astrospectro_spark.jobs.curate_job import build_parser
+
+    argv = ["--input", src, "--output", str(tmp_path / "out")]
+    for k, v in kw.items():
+        flag = "--" + k.replace("_", "-")
+        argv += [flag] if v is True else [flag, str(v)]
+    return build_parser().parse_args(argv)
 
 
 @pytest.fixture(scope="module")

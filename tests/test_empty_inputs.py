@@ -100,10 +100,8 @@ def test_new_operators_empty(spark, documents_sdf, tmp_path):
     """Zero-row inputs through the round-4 additions: embedding
     near-dup pairs and the curate funnel (whose observe metrics sum to
     NULL on an empty input — reported as 0, not a crash)."""
-    from argparse import Namespace
-
     from astrospectro_spark.functions.similarity import embedding_neardup_pairs
-    from astrospectro_spark.jobs.curate_job import run
+    from astrospectro_spark.jobs.curate_job import build_parser, run
 
     empty_docs = documents_sdf.limit(0)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -111,13 +109,6 @@ def test_new_operators_empty(spark, documents_sdf, tmp_path):
 
     src = str(tmp_path / "empty_docs.parquet")
     empty_docs.write.parquet(src)
-    args = Namespace(
-        input=src, output=str(tmp_path / "out"), id_col="doc_id",
-        text_col="text", near_dup_threshold=0.5, no_near_dup=False,
-        max_shingle_tokens=10_000, embeddings=None,
-        embedding_id_col="vec_id", embedding_vec_col="embedding",
-        embedding_threshold=0.95, langs=None, min_quality=None,
-        min_tokens=None, max_tokens=None, atomic=False, master=None,
-    )
+    args = build_parser().parse_args(["--input", src, "--output", str(tmp_path / "out")])
     report = run(spark, args)
     assert report["n_input"] == 0 and report["n_kept"] == 0

@@ -137,7 +137,7 @@ def test_skew_defines_no_feature():
 
     sources = [inspect.getsource(skew)] + [
         textwrap.dedent(inspect.getsource(f))
-        for f in (st.stream_featurize, st._join_conv)
+        for f in (st.stream_featurize, st._state_batches, st._join_conv)
     ]
     literals = {
         n.value

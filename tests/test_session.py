@@ -58,6 +58,8 @@ def test_defaults_follow_the_host(built):
     assert opts["spark.sql.shuffle.partitions"] == "3"
     assert opts["spark.driver.memory"] == "3072m"  # half of 6 GB
     assert built(mem_gb=64)["spark.driver.memory"] == "16384m"  # capped at 16 GB
+    assert opts["spark.sql.codegen.cache.maxEntries"] == "2048"
+    assert opts["spark.sql.adaptive.coalescePartitions.minPartitionSize"] == "256k"
 
 
 def test_graft_variables_keep_their_meaning(built, monkeypatch):

@@ -244,7 +244,6 @@ def test_stateful_asof_enrich_matches_oracle(spark, transcripts_pdf, anchors_pdf
     import numpy as np
 
     from astrospectro_spark.oracle.pandas_oracle import oracle_asof
-    from astrospectro_spark.streaming import stateful_asof_enrich
 
     turns = transcripts_pdf[["conv_id", "turn_idx", "role", "tool", "ts"]].copy()
     turns["kind"] = "turn"
@@ -286,18 +285,8 @@ def test_stateful_asof_enrich_matches_oracle(spark, transcripts_pdf, anchors_pdf
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "part-*.parquet"))
     )
-    q = (
-        stateful_asof_enrich(stream)
-        .writeStream.format("memory")
-        .queryName("asof_enrich_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
     got = (
-        spark.sql("select * from asof_enrich_stream")
-        .toPandas()
+        _run_asof(spark, stream, tmp_path)
         .sort_values("anchor_id", kind="mergesort")
         .reset_index(drop=True)
     )
@@ -329,14 +318,62 @@ def test_stateful_asof_enrich_matches_oracle(spark, transcripts_pdf, anchors_pdf
     )
 
 
+def _run_asof(spark, stream, tmp_path, retention=None) -> pd.DataFrame:
+    """Runs stateful_asof_enrich over ``stream`` to its end and returns
+    the anchor rows it wrote."""
+    from astrospectro_spark.streaming import stateful_asof_enrich
+
+    out = str(tmp_path / "asof_out")
+    q = stateful_asof_enrich(stream, out, str(tmp_path / "asof_ckpt"), retention).start()
+    assert q.awaitTermination(180)
+    return spark.read.parquet(out).drop("batch_id").toPandas()
+
+
+def test_stateful_asof_enrich_replay_is_exactly_once(spark, transcripts_pdf, anchors_pdf, tmp_path):
+    """A batch Spark replays after a crash between its write and its
+    commit rewrites its own anchor rows from the state before it: no
+    duplicate anchor_id, and the answers still equal the oracle's
+    (those of the first run, checked by the oracle test it reruns)."""
+    test_stateful_asof_enrich_matches_oracle(spark, transcripts_pdf, anchors_pdf, tmp_path)
+    want = spark.read.parquet(str(tmp_path / "asof_out")).drop("batch_id").toPandas()
+    commits = tmp_path / "asof_ckpt" / "commits"
+    last = max(int(f.name) for f in commits.iterdir() if f.name.isdigit())
+    for f in (commits / str(last), commits / f".{last}.crc"):
+        f.unlink(missing_ok=True)
+    pattern = str(tmp_path / "asof_feed" / "part-*.parquet")
+    schema = spark.read.parquet(pattern).schema
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(pattern)
+    got = _run_asof(spark, stream, tmp_path)
+    assert (commits / str(last)).exists()  # the batch ran again
+    assert not got["anchor_id"].duplicated().any()
+    pd.testing.assert_frame_equal(
+        got.sort_values("anchor_id", ignore_index=True),
+        want.sort_values("anchor_id", ignore_index=True),
+    )
+
+
+@pytest.mark.parametrize("retention", ["1 fortnight", "1 hour' + INTERVAL '1 day"])
+def test_asof_enrich_unparseable_retention_fails_at_build(spark, tmp_path, retention):
+    """A retention that is no Spark interval fails when the query is
+    built, before any batch runs; a quote in it cannot splice SQL."""
+    from astrospectro_spark.streaming import stateful_asof_enrich
+
+    schema = (
+        "conv_id string, kind string, turn_idx int, role string, "
+        "tool string, ts timestamp, anchor_id long"
+    )
+    stream = spark.readStream.schema(schema).parquet(str(tmp_path))
+    with pytest.raises(ValueError, match="unparseable retention"):
+        stateful_asof_enrich(stream, str(tmp_path / "out"), str(tmp_path / "ckpt"), retention)
+
+
 def _asof_ttl_feed(tmp_path, spark):
     """4 mtime-ordered micro-batch files exercising state TTL.
 
-    t0: A and B each post a turn. B stays active (batches 2-3) which
-    advances the watermark past A's retention horizon, so A is evicted
-    during batch 3 (no data for A in that batch — timeout fires). Batch
-    4 carries one anchor each: A must answer NULL (evicted), B must
-    match its latest turn.
+    t0: A and B each post a turn. B stays active (batches 2-3), which
+    moves the batch's max ts past A's retention horizon, so A leaves the
+    state (no data for A in that batch). Batch 4 carries one anchor
+    each: A must answer NULL (evicted), B must match its latest turn.
     """
     import time
 
@@ -370,27 +407,14 @@ def _asof_ttl_feed(tmp_path, spark):
     return str(src / "part-*.parquet"), schema
 
 
-def _run_asof_ttl(spark, pattern, schema, name, retention):
-    from astrospectro_spark.streaming import stateful_asof_enrich
-
+def _run_asof_ttl(spark, pattern, schema, tmp_path, retention):
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(pattern)
-        .withWatermark("ts", "0 seconds")
     )
-    q = (
-        stateful_asof_enrich(stream, retention=retention)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
     return (
-        spark.sql(f"select * from {name}")
-        .toPandas()
+        _run_asof(spark, stream, tmp_path, retention)
         .sort_values("anchor_id")
         .reset_index(drop=True)
     )
@@ -398,10 +422,10 @@ def _run_asof_ttl(spark, pattern, schema, name, retention):
 
 def test_asof_enrich_state_ttl_evicts_idle_conversations(spark, tmp_path):
     pattern, schema = _asof_ttl_feed(tmp_path, spark)
-    got = _run_asof_ttl(spark, pattern, schema, "asof_ttl", retention="1 hour")
+    got = _run_asof_ttl(spark, pattern, schema, tmp_path, retention="1 hour")
     assert len(got) == 2
     a, b = got.iloc[0], got.iloc[1]
-    # A idle > 1h behind the watermark: evicted, anchor answers NULL
+    # A idle > 1h behind the max ts: evicted, anchor answers NULL
     assert a["conv_id"] == "A" and pd.isna(a["asof_turn_idx"])
     assert pd.isna(a["tool_backfill"])
     # B stayed active: answered from its latest turn
@@ -414,7 +438,7 @@ def test_asof_enrich_no_ttl_keeps_state_forever(spark, tmp_path):
     4 batches earlier — proving the TTL (not late-row filtering or a
     state bug) caused the NULL above."""
     pattern, schema = _asof_ttl_feed(tmp_path, spark)
-    got = _run_asof_ttl(spark, pattern, schema, "asof_nottl", retention=None)
+    got = _run_asof_ttl(spark, pattern, schema, tmp_path, retention=None)
     assert len(got) == 2
     a, b = got.iloc[0], got.iloc[1]
     assert a["conv_id"] == "A" and a["asof_turn_idx"] == 0
@@ -424,11 +448,9 @@ def test_asof_enrich_no_ttl_keeps_state_forever(spark, tmp_path):
 
 def test_stateful_asof_pre1970_turns_match(spark, tmp_path):
     """Round-4 ADVICE: a turn with a NEGATIVE epoch timestamp (pre-1970)
-    must still match later anchors — the state carries an explicit
-    has_turn flag, not a sentinel timestamp sign."""
+    must still match later anchors — the carry holds the turn itself,
+    not a sentinel timestamp sign."""
     import time
-
-    from astrospectro_spark.streaming import stateful_asof_enrich
 
     rows = [
         # conv 'old': one turn in 1969 (negative micros), anchor in 1970
@@ -471,20 +493,7 @@ def test_stateful_asof_pre1970_turns_match(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src / "part-*.parquet"))
     )
-    q = (
-        stateful_asof_enrich(stream)
-        .writeStream.format("memory")
-        .queryName("asof_pre1970")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.sql("select * from asof_pre1970")
-        .toPandas()
-        .set_index("anchor_id")
-    )
+    got = _run_asof(spark, stream, tmp_path).set_index("anchor_id")
     assert got.loc[1, "asof_turn_idx"] == 0  # pre-1970 turn matched
     assert got.loc[1, "tool_backfill"] == "hammer"
     assert got.loc[1, "asof_gap_s"] == pytest.approx(4200.0)

@@ -26,19 +26,6 @@ from pyspark.sql import DataFrame
 
 
 @lru_cache(maxsize=32)
-def savgol_coeffs(window: int, polyorder: int) -> np.ndarray:
-    """Least-squares smoothing coefficients for the window centre:
-    row 0 of pinv(Vandermonde) — what scipy.signal.savgol_coeffs
-    computes, derived directly here."""
-    if window % 2 != 1 or polyorder >= window:
-        raise ValueError("window must be odd and > polyorder")
-    half = window // 2
-    x = np.arange(-half, half + 1, dtype=np.float64)
-    a = np.vander(x, polyorder + 1, increasing=True)
-    return np.linalg.pinv(a)[0]
-
-
-@lru_cache(maxsize=32)
 def savgol_projection(npts: int, polyorder: int) -> np.ndarray:
     """The npts×npts local least-squares projection matrix
     H = A·pinv(A), A = Vandermonde(0..npts-1, polyorder). Row i gives
@@ -95,11 +82,13 @@ def savgol_smooth(y: np.ndarray, window: int = 5, polyorder: int = 2) -> np.ndar
 
 def gaussian_profile_features(t: np.ndarray, y: np.ndarray) -> dict[str, float]:
     """Moment-method Gaussian fit of an activity profile y(t):
-    amplitude/centre/sigma/FWHM — deterministic, optimizer-free."""
-    if len(t) == 0 or y.sum() <= 0:
-        return {"amp": np.nan, "mu": np.nan, "sigma": np.nan, "fwhm": np.nan}
+    amplitude/centre/sigma/FWHM — deterministic, optimizer-free. The
+    weights are y clipped at 0; a profile whose weights do not sum
+    above 0 (empty, all non-positive, or NaN) fits nothing (all NaN)."""
     w = np.clip(y, 0, None).astype(np.float64)
     tot = w.sum()
+    if not tot > 0:
+        return {"amp": np.nan, "mu": np.nan, "sigma": np.nan, "fwhm": np.nan}
     mu = float((t * w).sum() / tot)
     var = float(((t - mu) ** 2 * w).sum() / tot)
     sigma = float(np.sqrt(var))

@@ -71,10 +71,6 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
-
-
 def bucketize(df: DataFrame, n_buckets: int) -> DataFrame:
     """Attach the engine's hash-bucket column.
 
@@ -85,7 +81,8 @@ def bucketize(df: DataFrame, n_buckets: int) -> DataFrame:
     per-bucket filter partition-prunes the source directly, so a run
     over an already-bucket-laid-out 100 TB table does ZERO extra
     write+read. ``n_buckets`` must equal the FeatureRun's."""
-    return df.withColumn("_bucket", _bucket_col(n_buckets))
+    bucket = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+    return df.withColumn("_bucket", bucket)
 
 
 def _row_hash(cols: list[str]):
@@ -215,7 +212,7 @@ class FeatureRun:
         for a full per-bucket checksum audit against the lineage
         records."""
         marker = os.path.join(self.stage_dir, "_SUCCESS")
-        bucketed = turns.withColumn("_bucket", _bucket_col(self.n_buckets))
+        bucketed = bucketize(turns, self.n_buckets)
         # Explicit read schema: a 0-row input (drained resume queue,
         # partition-pruned read matching nothing) writes a staged dir
         # with no data files, and schema inference on it throws.

@@ -24,7 +24,8 @@ holds only the staging; the features themselves are the plain plan's
    (:class:`engine.windows.Kind`): the longest lookback in rows and in
    seconds. The last that-many rows before each chunk plus every row
    within the time margin of its start are COPIED into the chunk
-   flagged ``_ctx=1``. Context rows always sort strictly before real
+   flagged ``_ctx=1``, in one explode that also emits each row into its
+   own chunk (``_ctx=0``). Context rows always sort strictly before real
    rows (chunk ranges are half-open on ts), so each chunk's context is
    a contiguous suffix of its history.
 4. **Local pass** — :func:`engine.windows.window_layers`, the plain
@@ -97,8 +98,8 @@ def featurize_salted(
     ``windows.enum_decode`` with ``windows.enum_decode_map``).
 
     The hot slice is repartitioned by ``(conv_id, _chunk)`` after chunk
-    assignment. Its three consumers (the rows with their time-margin
-    copies, the row-margin window partitioned by ``(conv_id, _chunk)``
+    assignment. Its two consumers (the row-number window partitioned by
+    ``(conv_id, _chunk)`` that feeds the rows with their context copies,
     and the per-chunk row counts grouped by ``(conv_id, _chunk)``) read
     that one exchange, which AQE reuses: nothing is cached (the executed
     plan holds a ``ReusedExchange`` and no ``InMemoryRelation``), and the
@@ -204,38 +205,26 @@ def _featurize_hot(hot: DataFrame, layers: list[Layer], chunk_target_rows: int) 
     k_rows, margin_us = context_margin(kinds)
 
     # ---- 2. range salting: ts-quantile boundaries per hot conv. The
-    # hot slice has three consumers (the rows with their time-margin
-    # copies, the row-margin window and the chunk counts, the last two
-    # keyed by (conv_id, _chunk)). All three read this one exchange,
-    # which AQE reuses, so the source is scanned once for the hot rows
-    # and not once per consumer (featurize_salted docstring).
+    # hot slice has two consumers keyed by (conv_id, _chunk): the rows
+    # with their context copies and the chunk counts. Both read this
+    # one exchange, which AQE reuses, so the source is scanned once for
+    # the hot rows and not once per consumer (featurize_salted
+    # docstring).
     bounds = compute_ts_bounds(hot, chunk_target_rows)
     hot = hot.join(F.broadcast(bounds), "conv_id")
     hot = hot.withColumn("_chunk", chunk_of()).repartition("conv_id", "_chunk")
     us = _ts_us_sql("ts")
 
-    # ---- 3. overlap margin: copy context rows into later chunks. The
-    # expressions are SQL text, one parse each: the Column API's lambda
+    # ---- 3. overlap margin, in one explode: each row goes to its own
+    # chunk and, as context, to every later chunk t whose lower boundary
+    # _bounds[t] lies within the time margin after it, or that starts
+    # fewer than k_rows rows after it — MULTI-CHUNK reach-back, since
+    # duplicate-ts boundaries can produce a tiny chunk. Per-conv chunk
+    # row-counts (a <=GRID-entry array, broadcast) give the rows-between
+    # prefix, folded only for rows in the last k_rows of their chunk.
+    # Boundaries are data values, so every chunk after a row's own is
+    # counted. SQL text, one parse each: the Column API's lambda
     # builders cost a Py4J round trip per operator.
-    # (a) time margin, in one pass with the real rows (k = 0): a row is
-    # context (k >= 1) for every chunk whose lower boundary b satisfies
-    # ts < b <= ts + margin (multi-chunk reach).
-    n_time = f"size(filter(_bounds, b -> {us} < b and b <= {us} + {margin_us}))"
-    real_time = (
-        hot.withColumn("_k", F.expr(f"explode(sequence(0, {n_time}))"))
-        .withColumns({"_tgt": F.expr("_chunk + _k"), "_ctx": F.expr("cast(_k > 0 as int)")})
-        .drop("_k")
-    )
-    # (b) row margin with MULTI-CHUNK reach-back: a row must serve every
-    # later chunk that starts fewer than k_rows rows after it — one
-    # chunk back is not enough when duplicate-ts boundaries produce a
-    # tiny chunk. Per-conv chunk row-counts (a <=GRID-entry array,
-    # broadcast) give the rows-between prefix; only rows in the last
-    # k_rows of their own chunk can ever qualify, so the O(k_chunks²)
-    # fold runs on ~k_rows rows per chunk. Targets the time margin
-    # already copies the row into (chunks t whose lower boundary
-    # _bounds[t] is within the margin) are left out, so the two context
-    # branches are disjoint and need no de-duplicating shuffle.
     carr = (
         hot.groupBy("conv_id", "_chunk")
         .agg(F.count(F.lit(1)).alias("_cnt"))
@@ -246,7 +235,7 @@ def _featurize_hot(hot: DataFrame, layers: list[Layer], chunk_target_rows: int) 
         "aggregate(filter(_carr, e -> e.c > _chunk and e.c < t), "
         "cast(0 as bigint), (acc, e) -> acc + e.n)"
     )
-    row_ctx = (
+    u = (
         hot.withColumn(
             "_rn_end",
             F.expr(
@@ -254,21 +243,18 @@ def _featurize_hot(hot: DataFrame, layers: list[Layer], chunk_target_rows: int) 
                 "order by ts desc, turn_idx desc)"
             ),
         )
-        .filter(f"_rn_end <= {k_rows}")
         .join(F.broadcast(carr), "conv_id")
-        .withColumns(
-            {
-                "_tgt": F.expr(
-                    "explode(filter(transform(_carr, e -> e.c), t -> t > _chunk "
-                    f"and not coalesce(element_at(_bounds, t) <= {us} + {margin_us}, false) "
-                    f"and {rows_between} + _rn_end <= {k_rows}))"
-                ),
-                "_ctx": F.lit(1),
-            }
+        .withColumn(
+            "_tgt",
+            F.expr(
+                "explode(filter(transform(_carr, e -> e.c), t -> t = _chunk or (t > _chunk "
+                f"and (element_at(_bounds, t) <= {us} + {margin_us} or (_rn_end <= {k_rows} "
+                f"and {rows_between} + _rn_end <= {k_rows})))))"
+            ),
         )
-        .drop("_rn_end", "_carr")
+        .withColumn("_ctx", F.expr("cast(_tgt != _chunk as int)"))
+        .drop("_rn_end", "_carr", "_bounds", "_chunk")
     )
-    u = real_time.unionByName(row_ctx).drop("_bounds", "_chunk")
 
     # ---- 4. local pass: the plain feature plan's window layers over
     # (conv, target chunk); 5. stitch

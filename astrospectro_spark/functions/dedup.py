@@ -123,10 +123,10 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
     )
 
 
-# Jaccard of the shingle-hash sets ``h_a`` and ``h_b``, 6 decimals
+# Jaccard of the shingle-hash sets ``v_a`` and ``v_b``, 6 decimals
 _JACCARD_SQL = (
-    "round(CASE WHEN size(array_union(h_a, h_b)) > 0 THEN "
-    "CAST(size(array_intersect(h_a, h_b)) AS DOUBLE) / size(array_union(h_a, h_b)) "
+    "round(CASE WHEN size(array_union(v_a, v_b)) > 0 THEN "
+    "CAST(size(array_intersect(v_a, v_b)) AS DOUBLE) / size(array_union(v_a, v_b)) "
     "ELSE 0.0D END, 6)"
 )
 
@@ -358,22 +358,28 @@ def _lsh_candidates(hashed, id_col, num_perm, bands, verify_threshold, block_col
         f"{_md5_hash60_sql(band_key)} AS band_hash))) AS band",
     ).select(id_col, *blocks, "band.band_id", "band.band_hash")
 
-    a = banded.select(*blocks, "band_id", "band_hash", F.col(id_col).alias("id_a"))
-    b = banded.select(*blocks, "band_id", "band_hash", F.col(id_col).alias("id_b"))
+    return bucket_pairs(banded, id_col, ["band_id", "band_hash"], blocks)
+
+
+def bucket_pairs(buckets, id_col, bucket_cols, keep_cols=()) -> DataFrame:
+    """The deduplicated pairs ``(id_a, id_b, *keep_cols)``, ``id_a <
+    id_b``, of the rows of ``buckets`` (ids and keys only) that agree
+    on ``keep_cols`` and ``bucket_cols``: the LSH bucket self-join of
+    the MinHash bands and of ``similarity.embedding_neardup_pairs``.
+
+    SHUFFLE_HASH pins it to shuffle-both-sides: when AQE broadcasts
+    one side (it will at small scale), the two sides stop being
+    exchange-twins and the expensive signature projection runs twice,
+    once per side (measured 2x the MinHash signature stage). Shuffled,
+    the identical exchanges run once and are reused, the only shape
+    possible at 10^9 rows anyway; a hash join needs no sort."""
+    keys = [*keep_cols, *bucket_cols]
+    a = buckets.select(*keys, F.col(id_col).alias("id_a"))
+    b = buckets.select(*keys, F.col(id_col).alias("id_b"))
     return (
-        # SHUFFLE_HASH pins the self-join to shuffle-both-sides: when
-        # AQE broadcasts one side (it will at small scale — banded is
-        # tiny in bytes), the two sides stop being exchange-twins and
-        # the EXPENSIVE side (minhash over the corpus) is computed
-        # twice, once for the broadcast build and once for the probe
-        # (measured 2x the signature stage). With both sides shuffled
-        # the identical exchanges are computed once and reused — which
-        # is also the only plan shape possible at 10^9 docs, where
-        # banded can never fit a broadcast. Hash join over band buckets
-        # needs no sort; AQE skew-splitting still applies.
-        a.join(b.hint("shuffle_hash"), blocks + ["band_id", "band_hash"])
+        a.join(b.hint("shuffle_hash"), keys)
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", *blocks)
+        .select("id_a", "id_b", *keep_cols)
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -390,30 +396,40 @@ def _verify_candidates(pairs, hashed, id_col, blocks, threshold) -> DataFrame:
 def _verify_pairs(pairs, hashed, id_col, blocks, threshold) -> DataFrame:
     """The pairs ``(id_a, id_b, *blocks)`` whose shingle-hash sets (the
     ``_h`` column of ``hashed``) have a Jaccard at or above
-    ``threshold``, with their ``jaccard``.
-
-    Each pair is split into its two ends, ONE join attaches their
-    hashes and a group per pair brings the two arrays back together.
-    A join per pair side would put the shingle projection in the plan
-    twice, and AQE runs the two copies as two stages when it broadcasts
-    one side and shuffles the other (no exchange twins). Jaccard is
-    symmetric, so the order of the two arrays is free; a pair whose end
-    has no row in ``hashed`` drops out, as an inner join would drop it.
-    SHUFFLE_HASH keeps the hash side out of a broadcast: planned
-    under a broadcast exchange, a semi-join inside it (the candidate
-    filter of :func:`_verify_candidates`) stayed a sort-merge join,
-    where AQE otherwise broadcasts the small id set."""
-    ends = pairs.select("id_a", "id_b", *blocks, F.explode(F.array("id_a", "id_b")).alias(id_col))
+    ``threshold``, with their ``jaccard``."""
     return (
-        ends.join(hashed.select(id_col, "_h").hint("shuffle_hash"), id_col)
-        .groupBy("id_a", "id_b", *blocks)
-        .agg(F.collect_list("_h").alias("_hs"))
-        .filter("size(_hs) = 2")
-        .selectExpr("id_a", "id_b", *[quote_ident(c) for c in blocks],
-                    "_hs[0] AS h_a", "_hs[1] AS h_b")
+        attach_ends(pairs, hashed, id_col, "_h", blocks)
         .withColumn("jaccard", F.expr(_JACCARD_SQL))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", *blocks, "jaccard")
+    )
+
+
+def attach_ends(pairs, payload, id_col, value_col, keep_cols=()) -> DataFrame:
+    """The pairs ``(id_a, id_b, *keep_cols)`` with the ``value_col`` of
+    their two ends, as ``v_a`` and ``v_b``, from ``payload`` keyed by
+    ``id_col``. A pair whose end has no row there, more than one or a
+    null value drops out.
+
+    Each pair is split into its two ends, ONE join attaches their
+    values and a group per pair brings the two back together. A join
+    per pair side would put the payload projection in the plan twice,
+    and AQE runs the two copies as two stages when it broadcasts one
+    side and shuffles the other (no exchange twins). The order of
+    ``v_a`` and ``v_b`` is not fixed, so a caller's score must be
+    symmetric (the Jaccard here, the cosine of embedding pairs).
+    SHUFFLE_HASH keeps the payload out of a broadcast: planned under a
+    broadcast exchange, a semi-join inside it (the candidate filter of
+    :func:`_verify_candidates`) stayed a sort-merge join, where AQE
+    otherwise broadcasts the small id set."""
+    ends = pairs.select("id_a", "id_b", *keep_cols, F.explode(F.array("id_a", "id_b")).alias(id_col))
+    return (
+        ends.join(payload.select(id_col, value_col).hint("shuffle_hash"), id_col)
+        .groupBy("id_a", "id_b", *keep_cols)
+        .agg(F.collect_list(value_col).alias("_vs"))
+        .filter("size(_vs) = 2")
+        .selectExpr("id_a", "id_b", *[quote_ident(c) for c in keep_cols],
+                    "_vs[0] AS v_a", "_vs[1] AS v_b")
     )
 
 

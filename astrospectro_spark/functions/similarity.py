@@ -22,6 +22,8 @@ from functools import lru_cache
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from astrospectro_spark.functions.dedup import attach_ends, bucket_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -181,11 +183,14 @@ def embedding_neardup_pairs(
     near-zero-projection sign bit in all tables).
 
     Scale shape mirrors :func:`~astrospectro_spark.functions.dedup.
-    minhash_lsh_candidates`: the self-join shuffles ONLY
-    ``(table, sig, id)`` — 3 longs per row per table — and the wide
-    vectors are re-attached to the deduplicated candidate pairs
-    afterwards. At 10^9 vectors the bucket exchange stays ~100 GB
-    while a vector-carrying join would be tens of TB.
+    minhash_lsh_candidates`, with the same two steps
+    (:func:`~astrospectro_spark.functions.dedup.bucket_pairs` and
+    :func:`~astrospectro_spark.functions.dedup.attach_ends`): the
+    self-join shuffles ONLY ``(table, sig, id)`` — 3 longs per row per
+    table — and the wide vectors are re-attached to the deduplicated
+    candidate pairs afterwards, through one join of the pair ends. At
+    10^9 vectors the bucket exchange stays ~100 GB while a
+    vector-carrying join would be tens of TB.
     """
     sigs = df.select(
         F.col(id_col),
@@ -201,25 +206,9 @@ def embedding_neardup_pairs(
             )
         ).alias("b"),
     ).select(id_col, "b.table", "b.sig")
-
-    a = sigs.select(F.col(id_col).alias("id_a"), "table", "sig")
-    b = sigs.select(F.col(id_col).alias("id_b"), "table", "sig")
-    cand = (
-        # shuffle-both-sides (see dedup.minhash_lsh_candidates): a
-        # broadcast of one side would re-execute the signature
-        # projection for the build side instead of reusing the twin
-        # exchange, and can never apply at 10^9 vectors anyway
-        a.join(b.hint("shuffle_hash"), ["table", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    v = df.select(F.col(id_col), F.col(vec_col))
-    cand = cand.join(
-        v.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")), "id_a"
-    ).join(v.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")), "id_b")
+    cand = attach_ends(bucket_pairs(sigs, id_col, ["table", "sig"]), df, id_col, vec_col)
     return (
-        cand.withColumn("cosine", F.round(cosine_sim(F.col("va"), F.col("vb")), 6))
+        cand.withColumn("cosine", F.round(cosine_sim(F.col("v_a"), F.col("v_b")), 6))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

@@ -137,7 +137,6 @@ def curate(
         normalized_sql,
         quality_sql,
         quote_ident,
-        quote_str,
         token_stats_sql,
     )
 
@@ -239,16 +238,9 @@ def curate(
     keep_embed = (
         "keep_near AND NOT coalesce(_embed_dup, false)" if embeddings is not None else "keep_near"
     )
-    keep_lang = f"pred_lang IN ({', '.join(map(quote_str, langs))})" if langs else "true"
-    keep_quality = (
-        f"quality_score >= {float(min_quality)!r}D" if min_quality is not None else "true"
+    keep_lang, keep_quality, keep_tokens = row_filters_sql(
+        langs, min_quality, min_tokens, max_tokens
     )
-    token_bounds = []
-    if min_tokens is not None:
-        token_bounds.append(f"n_tokens >= {int(min_tokens)}")
-    if max_tokens is not None:
-        token_bounds.append(f"n_tokens <= {int(max_tokens)}")
-    keep_tokens = " AND ".join(token_bounds) or "true"
 
     # --- every verdict in one projection; each is cumulative, so each
     # stage count is a true funnel level
@@ -264,6 +256,30 @@ def curate(
         f"keep_quality AND ({keep_tokens}) AS keep_tokens",
         "keep_tokens AS keep",
     )
+
+
+def row_filters_sql(
+    langs: list[str] | None,
+    min_quality: float | None,
+    min_tokens: int | None,
+    max_tokens: int | None,
+) -> tuple[str, str, str]:
+    """The language, quality and token predicates of the funnel as SQL
+    text over the derived columns (``pred_lang``, ``quality_score``,
+    ``n_tokens``); an unset bound is ``true``. Shared by :func:`curate`
+    and ``streaming.curate_stream.stream_curate``."""
+    from astrospectro_spark.functions.text import quote_str
+
+    keep_lang = f"pred_lang IN ({', '.join(map(quote_str, langs))})" if langs else "true"
+    keep_quality = (
+        f"quality_score >= {float(min_quality)!r}D" if min_quality is not None else "true"
+    )
+    token_bounds = []
+    if min_tokens is not None:
+        token_bounds.append(f"n_tokens >= {int(min_tokens)}")
+    if max_tokens is not None:
+        token_bounds.append(f"n_tokens <= {int(max_tokens)}")
+    return keep_lang, keep_quality, " AND ".join(token_bounds) or "true"
 
 
 FUNNEL_STAGES = [

@@ -41,6 +41,7 @@ from astrospectro_spark.engine.windows import (
     lagz,
     roll_sum,
     sess_max,
+    sessionize,
 )
 
 
@@ -67,15 +68,17 @@ def _wcum():
 
 
 # ---------------------------------------------------------------- W1
+def _sessions(ev: DataFrame) -> DataFrame:
+    """``events`` with the BIGINT ``session_id`` of
+    :func:`engine.windows.sessionize` over ``(user_id, ts, event_id)``."""
+    out = sessionize(ev, entity_col="user_id", tiebreak_col="event_id")
+    return out.withColumn("session_id", F.col("session_id").cast("long"))
+
+
 def q_sessionize(spark, sf_dir):
     """ts-gap sessionization (SURVEY §2.5 W1; reference peak detection
     src/pipeline/peak_detector.py:94-132)."""
-    ev = _t(spark, sf_dir, "events")
-    gap_s = (_ts_us() - F.lag(_ts_us()).over(_W())).cast("double") / 1e6
-    df = ev.withColumn(
-        "session_id",
-        F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(_wcum()).cast("long"),
-    )
+    df = _sessions(_t(spark, sf_dir, "events"))
     ws = Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
     return df.select(
         "event_id",
@@ -232,14 +235,9 @@ def q_session_stats(spark, sf_dir):
     plan is Scan → Exchange(user_id) → Window → partial agg → Exchange
     (of the already-aggregated partials) instead of a second full-table
     exchange on event_id."""
-    ev = _t(spark, sf_dir, "events")
-    gap_s = (_ts_us() - F.lag(_ts_us()).over(_W())).cast("double") / 1e6
-    ev = ev.withColumn(
-        "session_id",
-        F.sum(F.when(gap_s > SESSION_GAP_S, 1).otherwise(0)).over(_wcum()).cast("long"),
-    )
     return (
-        ev.groupBy("user_id", "session_id")
+        _sessions(_t(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round((F.max(_ts_us()) - F.min(_ts_us())).cast("double") / 1e6, 6).alias(
@@ -1494,12 +1492,20 @@ def q_session_profiles(spark, sf_dir):
     pandas kernel (no self-join back to events, no second exchange —
     the plan is Scan → Exchange(user_id) → FlatMapGroupsInPandas).
     Arithmetic mirrors the DuckDB oracle exactly: integer-µs time axis
-    divided once by 1e6, weights clipped at 0, two-pass mu/var."""
+    divided once by 1e6, then the moment-method fit of
+    :func:`engine.kernels.gaussian_profile_features` (weights clipped at
+    0, two-pass mu/var)."""
     import numpy as np
     import pandas as pd
 
+    from astrospectro_spark.engine.kernels import gaussian_profile_features
+
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    fwhm_k = 2.0 * np.sqrt(2.0 * np.log(2.0))
+
+    def round_or_none(x: float, ndigits: int):
+        # NumPy's round, as the oracle's (Python's round of a float can
+        # differ in the last bit)
+        return None if np.isnan(x) else round(np.float64(x), ndigits)
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
         g = pdf.sort_values(["ts", "event_id"], kind="mergesort")
@@ -1511,14 +1517,7 @@ def q_session_profiles(spark, sf_dir):
         for s in np.unique(sid):
             m = sid == s
             t = (us[m] - us[m][0]).astype("float64") / 1e6
-            w = np.clip(y[m], 0.0, None)
-            tot = w.sum()
-            if tot > 0:
-                mu = (t * w).sum() / tot
-                var = ((t - mu) ** 2 * w).sum() / tot
-                amp, mu_s, fwhm = w.max(), mu, fwhm_k * np.sqrt(var)
-            else:
-                amp = mu_s = fwhm = None
+            f = gaussian_profile_features(t, y[m])
             # amp is a max (exact both engines) → round 6; mu/fwhm are
             # weighted-moment sums whose summation ORDER differs between
             # numpy (pairwise) and SQL (sequential) by ~1e-11 on large
@@ -1528,9 +1527,9 @@ def q_session_profiles(spark, sf_dir):
                     "user_id": g["user_id"].iloc[0],
                     "session_id": int(s),
                     "n_events": int(m.sum()),
-                    "amp": None if amp is None else round(amp, 6),
-                    "mu_s": None if mu_s is None else round(mu_s, 4),
-                    "fwhm_s": None if fwhm is None else round(fwhm, 4),
+                    "amp": round_or_none(f["amp"], 6),
+                    "mu_s": round_or_none(f["mu"], 4),
+                    "fwhm_s": round_or_none(f["fwhm"], 4),
                 }
             )
         return pd.DataFrame(rows)

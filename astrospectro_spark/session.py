@@ -16,6 +16,8 @@ from pyspark.sql import SparkSession
 
 # the driver heap's upper bound when SPARK_GRAFT_DRIVER_MEM is unset
 MAX_DRIVER_MEM_MB = 16 * 1024
+# the JVM's reserved code cache (get_spark explains the size)
+CODE_CACHE_OPT = "-XX:ReservedCodeCacheSize=512m"
 JAVA_OPTS_KEYS = ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions")
 
 
@@ -115,11 +117,8 @@ def get_spark(
     # JVM). Ignored with a warning when attaching to an already-running
     # JVM (e.g. inside spark-submit, which sets its own opts).
     extra = dict(extra_conf or {})
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
-    if code_cache:
-        jopt = f"-XX:ReservedCodeCacheSize={code_cache}"
-        for k in JAVA_OPTS_KEYS:
-            extra[k] = f"{jopt} {extra[k]}" if extra.get(k) else jopt
+    for k in JAVA_OPTS_KEYS:
+        extra[k] = f"{CODE_CACHE_OPT} {extra[k]}" if extra.get(k) else CODE_CACHE_OPT
     # Shuffle/spill dir override — OPT-IN via SPARK_GRAFT_LOCAL_DIR
     # (bench harnesses set it to /dev/shm tmpfs: in local mode all
     # "shuffle" traffic is disk I/O on one host and concurrent writers

@@ -10,8 +10,9 @@ horizon's document arrival rate — the standard streaming-dedup
 contract (duplicates farther apart than the horizon pass through;
 batch `curate` is the exact-at-any-distance form).
 
-The lang/quality/token filters are the same expression-only free
-riders as the batch funnel — stateless, so stream == batch per row.
+The lang/quality/token filters are the batch funnel's predicates
+(``jobs.curate_job.row_filters_sql``) over the same expression-only
+free riders — stateless, so stream == batch per row.
 
 Near-dup (MinHash/embedding) stages are deliberately batch-only: their
 band self-joins need the whole corpus on both sides; the honest
@@ -22,7 +23,8 @@ table (run ``curate_job`` on a schedule), not a stream-stream join.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from astrospectro_spark.jobs.curate_job import row_filters_sql
 
 
 def stream_curate(
@@ -53,14 +55,5 @@ def stream_curate(
     out = with_lang_id(out, text_col)
     out = with_quality(out, text_col)
     out = with_token_stats(out, text_col)
-
-    cond = F.lit(True)
-    if langs:
-        cond = cond & F.col("pred_lang").isin(list(langs))
-    if min_quality is not None:
-        cond = cond & (F.col("quality_score") >= float(min_quality))
-    if min_tokens is not None:
-        cond = cond & (F.col("n_tokens") >= int(min_tokens))
-    if max_tokens is not None:
-        cond = cond & (F.col("n_tokens") <= int(max_tokens))
-    return out.filter(cond)
+    filters = row_filters_sql(langs, min_quality, min_tokens, max_tokens)
+    return out.filter(" AND ".join(f"({f})" for f in filters))

@@ -241,6 +241,55 @@ def test_stream_curate_dedups_within_watermark(spark, tmp_path):
     assert kept == {0, 1, 11}
 
 
+def test_stream_curate_filters_equal_batch(spark, tmp_path):
+    """On a duplicate-free feed, stream_curate keeps exactly the rows
+    that curate() keeps through keep_tokens, with the language,
+    quality and both token bounds set, and each of them dropping
+    rows."""
+    from pyspark.sql import functions as F
+
+    from astrospectro_spark.jobs.curate_job import curate
+    from astrospectro_spark.streaming import stream_curate
+    from perfbench import inputs
+
+    pdf = inputs.generate_documents(300, 5)
+    # every third document gains digits and punctuation, which lower
+    # its quality score
+    noisy = pdf["doc_id"] % 3 == 0
+    pdf.loc[noisy, "text"] = pdf.loc[noisy, "text"] + " 2024, 10.5; 99!"
+    pdf["ts"] = (pd.Timestamp("2025-01-01") + pd.to_timedelta(pdf["doc_id"], unit="s")).astype("datetime64[us]")
+    raw = str(tmp_path / "raw.parquet")
+    pdf.to_parquet(raw, index=False)
+    docs = spark.read.parquet(raw).withColumn("ts", F.col("ts").cast("timestamp"))
+    # the exact keepers only, so the stream's dedup drops nothing
+    feed = curate(docs, near_dup_threshold=None).filter("keep_exact").select(*docs.columns)
+    src = str(tmp_path / "feed")
+    feed.write.parquet(src)
+
+    kw = dict(langs=["en", "fr"], min_quality=0.9, min_tokens=20, max_tokens=80)
+    batch = curate(spark.read.parquet(src), near_dup_threshold=None, **kw)
+    f = batch.agg(
+        *[F.sum(F.col(c).cast("long")).alias(c) for c in ("keep_exact", "keep_lang", "keep_quality")],
+        F.sum(F.expr("keep_quality AND n_tokens < 20").cast("long")).alias("short"),
+        F.sum(F.expr("keep_quality AND n_tokens > 80").cast("long")).alias("long"),
+    ).first()
+    assert f.keep_exact > f.keep_lang > f.keep_quality > f.short + f.long, f
+    assert f.short > 0 and f.long > 0, f
+    want = {r.doc_id for r in batch.filter("keep_tokens").select("doc_id").collect()}
+
+    q = (
+        stream_curate(spark.readStream.schema(feed.schema).parquet(src), watermark="1 hour", **kw)
+        .writeStream.format("memory")
+        .queryName("curate_stream_filters")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {r.doc_id for r in spark.sql("select doc_id from curate_stream_filters").collect()}
+    assert got == want
+
+
 def test_curate_is_partition_invariant(spark, planted_src, tmp_path):
     """Funnel verdicts must not depend on input partitioning: keeper
     selection (min-id), LSH pairs, and every filter are deterministic

@@ -121,6 +121,22 @@ def test_salted_window_pass_budget(spark, transcripts_sdf, kw, windows, sorts):
     assert c.get("Window", 99) <= windows and c.get("Sort", 99) <= sorts, c
 
 
+def test_salted_plan_unions_once(spark, transcripts_sdf):
+    """The executed salted plan holds one Union, cold rows with hot: a
+    hot row reaches its own chunk and every chunk it is context for in
+    one explode, so neither the hot rows nor the per-chunk summary
+    built from them read a union of their own."""
+    from astrospectro_spark.engine.skew import featurize_salted
+
+    salted = featurize_salted(
+        transcripts_sdf, hot_threshold=300, chunk_target_rows=37,
+        include_text=False, enum_shuffle=True,
+    )
+    salted.write.format("noop").mode("overwrite").save()
+    c = _op_counts(_formatted(spark, salted))
+    assert c.get("Union", 0) == 1, c
+
+
 def test_skew_defines_no_feature():
     """engine/skew.py and the stream featurizer stage rows and carry
     state only: every feature is defined once, in engine/windows.py, so
@@ -348,3 +364,15 @@ def test_embedding_lsh_exchange_carries_no_vectors(spark):
     assert sig_blocks, "expected at least one bucket-key exchange in the plan"
     for b in sig_blocks:
         assert "embedding#" not in b, b
+
+
+def test_embedding_vectors_attached_by_one_join(spark):
+    """embedding_neardup_pairs reaches the vectors through one join: the
+    pair ends are attached in a single join (``dedup.attach_ends``, the
+    step the MinHash verify uses), so the optimized plan holds that join
+    and the bucket self-join, and no join per pair side."""
+    from astrospectro_spark.functions.similarity import embedding_neardup_pairs
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    plan = embedding_neardup_pairs(emb)._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"^[\s:|+-]*Join ", plan, re.M)) == 2, plan

@@ -15,7 +15,6 @@ GRAFT_VARS = (
     "SPARK_GRAFT_MASTER",
     "SPARK_GRAFT_SHUFFLE_PARTITIONS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_CODE_CACHE",
     "SPARK_GRAFT_LOCAL_DIR",
 )
 
@@ -71,14 +70,12 @@ def test_graft_variables_keep_their_meaning(built, monkeypatch):
         "SPARK_GRAFT_MASTER": "local[2]",
         "SPARK_GRAFT_SHUFFLE_PARTITIONS": "7",
         "SPARK_GRAFT_DRIVER_MEM": "4g",
-        "SPARK_GRAFT_CODE_CACHE": "256m",
     }.items():
         monkeypatch.setenv(var, val)
     opts = built()
     assert opts["spark.master"] == "local[2]"
     assert opts["spark.sql.shuffle.partitions"] == "7"
     assert opts["spark.driver.memory"] == "4g"
-    assert opts["spark.driver.extraJavaOptions"] == "-XX:ReservedCodeCacheSize=256m"
     # explicit arguments still win over the environment
     opts = built(master="local[1]", shuffle_partitions=9)
     assert opts["spark.master"] == "local[1]"

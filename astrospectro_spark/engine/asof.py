@@ -26,6 +26,10 @@ src/tools/gaia_crossmatcher.py:712-744). A hot conversation's as-of
 therefore sorts in one task; the skew split lives in featurize
 (:mod:`engine.skew`).
 
+Both take turns keyed by ``conv_id`` with ``ts`` and ``turn_idx``, and
+anchors keyed by ``conv_id`` with ``anchor_ts``; callers with other
+column names rename to these (``queries.q_asof_*``).
+
 Semantics: for each anchor, the LATEST turn with ``ts <= anchor_ts``
 (boundary inclusive), ties broken by largest ``turn_idx``; optional
 per-row tolerance nulls out matches older than ``anchor_ts -
@@ -43,12 +47,8 @@ DEFAULT_VALUE_COLS = ["turn_idx", "role", "text", "tool", "ts"]
 def asof_join(
     turns: DataFrame,
     anchors: DataFrame,
-    entity_col: str = "conv_id",
-    turn_ts: str = "ts",
-    anchor_ts: str = "anchor_ts",
     value_cols: list[str] | None = None,
     tolerance_col: str | None = None,
-    tiebreak_col: str = "turn_idx",
 ) -> DataFrame:
     """Sorted-merge as-of join as a single window plan (no UDF).
 
@@ -58,18 +58,18 @@ def asof_join(
     the boundary ``ts == anchor_ts`` inclusive by construction.
     """
     value_cols = value_cols or DEFAULT_VALUE_COLS
-    anchor_payload = [c for c in anchors.columns if c != entity_col]
+    anchor_payload = [c for c in anchors.columns if c != "conv_id"]
 
     t = turns.select(
-        F.col(entity_col),
-        F.col(turn_ts).alias("_ts"),
+        F.col("conv_id"),
+        F.col("ts").alias("_ts"),
         F.lit(0).alias("_is_anchor"),
-        F.col(tiebreak_col).cast("long").alias("_tie"),
+        F.col("turn_idx").cast("long").alias("_tie"),
         F.struct(*[F.col(c).alias(f"asof_{c}") for c in value_cols]).alias("_carry"),
     )
     a = anchors.select(
-        F.col(entity_col),
-        F.col(anchor_ts).alias("_ts"),
+        F.col("conv_id"),
+        F.col("anchor_ts").alias("_ts"),
         F.lit(1).alias("_is_anchor"),
         F.lit(None).cast("long").alias("_tie"),
         F.lit(None)
@@ -80,31 +80,31 @@ def asof_join(
     u = t.unionByName(a, allowMissingColumns=True)
 
     w = (
-        Window.partitionBy(entity_col)
+        Window.partitionBy("conv_id")
         .orderBy(F.col("_ts").asc(), F.col("_is_anchor").asc(), F.col("_tie").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     u = u.withColumn("_asof", F.last("_carry", ignorenulls=True).over(w))
     out = u.filter(F.col("_is_anchor") == 1).select(
-        F.col(entity_col),
+        F.col("conv_id"),
         *[F.col(c) for c in anchor_payload],
         *[F.col("_asof").getField(f"asof_{c}").alias(f"asof_{c}") for c in value_cols],
     )
     if tolerance_col:
-        out = _null_when_too_old(out, anchor_ts, tolerance_col, value_cols)
+        out = _null_when_too_old(out, tolerance_col, value_cols)
     return out
 
 
-def _null_when_too_old(out, anchor_ts, tolerance_col, value_cols):
+def _null_when_too_old(out, tolerance_col, value_cols):
     """Null every asof_* column when the match is older than the
-    tolerance. The predicate is evaluated into a temp column FIRST,
-    from the unnulled asof_ts, and one projection then nulls every
-    asof_* column from it and drops it, whatever the position of 'ts'
-    in value_cols."""
+    tolerance (in seconds, fractions kept). The predicate is evaluated
+    into a temp column FIRST, from the unnulled asof_ts, and one
+    projection then nulls every asof_* column from it and drops it,
+    whatever the position of 'ts' in value_cols."""
     too_old = (
-        F.unix_micros(F.col(anchor_ts).cast("timestamp"))
+        F.unix_micros(F.col("anchor_ts").cast("timestamp"))
         - F.unix_micros(F.col("asof_ts").cast("timestamp"))
-    ) > F.col(tolerance_col).cast("long") * 1_000_000
+    ) > F.col(tolerance_col).cast("double") * 1_000_000
     nulled = {f"asof_{c}" for c in value_cols}
     return out.withColumn("_too_old", too_old).select(
         *[
@@ -119,7 +119,6 @@ def _null_when_too_old(out, anchor_ts, tolerance_col, value_cols):
 def asof_join_grouped(
     turns: DataFrame,
     anchors: DataFrame,
-    entity_col: str = "conv_id",
     value_cols: list[str] | None = None,
     tolerance_col: str | None = None,
 ) -> DataFrame:
@@ -135,12 +134,12 @@ def asof_join_grouped(
     from astrospectro_spark.oracle.pandas_oracle import oracle_asof
 
     value_cols = value_cols or DEFAULT_VALUE_COLS
-    anchor_payload = [c for c in anchors.columns if c != entity_col]
+    anchor_payload = [c for c in anchors.columns if c != "conv_id"]
 
     type_map = dict(turns.dtypes)
     a_types = dict(anchors.dtypes)
     out_fields = (
-        [f"{entity_col} {type_map[entity_col]}"]
+        [f"conv_id {type_map['conv_id']}"]
         + [f"{c} {a_types[c]}" for c in anchor_payload]
         + [f"asof_{c} {type_map[c]}" for c in value_cols]
     )
@@ -155,7 +154,7 @@ def asof_join_grouped(
     def fn(t_pdf, a_pdf):
         import pandas as _pd
 
-        cols = [entity_col] + anchor_payload + [f"asof_{c}" for c in value_cols]
+        cols = ["conv_id"] + anchor_payload + [f"asof_{c}" for c in value_cols]
         if len(a_pdf) == 0:
             return _pd.DataFrame(columns=cols)
         if len(t_pdf) == 0:
@@ -173,7 +172,7 @@ def asof_join_grouped(
         return m[cols]
 
     return (
-        turns.groupby(entity_col)
-        .cogroup(anchors.groupby(entity_col))
+        turns.groupby("conv_id")
+        .cogroup(anchors.groupby("conv_id"))
         .applyInPandas(fn, schema=schema)
     )

@@ -20,7 +20,8 @@ jar ships in this sandbox):
   full table once per bucket — 64 full reads of 100 TB); each bucket
   then reads only its own partition directory (partition pruning,
   plan-audited in tests). The stage is reused on resume (its
-  ``_SUCCESS`` marker is the commit);
+  ``_fingerprint.json``, moved into place atomically after the write,
+  is the commit);
 - each bucket commit appends one lineage record
   ``(run_id, bucket, n_rows, checksum, input_rows, input_checksum,
   status)`` to the lineage table *after* its output partition lands —
@@ -34,8 +35,7 @@ jar ships in this sandbox):
   dropped before the files are written; a ``count_if`` and a
   ``bit_xor`` per bucket) and kept in the stage's ``_fingerprint.json``,
   so neither staging nor a resume reads the staged copy back. A
-  pre-bucketed input (or a stage whose fingerprint predates the
-  per-bucket sums) gets one grouped pass over the pending buckets at
+  pre-bucketed input gets one grouped pass over the pending buckets at
   the start of the run;
 - the ledger check, staging and the input guard are one step,
   :meth:`FeatureRun.stage`, that :meth:`FeatureRun.run` reuses when it
@@ -200,24 +200,26 @@ class FeatureRun:
         resume. Returns the staged frame, whose per-bucket filter is a
         partition-pruned directory read instead of a full-table scan.
 
-        The staged copy is keyed to this out_dir. A fingerprint is
-        written next to the ``_SUCCESS`` marker at stage time: the row
-        count, and each non-empty bucket's input ``(rows, checksum)``
-        (the lineage's ``input_rows``/``input_checksum``), observed on
+        The staged copy is keyed to this out_dir. Its fingerprint, the
+        row count and each non-empty bucket's input ``(rows, checksum)``
+        (the lineage's ``input_rows``/``input_checksum``), is observed on
         the stage write itself, so neither staging nor a bucket commit
-        reads the input twice. Resuming with an input whose row count
-        differs FAILS LOUDLY instead of silently mixing buckets from two
-        different inputs. A same-count different-content input evades
+        reads the input twice. The fingerprint is the stage's commit:
+        it lands after the data, through a tmp file and ``os.replace``,
+        and a stage without a complete one (a run killed in the write or
+        before the fingerprint landed) is written again. Resuming with
+        an input whose row count differs FAILS LOUDLY instead of
+        silently mixing buckets from two different inputs. A same-count different-content input evades
         this cheap check — pass ``verify_input=True`` to :meth:`run`
         for a full per-bucket checksum audit against the lineage
         records."""
-        marker = os.path.join(self.stage_dir, "_SUCCESS")
         bucketed = bucketize(turns, self.n_buckets)
         # Explicit read schema: a 0-row input (drained resume queue,
         # partition-pruned read matching nothing) writes a staged dir
         # with no data files, and schema inference on it throws.
         reader = self.spark.read.schema(bucketed.schema)
-        if not os.path.exists(marker):
+        fingerprint = self._fingerprint()
+        if "buckets" not in fingerprint:
             # one hash per row, projected for the observation and dropped
             # before the write: every bucket's (rows, checksum) equals
             # _checksum of its staged partition, with no read-back
@@ -238,7 +240,8 @@ class FeatureRun:
                 for b in range(self.n_buckets)
                 if seen[f"n{b}"]
             }
-            with open(self.fingerprint_path, "w") as f:
+            tmp = self.fingerprint_path + ".tmp"
+            with open(tmp, "w") as f:
                 json.dump(
                     {
                         "input_rows": sum(n for n, _ in per_bucket.values()),
@@ -246,33 +249,34 @@ class FeatureRun:
                     },
                     f,
                 )
+            os.replace(tmp, self.fingerprint_path)
             return reader.parquet(self.stage_dir)
-        want = self._fingerprint().get("input_rows")
-        if want is not None:
-            got = turns.count()
-            if got != want:
-                raise ValueError(
-                    f"resume with a different input: staged snapshot holds {want} "
-                    f"rows but the passed input has {got}; use a fresh out_dir "
-                    f"for a new or updated input table"
-                )
+        want, got = fingerprint["input_rows"], turns.count()
+        if got != want:
+            raise ValueError(
+                f"resume with a different input: staged snapshot holds {want} "
+                f"rows but the passed input has {got}; use a fresh out_dir "
+                f"for a new or updated input table"
+            )
         return reader.parquet(self.stage_dir)
 
     def _fingerprint(self) -> dict:
-        if not os.path.exists(self.fingerprint_path):
+        """The stage's fingerprint; empty when missing or unparseable."""
+        try:
+            with open(self.fingerprint_path) as f:
+                return json.load(f)
+        except (FileNotFoundError, ValueError):
             return {}
-        with open(self.fingerprint_path) as f:
-            return json.load(f)
 
     def _input_checksums(
         self, staged: DataFrame, todo: list[int], prestaged: bool
     ) -> dict[int, tuple[int, int]]:
         """Input ``(rows, checksum)`` of the pending buckets: read from
-        the stage's fingerprint, or (a pre-bucketed input, a fingerprint
-        without per-bucket sums) one grouped pass over ``todo``."""
-        buckets = None if prestaged else self._fingerprint().get("buckets")
-        if buckets is None:
+        the stage's fingerprint, or (a pre-bucketed input) one grouped
+        pass over ``todo``."""
+        if prestaged:
             return _bucket_checksums(staged, todo)
+        buckets = self._fingerprint()["buckets"]
         return {int(b): (v[0], v[1]) for b, v in buckets.items()}
 
     def _verify_committed(

@@ -133,6 +133,18 @@ def sigma_clip_slope(
     )
 
 
+def cramer2(n, s1, s2, s3, s4, t0, t1, t2) -> tuple[Column, Column, Column, Column]:
+    """Cramer's rule for the degree-2 normal equations from the moment
+    sums ``n = Σ1, s_k = Σx^k, t_k = Σx^k·y``: returns ``(det, d0, d1,
+    d2)``, with coefficient ``c_k = d_k / det``. The terms are written
+    as in the DuckDB oracle, so the fits hash-match it."""
+    det = n * (s2 * s4 - s3 * s3) - s1 * (s1 * s4 - s3 * s2) + s2 * (s1 * s3 - s2 * s2)
+    d0 = t0 * (s2 * s4 - s3 * s3) - s1 * (t1 * s4 - s3 * t2) + s2 * (t1 * s3 - s2 * t2)
+    d1 = n * (t1 * s4 - s3 * t2) - t0 * (s1 * s4 - s3 * s2) + s2 * (s1 * t2 - t1 * s2)
+    d2 = n * (s2 * t2 - s3 * t1) - s1 * (s1 * t2 - s3 * t0) + t0 * (s1 * s3 - s2 * s2)
+    return det, d0, d1, d2
+
+
 def poly2_residuals_per_entity(
     df: DataFrame,
     x: str,
@@ -151,8 +163,8 @@ def poly2_residuals_per_entity(
     :func:`with_poly_residuals`).
 
     Caller must supply a well-conditioned ``x`` (normalize to [0,1] per
-    entity). The Cramer expressions are written term-for-term identical
-    to the DuckDB oracle so residuals hash-match at round(4).
+    entity). The solve is :func:`cramer2`, written term-for-term as the
+    DuckDB oracle so residuals hash-match at round(4).
     Entities with fewer than ``min_rows`` rows or a singular system get
     NULL residuals (the reference requires >= 200 rows for its global
     fit, feature_engineering.py:1726).
@@ -168,15 +180,11 @@ def poly2_residuals_per_entity(
         F.sum(xc * yc).alias("t1"),
         F.sum(xc * xc * yc).alias("t2"),
     )
-    n, s1, s2, s3, s4 = F.col("n"), F.col("s1"), F.col("s2"), F.col("s3"), F.col("s4")
-    t0, t1, t2 = F.col("t0"), F.col("t1"), F.col("t2")
+    solved = cramer2(*[F.col(c) for c in ("n", "s1", "s2", "s3", "s4", "t0", "t1", "t2")])
     coeffs = g.select(
         group_col,
         "n",
-        (n * (s2 * s4 - s3 * s3) - s1 * (s1 * s4 - s3 * s2) + s2 * (s1 * s3 - s2 * s2)).alias("det"),
-        (t0 * (s2 * s4 - s3 * s3) - s1 * (t1 * s4 - s3 * t2) + s2 * (t1 * s3 - s2 * t2)).alias("d0"),
-        (n * (t1 * s4 - s3 * t2) - t0 * (s1 * s4 - s3 * s2) + s2 * (s1 * t2 - t1 * s2)).alias("d1"),
-        (n * (s2 * t2 - s3 * t1) - s1 * (s1 * t2 - s3 * t0) + t0 * (s1 * s3 - s2 * s2)).alias("d2"),
+        *[c.alias(name) for c, name in zip(solved, ("det", "d0", "d1", "d2"))],
     )
     det, d0, d1, d2 = F.col("det"), F.col("d0"), F.col("d1"), F.col("d2")
     fitted = d0 / det + (d1 / det) * xc + (d2 / det) * xc * xc

@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from astrospectro_spark.engine.asof import asof_join, asof_join_grouped
+from astrospectro_spark.engine.regression import (
+    cramer2,
+    poly2_residuals_per_entity,
+    sigma_clip_slope,
+)
 from astrospectro_spark.engine.windows import (
     _TAU,
     SESSION_GAP_S,
@@ -890,29 +895,10 @@ def q_feature_vector_wide(spark, sf_dir):
     var5c = vc_m2[5] - vc_m[5] * vc_m[5]
     lag5v = F.lag(v, 5).over(w)
     # per-entity deg-2 Cramer fit (A7 main-sequence delta) from the
-    # staged whole-partition moment sums — term-for-term the oracle's
+    # staged whole-partition moment sums
     pn = F.col("_pn")
-    ps1, ps2, ps3, ps4 = F.col("_ps1"), F.col("_ps2"), F.col("_ps3"), F.col("_ps4")
-    pt0, pt1, pt2 = F.col("_pt0"), F.col("_pt1"), F.col("_pt2")
-    det = (
-        pn * (ps2 * ps4 - ps3 * ps3)
-        - ps1 * (ps1 * ps4 - ps3 * ps2)
-        + ps2 * (ps1 * ps3 - ps2 * ps2)
-    )
-    d0 = (
-        pt0 * (ps2 * ps4 - ps3 * ps3)
-        - ps1 * (pt1 * ps4 - ps3 * pt2)
-        + ps2 * (pt1 * ps3 - ps2 * pt2)
-    )
-    d1 = (
-        pn * (pt1 * ps4 - ps3 * pt2)
-        - pt0 * (ps1 * ps4 - ps3 * ps2)
-        + ps2 * (ps1 * pt2 - pt1 * ps2)
-    )
-    d2 = (
-        pn * (ps2 * pt2 - ps3 * pt1)
-        - ps1 * (ps1 * pt2 - ps3 * pt0)
-        + pt0 * (ps1 * ps3 - ps2 * ps2)
+    det, d0, d1, d2 = cramer2(
+        pn, *[F.col(c) for c in ("_ps1", "_ps2", "_ps3", "_ps4", "_pt0", "_pt1", "_pt2")]
     )
     xx = F.col("_x")
     pred = d0 / det + (d1 / det) * xx + (d2 / det) * xx * xx
@@ -1453,8 +1439,6 @@ def q_poly_residuals(spark, sf_dir):
     hash-match. The reference's GLOBAL two-pass fit (driver-side 3x3
     solve) remains in engine/regression.with_poly_residuals with a
     pytest-vs-np.polyfit oracle."""
-    from astrospectro_spark.engine.regression import poly2_residuals_per_entity
-
     us = _ts_us()
     wu = Window.partitionBy("user_id")
     span = F.greatest(F.max(us).over(wu) - F.min(us).over(wu), F.lit(1))
@@ -1471,8 +1455,6 @@ def q_sigma_clip_slope(spark, sf_dir):
     x is per-entity seconds-since-first-event (centered BEFORE the
     co-moment aggregates — same conditioning fix as regression_slope);
     the DuckDB oracle unrolls the two clip iterations as CTEs."""
-    from astrospectro_spark.engine.regression import sigma_clip_slope
-
     us = _ts_us()
     ev = _t(spark, sf_dir, "events").withColumn(
         "x", (us - F.min(us).over(Window.partitionBy("user_id"))).cast("double") / 1e6

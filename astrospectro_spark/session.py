@@ -73,8 +73,8 @@ def get_spark(
         .config("spark.python.worker.reuse", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # INT96 (the legacy default) carries no parquet footer min/max;
-        # µs timestamps keep per-file bounds usable for data skipping
-        # (sources/snapshot_log.py stats pruning)
+        # µs timestamps keep the row-group bounds that Spark's Parquet
+        # filter pushdown skips on
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         .config(

@@ -27,19 +27,21 @@ needs from a table format, with the same mechanics Iceberg uses:
 
 Operations: ``append`` (new files join the live set) and
 ``overwrite`` (new files REPLACE the live set — the compaction /
-dedup-rewrite primitive). Orphaned files from failed or superseded
-commits are unreferenced by construction and ignored by readers.
+dedup-rewrite primitive: commit ``read_table(...)``, filtered or
+repartitioned, as an overwrite). Orphaned files from failed or
+superseded commits are unreferenced by construction and ignored by
+readers; :func:`expire_snapshots` reclaims them.
 
-At cluster scale the manifest lists thousands of files; the JSON
-stays KB-MB sized because it stores paths + stats, not data — the
-same reason Iceberg metadata scales. Partition pruning here is
-path-prefix filtering over manifest entries (each append may declare
-a ``partition`` tag), resolved driver-side before the parquet scan.
+A manifest entry is a data-file path and its ``partition`` tag, no
+data and no statistics, so the JSON stays small at thousands of files.
+The ``partition`` tag filters entries driver-side before the scan.
+Data skipping within the files is Spark's own: a bounded read is
+``read_table(...).where(...)``, and the Parquet scan pushes the
+predicate down to the row-group min/max in each file's footer.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import errno
 import json
 import os
@@ -102,96 +104,6 @@ def history(table_dir: str) -> list[dict]:
     return out
 
 
-def _json_scalar(v):
-    """Parquet-footer stat → JSON-safe, order-preserving scalar.
-
-    Timestamps map to epoch microseconds (the engine's µs convention)
-    so bounds compare as plain ints; bytes decode best-effort."""
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=_dt.timezone.utc)
-        return int(v.timestamp() * 1_000_000)
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-    if isinstance(v, (bool, int, float, str)):
-        return v
-    return None
-
-
-def _file_column_stats(path: str) -> dict[str, list]:
-    """Per-file {column: [min, max]} from the parquet FOOTER only —
-    no data pages are read. This is the snapshot-log analogue of
-    Iceberg's per-data-file column bounds (lower_bounds/upper_bounds),
-    the metadata that lets a 100 TB scan skip files driver-side
-    (reference analog: the FITS header-only catalog pass,
-    src/tools/generate_catalog_from_fits.py:49-50).
-
-    Columns with missing/unusable stats in ANY row group are omitted
-    (absence = "don't prune on this file"), so pruning stays sound for
-    truncated string stats or stats-less writers."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    schema = md.schema
-    bounds: dict[str, list] = {}
-    dead: set[str] = set()
-    for rg in range(md.num_row_groups):
-        grp = md.row_group(rg)
-        for ci in range(grp.num_columns):
-            col = grp.column(ci)
-            name = schema.column(ci).name
-            if name in dead or "." in col.path_in_schema:
-                continue  # nested leaves prune nothing useful
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                dead.add(name)
-                bounds.pop(name, None)
-                continue
-            lo, hi = _json_scalar(st.min), _json_scalar(st.max)
-            if lo is None or hi is None:
-                dead.add(name)
-                bounds.pop(name, None)
-                continue
-            if name in bounds:
-                bounds[name][0] = min(bounds[name][0], lo)
-                bounds[name][1] = max(bounds[name][1], hi)
-            else:
-                bounds[name] = [lo, hi]
-    return bounds
-
-
-def _norm_bound(v):
-    """Normalise a caller-supplied pruning bound like _json_scalar."""
-    out = _json_scalar(v)
-    if out is None:
-        raise TypeError(f"unsupported pruning bound type: {type(v).__name__}")
-    return out
-
-
-def _entry_survives(entry: dict, stats_filter: dict) -> bool:
-    """False only when the file's footer bounds PROVE no row matches.
-
-    Files without stats for a column always survive — pruning is an
-    optimisation, never a correctness gate; callers still apply the
-    real row-level filter on the scan."""
-    stats = entry.get("stats") or {}
-    for col, (lo, hi) in stats_filter.items():
-        b = stats.get(col)
-        if b is None:
-            continue
-        fmin, fmax = b
-        if lo is not None and fmax < _norm_bound(lo):
-            return False
-        if hi is not None and fmin > _norm_bound(hi):
-            return False
-    return True
-
-
 def commit(
     table_dir: str,
     df: DataFrame,
@@ -204,7 +116,7 @@ def commit(
     ``operation``: ``"append"`` adds the files to the live set;
     ``"overwrite"`` replaces the whole live set (compaction /
     dedup-rewrite). ``partition`` tags the new files for driver-side
-    pruning in :func:`read_table`. ``expected_snapshot_id`` pins the
+    selection in :func:`read_table`. ``expected_snapshot_id`` pins the
     parent for optimistic concurrency; the default (ellipsis) snapshots
     LATEST at entry — pass the id you planned against to detect
     concurrent writers across a longer span.
@@ -237,11 +149,11 @@ def _write_data_files(
     table_dir: str, df: DataFrame, partition: str | None
 ) -> tuple[list[dict], dict]:
     """Write ``df`` as immutable parquet files under a fresh per-commit
-    directory; return (manifest entries with footer stats, lineage
-    summary of what LANDED). Timestamps are forced to TIMESTAMP_MICROS
-    for this write even under a foreign session: INT96 (the legacy
-    default) has no footer min/max, which would silently disable ts
-    data skipping on every file this table ever commits.
+    directory; return (manifest entries, lineage summary of what
+    LANDED). Timestamps are forced to TIMESTAMP_MICROS for this write
+    even under a foreign session: INT96 (the legacy default) has no
+    footer min/max, so Spark's Parquet pushdown could skip no row group
+    on ``ts`` in any file this table commits.
 
     The summary is the row count and order-insensitive checksum of the
     lineage ledger (``bit_xor`` of ``xxhash64`` over all columns),
@@ -262,62 +174,8 @@ def _write_data_files(
         for f in os.listdir(files_dir)
         if f.endswith(".parquet")
     )
-    new_entries = [
-        {"path": p, "partition": partition, "stats": _file_column_stats(p)}
-        for p in new_files
-    ]
+    new_entries = [{"path": p, "partition": partition} for p in new_files]
     return new_entries, {"n_rows": int(landed["n"]), "checksum": int(landed["h"])}
-
-
-def compact(
-    spark: SparkSession,
-    table_dir: str,
-    partition: str | None = None,
-    target_partitions: int = 1,
-) -> int | None:
-    """Small-file compaction (Iceberg's ``rewrite_data_files``): rewrite
-    the live files of one ``partition`` tag (or the whole live set)
-    into ``target_partitions`` output files, committed as one atomic
-    ``compact`` snapshot whose manifest keeps every untouched entry.
-
-    Content-preserving by construction (the commit summary checksums
-    what landed; the test asserts checksum equality with the
-    pre-compaction snapshot), CAS-protected against concurrent writers,
-    and time travel to pre-compaction snapshots keeps working because
-    data files are immutable — old snapshots still reference the old
-    files until :func:`expire_snapshots` retires them.
-
-    Returns the new snapshot id, or None when the group already has
-    ≤1 file (nothing to compact). At 100 TB this is the maintenance
-    job that keeps scan task counts sane after many small streaming /
-    per-bucket appends (reference analog: the reference re-batches
-    per-chunk outputs into one catalog, SURVEY §2.1 S4/S5)."""
-    sid = current_snapshot_id(table_dir)
-    if sid is None:
-        return None
-    entries = _load_snapshot(table_dir, sid)["manifest"]
-    group = [
-        e for e in entries if partition is None or e["partition"] == partition
-    ]
-    if len(group) <= 1:
-        return None
-    keep = [e for e in entries if e not in group]
-    df = spark.read.parquet(*[e["path"] for e in group]).repartition(
-        max(1, int(target_partitions))
-    )
-    new_entries, summary = _write_data_files(table_dir, df, partition)
-    return _commit_snapshot(
-        table_dir,
-        keep + new_entries,
-        "compact",
-        sid,
-        {
-            **summary,
-            "partition": partition,
-            "rewrote_files": len(group),
-            "into_files": len(new_entries),
-        },
-    )
 
 
 def expire_snapshots(
@@ -541,25 +399,16 @@ def resolve_files(
     table_dir: str,
     snapshot_id: int | None = None,
     partition: str | None = None,
-    stats_filter: dict | None = None,
 ) -> list[str]:
-    """Driver-side file resolution: manifest entries surviving the
-    ``partition`` tag filter AND the column-stats ``stats_filter``.
-
-    ``stats_filter`` maps column → ``(lo, hi)`` inclusive bounds
-    (either side may be None for unbounded). A file is skipped only
-    when its parquet-footer min/max PROVE no row can match — the
-    Iceberg data-skipping contract. Exposed separately from
-    :func:`read_table` so tests and planners can assert exactly which
-    files a bounded read would open."""
+    """Driver-side file resolution: the data files of ``snapshot_id``
+    (default: LATEST) whose manifest entry carries the ``partition``
+    tag (any tag when None)."""
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(table_dir)
     if sid is None:
         raise FileNotFoundError(f"no snapshots in {table_dir}")
     entries = _load_snapshot(table_dir, sid)["manifest"]
     if partition is not None:
         entries = [e for e in entries if e["partition"] == partition]
-    if stats_filter:
-        entries = [e for e in entries if _entry_survives(e, stats_filter)]
     return [e["path"] for e in entries]
 
 
@@ -568,25 +417,16 @@ def read_table(
     table_dir: str,
     snapshot_id: int | None = None,
     partition: str | None = None,
-    stats_filter: dict | None = None,
 ) -> DataFrame:
     """Read the table exactly as of ``snapshot_id`` (default: LATEST).
 
-    ``partition`` prunes manifest entries driver-side before the scan;
-    ``stats_filter`` ({column: (lo, hi)}) additionally skips files
-    whose footer min/max prove no match. Pruning is an optimisation:
-    surviving files may still hold non-matching rows, so callers apply
-    the real row-level predicate too (exactly as with Iceberg scans —
-    the predicate both prunes files and filters rows)."""
+    ``partition`` selects manifest entries driver-side before the scan.
+    Row predicates go on the returned frame, ``read_table(...).where(...)``:
+    Spark pushes them into the Parquet scan, which skips the row groups
+    whose footer min/max prove no match."""
     sid = snapshot_id if snapshot_id is not None else current_snapshot_id(table_dir)
-    paths = resolve_files(table_dir, sid, partition, stats_filter)
+    paths = resolve_files(table_dir, sid, partition)
     if not paths:
-        if stats_filter:
-            # a stats-filter can legitimately prune everything; give the
-            # caller an empty frame with the right schema instead of an
-            # error (all = unpruned file set, read schema-only)
-            all_paths = resolve_files(table_dir, sid, partition)
-            return spark.read.parquet(*all_paths).limit(0)
         raise FileNotFoundError(
             f"snapshot {sid} has no files for partition {partition!r}"
         )

@@ -106,3 +106,27 @@ def test_tolerance_nulls_stale_matches(asof_impl, spark):
     )
     assert out["asof_turn_idx"].isna().iloc[0]  # 30s gap > 10s tolerance
     assert out["asof_turn_idx"].iloc[1] == 0  # 30s gap <= 60s tolerance
+
+
+def test_fractional_tolerance_is_not_truncated(asof_impl, spark):
+    """A tolerance in fractional seconds keeps a match 0.3 s old under
+    0.5 s and nulls it under 0.2 s."""
+    turns = pd.DataFrame(
+        [("c", 0, "user", "a", None, T(10) - dt.timedelta(milliseconds=300))],
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
+    )
+    anchors = pd.DataFrame(
+        [("c", 0, T(10), 0.5), ("c", 1, T(10), 0.2)],
+        columns=["conv_id", "anchor_id", "anchor_ts", "tolerance_s"],
+    )
+    out = (
+        asof_impl(
+            spark.createDataFrame(turns),
+            spark.createDataFrame(anchors),
+            tolerance_col="tolerance_s",
+        )
+        .toPandas()
+        .sort_values("anchor_id")
+    )
+    assert out["asof_turn_idx"].iloc[0] == 0  # 0.3 s gap <= 0.5 s
+    assert out["asof_turn_idx"].isna().iloc[1]  # 0.3 s gap > 0.2 s

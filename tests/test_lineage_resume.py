@@ -327,9 +327,10 @@ def test_observed_checksums_equal_read_back(
 
 
 def test_input_checksums_without_fingerprint_sums(spark, transcripts_sdf, tmp_path):
-    """A pre-bucketed input, and a stage fingerprint that predates the
-    per-bucket sums, get the input checksums from one grouped pass over
-    the pending buckets; they equal the per-bucket checksum."""
+    """A stage fingerprint without the per-bucket sums is incomplete, so
+    the resume rewrites the stage and its fingerprint; a pre-bucketed
+    input gets the input checksums from one grouped pass over the
+    pending buckets. Both equal the per-bucket checksum."""
     import json
 
     from pyspark.sql import functions as F
@@ -357,6 +358,37 @@ def test_input_checksums_without_fingerprint_sums(spark, transcripts_sdf, tmp_pa
         for row in run.lineage().collect():
             part = src_df.filter(F.col("_bucket") == row.bucket).drop("_bucket")
             assert (row.input_rows, row.input_checksum) == _checksum(part)
+
+
+def test_torn_fingerprint_restages(spark, transcripts_sdf, tmp_path, monkeypatch):
+    """A run killed while it writes the stage fingerprint leaves no
+    fingerprint behind, so the resume writes the stage again and records
+    the same lineage as an uninterrupted run."""
+    import json
+
+    from astrospectro_spark.engine import lineage
+
+    def torn_dump(obj, f, **kw):
+        text = json.dumps(obj)
+        f.write(text[: len(text) // 2])
+        raise RuntimeError("killed mid-dump")
+
+    out = str(tmp_path / "torn")
+    with monkeypatch.context() as mp:
+        mp.setattr(lineage.json, "dump", torn_dump)
+        with pytest.raises(RuntimeError, match="killed mid-dump"):
+            FeatureRun(spark, out, n_buckets=3).run(transcripts_sdf)
+    r = FeatureRun(spark, out, n_buckets=3, run_id="r2")
+    assert r.run(transcripts_sdf)["buckets_processed"] == 3
+    ref = FeatureRun(spark, str(tmp_path / "ref"), n_buckets=3, run_id="r2")
+    ref.run(transcripts_sdf)
+
+    def records(run):
+        return sorted(tuple(row) for row in run.lineage().collect())
+
+    assert records(r) == records(ref)
+    with open(r.fingerprint_path) as f:
+        assert json.load(f)["input_rows"] == transcripts_sdf.count()
 
 
 @pytest.fixture(scope="module")

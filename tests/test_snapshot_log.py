@@ -316,97 +316,48 @@ def test_hard_link_refusal_names_the_cause(spark, table, monkeypatch):
     assert current_snapshot_id(table) is None
 
 
-def test_stats_skipping_opens_only_matching_files(spark, table):
-    """Column-stats data skipping (Iceberg lower/upper bounds): a
-    ts-bounded read resolves ONLY files whose footer min/max intersect
-    the bound — asserted on the file list itself — with results equal
-    to an unpruned filter."""
-    import datetime as dt
-
+def test_bounded_read_pushes_ts_into_the_parquet_scan(spark, table):
+    """A ts-bounded read is ``read_table(...).where(...)``: it returns
+    exactly the bounded rows, and the Parquet scan carries the bound as
+    a pushed filter, which skips row groups by their footer min/max."""
     from pyspark.sql import functions as F
 
-    from astrospectro_spark.sources.snapshot_log import resolve_files
-
     def day_df(day, lo, hi):
-        return (
-            spark.range(lo, hi)
-            .withColumn(
-                "ts",
-                F.timestamp_seconds(
-                    F.lit(day * 86400) + (F.col("id") % 100) * 60
-                ),
-            )
-            .coalesce(1)
+        return spark.range(lo, hi).withColumn(
+            "ts", F.timestamp_seconds(F.lit(day * 86400) + (F.col("id") % 100) * 60)
         )
 
-    # three commits = three files, disjoint ts days and id ranges
-    commit(table, day_df(0, 0, 100), "append", partition="d0")
-    commit(table, day_df(1, 100, 200), "append", partition="d1")
-    commit(table, day_df(2, 200, 300), "append", partition="d2")
-
-    all_files = resolve_files(table)
-    assert len(all_files) == 3
-
-    # ts bound covering only day 1
-    lo = dt.datetime(1970, 1, 2, tzinfo=dt.timezone.utc)
-    hi = dt.datetime(1970, 1, 2, 23, tzinfo=dt.timezone.utc)
-    pruned = resolve_files(table, stats_filter={"ts": (lo, hi)})
-    assert len(pruned) == 1
-    # the surviving file is exactly the d1 file
-    assert pruned == resolve_files(table, partition="d1")
-
-    # same pruning through read_table; values match the row-level filter
-    got = read_table(spark, table, stats_filter={"ts": (lo, hi)})
-    assert sorted(r.id for r in got.collect()) == list(range(100, 200))
-
-    # integer-column bounds prune too (half-open: hi=None)
-    assert len(resolve_files(table, stats_filter={"id": (250, None)})) == 1
-    assert len(resolve_files(table, stats_filter={"id": (None, 150)})) == 2
-
-    # a bound matching nothing → empty frame with the table schema
-    none_df = read_table(spark, table, stats_filter={"id": (10_000, None)})
-    assert none_df.count() == 0 and set(none_df.columns) == {"id", "ts"}
-
-    # files without stats for the column are conservatively KEPT
-    entries_probe = resolve_files(table, stats_filter={"no_such_col": (0, 1)})
-    assert len(entries_probe) == 3
-
-
-def test_compact_rewrites_small_files_preserving_content(spark, table):
-    """Five per-bucket appends → one compact snapshot: fewer files,
-    identical content checksum, untouched partitions left alone, and
-    time travel to the pre-compaction state still works."""
-    from astrospectro_spark.sources.snapshot_log import (
-        compact,
-        resolve_files,
+    for day in range(3):
+        commit(table, day_df(day, day * 100, day * 100 + 100), "append")
+    bounded = read_table(spark, table).where(
+        F.col("ts").between("1970-01-02 00:00:00", "1970-01-02 23:00:00")
     )
-
-    for b in range(5):
-        commit(table, _df(spark, b * 10, b * 10 + 10).coalesce(2),
-               "append", partition="hot")
-    commit(table, _df(spark, 100, 110).coalesce(1), "append", partition="cold")
-    pre_sid = current_snapshot_id(table)
-    pre_files = resolve_files(table, partition="hot")
-    assert len(pre_files) == 10  # 5 commits x 2 files
-    pre_sum = history(table)
-
-    sid = compact(spark, table, partition="hot", target_partitions=1)
-    assert sid == pre_sid + 1
-    post_files = resolve_files(table, partition="hot")
-    assert len(post_files) == 1
-    # cold partition untouched (same file paths)
-    assert resolve_files(table, partition="cold") == resolve_files(
-        table, pre_sid, partition="cold"
+    assert sorted(r.id for r in bounded.collect()) == list(range(100, 200))
+    plan = bounded._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-    # content identical: same rows
-    got = {r.id for r in read_table(spark, table).collect()}
-    assert got == set(range(50)) | set(range(100, 110))
-    # time travel to pre-compaction still resolves the old files
-    assert read_table(spark, table, snapshot_id=pre_sid).count() == 60
-    assert history(table)[-1]["operation"] == "compact"
-    # compacting a single-file group is a no-op
-    assert compact(spark, table, partition="cold") is None
-    del pre_sum
+    pushed = plan.split("PushedFilters:", 1)[1].split("\n", 1)[0]
+    assert "GreaterThanOrEqual(ts," in pushed and "LessThanOrEqual(ts," in pushed
+
+
+def test_commit_reads_no_data_file_back(spark, table, monkeypatch):
+    """A commit records paths and partition tags only: it succeeds with
+    pyarrow's footer reader disabled, and its entries hold nothing
+    else."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    def no_footer(*a, **kw):
+        raise AssertionError("a commit must not open a data file")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_footer)
+    sid = commit(table, _df(spark, 0, 10), "append", partition="p")
+    assert read_table(spark, table).count() == 10
+    with open(os.path.join(table, "_snapshots", f"v{sid:08d}.json")) as f:
+        entries = json.load(f)["manifest"]
+    assert entries and all(set(e) == {"path", "partition"} for e in entries)
 
 
 def test_expire_snapshots_and_orphan_gc(spark, table):
@@ -417,14 +368,13 @@ def test_expire_snapshots_and_orphan_gc(spark, table):
     import uuid as _uuid
 
     from astrospectro_spark.sources.snapshot_log import (
-        compact,
         expire_snapshots,
         resolve_files,
     )
 
     for b in range(3):
         commit(table, _df(spark, b * 10, b * 10 + 10), "append", partition="p")
-    compact(spark, table, partition="p", target_partitions=1)
+    commit(table, read_table(spark, table).coalesce(1), "overwrite", partition="p")
     pre_latest = current_snapshot_id(table)
     old_files = resolve_files(table, snapshot_id=1)
 
@@ -481,9 +431,8 @@ def test_commit_summary_observed_equals_read_back(spark, table, frame):
     """The (n_rows, checksum) a commit records is observed on its write;
     it equals the checksum of the files that landed, for a curate
     output, timestamps and NULLs, and an empty frame, and so does the
-    summary of a compaction."""
+    summary of a compaction (an overwrite of the table read back)."""
     from astrospectro_spark.engine.lineage import _checksum
-    from astrospectro_spark.sources.snapshot_log import compact
 
     def summary():
         s = history(table)[-1]["summary"]
@@ -496,5 +445,5 @@ def test_commit_summary_observed_equals_read_back(spark, table, frame):
     # a second file set in the same partition, then compact the two
     commit(table, df.limit(1), "append", partition="p")
     before = _checksum(read_table(spark, table))
-    assert compact(spark, table, partition="p") is not None
+    assert commit(table, read_table(spark, table), "overwrite", partition="p") is not None
     assert summary() == _checksum(read_table(spark, table)) == before
